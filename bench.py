@@ -24,6 +24,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bench_extra import sf_of  # noqa: E402
+
 BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "1200"))
 SCALING_DOCS = int(os.environ.get("SPARK_GRAFT_SCALING_DOCS", "9600"))
 _ROOT = os.path.dirname(os.path.abspath(__file__))
@@ -67,11 +69,7 @@ def _pipeline_bench_inproc(cores: int, out_root: str, n_docs: int, reps: int = 2
     from ocrd_anybaseocr_spark.sources.tables import spark_session
 
     corpus = ensure_corpus(n_docs)
-    spark = spark_session(
-        cores=cores,
-        shuffle_partitions=max(cores, 16),
-        arrow_batch=int(os.environ.get("SPARK_GRAFT_ARROW_BATCH", "256")),
-    )
+    spark = spark_session(cores=cores, shuffle_partitions=max(cores, 16), arrow_batch=256)
     _warmup(spark, corpus, cores)
     # best-of-reps (same policy at every core count): the host shows ±30%
     # run-to-run noise; the faster run is the better estimate of capacity.
@@ -265,6 +263,9 @@ def raw_kernel_floor(corpus_dir: str, procs: int) -> dict:
     }
 
 
+ATTR_MARKER = "\n## 8→32 attribution sweep (measured)\n"
+
+
 def write_scaling_md(runs: list[dict], n_docs: int, raw: dict[int, float] | None = None) -> dict:
     def eff(lo, hi):
         return (hi["docs_per_sec"] / lo["docs_per_sec"]) / (hi["cores"] / lo["cores"])
@@ -273,7 +274,7 @@ def write_scaling_md(runs: list[dict], n_docs: int, raw: dict[int, float] | None
     eff_2_8 = eff(by[2], by[8]) if 2 in by and 8 in by else None
     eff_8_32 = eff(by[8], by[32]) if 8 in by and 32 in by else None
     os.makedirs(os.path.join(_ROOT, "BENCH"), exist_ok=True)
-    # preserve the --attribution section across rewrites
+    # preserve the recorded attribution section across rewrites
     attr_tail = ""
     _p = os.path.join(_ROOT, "BENCH", "BASELINE.md")
     if os.path.exists(_p) and ATTR_MARKER in open(_p).read():
@@ -328,130 +329,12 @@ def _raw_section(raw: dict[int, float] | None) -> str:
     )
 
 
-def run_attribution(out_root: str) -> list[dict]:
-    """Measured attribution of the 8→32 scaling gap (VERDICT round 2 item
-    6): pipeline runs at 8 and 32 cores with kernel-CPU accounting, an
-    Arrow batch-size sweep, and the mapInArrow transport variant — each in
-    its own subprocess. The kernel_util / ms_per_page split shows how much
-    of the gap is kernel-time inflation (shared memory bus, also present
-    in the raw mp.Pool sweep) vs Spark-side time (Arrow hop + scheduling
-    + the non-image jobs)."""
-    configs = [
-        ("pandas", 256, 8),
-        ("pandas", 256, 32),
-        ("pandas", 64, 32),
-        ("pandas", 512, 32),
-        ("arrow", 256, 32),
-    ]
-    out = []
-    saved = {
-        k: os.environ.get(k)
-        for k in ("SPARK_GRAFT_UDF_IMPL", "SPARK_GRAFT_ARROW_BATCH")
-    }
-    try:
-        for impl, ab, cores in configs:
-            os.environ["SPARK_GRAFT_UDF_IMPL"] = impl
-            os.environ["SPARK_GRAFT_ARROW_BATCH"] = str(ab)
-            r = run_pipeline_bench(cores, out_root, n_docs=SCALING_DOCS)
-            r.update(impl=impl, arrow_batch=ab)
-            print(json.dumps(r), file=sys.stderr)
-            out.append(r)
-    finally:
-        # restore, don't pop: a probe failure must not leave the sweep's
-        # env skewing later benchmarks, nor destroy a user-exported value
-        for k, v in saved.items():
-            if v is None:
-                os.environ.pop(k, None)
-            else:
-                os.environ[k] = v
-    return out
-
-
-ATTR_MARKER = "\n## 8→32 attribution sweep (measured)\n"
-VARIANCE_MARKER = "\n## Measurement-window variance\n"
-
-
-def write_attribution_md(rows: list[dict], note: str = "") -> None:
-    """Replace the attribution section of BENCH/BASELINE.md with the
-    measured kernel-vs-Spark split of the 8→32 scaling gap. The analysis
-    lines are COMPUTED from the rows (a rerun in a different noise window
-    must not inherit a stale narrative), and any hand-written
-    VARIANCE_MARKER section after it is preserved. ``note`` (one line) is
-    appended to the header — use it to disclose row provenance when rows
-    are merged across sweeps (best-of-N-windows per config)."""
-    path = os.path.join(_ROOT, "BENCH", "BASELINE.md")
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    base, variance_tail = "# BENCH\n", ""
-    if os.path.exists(path):
-        content = open(path).read()
-        base = content.split(ATTR_MARKER)[0]
-        if VARIANCE_MARKER in content:
-            variance_tail = VARIANCE_MARKER + content.split(VARIANCE_MARKER, 1)[1]
-    tbl = "\n".join(
-        f"| {r['impl']}/{r['arrow_batch']} | local[{r['cores']}] | {r['pages_per_sec']} |"
-        f" {r['ms_per_page']} | {r['kernel_util']} |"
-        for r in rows
-    )
-    by = {(r["impl"], r["arrow_batch"], r["cores"]): r for r in rows}
-    r8 = by.get(("pandas", 256, 8))
-    r32 = by.get(("pandas", 256, 32))
-    lines = []
-    if r8 and r32:
-        eff = (r32["pages_per_sec"] / r8["pages_per_sec"]) / 4.0
-        infl = r32["ms_per_page"] / r8["ms_per_page"] - 1.0
-        lines.append(
-            f"- matched-config eff(8→32) = **{eff:.3f}**; in-kernel ms/page "
-            f"{r8['ms_per_page']} → {r32['ms_per_page']} ({infl * 100:+.0f}%) — kernel-time\n"
-            "  inflation is HARDWARE (shared memory bus inside the numpy kernels; the raw\n"
-            "  mp.Pool sweep shows the same shape with zero Spark), bounding ideal 32-core\n"
-            f"  throughput at 32/ms_per_page = {32000 / r32['ms_per_page']:.0f} pages/s."
-        )
-        lines.append(
-            f"- kernel_util (kernel-CPU ÷ wall·cores): {r8['kernel_util']} → "
-            f"{r32['kernel_util']} — the non-kernel share (Arrow hop, scheduling, the\n"
-            "  span/fold/write jobs, stage tails) is the Spark-side remainder."
-        )
-        for (impl, ab), label in (
-            (("pandas", 64), "Arrow batch 64"),
-            (("pandas", 512), "Arrow batch 512"),
-            (("arrow", 256), "mapInArrow transport"),
-        ):
-            rv = by.get((impl, ab, 32))
-            if rv:
-                d = rv["pages_per_sec"] / r32["pages_per_sec"] - 1.0
-                lines.append(
-                    f"- {label}: {d * 100:+.1f}% vs pandas/256 at 32 cores "
-                    f"(kernel {rv['ms_per_page']} ms/page, util {rv['kernel_util']}) — "
-                    "single best-of-2 measurement; judge against the ±25-30% host noise\n"
-                    "  band before drawing conclusions. Knobs: SPARK_GRAFT_ARROW_BATCH,\n"
-                    "  SPARK_GRAFT_UDF_IMPL."
-                )
-    with open(path, "w") as f:
-        f.write(
-            base
-            + ATTR_MARKER
-            + "\nEach row one fresh-subprocess pipeline run (9600 docs, best-of-2, warmed):"
-            + (f"\n{note}" if note else "")
-            + "\n\n"
-            "| impl/arrow_batch | config | pages/sec | kernel ms/page | kernel_util |\n"
-            "|---|---|---|---|---|\n" + tbl + "\n\n" + "\n".join(lines) + "\n"
-            + variance_tail
-        )
-
-
 def main() -> None:
     if "--pipeline-probe" in sys.argv:
         i = sys.argv.index("--pipeline-probe")
         cores, n_docs, out_root = int(sys.argv[i + 1]), int(sys.argv[i + 2]), sys.argv[i + 3]
         reps = int(sys.argv[i + 4]) if len(sys.argv) > i + 4 else 2
         print(json.dumps(_pipeline_bench_inproc(cores, out_root, n_docs, reps)))
-        return
-    if "--attribution" in sys.argv:
-        out_root = os.path.join(_ROOT, ".bench")
-        os.makedirs(out_root, exist_ok=True)
-        rows = run_attribution(out_root)
-        write_attribution_md(rows)
-        print(json.dumps({"attribution": rows}))
         return
     scaling = "--scaling" in sys.argv
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -494,7 +377,7 @@ def main() -> None:
         # kernel ms/page on the adversarial degraded tier vs clean
         # (single-process, same drawn pages)
         "degraded_tier": degraded_kernel_bench(),
-        "sf": float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else None,
+        "sf": sf_of(sf_dir),
         "pipeline": pipe,
         "docs_per_sec": pipe["docs_per_sec"],
         "pages_per_sec": pipe["pages_per_sec"],

@@ -17,8 +17,18 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
+
+
+def sf_of(sf_dir: str) -> float | None:
+    """Scale factor from a testdata dir name: ``.../sf0.1`` → 0.1. A name
+    whose suffix does not parse (the ``sf0.1_10x`` scale-ups of
+    tools/scale_testdata.py) reports None instead of raising after every
+    measurement has finished."""
+    m = re.search(r"sf(\d+(?:\.\d+)?)$", sf_dir.rstrip("/"))
+    return float(m.group(1)) if m else None
 
 
 def main() -> None:
@@ -72,16 +82,7 @@ def main() -> None:
             ts.append(round(time.monotonic() - t0, 3))
         out[name] = ts
     spark.stop()
-    print(
-        json.dumps(
-            {
-                "queries": out,
-                "sf": float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
-                if "sf" in sf_dir
-                else None,
-            }
-        )
-    )
+    print(json.dumps({"queries": out, "sf": sf_of(sf_dir)}))
 
 
 if __name__ == "__main__":

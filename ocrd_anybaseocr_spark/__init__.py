@@ -11,7 +11,7 @@ decoded page images, never per-row Python.
 Design blueprint: /root/repo/SURVEY.md. This is NOT a port — the reference's
 page-at-a-time imperative execution (reference:
 src/ocrd_anybaseocr/cli/ocrd_anybaseocr_cropping.py:72-204) is re-expressed
-as declarative DataFrame plans + fused mapInPandas stages so Catalyst can
+as declarative DataFrame plans + one fused mapInArrow page stage so Catalyst can
 prune/push down, and AQE + salted repartitioning handle skew at cluster scale.
 """
 

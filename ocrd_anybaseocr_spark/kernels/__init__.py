@@ -1,11 +1,4 @@
 """Pure numpy image/geometry kernels — the 'physical operators' of this
 domain (SURVEY.md §2.8). Each is a pure function over uint8/bool arrays,
 unit-testable without Spark, and shared verbatim by the distributed pipeline
-(inside Arrow-batched pandas UDFs) and the single-process oracle."""
-
-from .binarize import otsu_threshold, binarize_otsu, binarize_sauvola
-from .components import connected_components, component_stats
-from .deskew import estimate_shear, unshear
-from .crop import detect_ruler, detect_border
-from .classify import classify_page
-from .fold import fold_document
+(inside the page stage's mapInArrow batches) and the single-process oracle."""

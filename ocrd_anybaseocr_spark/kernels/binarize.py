@@ -171,12 +171,6 @@ def otsu_stats(img: np.ndarray, row_step: int = 4) -> tuple[int, float, float]:
     return t, eta, float(omega[t])
 
 
-def binarize_otsu(img: np.ndarray) -> np.ndarray:
-    """Return ink mask (True = foreground/dark), inverse-binary like the
-    reference's ruler pass (cli/ocrd_anybaseocr_cropping.py:208)."""
-    return img <= otsu_threshold(img)
-
-
 def _integral(img: np.ndarray) -> np.ndarray:
     s = np.zeros((img.shape[0] + 1, img.shape[1] + 1), dtype=np.float64)
     np.cumsum(np.cumsum(img, axis=0, dtype=np.float64), axis=1, out=s[1:, 1:])

@@ -303,11 +303,6 @@ def coalesce_columns(boxes: np.ndarray, col_sep: float) -> np.ndarray:
     return np.array(out)
 
 
-def _textbox_bbox(work: np.ndarray, params: CropParams):
-    """Fallback from a pixel mask (test/compat path)."""
-    return _textbox_bbox_from_stats(component_stats(work), work.shape, params, None)
-
-
 def _textbox_bbox_from_stats(stats: np.ndarray, shape, params: CropParams, ruler_bbox):
     """Fallback: bbox of merged text boxes (P4 gates → J2 merge → W7 coalesce)."""
     h, w = shape

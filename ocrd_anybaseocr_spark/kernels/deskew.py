@@ -52,38 +52,6 @@ def estimate_shear_from_runs(
     return best_shear
 
 
-def estimate_shear(ink: np.ndarray, params: DeskewParams = DEFAULT_PARAMS.deskew) -> float:
-    """Estimate shear (dx per row index y) from a boolean ink mask.
-
-    For each candidate c: P_c[x] = sum_y ink[y, x - round(c*y)]; score =
-    sum(P_c^2). Computed SPARSELY over the ink coordinates (typically 3-5%
-    of pixels) — one nonzero() pass over the image, then 9 bincounts over
-    the point set — so the kernel stays CPU- rather than bandwidth-bound
-    and parallel tasks don't fight over the memory bus.
-    First argmax in grid order (deterministic).
-    """
-    h, w = ink.shape
-    # every 2nd row suffices: candidate shears differ by >= 2px of drift
-    # across the page, far above the stride-2 resolution loss
-    step = 2 if h > 64 else 1
-    ys, xs = np.nonzero(ink[::step])
-    if len(xs) == 0:
-        return 0.0
-    best_score, best_shear = -1.0, 0.0
-    max_off = int(abs(np.round(params.max_skew * (h - 1)))) + 1
-    n_rows = (h + step - 1) // step
-    row_idx = np.arange(n_rows, dtype=np.float64) * step  # true y of sampled rows
-    for c in _grid(params):
-        # per-row shift table, gathered per point — avoids three full float
-        # passes over the point arrays per candidate
-        row_shift = np.round(c * row_idx).astype(np.int64)
-        proj = np.bincount(xs - row_shift[ys] + max_off, minlength=w + 2 * max_off)
-        score = float(np.dot(proj, proj))
-        if score > best_score:
-            best_score, best_shear = score, float(c)
-    return best_shear
-
-
 def unshear(img: np.ndarray, shear: float, fill: int = 235) -> np.ndarray:
     """Remove shear by integer row shifts x -> x - round(shear*y)."""
     if shear == 0.0:

@@ -1,119 +1,11 @@
-"""Scalar geometry functions (F1-F5, F7, P7).
+"""Coordinate zoom (F4).
 
-Pure numpy counterparts of the reference's geometry helpers:
-
-- F1 homogeneous line intersection via three cross products, z=0 → (0,0)
-  (reference: cli/ocrd_anybaseocr_cropping.py:271-280);
-- F2 bbox area (reference: cli/ocrd_anybaseocr_cropping.py:282-284);
-- P7 clip polygon points to the image (reference:
-  cli/ocrd_anybaseocr_cropping.py:186-192);
-- F5 points-string ↔ polygon ↔ bbox conversions (PAGE-XML Coords format,
-  reference: cli/ocrd_anybaseocr_cropping.py:125,181-184,193);
-- F4 coordinate zoom (300-DPI working resolution, cm→inch at 2.54,
-  reference: cli/ocrd_anybaseocr_cropping.py:129-151).
+Working-resolution zoom of the reference's cropping processor: pages are
+processed at 300 DPI, with per-cm embedded resolution converted at 2.54
+(reference: cli/ocrd_anybaseocr_cropping.py:129-151).
 """
 
 from __future__ import annotations
-
-import numpy as np
-
-
-def line_intersection(l1, l2) -> tuple[float, float]:
-    """F1: intersection of two lines, each given as two points
-    ((x1,y1),(x2,y2)), via homogeneous cross products; parallel → (0,0)."""
-    a = np.cross([*l1[0], 1.0], [*l1[1], 1.0])
-    b = np.cross([*l2[0], 1.0], [*l2[1], 1.0])
-    x, y, z = np.cross(a, b)
-    if z == 0:
-        return (0.0, 0.0)
-    return (float(x / z), float(y / z))
-
-
-def bbox_area(box) -> int:
-    """F2: (x2-x1)*(y2-y1) for [x1,y1,x2,y2]."""
-    return int((box[2] - box[0]) * (box[3] - box[1]))
-
-
-def clip_polygon(points: np.ndarray, w: int, h: int) -> np.ndarray:
-    """P7: clamp (n,2) points to [0,w-1] x [0,h-1]."""
-    out = np.asarray(points, dtype=np.int64).copy()
-    out[:, 0] = np.clip(out[:, 0], 0, w - 1)
-    out[:, 1] = np.clip(out[:, 1], 0, h - 1)
-    return out
-
-
-def points_from_polygon(points) -> str:
-    """F5: PAGE-XML Coords points string 'x1,y1 x2,y2 ...'."""
-    return " ".join(f"{int(x)},{int(y)}" for x, y in points)
-
-
-def polygon_from_points(s: str) -> np.ndarray:
-    return np.array([[int(v) for v in p.split(",")] for p in s.split()], dtype=np.int64)
-
-
-def polygon_from_bbox(box) -> np.ndarray:
-    x1, y1, x2, y2 = (int(v) for v in box)
-    return np.array([[x1, y1], [x2, y1], [x2, y2], [x1, y2]], dtype=np.int64)
-
-
-def bbox_from_points(s: str) -> list[int]:
-    poly = polygon_from_points(s)
-    return [int(poly[:, 0].min()), int(poly[:, 1].min()),
-            int(poly[:, 0].max()), int(poly[:, 1].max())]
-
-
-def buffer_inward(points: np.ndarray, padding: float) -> np.ndarray:
-    """F3: true inward polygon buffer for a CONVEX polygon (the border
-    quadrilateral): offset every edge inward along its unit normal by
-    ``padding`` and re-intersect consecutive offset edges — the straight-
-    skeleton construction shapely's Polygon.buffer(-padding) performs for
-    convex input (reference: cli/ocrd_anybaseocr_cropping.py:159).
-
-    ``points`` is (n, 2) in ring order (either orientation); returns the
-    (n, 2) buffered ring. For an axis-aligned rectangle this equals
-    shrinking each side by ``padding`` — asserted against crop_to_border's
-    rectangular fast path in pytest."""
-    pts = np.asarray(points, dtype=np.float64)
-    n = len(pts)
-    # signed area > 0 → counter-clockwise; inward normal flips with it
-    area2 = float(
-        np.sum(pts[:, 0] * np.roll(pts[:, 1], -1) - np.roll(pts[:, 0], -1) * pts[:, 1])
-    )
-    sign = 1.0 if area2 > 0 else -1.0
-    # offset each edge: line through (p_i + d*n_i, p_{i+1} + d*n_i)
-    offs = []
-    for i in range(n):
-        p, q = pts[i], pts[(i + 1) % n]
-        e = q - p
-        ln = np.hypot(*e)
-        if ln == 0:
-            continue
-        normal = sign * np.array([-e[1], e[0]]) / ln  # inward for CCW
-        offs.append((p + padding * normal, q + padding * normal))
-    out = []
-    m = len(offs)
-    for i in range(m):
-        a = line_intersection(offs[(i - 1) % m], offs[i])
-        out.append(a)
-    return np.array(out, dtype=np.float64)
-
-
-def point_in_convex(pts: np.ndarray, x: float, y: float) -> bool:
-    """True iff (x, y) lies inside the convex ring ``pts`` (either
-    orientation; boundary counts as inside)."""
-    pts = np.asarray(pts, dtype=np.float64)
-    n = len(pts)
-    sgn = 0
-    for i in range(n):
-        p, q = pts[i], pts[(i + 1) % n]
-        cr = (q[0] - p[0]) * (y - p[1]) - (q[1] - p[1]) * (x - p[0])
-        if cr != 0:
-            s = 1 if cr > 0 else -1
-            if sgn == 0:
-                sgn = s
-            elif s != sgn:
-                return False
-    return True
 
 
 def zoom_factor(dpi: float | None, target_dpi: float = 300.0) -> float:
@@ -122,7 +14,3 @@ def zoom_factor(dpi: float | None, target_dpi: float = 300.0) -> float:
     if dpi is None or dpi <= 0:
         return 1.0
     return target_dpi / float(dpi)
-
-
-def scale_bbox(box, factor: float) -> list[int]:
-    return [int(round(v * factor)) for v in box]

@@ -9,18 +9,17 @@ Semantics preserved:
 - A2: second pass merges collinear groups — intercepts within
   intercept_tol*W at both image edges and axis gap < gap_max*W, same
   stderr gates (reference L393-440);
-- A3: per-group stats — total member length, extent, center position
-  (reference L465-515);
-- A4: length-weighted mean width (reference L385-389,433-437).
+- A3/A4 (per-group length, extent, position and length-weighted mean
+  width, reference L385-389,433-437,465-515) live in
+  kernels/segments.group_side_stats, next to the side selection that
+  consumes them.
 
 Determinism (SURVEY.md §7 hard-part 1): candidate pairs are processed in
 ascending (distance, i, j) order — a stable total order, so results do not
 depend on tie order.
 
-The production border detector (kernels/crop.py) uses run-profile lines —
-faster on this corpus — but this operator is the faithful A1-A4 physical
-plan for LSD-style segment input, available to the fallback path and to
-any pipeline working from vector line detections.
+The production border detector (kernels/crop.detect_border) feeds these
+merges with run segments from kernels/segments.py.
 """
 
 from __future__ import annotations
@@ -157,14 +156,3 @@ def merge_collinear(
         groups = [g for g in groups if g is not None]
     return groups
 
-
-def group_stats(g: LineGroup) -> dict:
-    """A3 + A4: total length, extent, center position, length-weighted
-    mean width."""
-    total_len = float(sum(g.lengths))
-    x1, x2 = float(g.pts[:, 0].min()), float(g.pts[:, 0].max())
-    pos = float(g.pts[:, 1].mean())
-    wgt = float(
-        sum(l * w for l, w in zip(g.lengths, g.widths)) / total_len if total_len else 0.0
-    )
-    return {"length": total_len, "start": x1, "end": x2, "pos": pos, "weight": wgt}

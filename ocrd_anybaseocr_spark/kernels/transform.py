@@ -1,15 +1,12 @@
-"""Image resize and crop-emit kernels (K7/K9, F4).
+"""Image resize kernels (K7, F4).
 
-- K7: the reference rescales pages to a ~300 DPI working resolution with
-  cv2.resize (reference: cli/ocrd_anybaseocr_cropping.py:148-151) and the
-  classifier input to 500x600 LANCZOS (reference:
-  cli/ocrd_anybaseocr_layout_analysis.py:97-99). Numpy equivalents: exact
-  box-average downscale for integer factors, bilinear for arbitrary
-  factors — deterministic, no external libs.
-- K9: crop to the detected border with background fill outside the border
-  polygon (reference: cli/ocrd_anybaseocr_cropping.py:199-200,
-  image_from_page(fill='background', transparency=True)), emitting the
-  derived image + accumulated feature string.
+K7: the reference rescales pages to a ~300 DPI working resolution with
+cv2.resize (reference: cli/ocrd_anybaseocr_cropping.py:148-151) and the
+classifier input to 500x600 LANCZOS (reference:
+cli/ocrd_anybaseocr_layout_analysis.py:97-99). Numpy equivalents:
+nearest-neighbour for the exactly invertible detect→unzoom path and
+support-scaled cubic for interpolating resizes — deterministic, no
+external libs.
 """
 
 from __future__ import annotations
@@ -38,33 +35,6 @@ def zoom_dims(h: int, w: int, zoom: float) -> tuple[int, int]:
     (resize_nearest, the media resize tier's cubic path): a policy change
     here changes all of them together instead of silently diverging."""
     return max(1, int(np.ceil(h * zoom))), max(1, int(np.ceil(w * zoom)))
-
-
-def resize_box(img: np.ndarray, factor: int) -> np.ndarray:
-    """Exact box-average downscale by an integer factor (K7 fast path)."""
-    h, w = img.shape
-    h2, w2 = h // factor, w // factor
-    v = img[: h2 * factor, : w2 * factor].reshape(h2, factor, w2, factor)
-    return (v.astype(np.uint32).sum(axis=(1, 3)) // (factor * factor)).astype(np.uint8)
-
-
-def resize_bilinear(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Bilinear resize to an arbitrary shape (K7 general path; the
-    classifier's fixed 500x600 input shape)."""
-    h, w = img.shape
-    ys = (np.arange(out_h) + 0.5) * h / out_h - 0.5
-    xs = (np.arange(out_w) + 0.5) * w / out_w - 0.5
-    y0 = np.clip(np.floor(ys).astype(np.int64), 0, h - 1)
-    x0 = np.clip(np.floor(xs).astype(np.int64), 0, w - 1)
-    y1 = np.minimum(y0 + 1, h - 1)
-    x1 = np.minimum(x0 + 1, w - 1)
-    wy = np.clip(ys - y0, 0.0, 1.0)[:, None]
-    wx = np.clip(xs - x0, 0.0, 1.0)[None, :]
-    f = img.astype(np.float64)
-    top = f[y0][:, x0] * (1 - wx) + f[y0][:, x1] * wx
-    bot = f[y1][:, x0] * (1 - wx) + f[y1][:, x1] * wx
-    out = top * (1 - wy) + bot * wy
-    return np.clip(np.round(out), 0, 255).astype(np.uint8)
 
 
 def _cubic_kernel(x: np.ndarray, a: float = -0.5) -> np.ndarray:
@@ -120,76 +90,3 @@ def resize_cubic(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
     out = Wv @ img.astype(np.float64) @ Wh.T
     return np.clip(np.round(out), 0, 255).astype(np.uint8)
 
-
-def crop_to_polygon(
-    img: np.ndarray, points, padding: float = 0, fill: int = 235
-) -> np.ndarray:
-    """K9 general case: crop to a CONVEX border polygon with background
-    fill outside it — the reference's image_from_page(fill='background')
-    over a non-rectangular Border (cli/ocrd_anybaseocr_cropping.py:199-200)
-    after the inward buffer (:159, F3 via geometry.buffer_inward).
-
-    The polygon is intersected per output row as two half-plane bounds
-    (convex ⇒ one [lo, hi] x-interval per row) — no polygon mask is ever
-    rasterized. For an axis-aligned rectangle this equals crop_to_border
-    (pytest-asserted)."""
-    from .geometry import buffer_inward
-
-    poly = (
-        buffer_inward(points, padding) if padding else np.asarray(points, np.float64)
-    )
-    h, w = img.shape
-    xs, ys = poly[:, 0], poly[:, 1]
-    x1 = max(0, int(np.ceil(xs.min())))
-    x2 = min(w - 1, int(np.floor(xs.max())))
-    y1 = max(0, int(np.ceil(ys.min())))
-    y2 = min(h - 1, int(np.floor(ys.max())))
-    if x2 <= x1 or y2 <= y1:
-        return np.full((1, 1), fill, dtype=np.uint8)
-    # .copy(), not ascontiguousarray: a full-width slice IS C-contiguous, so
-    # ascontiguousarray returns a VIEW and the fill below would write
-    # background pixels into the caller's image (ADVICE round 2, item 3)
-    out = img[y1 : y2 + 1, x1 : x2 + 1].copy()
-    rows = np.arange(y1, y2 + 1, dtype=np.float64)
-    lo = np.full(rows.shape, float(x1))
-    hi = np.full(rows.shape, float(x2))
-    # ring orientation: signed area > 0 → CCW → inside is a*x + b*y <= c
-    area2 = float(np.sum(xs * np.roll(ys, -1) - np.roll(xs, -1) * ys))
-    sgn = 1.0 if area2 > 0 else -1.0
-    n = len(poly)
-    for i in range(n):
-        p, q = poly[i], poly[(i + 1) % n]
-        a = sgn * (q[1] - p[1])
-        b = sgn * (p[0] - q[0])
-        c = a * p[0] + b * p[1]
-        if a > 1e-12:
-            hi = np.minimum(hi, (c - b * rows) / a)
-        elif a < -1e-12:
-            lo = np.maximum(lo, (c - b * rows) / a)
-        else:
-            # horizontal edge: rows violating b*y <= c are fully outside
-            lo = np.where(b * rows > c, hi + 1.0, lo)
-    loi = np.clip(np.ceil(lo).astype(np.int64) - x1, 0, out.shape[1])
-    hii = np.clip(np.floor(hi).astype(np.int64) - x1 + 1, 0, out.shape[1])
-    cols = np.arange(out.shape[1])
-    outside = (cols[None, :] < loi[:, None]) | (cols[None, :] >= hii[:, None])
-    out[outside] = fill
-    return out
-
-
-def crop_to_border(
-    img: np.ndarray, border: list[int], padding: int = 0, fill: int = 235
-) -> np.ndarray:
-    """K9: crop to the border bbox shrunk inward by ``padding`` (the
-    reference's inward polygon buffer, cli/ocrd_anybaseocr_cropping.py:159);
-    pixels outside the page frame never enter the output, so background
-    fill is implicit for the rectangular border case."""
-    h, w = img.shape
-    x1 = max(0, border[0] + padding)
-    y1 = max(0, border[1] + padding)
-    x2 = min(w - 1, border[2] - padding)
-    y2 = min(h - 1, border[3] - padding)
-    if x2 <= x1 or y2 <= y1:
-        return np.full((1, 1), fill, dtype=np.uint8)
-    # copy: never hand back a view that aliases (and pins) the full page
-    return img[y1 : y2 + 1, x1 : x2 + 1].copy()

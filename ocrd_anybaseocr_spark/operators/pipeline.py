@@ -1,7 +1,7 @@
 """The fused image pipeline + checkpointed end-to-end run.
 
 Design (SURVEY.md §4.2): decode → binarize → deskew → ruler → crop → tiseg →
-classify run in ONE ``mapInPandas`` so image bytes cross the JVM↔Python Arrow
+classify run in ONE ``mapInArrow`` so image bytes cross the JVM↔Python Arrow
 boundary exactly once — the reference's pipeline-of-fileGrps would naively
 become N materializations; we fuse instead and only materialize final spans,
 page results, structure and metrics.
@@ -20,12 +20,11 @@ overwrite makes rewriting a half-written bucket idempotent.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import schema as S
@@ -56,104 +55,61 @@ def derive_buckets(n_docs: int) -> int:
     return int(min(N_BUCKETS_MAX, max(N_BUCKETS_MIN, -(-n_docs // DOCS_PER_BUCKET))))
 
 
-def process_pages(
-    pages_with_blobs: DataFrame, params=DEFAULT_PARAMS, impl: str | None = None
-) -> DataFrame:
+def process_pages(pages_with_blobs: DataFrame, params=DEFAULT_PARAMS) -> DataFrame:
     """Fused per-page stage over (doc_id, media_ref, page_no, image).
 
-    One Arrow hop: bytes in, small structured results out. Kernel code is
-    imported inside the UDF so executors resolve it from --py-files; the
-    frozen params dataclass ships in the UDF closure (analogous to the
+    One mapInArrow hop: bytes in, small structured results out, with no
+    pandas conversion of the page-bytes column on either side. The frozen
+    params dataclass ships with the stage function (analogous to the
     reference's validated parameter JSON, ocrd-tool.json:17-132).
-
-    ``impl`` (or env SPARK_GRAFT_UDF_IMPL): 'arrow' (mapInArrow, DEFAULT
-    since round 7 — skips the pandas Series/Block wrapping of the binary
-    column on both sides of the hop; identical results, pytest-asserted)
-    or 'pandas' (mapInPandas — the escape hatch). The flip (VERDICT r6
-    item 3) was validated best-of-2 in five separate windows
-    (BENCH/ab_transport.jsonl): arrow/pandas at 32 cores =
-    1.095 / 1.429 / 1.35 / 1.384 / 0.922 — geomean 1.22, arrow ahead in
-    4 of 5 windows and the one inversion sits inside the documented ±30%
-    single-window noise band; at 8 cores 0.876 / 0.996 / 1.172 — parity.
     """
-    impl = impl or os.environ.get("SPARK_GRAFT_UDF_IMPL", "arrow")
-    if impl not in ("pandas", "arrow"):
-        # a typo'd SPARK_GRAFT_UDF_IMPL during an A/B sweep must fail, not
-        # silently measure pandas against itself under the wrong label
-        raise ValueError(f"unknown UDF impl {impl!r}: expected 'pandas' or 'arrow'")
-    if impl == "arrow":
-        return _process_pages_arrow(pages_with_blobs, params)
-
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # heavy imports once per task, not per batch (ref model-load-once:
-        # cli/ocrd_anybaseocr_layout_analysis.py:51-67)
-        from ..oracle import process_page
-
-        for pdf in batches:
-            out = _process_rows(
-                process_page,
-                params,
-                zip(pdf["doc_id"], pdf["media_ref"], pdf["page_no"], pdf["image"]),
-            )
-            yield pd.DataFrame(out, columns=_STAGE_COLS)
-
-    return pages_with_blobs.mapInPandas(stage, schema=_STAGE_SCHEMA)
+    return pages_with_blobs.select("doc_id", "media_ref", "page_no", "image").mapInArrow(
+        functools.partial(_stage, params=params), schema=_STAGE_SCHEMA
+    )
 
 
 _STAGE_COLS = [f.name for f in _STAGE_SCHEMA.fields]
 
 
-def _process_rows(process_page, params, rows) -> list[dict]:
-    """Shared per-row kernel loop of both batch transports. Per-ROW
-    error isolation: a blob the kernels cannot process quarantines as a
-    row with ``error`` set and NULL kernel fields — the rest of the batch
-    (and the task) is unaffected. The r5 unshear finding was this exact
-    failure class; the guard is structural now, not per-kernel."""
-    out = []
-    for doc_id, media_ref, page_no, png in rows:
-        t0 = time.monotonic()
-        try:
-            r = process_page(bytes(png), params)
-            r["error"] = None
-        except Exception as e:  # noqa: BLE001 — any kernel failure quarantines
-            r = {f.name: None for f in S.PAGE_RESULTS.fields}
-            r["error"] = f"{type(e).__name__}: {e}"
-        r.update(
-            doc_id=doc_id,
-            media_ref=media_ref,
-            page_no=int(page_no),
-            proc_ms=int((time.monotonic() - t0) * 1000),
-        )
-        out.append(r)
-    return out
+def _stage(batches, params):
+    """The per-batch body of process_pages: RecordBatch in, RecordBatch out.
+    Kernel code is imported here, once per task, so executors resolve it
+    from --py-files (ref model-load-once:
+    cli/ocrd_anybaseocr_layout_analysis.py:51-67). The Arrow output schema
+    is DERIVED from _STAGE_SCHEMA, the single source of truth.
 
+    Per-ROW error isolation: a blob the kernels cannot process quarantines
+    as a row with ``error`` set and NULL kernel fields — the rest of the
+    batch (and the task) is unaffected. The r5 unshear finding was this
+    exact failure class; the guard is structural, not per-kernel."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-def _process_pages_arrow(pages_with_blobs: DataFrame, params=DEFAULT_PARAMS) -> DataFrame:
-    """mapInArrow twin of the pandas stage: RecordBatch in, RecordBatch
-    out, no pandas conversion of the page-bytes column. The Arrow output
-    schema is DERIVED from _STAGE_SCHEMA (single source of truth — a new
-    PAGE_RESULTS field must not break only the non-default transport)."""
+    from ..oracle import process_page
 
-    def stage(batches):
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        from ..oracle import process_page
-
-        aschema = to_arrow_schema(_STAGE_SCHEMA)
-        for batch in batches:
-            d = batch.select(["doc_id", "media_ref", "page_no", "image"]).to_pydict()
-            rows = _process_rows(
-                process_page,
-                params,
-                zip(d["doc_id"], d["media_ref"], d["page_no"], d["image"]),
+    aschema = to_arrow_schema(_STAGE_SCHEMA)
+    for batch in batches:
+        d = batch.select(["doc_id", "media_ref", "page_no", "image"]).to_pydict()
+        rows = []
+        for doc_id, media_ref, page_no, png in zip(
+            d["doc_id"], d["media_ref"], d["page_no"], d["image"]
+        ):
+            t0 = time.monotonic()
+            try:
+                r = process_page(bytes(png), params)
+                r["error"] = None
+            except Exception as e:  # noqa: BLE001 — any kernel failure quarantines
+                r = {f.name: None for f in S.PAGE_RESULTS.fields}
+                r["error"] = f"{type(e).__name__}: {e}"
+            r.update(
+                doc_id=doc_id,
+                media_ref=media_ref,
+                page_no=int(page_no),
+                proc_ms=int((time.monotonic() - t0) * 1000),
             )
-            out = {name: [r[name] for r in rows] for name in _STAGE_COLS}
-            yield pa.RecordBatch.from_pydict(out, schema=aschema)
-
-    return pages_with_blobs.select("doc_id", "media_ref", "page_no", "image").mapInArrow(
-        stage, schema=_STAGE_SCHEMA
-    )
+            rows.append(r)
+        out = {name: [r[name] for r in rows] for name in _STAGE_COLS}
+        yield pa.RecordBatch.from_pydict(out, schema=aschema)
 
 
 def salted_repartition(df: DataFrame, cost_col: str, n_parts: int) -> DataFrame:
@@ -342,21 +298,19 @@ class _CatalogIO:
 
     @staticmethod
     def _is_v1_capability_error(e) -> bool:
-        # getCondition is the 4.x name; older sessions only have getErrorClass
+        # getCondition is the 4.x name; older sessions only have getErrorClass.
+        # Strictness follows from the exception itself (VERDICT r4 item 6):
+        # an exception that carries an error class qualifies only as
+        # _LEGACY_ERROR_TEMP_1012 — on a real catalog, commit conflicts and
+        # analysis errors must never take the positional-insertInto
+        # fallback. A class-less exception qualifies only on the exact
+        # v1-capability MESSAGE PREFIX, not a substring — an unrelated error
+        # merely mentioning 'v1 table' (e.g. in a table name) must surface,
+        # not silently double-write.
         get = getattr(e, "getCondition", None) or getattr(e, "getErrorClass", None)
         cls = get() if get else None
-        if cls == "_LEGACY_ERROR_TEMP_1012":
-            return True
-        # VERDICT r4 item 6 / ADVICE r4: with SPARK_GRAFT_STRICT_V1_CLASS=1
-        # only the error class qualifies (flip on a real catalog, where
-        # commit conflicts and analysis errors must never take the
-        # positional-insertInto fallback). The default lenient path covers
-        # sessions whose exceptions lack error classes, but matches the
-        # exact v1-capability MESSAGE PREFIX, not a substring — an
-        # unrelated error merely mentioning 'v1 table' (e.g. in a table
-        # name) must surface, not silently double-write.
-        if os.environ.get("SPARK_GRAFT_STRICT_V1_CLASS", "0") == "1":
-            return False
+        if cls is not None:
+            return cls == "_LEGACY_ERROR_TEMP_1012"
         msg = str(e)
         return msg.startswith("[_LEGACY_ERROR_TEMP_1012]") or msg.startswith(
             "Cannot write into v1 table"
@@ -574,7 +528,7 @@ def run_pipeline(
         if ext_err:
             raise ext_err[0]
         # fold from the COMMITTED page_results — the image stage runs exactly once
-        # (recomputing the lineage through mapInPandas would double decode work)
+        # (recomputing the lineage through the mapInArrow stage would double decode work)
         written_pr = io.read("page_results")
         if done:
             written_pr = written_pr.filter(~F.col("part_bucket").isin(*done))

@@ -257,18 +257,6 @@ def candidates_from_assignments(
     )
 
 
-def ann_lsh_candidates(
-    emb: DataFrame, query_ids_below: int = N_QUERIES, n_bits: int | None = None
-) -> DataFrame:
-    """Raw-lineage form: build assignments from ``emb`` then generate
-    candidates (plan tests assert on this; cached callers go through
-    candidates_from_assignments with the checkpointed relation instead —
-    no dead/ignored parameters either way, round-4 review)."""
-    return candidates_from_assignments(
-        lsh_assignments(emb, n_bits=n_bits), query_ids_below
-    )
-
-
 def q_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hyperplane-LSH ANN: candidates from the (tbl, bucket) equi-join,
     exact cosine re-rank of candidates only, top-3 per query. Bits derive
@@ -469,61 +457,21 @@ def derive_ivf_k(n_rows: int) -> int:
     return min(IVF_MAX_K, max(IVF_K, math.ceil(math.sqrt(n_rows))))
 
 
-def _argmin_struct_expr(cents: list[tuple[int, list[int]]], vcol: str = "v_se") -> str:
-    """Nearest-centroid (d2, cell) STRUCT as ONE narrow column expression
-    over ``v_se``: the k x dim scaled-int centroid matrix ships as plan
-    literals and the argmin is a left fold over per-centroid exact
-    squared-L2 structs — zero joins, zero shuffles, whole corpus stays a
-    projection (VERDICT r3 item 2: the previous broadcast-join +
-    row_number form shuffled N x k rows). ``cents`` must be ascending by
-    cell id: the fold keeps the FIRST minimum (strict <), which is
-    exactly the (d2, cell) tie-break. Consumers needing BOTH fields
-    (SemDeDup's ordering key is the d2) should materialize the struct
-    before expanding it — two field extractions in one collapsed
-    projection would re-run the whole fold twice per row.
-
-    Layout matters: each centroid's 64-int literal is a DIRECT zip_with
-    argument, outside every lambda, so ConstantFolding collapses it once
-    at planning. The first cut indexed ONE nested k x dim array literal
-    with element_at inside a transform lambda — foldable-looking, but
-    nothing folds inside a lambda body, so the whole nested array was
-    re-materialized per row per centroid (~1 ms/row at k=45; this form
-    is ~10x cheaper)."""
-    structs = ",".join(
-        f"named_struct('d', aggregate(zip_with({vcol}, array("
-        + ",".join(f"{int(v)}L" for v in vec)
-        + "), (x, y) -> (x - y) * (x - y)), 0L, (acc, t) -> acc + t),"
-        f" 'c', {int(c)})"
-        for c, vec in cents
-    )
-    return (
-        f"aggregate(array({structs}),"
-        f" named_struct('d', 9223372036854775807L, 'c', -1),"
-        f" (acc, s) -> IF(s.d < acc.d, s, acc))"
-    )
-
-
-def _argmin_cell_expr(cents: list[tuple[int, list[int]]], vcol: str = "v_se") -> str:
-    """Nearest-centroid id — the `.c` projection of _argmin_struct_expr."""
-    return _argmin_struct_expr(cents, vcol) + ".c"
-
-
 # ---------------------------------------------------------------------------
 # vectorized exact assignment kernels (Arrow batches → numpy, guide §4.2)
 #
-# The interpreted-HOF literal folds above are exact but evaluate per row
-# per centroid (~0.4 ms/row at k=45; nothing codegens inside a lambda
-# body). At derived k (142 cells at 20 000 vectors, up to IVF_MAX_K) that
-# made the IVF build 23 s and each Lloyd iteration ~18 s at sf1.0. The
-# mapInArrow kernels below compute the IDENTICAL integers as one numpy
+# The interpreted-HOF literal folds these kernels replaced were exact but
+# evaluated per row per centroid (~0.4 ms/row at k=45; nothing codegens
+# inside a lambda body). At derived k (142 cells at 20 000 vectors, up to
+# IVF_MAX_K) that made the IVF build 23 s and each Lloyd iteration ~18 s
+# at sf1.0. The mapInArrow kernels below compute the IDENTICAL integers as one numpy
 # matmul per batch: se = floor(x*1e4 + 0.5) in float64 (the same IEEE
 # double ops as the Spark expression), and every dot/d2 is a sum of
 # integer-valued float64 products bounded far below 2^53 (|se| <= ~2e4,
 # dim 64 → |dot| <= 2.6e10; plane dots <= 6.4e12), so BLAS float64
 # matmul is EXACT and the int64 cast is lossless — bit-identical to the
-# HOF fold and to the DuckDB oracle. The physical shape stays
-# scan → MapInArrow → project: zero exchanges, same as the literal form
-# (plan-asserted), and MapInArrow is not a ROW_PYTHON flag.
+# DuckDB oracle. The physical shape stays scan → MapInArrow → project:
+# zero exchanges (plan-asserted), and MapInArrow is not a ROW_PYTHON flag.
 # ---------------------------------------------------------------------------
 
 _ASSIGN_CHUNK = 2048  # rows per argmin block: chunk x k x 8B <= ~67 MB at k=4096
@@ -546,7 +494,7 @@ def _se_f64(X):
 def _argmin_cells_np(se, C, c2):
     """Per-row (first-min cell INDEX, exact int64 d2) over centroid matrix
     ``C`` (k x dim float64, integer-valued) — ties keep the lowest index,
-    matching the literal fold's strict-< keep-first."""
+    matching the oracle's (d2, cell) ordering."""
     n = se.shape[0]
     idx = np.empty(n, dtype=np.int64)
     d2 = np.empty(n, dtype=np.int64)
@@ -570,8 +518,7 @@ def _cents_np(cents: list[tuple[int, list[int]]]):
 
 def assignments_arrow(emb: DataFrame, cents, with_d2: bool = False) -> DataFrame:
     """(vec_id, cell[, d2]): nearest-centroid assignment as a narrow
-    mapInArrow pass — the vectorized twin of the _argmin_*_expr literal
-    fold (identical integers, see the section comment)."""
+    mapInArrow pass (exact integers, see the section comment)."""
     import pyarrow as pa
 
     cells, C, c2 = _cents_np(cents)

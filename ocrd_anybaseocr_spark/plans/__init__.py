@@ -1,1 +1,1 @@
-from .inspect import assert_no_exchange, count_exchanges, explain_str, pushed_filters
+from .inspect import count_exchanges, explain_str

@@ -3,8 +3,9 @@
 The reference has no optimizer (SURVEY.md §4) — Catalyst is ours for free,
 but only if the plans actually keep the shapes we designed for: narrow
 extraction (zero exchanges), pushed-down scan filters, broadcast dims.
-These helpers make those properties assertable in tests so a regression in
-plan shape fails CI, not a 100 TB run.
+count_exchanges makes the shuffle count assertable — by the plan audit
+(tools/plan_audit.py) and by tests — so a regression in plan shape fails
+CI, not a 100 TB run.
 """
 
 from __future__ import annotations
@@ -26,14 +27,3 @@ def count_exchanges(df: DataFrame) -> int:
     plan = explain_str(df, "simple")
     return len(re.findall(r"(?<!Broadcast)Exchange (?!SinglePartition)", plan))
 
-
-def assert_no_exchange(df: DataFrame) -> None:
-    n = count_exchanges(df)
-    if n:
-        raise AssertionError(f"plan has {n} shuffle exchange(s):\n{explain_str(df, 'simple')}")
-
-
-def pushed_filters(df: DataFrame) -> str:
-    """The PushedFilters lines of the formatted plan (parquet scan pushdown)."""
-    plan = explain_str(df)
-    return "\n".join(l.strip() for l in plan.splitlines() if "PushedFilters" in l)

@@ -1,45 +1,13 @@
-"""Derived-image emission (S4/K9) and feature filter/selector (P1)."""
+"""The derived grayscale_normalized stage (ref feature vocabulary) and
+its normalization kernel."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-from ocrd_anybaseocr_spark.operators.derive import (
-    crop_images,
-    feature_filter,
-    feature_selector,
-)
-from ocrd_anybaseocr_spark.operators.extract import page_index
-from ocrd_anybaseocr_spark.png import decode_gray
-from ocrd_anybaseocr_spark.sources.tables import load_corpus
-
-
-def test_crop_images_emit(spark, corpus_dir):
-    docs, blobs = load_corpus(spark, corpus_dir)
-    pages = page_index(docs.limit(3)).join(blobs, "media_ref")
-    derived = crop_images(pages.select("doc_id", "media_ref", "image")).collect()
-    truth = {b.media_ref: b for b in blobs.collect()}
-    assert derived
-    for row in derived:
-        orig_ref = row.media_ref.removesuffix(".IMG-CROP")
-        assert orig_ref in truth
-        t = truth[orig_ref]
-        img, dpi = decode_gray(bytes(row.image))
-        assert img.shape == (row.height, row.width)
-        # cropped page is strictly smaller than the scan and roughly the
-        # truth border minus padding
-        bx1, by1, bx2, by2 = t.truth_border
-        assert row.width <= bx2 - bx1 + 1 and row.height <= by2 - by1 + 1
-        assert row.width >= (bx2 - bx1 + 1) - 10 and row.height >= (by2 - by1 + 1) - 10
-        assert "binarized" in row.features and "cropped" in row.features
-        assert dpi == t.dpi
 
 
 def test_grayscale_normalized_stage_emitted_and_matchable(corpus_dir):
     """The grayscale_normalized stage (ref feature vocabulary,
     cropping.py:118-120) is a REAL produced stage: default params emit the
-    feature, a feature_filter naming it now actually excludes produced
-    rows, and disabling the stage drops the feature. The normalization
+    feature, and disabling the stage drops the feature. The normalization
     itself must not perturb truth recovery (see test_dpi/test_kernels —
     exact-border tests run with the default-ON stage)."""
     import numpy as np
@@ -81,34 +49,3 @@ def test_grayscale_normalized_stage_emitted_and_matchable(corpus_dir):
     faded[fink] = rng.integers(115, 125, size=int(fink.sum()), dtype=np.uint8)
     fout = normalize_gray(faded)
     assert fout.min() == 0 and fout.max() == 255
-
-
-def test_feature_selector_and_filter(spark):
-    df = spark.createDataFrame(
-        [("a", "binarized,cropped"), ("b", "binarized,deskewed,cropped"), ("c", "grayscale_normalized")],
-        ["id", "features"],
-    )
-    sel = df.filter(feature_selector(F.col("features"), "binarized,cropped"))
-    assert {r.id for r in sel.collect()} == {"a", "b"}
-    flt = df.filter(feature_filter(F.col("features"), "deskewed"))
-    assert {r.id for r in flt.collect()} == {"a", "c"}
-
-
-def test_feature_filter_any_semantics(spark):
-    """OCR-D feature_filter excludes a row containing ANY listed feature
-    (reference cli/ocrd_anybaseocr_cropping.py:118-120 with
-    'cropped,binarized,grayscale_normalized'): a row carrying just one of
-    the filtered features must be rejected, not only one carrying all."""
-    df = spark.createDataFrame(
-        [
-            ("only_cropped", "cropped"),
-            ("both", "cropped,binarized"),
-            ("clean", "deskewed"),
-            ("none", ""),
-        ],
-        ["id", "features"],
-    )
-    flt = df.filter(feature_filter(F.col("features"), "cropped,binarized,grayscale_normalized"))
-    assert {r.id for r in flt.collect()} == {"clean", "none"}
-    # empty exclusion list filters nothing
-    assert df.filter(feature_filter(F.col("features"), " ")).count() == 4

@@ -1,70 +1,9 @@
-"""K10 batched-inference scaffold: equality with the fused pipeline path,
-batch re-chunking, pluggable scorer, and the F9 NHWC tensor contract."""
+"""K7 interpolating resize: the cubic resampler the reference's
+classifier preprocess calls for (500x600 LANCZOS-class)."""
 
 from __future__ import annotations
 
 import numpy as np
-
-from ocrd_anybaseocr_spark.operators.extract import page_index
-from ocrd_anybaseocr_spark.operators.inference import (
-    classify_pages_batched,
-    preprocess_nhwc,
-    register_scorer,
-)
-from ocrd_anybaseocr_spark.operators.pipeline import build_page_results
-from ocrd_anybaseocr_spark.sources.tables import load_corpus
-
-
-def test_batched_inference_equals_pipeline(spark, corpus_dir):
-    docs, blobs = load_corpus(spark, corpus_dir)
-    pages = page_index(docs.limit(6)).join(blobs, "media_ref")
-    got = {
-        r.media_ref: (list(r.scores), list(r.labels))
-        for r in classify_pages_batched(pages, batch_size=5).collect()
-    }
-    want = {
-        r.media_ref: (list(r.scores), list(r.labels))
-        for r in build_page_results(docs.limit(6), blobs, n_parts=4).collect()
-    }
-    assert set(got) == set(want)
-    for ref in got:
-        assert got[ref] == want[ref], ref
-
-
-def test_pluggable_scorer(spark, corpus_dir):
-    """A registered scorer replaces the model without changing the plan;
-    the loader runs once per worker (executor-global model load)."""
-
-    def loader():
-        def constant_scorer(png_batch):
-            s = np.full((len(png_batch), 21), 0.01)
-            s[:, 13] = 0.99  # 'page'
-            return s
-
-        return constant_scorer
-
-    register_scorer("const", loader)
-    docs, blobs = load_corpus(spark, corpus_dir)
-    pages = page_index(docs.limit(2)).join(blobs, "media_ref")
-    rows = classify_pages_batched(pages, scorer="const", batch_size=3).collect()
-    assert rows
-    assert all(r.labels == ["page"] for r in rows)
-    assert all(abs(r.scores[13] - 0.99) < 1e-12 for r in rows)
-
-
-def test_nhwc_preprocess_contract(corpus_dir):
-    """F9: the CNN input tensor is (n, 600, 500, 1) float32 in [0, 1] —
-    the reference's exact reshape (layout_analysis.py:96-99)."""
-    import pyarrow.parquet as pq
-    import os
-
-    blobs = pq.read_table(os.path.join(corpus_dir, "page_blobs.parquet")).to_pylist()
-    batch = [b["image"] for b in blobs[:4]]
-    t = preprocess_nhwc(batch)
-    assert t.shape == (4, 600, 500, 1)
-    assert t.dtype == np.float32
-    assert 0.0 <= t.min() and t.max() <= 1.0
-    assert t.max() > 0.5  # paper background ~235/255
 
 
 def test_resize_cubic_interpolation_quality():

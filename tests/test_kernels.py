@@ -6,15 +6,15 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from ocrd_anybaseocr_spark.kernels.binarize import binarize_otsu, binarize_sauvola, otsu_threshold
-from ocrd_anybaseocr_spark.kernels.components import component_stats
+from ocrd_anybaseocr_spark.kernels.binarize import binarize_sauvola, otsu_threshold
+from ocrd_anybaseocr_spark.kernels.components import component_stats, runs_from_image
 from ocrd_anybaseocr_spark.kernels.crop import (
     coalesce_columns,
     detect_border,
     detect_ruler,
     merge_x_overlaps,
 )
-from ocrd_anybaseocr_spark.kernels.deskew import estimate_shear, unshear
+from ocrd_anybaseocr_spark.kernels.deskew import estimate_shear_from_runs, unshear
 from ocrd_anybaseocr_spark.kernels.fold import fold_document
 from ocrd_anybaseocr_spark.png import decode_gray, encode_gray
 from ocrd_anybaseocr_spark.synth import generate_doc
@@ -34,7 +34,7 @@ def test_otsu_bimodal():
     img[10:20, 10:40] = 10
     t = otsu_threshold(img)
     assert 10 <= t < 240
-    ink = binarize_otsu(img)
+    ink = img <= t
     assert ink[15, 20] and not ink[0, 0]
     assert ink.sum() == 10 * 30
 
@@ -82,7 +82,7 @@ def test_deskew_recovers_grid_shear():
     for s in np.unique(shifts):
         rows = shifts == s
         skewed[rows, s:] = img[rows, : 300 - s] if s else img[rows]
-    est = estimate_shear(skewed <= 128)
+    est = estimate_shear_from_runs(*runs_from_image(skewed, 128), *skewed.shape)
     assert est == pytest.approx(shear)
     assert np.array_equal(unshear(skewed, est)[:, : 300 - shifts.max()], img[:, : 300 - shifts.max()])
 

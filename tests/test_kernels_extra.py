@@ -1,78 +1,20 @@
-"""Unit tests for the supplementary kernels: morphology (K4/K5), geometry
-(F1-F5/P7), line aggregation (A1-A4), resize/crop (K7/K9)."""
+"""Unit tests for the supplementary kernels: coordinate zoom (F4) and line
+aggregation (A1/A2)."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
-from ocrd_anybaseocr_spark.kernels.geometry import (
-    bbox_area,
-    bbox_from_points,
-    clip_polygon,
-    line_intersection,
-    points_from_polygon,
-    polygon_from_bbox,
-    polygon_from_points,
-    zoom_factor,
-)
+from ocrd_anybaseocr_spark.kernels.geometry import zoom_factor
 from ocrd_anybaseocr_spark.kernels.lines import (
     aggregate_lines,
-    group_stats,
     linregress_slope_stderr,
     merge_collinear,
 )
-from ocrd_anybaseocr_spark.kernels.morphology import (
-    binary_dilate,
-    binary_erode,
-    morph_close,
-    morph_gradient,
-)
-from ocrd_anybaseocr_spark.kernels.transform import (
-    crop_to_border,
-    resize_bilinear,
-    resize_box,
-)
 
 
-def test_morph_close_fuses_gaps():
-    m = np.zeros((5, 30), dtype=bool)
-    m[2, 2:10] = True
-    m[2, 14:22] = True  # 4px gap
-    closed = morph_close(m, 1, 10)
-    assert closed[2, 10:14].all()  # gap fused
-    assert not closed[0].any()
-
-
-def test_morph_gradient_is_boundary():
-    m = np.zeros((20, 20), dtype=bool)
-    m[5:15, 5:15] = True
-    g = morph_gradient(m, 3, 3)
-    assert g[5, 5] and g[4, 5] and g[15, 10]
-    assert not g[10, 10]  # interior removed
-
-
-def test_erode_dilate_duality():
-    rng = np.random.default_rng(3)
-    m = rng.random((30, 30)) < 0.4
-    assert np.array_equal(binary_erode(m, 3, 3), ~binary_dilate(~m, 3, 3))
-
-
-def test_line_intersection_basic():
-    assert line_intersection(((0, 0), (10, 0)), ((5, -5), (5, 5))) == (5.0, 0.0)
-    # parallel → (0,0) (reference convention, cropping.py:277-280)
-    assert line_intersection(((0, 0), (10, 0)), ((0, 1), (10, 1))) == (0.0, 0.0)
-
-
-def test_geometry_roundtrips():
-    box = [3, 4, 17, 29]
-    assert bbox_area(box) == 14 * 25
-    poly = polygon_from_bbox(box)
-    s = points_from_polygon(poly)
-    assert polygon_from_points(s).tolist() == poly.tolist()
-    assert bbox_from_points(s) == box
-    clipped = clip_polygon(np.array([[-5, 10], [100, 200]]), 50, 60)
-    assert clipped.tolist() == [[0, 10], [49, 59]]
+def test_zoom_factor():
     assert zoom_factor(150) == pytest.approx(2.0)
     assert zoom_factor(None) == 1.0
 
@@ -109,34 +51,6 @@ def test_merge_collinear_bridges_gap():
     assert len(first) == 2
     second = merge_collinear(first, w=1000)  # gap 30 < 0.10*1000
     assert len(second) == 1
-    st = group_stats(second[0])
-    assert st["start"] == 0 and st["end"] == 90
-    assert st["length"] == pytest.approx(60.0)
-
-
-def test_group_stats_weighted_width():
-    segs = np.array([[0, 0, 30, 0], [30, 0, 40, 0]])
-    groups = aggregate_lines(segs, widths=np.array([2.0, 6.0]))
-    assert len(groups) == 1
-    st = group_stats(groups[0])
-    # A4: (30*2 + 10*6)/40 = 3.0
-    assert st["weight"] == pytest.approx(3.0)
-
-
-def test_resize_box_exact_average():
-    img = np.arange(16, dtype=np.uint8).reshape(4, 4)
-    out = resize_box(img, 2)
-    assert out.tolist() == [[2, 4], [10, 12]]
-
-
-def test_resize_bilinear_identity_and_shape():
-    img = np.full((10, 8), 77, dtype=np.uint8)
-    out = resize_bilinear(img, 5, 4)
-    assert out.shape == (5, 4) and (out == 77).all()
-
-
-def test_crop_to_border():
-    img = np.full((100, 80), 235, dtype=np.uint8)
-    img[20:60, 10:50] = 0
-    out = crop_to_border(img, [10, 20, 49, 59], padding=2)
-    assert out.shape == (36, 36) and (out == 0).all()
+    g = second[0]
+    assert g.pts[:, 0].min() == 0 and g.pts[:, 0].max() == 90
+    assert sum(g.lengths) == pytest.approx(60.0)

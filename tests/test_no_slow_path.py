@@ -1,9 +1,10 @@
-"""Enforce the input_hint contract: vectorized pandas/Arrow UDFs only —
-no row-at-a-time Python UDFs, no RDD API anywhere in the package
-(SURVEY.md §2.10)."""
+"""Static contracts of the package: vectorized pandas/Arrow UDFs only —
+no row-at-a-time Python UDFs, no RDD API anywhere (SURVEY.md §2.10) — and
+no definition that only tests reach."""
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 
@@ -37,3 +38,80 @@ def test_no_row_udfs_or_rdd():
                     line = src[: m.start()].count("\n") + 1
                     violations.append(f"{path}:{line}: {label}")
     assert not violations, "\n".join(violations)
+
+
+# Production roots outside the package: the Spark entry module, jobs, bench
+# harnesses, tools and the benchmark. tests/ is deliberately absent.
+ROOT = os.path.dirname(PKG)
+PRODUCTION = ["__spark_entry__.py", "bench.py", "bench_extra.py", "jobs", "tools", "perfbench"]
+# decorators that register a definition (the query registry)
+REGISTRIES = {"register"}
+# definitions kept on purpose although no production path reaches them
+TEST_ONLY_ALLOWED = {
+    "kernels/crop.py:detect_border_profile": "reference that tests check detect_border against",
+    "kernels/crop.py:_side_candidates": "helper of that reference",
+    "sources/tables.py:write_bucketed": "storage-bucketed layout, its own COVERAGE row",
+    "sources/tables.py:load_documents_jsonl": "JSONL source, its own COVERAGE row",
+    "streaming/stream.py": "the streaming subsystem, its own COVERAGE rows",
+}
+
+
+def _py_files(path):
+    if path.endswith(".py"):
+        yield path
+        return
+    for dirpath, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if d != "__pycache__"]
+        yield from (os.path.join(dirpath, f) for f in sorted(files) if f.endswith(".py"))
+
+
+def _names(*nodes) -> set[str]:
+    """Identifiers the nodes load: bare names and attribute names."""
+    out = set()
+    for node in nodes:
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+                out.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                out.add(n.attr)
+    return out
+
+
+def test_no_test_only_definitions():
+    """Every top-level function and class of the package must be reachable
+    from production code. Reachability is by name, transitively: the roots
+    are everything a production file outside the package loads, the
+    package's own module-level statements and decorators, and every
+    registry-decorated definition; a reached definition's body reaches
+    further. Matching by bare name over-approximates what is live, so a
+    definition this flags is referenced only from tests/ or nowhere."""
+    roots, bodies, by_name = set(), {}, {}
+    for path in _py_files(PKG):
+        rel = os.path.relpath(path, PKG)
+        for stmt in ast.parse(open(path).read()).body:
+            if not isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                roots |= _names(stmt)
+                continue
+            key = f"{rel}:{stmt.name}"
+            by_name.setdefault(stmt.name, []).append(key)
+            bodies[key] = _names(*stmt.body, *getattr(stmt, "bases", []))
+            roots |= _names(*stmt.decorator_list)
+            if any(isinstance(d, ast.Call) and getattr(d.func, "id", None) in REGISTRIES
+                   for d in stmt.decorator_list):
+                roots.add(stmt.name)
+    for entry in PRODUCTION:
+        for path in _py_files(os.path.join(ROOT, entry)):
+            roots |= _names(ast.parse(open(path).read()))
+    live, frontier = set(), set(roots)
+    while frontier:
+        for key in by_name.get(frontier.pop(), ()):
+            if key not in live:
+                live.add(key)
+                frontier |= bodies[key]
+    unreached = sorted(set(bodies) - live)
+    dead = [k for k in unreached
+            if k not in TEST_ONLY_ALLOWED and k.split(":")[0] not in TEST_ONLY_ALLOWED]
+    assert not dead, "reached only from tests/ (or nowhere):\n" + "\n".join(dead)
+    stale = [a for a in TEST_ONLY_ALLOWED
+             if not any(k == a or k.startswith(a + ":") for k in unreached)]
+    assert not stale, f"allowlisted but reached from production (or gone): {stale}"

@@ -7,13 +7,15 @@ import pytest
 
 from ocrd_anybaseocr_spark.operators.extract import extract_spans
 from ocrd_anybaseocr_spark.operators.interleave import interleaved_documents
-from ocrd_anybaseocr_spark.plans import (
-    count_exchanges,
-    explain_str,
-    pushed_filters,
-)
+from ocrd_anybaseocr_spark.plans import count_exchanges, explain_str
 from ocrd_anybaseocr_spark.queries import QUERIES
 from ocrd_anybaseocr_spark.sources.tables import load_corpus, load_table
+
+
+def pushed_filters(df) -> str:
+    """The PushedFilters lines of the formatted plan (parquet scan pushdown)."""
+    plan = explain_str(df)
+    return "\n".join(l.strip() for l in plan.splitlines() if "PushedFilters" in l)
 
 
 def test_extraction_is_narrow(spark, corpus_dir):

@@ -422,18 +422,22 @@ def test_cdc_twin_partition_property(words, drop):
 def test_quarantine_wrapper_never_raises(blob, variant):
     """The per-row quarantine wrapper must turn ANY kernel failure into an
     error row — arbitrary bytes, truncated PNG headers, or a valid
-    signature with garbage chunks can never raise out of _process_rows
-    (one bad blob killing the Arrow batch task is the r5 failure class)."""
-    from ocrd_anybaseocr_spark.operators.pipeline import _process_rows
-    from ocrd_anybaseocr_spark.oracle import process_page
+    signature with garbage chunks can never raise out of the page stage's
+    batch function (one bad blob killing the Arrow batch task is the r5
+    failure class)."""
+    import pyarrow as pa
+
+    from ocrd_anybaseocr_spark.config import DEFAULT_PARAMS
+    from ocrd_anybaseocr_spark.operators.pipeline import _stage
 
     if variant == 1:
         blob = b"\x89PNG\r\n\x1a\n" + blob  # valid signature, garbage body
     elif variant == 2:
         blob = blob[:7]  # shorter than any signature
-    from ocrd_anybaseocr_spark.config import DEFAULT_PARAMS
-
-    out = _process_rows(process_page, DEFAULT_PARAMS, [("d0", "d0_p000", 0, blob)])
+    batch = pa.RecordBatch.from_pydict(
+        {"doc_id": ["d0"], "media_ref": ["d0_p000"], "page_no": [0], "image": [blob]}
+    )
+    out = [r for b in _stage([batch], DEFAULT_PARAMS) for r in b.to_pylist()]
     assert len(out) == 1
     r = out[0]
     assert r["doc_id"] == "d0" and r["media_ref"] == "d0_p000"

@@ -7,8 +7,11 @@ measurement runs at a larger driver-generated scale factor than the local
 sf0.1, so optimizations must be validated at that scale too. This tool
 makes K disjoint copies of every table with per-copy key offsets:
 
-- documents: doc_id offset; every WORD of a copy>0 text gets a "~k"
-  suffix, so copies are fully disjoint in shingle/hash space — each copy
+- documents: doc_id offset; every WORD of a copy>0 text gets a "qz<k>"
+  suffix. The suffix is alphanumeric, so it survives the [^a-z0-9 ]
+  normalization of dedup_exact_normalized, and copies are disjoint in
+  shingle/hash space and under that normalization (a base word would have
+  to end in "qz" plus digits itself to collide) — each copy
   reproduces sf0.1's intra-copy dup/near-dup structure exactly and no
   cross-copy pairs exist (pair counts scale linearly, the way
   within-source dup mass scales in a real larger corpus).
@@ -62,7 +65,7 @@ def scale_table(name: str, src: str, out: str, k_copies: int) -> None:
             if field.name in OFF and k > 0:
                 col = pc.add(col, pa.scalar(k * OFF[field.name], type=field.type))
             elif name == "documents" and field.name == "text" and k > 0:
-                suf = f"~{k}"
+                suf = f"qz{k}"
                 col = pa.array(
                     [" ".join(w + suf for w in s.split(" ")) for s in col.to_pylist()],
                     type=pa.string(),
