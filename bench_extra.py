@@ -7,9 +7,10 @@ Times each named query (default: all registered) with the exact bench.py
 methodology — same session config, same warmup, `.write.format("noop")`
 sink — but in ONE dedicated session per invocation so a single query (or
 a small set) can be measured without the other 114 sharing the window.
-Each rep re-invokes the query fn; per-session lineage caches behave as in
-the real bench (first rep pays a shared relation's build). Use
-`--fresh-caches` to clear the session caches between reps instead.
+Each rep re-invokes the query fn; the session-shared relations
+(sources.session_cache) behave as in the real bench (first rep pays a
+shared relation's build). Use `--fresh-caches` to clear them between reps
+instead.
 
 Prints one JSON line: {"queries": {name: [rep0_s, rep1_s, ...]}, "sf": ...}
 """
@@ -43,6 +44,7 @@ def main() -> None:
         args.remove("--fresh-caches")
 
     from ocrd_anybaseocr_spark.queries import QUERIES
+    from ocrd_anybaseocr_spark.sources import session_cache
     from ocrd_anybaseocr_spark.sources.tables import load_table, spark_session
 
     names = args or list(QUERIES)
@@ -60,21 +62,13 @@ def main() -> None:
         "overwrite"
     ).save()
 
-    def _clear_all_caches() -> None:
-        from ocrd_anybaseocr_spark.operators import dedup, media, similarity
-        from ocrd_anybaseocr_spark.operators import textstats
-
-        for mod in (dedup, media, similarity, textstats):
-            if hasattr(mod, "clear_caches"):
-                mod.clear_caches()
-
     out: dict[str, list[float]] = {}
     for name in names:
         spark.sparkContext.setJobDescription(f"bench_extra:{name}")
         ts: list[float] = []
         for r in range(reps):
             if fresh and r > 0:
-                _clear_all_caches()
+                session_cache.clear()
             t0 = time.monotonic()
             QUERIES[name](spark, sf_dir).write.format("noop").mode(
                 "overwrite"

@@ -104,7 +104,7 @@ def main() -> None:
     args = ap.parse_args()
 
     # NEVER set .master() here: a spark-submit entry point must inherit
-    # the cluster master (CLAUDE.md round-6 lesson)
+    # the cluster master (CLAUDE.md, jobs)
     from pyspark.sql import SparkSession
 
     spark = SparkSession.builder.appName("compact_job").getOrCreate()

@@ -1,7 +1,7 @@
 """Cluster entry point: ANN INDEX BUILD pass — persist the three serving
 indexes (hyperplane-LSH buckets, IVF-Flat cell assignments, PQ codes) as
 parquet relations, making the build-once/serve-many split durable: the
-per-session caches in operators/similarity.py memoize these same
+session-shared entries (sources.session_cache) memoize these same
 relations for one driver; this job is the production form where the index
 is built once per corpus snapshot and every serving job reads the
 committed relation instead of recomputing the assignment expressions.

@@ -26,6 +26,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..sources.session_cache import shared
 from ..sources.tables import load_table, scan_fanout
 
 def _docs_fanout(spark: SparkSession, sf_dir: str):
@@ -442,109 +443,54 @@ def verified_pairs(docs: DataFrame) -> DataFrame:
     return _jaccard_verify(cands, sh, sh, "doc_a", "doc_b")
 
 
-# the verified edge set is the priciest lineage in the dedup family
-# (shingle → minhash → band join → exact-Jaccard verify); when both the
-# verified-pairs query and the clusters query run in one driver pass,
-# compute it ONCE per (session, sf_dir) and truncate the lineage with an
-# eager localCheckpoint (pairs are a vanishing fraction of the corpus, so
-# pinning them is cheap; a dead session's key never matches again because
-# applicationId changes). VERDICT round 2, 'What's wrong' #3.
-_VERIFIED_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-# the banded LSH candidate relation, checkpointed per (session, sf_dir):
-# the raw-pairs query, the verified pass and the recall-curve audit all
-# consume the SAME signatures+banding — one driver pass computes it once
-# (same rationale as _VERIFIED_CACHE below)
-_LSH_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-# the exact within-source Jaccard truth relation (jaccard_pairs),
-# checkpointed per (session, sf_dir): shared by the ngram-Jaccard query
-# and the recall-curve audit's ground-truth side
-_JACCARD_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-# the MinHash signature relation itself (16 int64s per doc — the smallest
-# relation in the family), checkpointed per (session, sf_dir): the banded
-# LSH build and the incremental query's two parity sides all derive from
-# it by row-local filters, so one driver pass runs the signature kernel
-# once instead of three times
-_MINHASH_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_caches() -> None:
-    """Drop the per-session verified-pair memoization. The cache keys on
-    (app.id, sf_dir) and the checkpoint is eager, so a caller that mutates
-    sf_dir contents mid-session would otherwise get stale pairs (ADVICE r3:
-    acceptable for the driver-gate pass pattern, but tests and long-lived
-    REPL sessions need an explicit clear)."""
-    _VERIFIED_CACHE.clear()
-    _CDC_ROWS_CACHE.clear()
-    _LSH_PAIRS_CACHE.clear()
-    _JACCARD_PAIRS_CACHE.clear()
-    _SIMHASH_SIG_CACHE.clear()
-    _REP_STATS_CACHE.clear()
-    _MINHASH_SIG_CACHE.clear()
-
-
-def _session_cached(cache: dict, spark: SparkSession, sf_dir: str, build) -> DataFrame:
-    """Shared (app.id, sf_dir)-keyed eager-checkpoint memoization — the
-    _VERIFIED_CACHE convention; entries of stopped sessions are dropped."""
-    app = spark.conf.get("spark.app.id", "?")
-    key = (app, sf_dir)
-    if key not in cache:
-        for k in [k for k in cache if k[0] != app]:
-            del cache[k]
-        cache[key] = build().localCheckpoint(eager=True)
-    return cache[key]
+# The dedup family's shared relations (sources.session_cache): each is
+# consumed by several queries of one driver pass, so its lineage runs once.
+# - minhash_sig: 16 int64s per doc, the smallest relation in the family; the
+#   banded LSH build and the incremental query's two parity sides derive
+#   from it by row-local filters.
+# - lsh_pairs: the banded candidates, shared by the raw-pairs query, the
+#   verified pass and the recall-curve audit.
+# - jaccard_pairs: the exact within-source Jaccard truth, shared by the
+#   ngram-Jaccard query and the recall-curve audit.
+# - verified: the priciest lineage (shingle -> minhash -> band join ->
+#   exact-Jaccard verify), shared by the verified-pairs and clusters
+#   queries; pairs are a vanishing fraction of the corpus, so pinning them
+#   is cheap. VERDICT round 2, 'What's wrong' #3.
 
 
 def _minhash_sig_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _session_cached(
-        _MINHASH_SIG_CACHE,
-        spark,
-        sf_dir,
+    return shared(
+        "minhash_sig", spark, (sf_dir,),
         lambda: minhash_signatures(_docs_fanout(spark, sf_dir)),
     )
 
 
 def _lsh_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _session_cached(
-        _LSH_PAIRS_CACHE,
-        spark,
-        sf_dir,
+    return shared(
+        "lsh_pairs", spark, (sf_dir,),
         lambda: lsh_pairs(_minhash_sig_cached(spark, sf_dir)),
     )
 
 
 def _jaccard_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _session_cached(
-        _JACCARD_PAIRS_CACHE,
-        spark,
-        sf_dir,
+    return shared(
+        "jaccard_pairs", spark, (sf_dir,),
         lambda: jaccard_pairs(_docs_fanout(spark, sf_dir)),
     )
 
 
 def _verified_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    app = spark.conf.get("spark.app.id", "?")
-    key = (app, sf_dir)
-    if key not in _VERIFIED_CACHE:
-        # entries keyed to another app id belong to stopped sessions and
-        # can never be hit again — drop them so a long-lived driver that
-        # cycles sessions doesn't pin dead checkpoint references forever
-        for k in [k for k in _VERIFIED_CACHE if k[0] != app]:
-            del _VERIFIED_CACHE[k]
+    def build():
         docs = _docs_fanout(spark, sf_dir)
         # same lineage as verified_pairs (the raw builder plan tests
-        # assert on), but the candidate side rides the checkpointed band
+        # assert on), but the candidate side rides the shared band
         # relation so one driver pass computes signatures+banding once
         # across the raw-pairs, verified and recall-curve queries
         cands = _lsh_pairs_cached(spark, sf_dir).select("doc_a", "doc_b")
         sh = shingles(docs)
-        _VERIFIED_CACHE[key] = _jaccard_verify(
-            cands, sh, sh, "doc_a", "doc_b"
-        ).localCheckpoint(eager=True)
-    return _VERIFIED_CACHE[key]
+        return _jaccard_verify(cands, sh, sh, "doc_a", "doc_b")
+
+    return shared("verified", spark, (sf_dir,), build)
 
 
 def q_dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -644,17 +590,12 @@ def simhash_signatures_df(docs: DataFrame) -> DataFrame:
     )
 
 
-# the 64-bit signature relation, checkpointed per (session, sf_dir): the
+# the 64-bit signature relation, shared per (session, sf_dir): the
 # signature query, the pair generator and the dropped-bands audit all
 # consume it — one driver pass runs the explode + 64-sum agg once
-_SIMHASH_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _simhash_sig_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _session_cached(
-        _SIMHASH_SIG_CACHE,
-        spark,
-        sf_dir,
+    return shared(
+        "simhash_sig", spark, (sf_dir,),
         lambda: simhash_signatures_df(_docs_fanout(spark, sf_dir)),
     )
 
@@ -1141,16 +1082,11 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-# per-doc repetition stats, checkpointed per (session, sf_dir): consumed
-# by the repetition_ratio query AND the clean-filter rule stack
-_REP_STATS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# per-doc repetition stats, shared per (session, sf_dir): consumed by
+# the repetition_ratio query AND the clean-filter rule stack
 def _rep_stats_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _session_cached(
-        _REP_STATS_CACHE,
-        spark,
-        sf_dir,
+    return shared(
+        "rep_stats", spark, (sf_dir,),
         lambda: repetition_stats(
             _docs_fanout(spark, sf_dir).select("doc_id", "text")
         ),
@@ -1910,21 +1846,14 @@ def cdc_chunk_rows(docs: DataFrame) -> DataFrame:
 
 
 # the chunk relation is consumed by BOTH CDC queries in one driver pass;
-# compute it once per (session, sf_dir) and truncate the lineage (the
-# _verified_cached convention — the per-window md5 chunking is the
-# expensive part, the downstream aggs are cheap)
-_CDC_ROWS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# it is shared per (session, sf_dir) through sources.session_cache (the
+# per-window md5 chunking is the expensive part, the downstream aggs are
+# cheap)
 def _cdc_rows_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    app = spark.conf.get("spark.app.id", "?")
-    key = (app, sf_dir)
-    if key not in _CDC_ROWS_CACHE:
-        for k in [k for k in _CDC_ROWS_CACHE if k[0] != app]:
-            del _CDC_ROWS_CACHE[k]
-        docs = _docs_fanout(spark, sf_dir)
-        _CDC_ROWS_CACHE[key] = cdc_chunk_rows(docs).localCheckpoint(eager=True)
-    return _CDC_ROWS_CACHE[key]
+    return shared(
+        "cdc_rows", spark, (sf_dir,),
+        lambda: cdc_chunk_rows(_docs_fanout(spark, sf_dir)),
+    )
 
 
 def q_dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..sources.session_cache import shared
+
 
 def png_width(image: Column) -> Column:
     """IHDR width: bytes 17-20 big-endian (after 8-byte signature + length + 'IHDR')."""
@@ -260,30 +262,13 @@ def resize_images(blobs: DataFrame, zoom: float, method: str = "nearest") -> Dat
     return blobs.select("media_ref", "image").mapInPandas(stage, schema=schema)
 
 
-# (media_ref, dhash) checkpointed per (session, corpus_dir): three driver
-# queries (hashes, pairs, doc pairs) consume it and the pair generator
-# SELF-JOINS it — un-truncated lineage would re-decode every page PNG per
-# consumer per side (the IVF/LSH/PQ cache rationale, CLAUDE.md).
-# clear_caches() drops it.
-_DHASH_CACHE: dict[tuple[str, str], "DataFrame"] = {}
-
-
-def clear_caches() -> None:
-    """Drop the per-session dhash memoization (same contract as
-    similarity.clear_caches / dedup.clear_caches — callers that mutate a
-    corpus dir mid-session must clear)."""
-    _DHASH_CACHE.clear()
-
-
+# (media_ref, dhash) shared per (session, corpus_dir) through
+# sources.session_cache: three driver queries (hashes, pairs, doc pairs)
+# consume it and the pair generator SELF-JOINS it — un-truncated lineage
+# would re-decode every page PNG per consumer per side (the IVF/LSH/PQ
+# index rationale, CLAUDE.md)
 def media_dhash_cached(blobs: DataFrame, corpus_dir: str) -> DataFrame:
-    spark = blobs.sparkSession
-    app = spark.conf.get("spark.app.id", "?")
-    key = (app, corpus_dir)
-    if key not in _DHASH_CACHE:
-        for c in [c for c in _DHASH_CACHE if c[0] != app]:
-            del _DHASH_CACHE[c]
-        _DHASH_CACHE[key] = media_dhash(blobs).localCheckpoint(eager=True)
-    return _DHASH_CACHE[key]
+    return shared("dhash", blobs.sparkSession, (corpus_dir,), lambda: media_dhash(blobs))
 
 
 # ---------------------------------------------------------------------------

@@ -29,9 +29,12 @@ compared).
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..sources.session_cache import shared
 from ..sources.tables import load_table
 
 N_QUERIES = 10
@@ -380,62 +383,37 @@ IVF_MAX_K = 4096  # literal-argmin practicality cap (see ivf_assignments)
 IVF_NPROBE = 4  # cells probed per query
 IVF_STEP_N = 1000  # corpora <= this keep the IVF_K floor (mirrors derive_bits)
 
+
+def _emb_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+
+
 # per-(session, sf_dir) corpus row count: lsh bit derivation and ivf k
 # derivation each need it, and it is pure metadata — but a fresh count job
 # per query invocation still cost ann_lsh_bucketed ~0.6 s/pass (VERDICT r3
-# 'What's wrong' #2). Same keying/staleness caveat as _EMB_PAIRS_CACHE:
-# results go stale if sf_dir contents change within one session — the
-# driver-gate pattern never does that; tests use clear_caches().
-_COUNT_CACHE: dict[tuple[str, str], int] = {}
-
-
+# 'What's wrong' #2)
 def _emb_count_cached(spark: SparkSession, sf_dir: str) -> int:
-    app = spark.conf.get("spark.app.id", "?")
-    key = (app, sf_dir)
-    if key not in _COUNT_CACHE:
-        for k in [k for k in _COUNT_CACHE if k[0] != app]:
-            del _COUNT_CACHE[k]
-        _COUNT_CACHE[key] = load_table(spark, sf_dir, "embeddings").count()
-    return _COUNT_CACHE[key]
+    return shared(
+        "emb_count", spark, (sf_dir,),
+        lambda: load_table(spark, sf_dir, "embeddings").count(),
+    )
 
 
-def clear_caches() -> None:
-    """Drop all per-session memoization (counts, checkpointed pair sets,
-    the IVF and LSH indexes). For tests and any caller that mutates
-    sf_dir contents mid-session — the caches key on (app.id, sf_dir) and
-    would otherwise serve stale results after an in-place data change."""
-    _COUNT_CACHE.clear()
-    _EMB_PAIRS_CACHE.clear()
-    _IVF_ASSIGN_CACHE.clear()
-    _LSH_ASSIGN_CACHE.clear()
-    _PQ_CODES_CACHE.clear()
-    _KMEANS_CENTS_CACHE.clear()
-
-
-# the LSH INDEX (vec, tbl) -> bucket, checkpointed per (session, sf_dir,
-# tables, bits): every consumer SELF-JOINS the assignment relation (query
-# side vs corpus side, pair side A vs side B), and an un-truncated lineage
+# the LSH INDEX (vec, tbl) -> bucket, shared per (session, sf_dir, tables,
+# bits): every consumer SELF-JOINS the assignment relation (query side vs
+# corpus side, pair side A vs side B), and an un-truncated lineage
 # evaluates the interpreted-HOF bucket expression once PER SIDE (~0.9 s/pass
-# at sf0.1) — same rationale as _IVF_ASSIGN_CACHE. clear_caches() drops it.
-_LSH_ASSIGN_CACHE: dict[tuple[str, str, int, int], DataFrame] = {}
-
-
+# at sf0.1) — same rationale as _ivf_assign_cached
 def _lsh_assign_cached(
     spark: SparkSession, sf_dir: str, n_tables: int = LSH_TABLES,
     n_bits: int | None = None,
 ) -> DataFrame:
     if n_bits is None:
         n_bits = derive_bits(_emb_count_cached(spark, sf_dir))
-    app = spark.conf.get("spark.app.id", "?")
-    key = (app, sf_dir, n_tables, n_bits)
-    if key not in _LSH_ASSIGN_CACHE:
-        for c in [c for c in _LSH_ASSIGN_CACHE if c[0] != app]:
-            del _LSH_ASSIGN_CACHE[c]
-        emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        _LSH_ASSIGN_CACHE[key] = lsh_assignments(emb, n_tables, n_bits).localCheckpoint(
-            eager=True
-        )
-    return _LSH_ASSIGN_CACHE[key]
+    return shared(
+        "lsh_assign", spark, (sf_dir, n_tables, n_bits),
+        lambda: lsh_assignments(_emb_vecs(spark, sf_dir), n_tables, n_bits),
+    )
 
 
 def derive_ivf_k(n_rows: int) -> int:
@@ -603,19 +581,11 @@ _IDOT = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0L, (acc, v) -> acc + v)
 # every subtree referencing the assignment (candidate join, re-rank) and
 # every driver invocation re-evaluated the interpreted-HOF argmin over the
 # whole corpus (~0.4 ms/row at k=45 — HOF lambdas don't codegen).
-# Same keying/staleness caveat as _EMB_PAIRS_CACHE; clear_caches() drops it.
-_IVF_ASSIGN_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-
 def _ivf_assign_cached(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
-    app = spark.conf.get("spark.app.id", "?")
-    key = (app, sf_dir, k)
-    if key not in _IVF_ASSIGN_CACHE:
-        for c in [c for c in _IVF_ASSIGN_CACHE if c[0] != app]:
-            del _IVF_ASSIGN_CACHE[c]
-        emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        _IVF_ASSIGN_CACHE[key] = ivf_assignments(emb, k).localCheckpoint(eager=True)
-    return _IVF_ASSIGN_CACHE[key]
+    return shared(
+        "ivf_assign", spark, (sf_dir, k),
+        lambda: ivf_assignments(_emb_vecs(spark, sf_dir), k),
+    )
 
 
 def build_ann_indexes(spark: SparkSession, sf_dir: str) -> dict:
@@ -934,22 +904,15 @@ def pq_codes(emb: DataFrame, books: list | None = None) -> DataFrame:
     )
 
 
-# (books, checkpointed codes) per (session, sf_dir) — same build-once-
-# serve-many contract as the IVF/LSH indexes; clear_caches() drops it
-_PQ_CODES_CACHE: dict[tuple[str, str], tuple[list, DataFrame]] = {}
-
-
 def _pq_index_cached(spark: SparkSession, sf_dir: str) -> tuple[list, DataFrame]:
-    app = spark.conf.get("spark.app.id", "?")
-    key = (app, sf_dir)
-    if key not in _PQ_CODES_CACHE:
-        for c in [c for c in _PQ_CODES_CACHE if c[0] != app]:
-            del _PQ_CODES_CACHE[c]
-        emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        books = pq_codebooks(emb)
-        codes = pq_codes(emb, books).localCheckpoint(eager=True)
-        _PQ_CODES_CACHE[key] = (books, codes)
-    return _PQ_CODES_CACHE[key]
+    """(books, checkpointed codes) per (session, sf_dir) — the same
+    build-once-serve-many contract as the IVF/LSH indexes, as two entries
+    so that only the codes relation is checkpointed. A cold build scans
+    the embeddings once for both."""
+    emb = functools.cache(lambda: _emb_vecs(spark, sf_dir))
+    books = shared("pq_books", spark, (sf_dir,), lambda: pq_codebooks(emb()))
+    codes = shared("pq_codes", spark, (sf_dir,), lambda: pq_codes(emb(), books))
+    return books, codes
 
 
 def q_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1226,26 +1189,17 @@ def cosine_verified_pairs(
     )
 
 
-# computed once per (session, sf_dir) and lineage-truncated, shared by the
-# pairs query and the clusters query — same rationale and shape as
-# dedup._verified_cached (the CC edge materialization would otherwise
-# evaluate the whole LSH+verify lineage twice via the symmetric union)
-_EMB_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# shared per (session, sf_dir) by the pairs query and the clusters query —
+# same rationale and shape as dedup._verified_cached (the CC edge
+# materialization would otherwise evaluate the whole LSH+verify lineage
+# twice via the symmetric union)
 def _emb_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    app = spark.conf.get("spark.app.id", "?")
-    key = (app, sf_dir)
-    if key not in _EMB_PAIRS_CACHE:
-        # drop entries from stopped sessions (see dedup._verified_cached)
-        for k in [k for k in _EMB_PAIRS_CACHE if k[0] != app]:
-            del _EMB_PAIRS_CACHE[k]
+    def build():
         emb = load_table(spark, sf_dir, "embeddings")
         cand = pairs_from_assignments(_lsh_assign_cached(spark, sf_dir))
-        _EMB_PAIRS_CACHE[key] = cosine_verified_pairs(
-            emb, pairs=cand
-        ).localCheckpoint(eager=True)
-    return _EMB_PAIRS_CACHE[key]
+        return cosine_verified_pairs(emb, pairs=cand)
+
+    return shared("emb_pairs", spark, (sf_dir,), build)
 
 
 def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1452,22 +1406,15 @@ def _kmeans_partials_arrow(emb: DataFrame, cents) -> DataFrame:
 
 # refined Lloyd centroids per (session, sf_dir, k, iters): q_kmeans_clusters
 # and q_dedup_semantic run the SAME derivation on the same corpus — one
-# driver pass pays the iteration cost once (the _verified_cached rationale;
-# centroids are a bounded k x dim int list, not a relation)
-_KMEANS_CENTS_CACHE: dict[tuple[str, str, int, int], list] = {}
-
-
+# driver pass pays the iteration cost once (sources.session_cache; centroids
+# are a bounded k x dim int list, so the entry is not checkpointed)
 def _kmeans_cents_cached(
     spark: SparkSession, sf_dir: str, k: int, iters: int = KMEANS_ITERS
 ) -> list:
-    app = spark.conf.get("spark.app.id", "?")
-    key = (app, sf_dir, k, iters)
-    if key not in _KMEANS_CENTS_CACHE:
-        for c in [c for c in _KMEANS_CENTS_CACHE if c[0] != app]:
-            del _KMEANS_CENTS_CACHE[c]
-        emb = load_table(spark, sf_dir, "embeddings")
-        _KMEANS_CENTS_CACHE[key] = kmeans_centroids(emb, k, iters)
-    return _KMEANS_CENTS_CACHE[key]
+    return shared(
+        "kmeans_cents", spark, (sf_dir, k, iters),
+        lambda: kmeans_centroids(load_table(spark, sf_dir, "embeddings"), k, iters),
+    )
 
 
 def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..sources.session_cache import shared
 from ..sources.tables import load_table, scan_fanout
 
 def _docs_fanout(spark: SparkSession, sf_dir: str):
@@ -469,21 +470,13 @@ def _clean_verdicts_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("retained", F.col("reasons") == "")
 
 
-# the per-doc verdict relation, checkpointed per (session, sf_dir): the
-# filter query and the per-source report both consume it
-_CLEAN_VERDICTS_CACHE: dict = {}
-
-
+# the per-doc verdict relation, shared per (session, sf_dir): the filter
+# query and the per-source report both consume it
 def _clean_verdicts_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    app = spark.conf.get("spark.app.id", "?")
-    key = (app, sf_dir)
-    if key not in _CLEAN_VERDICTS_CACHE:
-        for k in [k for k in _CLEAN_VERDICTS_CACHE if k[0] != app]:
-            del _CLEAN_VERDICTS_CACHE[k]
-        _CLEAN_VERDICTS_CACHE[key] = _clean_verdicts_build(
-            spark, sf_dir
-        ).localCheckpoint(eager=True)
-    return _CLEAN_VERDICTS_CACHE[key]
+    return shared(
+        "clean_verdicts", spark, (sf_dir,),
+        lambda: _clean_verdicts_build(spark, sf_dir),
+    )
 
 
 def _oracle_clean_filter() -> str:
@@ -1348,24 +1341,16 @@ def dsir_score(docs: DataFrame, lr: list[int]) -> DataFrame:
     )
 
 
-# the scored DSIR relation (doc_id, n_feats, lw_e6), checkpointed per
-# (session, sf_dir): the weights query and the resample query both consume
-# the same fit + scoring pass — one driver pass runs the per-ngram md5
-# scoring once (the _verified_cached convention)
-_DSIR_SCORES_CACHE: dict = {}
-
-
+# the scored DSIR relation (doc_id, n_feats, lw_e6), shared per (session,
+# sf_dir) through sources.session_cache: the weights query and the
+# resample query both consume the same fit + scoring pass — one driver
+# pass runs the per-ngram md5 scoring once
 def _dsir_scores_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    app = spark.conf.get("spark.app.id", "?")
-    key = (app, sf_dir)
-    if key not in _DSIR_SCORES_CACHE:
-        for k in [k for k in _DSIR_SCORES_CACHE if k[0] != app]:
-            del _DSIR_SCORES_CACHE[k]
+    def build():
         docs = _docs_fanout(spark, sf_dir)
-        _DSIR_SCORES_CACHE[key] = dsir_score(
-            docs, dsir_log_ratios(docs)
-        ).localCheckpoint(eager=True)
-    return _DSIR_SCORES_CACHE[key]
+        return dsir_score(docs, dsir_log_ratios(docs))
+
+    return shared("dsir_scores", spark, (sf_dir,), build)
 
 
 def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1979,7 +1964,7 @@ def _cms_cell_spark(j: int) -> "F.Column":
     """Row-j CMS cell for ``word``: md5 of the row-salted word, 8-hex
     prefix -> bigint, mod CMS_W. One md5 per (row, word) — the conv()
     form (never strpos splicing; Catalyst does not CSE the md5 repeats,
-    CLAUDE.md round-2 lesson)."""
+    CLAUDE.md)."""
     return F.expr(
         f"cast(conv(substring(md5(cast(concat('cms{j}:', word) as binary)),"
         f" 1, 8), 16, 10) as bigint) % {CMS_W}"
@@ -2280,28 +2265,13 @@ ORACLE_HIST_QUANTILES = f"""
 # ---------------------------------------------------------------------------
 
 
-def q_lm_bigram_cross_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document cross-entropy under the corpus's own BIGRAM model
-    with add-one smoothing: p(w_t | w_{t-1}) = (c(prev,cur) + 1) /
-    (c(prev) + V). Where the unigram proxy scores token CHOICE, this
-    scores token ORDER — shuffled or templated text separates from
-    natural text here while looking identical to the unigram model.
-    Context counts c(prev) derive from the bigram relation itself
-    (sum over cur), so numerator and denominator can never disagree
-    about tokenization; V = corpus vocabulary size (1-row broadcast).
-    Docs need >= 2 tokens (transitions are what's scored) — and the
-    size guard doubles as the CLAUDE.md sequence(1, n-1) descending
-    guard.
-
-    Scale: bigram model = one partial-agg shuffle on (prev, cur) — the
-    classic count-based LM estimation job at order 2; scoring joins the
-    doc bigram stream to the model on the same key (AQE broadcasts while
-    it fits). Same micro-bit HALF-UP rounding as the unigram query (log2
-    cross-engine drift ~1 ulp vs a 1e-9-wide rounding boundary)."""
-    docs = _docs_fanout(spark, sf_dir)
-    ws = docs.select("doc_id", F.split("text", " ").alias("ws"))
-    bg = (
-        ws.where(F.expr("size(ws) >= 2"))
+def _bigrams(docs: DataFrame) -> DataFrame:
+    """(doc_id, prev, cur): every adjacent word pair of the docs with >= 2
+    tokens — the size guard doubles as the CLAUDE.md sequence(1, n-1)
+    descending guard."""
+    return (
+        docs.select("doc_id", F.split("text", " ").alias("ws"))
+        .where(F.expr("size(ws) >= 2"))
         .select(
             "doc_id",
             F.explode(
@@ -2314,14 +2284,41 @@ def q_lm_bigram_cross_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "b.prev", "b.cur")
     )
-    # the model relation feeds THREE consumers (ctx, the sup join, and the
-    # vocabulary below) — checkpoint it once so the corpus-wide bigram
-    # explode+agg runs a single time per execution, not per consumer
-    model = (
-        bg.groupBy("prev", "cur")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
+
+
+def _bigram_counts_cached(
+    spark: SparkSession, sf_dir: str, docs: DataFrame
+) -> DataFrame:
+    """(prev, cur, c): the corpus bigram counts, shared per (session,
+    sf_dir) by the bigram LM and the PMI collocations. Each query feeds
+    it to several consumers (context counts, the scored join, the
+    vocabulary; both marginals and N), so the corpus-wide explode+agg
+    runs once per driver pass."""
+    return shared(
+        "bigram_counts", spark, (sf_dir,),
+        lambda: _bigrams(docs).groupBy("prev", "cur").agg(F.count(F.lit(1)).alias("c")),
     )
+
+
+def q_lm_bigram_cross_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document cross-entropy under the corpus's own BIGRAM model
+    with add-one smoothing: p(w_t | w_{t-1}) = (c(prev,cur) + 1) /
+    (c(prev) + V). Where the unigram proxy scores token CHOICE, this
+    scores token ORDER — shuffled or templated text separates from
+    natural text here while looking identical to the unigram model.
+    Context counts c(prev) derive from the bigram relation itself
+    (sum over cur), so numerator and denominator can never disagree
+    about tokenization; V = corpus vocabulary size (1-row broadcast).
+    Docs need >= 2 tokens (transitions are what's scored).
+
+    Scale: bigram model = one partial-agg shuffle on (prev, cur) — the
+    classic count-based LM estimation job at order 2; scoring joins the
+    doc bigram stream to the model on the same key (AQE broadcasts while
+    it fits). Same micro-bit HALF-UP rounding as the unigram query (log2
+    cross-engine drift ~1 ulp vs a 1e-9-wide rounding boundary)."""
+    docs = _docs_fanout(spark, sf_dir)
+    bg = _bigrams(docs)
+    model = _bigram_counts_cached(spark, sf_dir, docs)
     ctx = model.groupBy("prev").agg(F.sum("c").alias("cp"))
     # v = COUNT(DISTINCT word) over the whole corpus, derived WITHOUT a
     # third corpus tokenize: every word of a >=2-token doc appears as a
@@ -2408,30 +2405,13 @@ ORACLE_LM_BIGRAM_CE = f"""
 FP_MAX_DF = 16  # fingerprints shared by more docs are boilerplate, skipped
 CONTAIN_MIN_PPM = 600_000  # >= 60% of the smaller doc's fingerprints shared
 
-# (app.id, sf_dir) -> checkpointed (doc_id, fps) winnow relation (the
-# session-cache convention of dedup._verified_cached)
-_WINNOW_FP_CACHE: dict = {}
-
-
-def clear_caches() -> None:
-    _WINNOW_FP_CACHE.clear()
-    _DSIR_SCORES_CACHE.clear()
-    _CLEAN_VERDICTS_CACHE.clear()
-
-
+# the (doc_id, fps) winnow relation, shared per (session, sf_dir) through
+# sources.session_cache
 def _winnow_fp_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    app = spark.conf.get("spark.app.id", "?")
-    key = (app, sf_dir)
-    if key not in _WINNOW_FP_CACHE:
-        for k in [k for k in _WINNOW_FP_CACHE if k[0] != app]:
-            del _WINNOW_FP_CACHE[k]
-        docs = _docs_fanout(spark, sf_dir)
-        _WINNOW_FP_CACHE[key] = (
-            winnow_fingerprints(docs)
-            .select("doc_id", "fps")
-            .localCheckpoint(eager=True)
-        )
-    return _WINNOW_FP_CACHE[key]
+    return shared(
+        "winnow_fp", spark, (sf_dir,),
+        lambda: winnow_fingerprints(_docs_fanout(spark, sf_dir)).select("doc_id", "fps"),
+    )
 
 
 def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2660,29 +2640,7 @@ def q_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus pass); the rank<=K filter compiles to the per-partition top-K
     merge (TakeOrderedAndProject / WindowGroupLimit)."""
     docs = _docs_fanout(spark, sf_dir)
-    bg = (
-        docs.select("doc_id", F.split("text", " ").alias("ws"))
-        .where(F.expr("size(ws) >= 2"))
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(ws) - 1), i ->"
-                    " named_struct('prev', element_at(ws, i),"
-                    " 'cur', element_at(ws, i + 1)))"
-                )
-            ).alias("b")
-        )
-        .select("b.prev", "b.cur")
-    )
-    # the pair relation feeds FOUR consumers (both marginals, N and the
-    # scored join) — checkpoint it once so the corpus-wide bigram
-    # explode+agg lineage runs a single time per execution (the
-    # lm_bigram_cross_entropy model recipe)
-    pairs = (
-        bg.groupBy("prev", "cur")
-        .agg(F.count(F.lit(1)).alias("c_xy"))
-        .localCheckpoint(eager=True)
-    )
+    pairs = _bigram_counts_cached(spark, sf_dir, docs).withColumnRenamed("c", "c_xy")
     left = pairs.groupBy("prev").agg(F.sum("c_xy").alias("c_x"))
     right = pairs.groupBy("cur").agg(F.sum("c_xy").alias("c_y"))
     n = pairs.agg(F.sum("c_xy").alias("n"))

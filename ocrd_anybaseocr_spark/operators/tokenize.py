@@ -27,6 +27,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..kernels.bpe import BPE_MERGES, BPE_TOP_WORDS, bpe_encode_text, bpe_train
+from ..sources.session_cache import shared
 from ..sources.tables import load_corpus
 
 # reading-order flat text of one interleaved document: every TEXT-BEARING
@@ -38,14 +39,6 @@ FLAT_TEXT_EXPR = (
     " s -> struct(s.offset as offset, s.kind as kind, s.text as text))),"
     " s -> s.text is not null), s -> s.text))"
 )
-
-_MERGES_CACHE: dict[tuple[str, str], list[tuple[str, str]]] = {}
-
-
-def clear_caches() -> None:
-    """Drop the per-session merge-table memoization (same contract as
-    media/similarity/dedup clear_caches)."""
-    _MERGES_CACHE.clear()
 
 
 def flat_text(docs: DataFrame) -> DataFrame:
@@ -71,11 +64,8 @@ def bpe_fit_stats(
     second word shuffle); covered mass is summed from the already-fetched
     top rows; the division is exact int (x * 1e6 div total), identical in
     the single-process oracle twin."""
-    app = spark.conf.get("spark.app.id", "?")
-    key = (app, corpus_dir)
-    if key not in _MERGES_CACHE:
-        for k in [k for k in _MERGES_CACHE if k[0] != app]:
-            del _MERGES_CACHE[k]
+
+    def build():
         docs, _ = load_corpus(spark, corpus_dir)
         ft = flat_text(docs)
         top = (
@@ -91,11 +81,12 @@ def bpe_fit_stats(
         ).collect()[0]["t"]
         covered = sum(int(r.cnt) for r in top)
         cov_ppm = (covered * 1_000_000) // int(total) if total else 0
-        _MERGES_CACHE[key] = (
+        return (
             bpe_train([(r.word, r.cnt) for r in top], n_merges=BPE_MERGES),
             cov_ppm,
         )
-    return _MERGES_CACHE[key]
+
+    return shared("bpe_merges", spark, (corpus_dir,), build)
 
 
 def bpe_fit(spark: SparkSession, corpus_dir: str) -> list[tuple[str, str]]:

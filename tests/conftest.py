@@ -13,6 +13,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from ocrd_anybaseocr_spark.sources import session_cache  # noqa: E402
 from ocrd_anybaseocr_spark.sources.tables import spark_session  # noqa: E402
 from ocrd_anybaseocr_spark.synth import generate_corpus  # noqa: E402
 
@@ -29,16 +30,10 @@ def spark():
 
 @pytest.fixture(autouse=True)
 def _clear_session_caches():
-    """Drop every per-session (app.id, sf_dir) relation cache before each
-    test: tests that monkeypatch load_table with a shared fake sf_dir
-    ('unused') would otherwise read a PREVIOUS test's planted relation
-    out of the cache (the documented clear_caches() obligation, made
-    structural once the cache family grew past what individual tests
-    remembered to clear)."""
-    from ocrd_anybaseocr_spark.operators import dedup, media, similarity, textstats, tokenize
-
-    for m in (dedup, media, similarity, textstats, tokenize):
-        m.clear_caches()
+    """A fresh session-relation registry for each test: tests that
+    monkeypatch load_table with a shared fake sf_dir ('unused') would
+    otherwise read a PREVIOUS test's planted relation out of it."""
+    session_cache.clear()
     yield
 
 

@@ -21,6 +21,7 @@ from ocrd_anybaseocr_spark.operators.similarity import (
     embedding_lsh_pairs,
     lsh_assignments,
 )
+from ocrd_anybaseocr_spark.sources import session_cache
 
 _EMB_SCHEMA = T.StructType(
     [
@@ -151,7 +152,7 @@ def test_ivf_flat_recall_vs_brute_force(spark, monkeypatch):
     vecs = _clustered_vectors()
     df = _emb_df(spark, vecs)
     monkeypatch.setattr(sim, "load_table", lambda s, d, n: df)
-    sim.clear_caches()  # the (app.id, sf_dir) caches must not serve another test's table
+    session_cache.clear()  # the session registry must not serve another test's table
     got = {}
     for r in sim.q_ann_ivf_flat(spark, "unused").collect():
         got.setdefault(r.query_id, set()).add(r.neighbor_id)
@@ -687,7 +688,7 @@ def test_pq_adc_recall_and_planted_duplicate(spark):
 
     from ocrd_anybaseocr_spark.operators import similarity as sim
 
-    sim.clear_caches()
+    session_cache.clear()
     sf = "/root/testdata/sf0.01"
     got = sim.q_ann_pq_adc(spark, sf).collect()
     pq_top = {(r.query_id, r.neighbor_id) for r in got}
@@ -732,7 +733,7 @@ def test_pq_adc_recall_and_planted_duplicate(spark):
     # ...and the FULL query over the boosted corpus returns it at rank 1
     # with exact d2 = 0 (the re-rank guarantee the docstring states —
     # quantization may blur the shortlist, never the final order)
-    sim.clear_caches()
+    session_cache.clear()
     try:
         import types
 
@@ -743,11 +744,11 @@ def test_pq_adc_recall_and_planted_duplicate(spark):
         full = sim.q_ann_pq_adc(spark, "boosted://").collect()
     finally:
         sim.load_table = orig_load
-        sim.clear_caches()
+        session_cache.clear()
     q3 = [r for r in full if r.query_id == 3]
     assert q3 and q3[0].rank == 1
     assert q3[0].neighbor_id == new_id and q3[0].d2 == 0
-    sim.clear_caches()
+    session_cache.clear()
 
 
 def test_lm_cross_entropy_orders_rare_above_common(spark, monkeypatch):
@@ -884,14 +885,14 @@ def test_new_operators_shuffle_invariance(spark):
         outs = []
         for parts in ("2", "17"):
             spark.conf.set("spark.sql.shuffle.partitions", parts)
-            sim.clear_caches()
+            session_cache.clear()
             outs.append(sorted(map(tuple, sim.q_kmeans_clusters(spark, sf).collect())))
         assert outs[0] == outs[1]
 
         sd = []
         for parts in ("2", "17"):
             spark.conf.set("spark.sql.shuffle.partitions", parts)
-            sim.clear_caches()
+            session_cache.clear()
             sd.append(sorted(map(tuple, sim.q_dedup_semantic(spark, sf).collect())))
         assert sd[0] == sd[1]
 
@@ -925,7 +926,7 @@ def test_new_operators_shuffle_invariance(spark):
         assert dh[0] == dh[1]
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
-        sim.clear_caches()
+        session_cache.clear()
 
 
 def test_dedup_incremental_cross_side_only(spark):
@@ -960,7 +961,6 @@ def test_round6_operators_shuffle_invariance(spark):
     widths (their determinism rests on narrow array algebra, exact-int
     rationals with deterministic tie-breaks, and literal-embedded ranges
     — none may depend on partition placement)."""
-    from ocrd_anybaseocr_spark.operators import similarity as sim
     from ocrd_anybaseocr_spark.operators import textstats as ts
     from ocrd_anybaseocr_spark.queries import QUERIES
 
@@ -976,7 +976,7 @@ def test_round6_operators_shuffle_invariance(spark):
             outs = []
             for parts in ("2", "17"):
                 spark.conf.set("spark.sql.shuffle.partitions", parts)
-                sim.clear_caches()
+                session_cache.clear()
                 df = QUERIES[name](spark, sf)
                 outs.append(
                     sorted(tuple(str(c) for c in r) for r in df.collect())
@@ -984,7 +984,7 @@ def test_round6_operators_shuffle_invariance(spark):
             assert outs[0] == outs[1], name
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
-        sim.clear_caches()
+        session_cache.clear()
 
 
 def test_bm25_ranks_term_dense_doc_first(spark, monkeypatch):
@@ -1456,7 +1456,7 @@ def test_bpe_corpus_fit_properties(spark):
     from ocrd_anybaseocr_spark.operators import tokenize as tok
     from ocrd_anybaseocr_spark.queries import QUERIES, _pipeline_corpus
 
-    tok.clear_caches()
+    session_cache.clear()
     merges, cov_ppm = tok.bpe_fit_stats(spark, _pipeline_corpus())
     assert len(merges) == BPE_MERGES
     # fit coverage (no-silent-caps, VERDICT r6 item 5): exact equality
@@ -1484,7 +1484,7 @@ def test_bpe_corpus_fit_properties(spark):
         # learned subwords beat characters: corpus words are >= 3 chars
         # (+ EOW = >= 4 initial symbols) but encode to ~3 tokens/word
         assert rows[d].n_tokens < rows[d].n_words * 4
-    tok.clear_caches()
+    session_cache.clear()
 
 
 def test_bpe_fit_coverage_below_cap(spark, monkeypatch):
@@ -1507,7 +1507,7 @@ def test_bpe_fit_coverage_below_cap(spark, monkeypatch):
         "media_ref:string,offset:int>>",
     )
     monkeypatch.setattr(tok, "load_corpus", lambda s, d: (docs, None))
-    tok.clear_caches()
+    session_cache.clear()
     try:
         _, cov_ppm = tok.bpe_fit_stats(spark, "synthetic-cap-corpus")
         covered = n_common * 100 + (BPE_TOP_WORDS - n_common)
@@ -1515,14 +1515,13 @@ def test_bpe_fit_coverage_below_cap(spark, monkeypatch):
         assert cov_ppm == (covered * 1_000_000) // total
         assert cov_ppm < 1_000_000
     finally:
-        tok.clear_caches()
+        session_cache.clear()
 
 
 def test_hard_negatives_planted_mirror(spark):
     """Hard-negative mining: each label-0 anchor's hard negative must be
     its byte-identical label-1 mirror (cosine exactly 1 beats every other
     candidate), and no row pairs two same-label vectors."""
-    from ocrd_anybaseocr_spark.operators import similarity as sim
     from ocrd_anybaseocr_spark.operators.similarity import hard_negatives
 
     rng = np.random.default_rng(11)
@@ -1546,7 +1545,7 @@ def test_hard_negatives_planted_mirror(spark):
         assert got[i].hard_neg_id == i + n, got[i]
         assert got[i + n].hard_neg_id == i, got[i + n]
     assert all(r.anchor_label != r.neg_label for r in got.values())
-    sim.clear_caches()
+    session_cache.clear()
 
 
 def test_source_mix_temperature_planted_exact(spark, monkeypatch):
@@ -1742,7 +1741,7 @@ def test_jaccard_histogram_consistency(spark, monkeypatch):
         "doc_id long, text string, lang string, source string, n_chars long",
     )
     monkeypatch.setattr(dd, "load_table", lambda s, d, n: docs)
-    dd.clear_caches()
+    session_cache.clear()
     try:
         ve = QUERIES["dedup_minhash_verified"](spark, "hist-twin").collect()
         hist = {r.bucket: r for r in
@@ -1758,17 +1757,16 @@ def test_jaccard_histogram_consistency(spark, monkeypatch):
             assert b / 10 <= hist[b].j_min and hist[b].j_max < (b + 1) / 10 + 1e-9
         assert 10 in hist  # the exact-dup pair (jaccard == 1.0)
     finally:
-        dd.clear_caches()
+        session_cache.clear()
 
 
 def test_ann_recall_audit_matches_components(spark, sf_dir):
     """ann_recall_audit must equal the set algebra over its two component
     queries' own outputs (which are independently DuckDB-hash-gated), and
     every query gets a row even at recall 0."""
-    from ocrd_anybaseocr_spark.operators import similarity as sim
     from ocrd_anybaseocr_spark.queries import QUERIES
 
-    sim.clear_caches()
+    session_cache.clear()
     truth: dict[int, set[int]] = {}
     for r in QUERIES["ann_brute_force"](spark, sf_dir).collect():
         if r.rank <= 3:
@@ -2162,7 +2160,7 @@ def test_embedding_pca_top1_parity_and_planted(spark, sf_dir, monkeypatch):
         "vec_id long, embedding array<float>, label int",
     )
     monkeypatch.setattr(sim, "load_table", lambda s, d, n: planted)
-    sim.clear_caches()
+    session_cache.clear()
     try:
         got_v = {r.dim: r.component_e6 for r in
                  QUERIES["embedding_pca_top1"](spark, "pca-twin").collect()}
@@ -2170,7 +2168,7 @@ def test_embedding_pca_top1_parity_and_planted(spark, sf_dir, monkeypatch):
         cos = abs(v @ u) / (np.linalg.norm(v) * np.linalg.norm(u))
         assert cos > 0.95, cos
     finally:
-        sim.clear_caches()
+        session_cache.clear()
 
 
 def test_histogram_quantile_audit_python_parity(spark, sf_dir):
@@ -2259,14 +2257,14 @@ def test_decontaminate_embeddings_split_and_planted(spark, sf_dir, monkeypatch):
         rows, "vec_id long, embedding array<float>, label int"
     )
     monkeypatch.setattr(sim, "load_table", lambda s, d, n: planted)
-    sim.clear_caches()
+    session_cache.clear()
     try:
         got_p = {(r.eval_vec, r.train_vec) for r in
                  QUERIES["decontaminate_embeddings"](spark, "decon-twin").collect()}
         assert (ev, tr) in got_p or (tr, ev) in {(b, a) for a, b in got_p}
         assert (ev, tr) in got_p  # eval side must be labeled eval
     finally:
-        sim.clear_caches()
+        session_cache.clear()
 
 
 def test_dedup_source_matrix_consistency(spark, sf_dir):

@@ -115,3 +115,23 @@ def test_no_test_only_definitions():
     stale = [a for a in TEST_ONLY_ALLOWED
              if not any(k == a or k.startswith(a + ":") for k in unreached)]
     assert not stale, f"allowlisted but reached from production (or gone): {stale}"
+
+
+def test_one_session_relation_registry():
+    """Per-session relations go through sources.session_cache.shared: it
+    alone reads spark.app.id, and no operator module keeps a module-level
+    *_CACHE of its own (kernels/transform._W_CACHE, a bounded numpy weight
+    memo that is not per session, lives outside operators/)."""
+    violations = []
+    for path in _py_files(PKG):
+        rel = os.path.relpath(path, PKG)
+        src = open(path).read()
+        if "spark.app.id" in src and rel != os.path.join("sources", "session_cache.py"):
+            violations.append(f"{rel}: reads spark.app.id")
+        if rel.startswith("operators" + os.sep):
+            for stmt in ast.parse(src).body:
+                targets = (stmt.targets if isinstance(stmt, ast.Assign)
+                           else [stmt.target] if isinstance(stmt, ast.AnnAssign) else [])
+                violations += [f"{rel}: module-level {t.id}" for t in targets
+                               if isinstance(t, ast.Name) and t.id.endswith("_CACHE")]
+    assert not violations, "\n".join(violations)

@@ -9,6 +9,7 @@ from ocrd_anybaseocr_spark.operators.extract import extract_spans
 from ocrd_anybaseocr_spark.operators.interleave import interleaved_documents
 from ocrd_anybaseocr_spark.plans import count_exchanges, explain_str
 from ocrd_anybaseocr_spark.queries import QUERIES
+from ocrd_anybaseocr_spark.sources import session_cache
 from ocrd_anybaseocr_spark.sources.tables import load_corpus, load_table
 
 
@@ -212,14 +213,12 @@ def test_pq_encode_is_narrow(spark, sf_dir):
 def test_pq_adc_lut_broadcast_no_cartesian(spark, sf_dir):
     """The ADC scan joins the codes relation against the (queries x M x K)
     distance LUT — bounded, must broadcast; never a cartesian product."""
-    from ocrd_anybaseocr_spark.operators import similarity as sim
-
-    sim.clear_caches()
+    session_cache.clear()
     df = QUERIES["ann_pq_adc"](spark, sf_dir)
     plan = explain_str(df, "simple")
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
-    sim.clear_caches()
+    session_cache.clear()
 
 
 def test_kmeans_assignment_is_narrow(spark, sf_dir):

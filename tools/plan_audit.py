@@ -7,11 +7,12 @@ kinds, whether any aggregate is partial (map-side combine), and red
 flags (CartesianProduct, row-at-a-time Python eval). `--write` rewrites
 PLAN_AUDIT.md with the table; without it the table prints.
 
-Queries whose registered wrapper serves a localCheckpointed relation
-(the per-session cache families) show the TRUNCATED plan — a scan — by
-design; the raw-builder shapes for those are asserted in
-tests/test_plans.py instead (CLAUDE.md invariant). They are marked
-"cached" here rather than audited as if the scan were the lineage.
+A query whose plan reads a localCheckpointed relation (a session-shared
+entry of sources.session_cache, or a checkpoint inside the query) shows
+the TRUNCATED plan — an ExistingRDD scan — by design; the raw-builder
+shapes for those are asserted in tests/test_plans.py instead (CLAUDE.md
+invariant). Such a row is marked "cached" rather than audited as if the
+scan were the lineage.
 """
 
 from __future__ import annotations
@@ -21,51 +22,6 @@ import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-# queries whose wrapper serves a checkpointed per-session relation: the
-# visible plan is a scan; raw-builder plan asserts live in test_plans.py
-CACHED = {
-    "dedup_minhash_verified",
-    "dedup_clusters",
-    "dedup_cluster_stats",
-    "pagerank_neardup",
-    "dedup_source_matrix",
-    "dedup_embedding_cosine",
-    "dedup_embedding_clusters",
-    "decontaminate_embeddings",
-    "dedup_cdc_chunks",
-    "dedup_cdc_pairs",
-    "ann_ivf_flat",
-    "ann_lsh_bucketed",
-    "ann_pq_adc",
-    "ann_recall_audit",
-    "dedup_semantic",
-    "kmeans_clusters",
-    "contrastive_hard_negatives",
-    "media_dhash",
-    "media_dhash_pairs",
-    "visual_doc_pairs",
-    "bpe_train",
-    "bpe_tokenize",
-    "dsir_resample",
-    "dedup_containment",
-    "graph_clustering_coeff",
-    "source_dup_report",
-    # round 8: new session-shared relations (one lineage per driver pass)
-    "dedup_minhash_lsh",
-    "dedup_jaccard_ngram",
-    "dedup_jaccard_histogram",
-    "lsh_recall_curve",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "dedup_simhash_dropped_bands",
-    "fingerprint_winnow",
-    "dsir_weights",
-    "repetition_ratio",
-    "corpus_clean_filter",
-    "clean_filter_report",
-    "media_dhash_clusters",
-}
 
 # NOTE on BroadcastNestedLoopJoin: every BNLJ in this surface is a
 # broadcast SCALAR ATTACH (crossJoin of a 1-row aggregate: totals, maxes,
@@ -96,7 +52,7 @@ def audit(spark, sf_dir: str) -> list[dict]:
         rows.append(
             {
                 "query": name,
-                "cached": name in CACHED,
+                "cached": "ExistingRDD" in plan,
                 "exchanges": count_exchanges(df),
                 "joins": ",".join(
                     j.replace("Join", "")
@@ -126,10 +82,12 @@ def main() -> None:
     lines = [
         "# PLAN_AUDIT — physical-plan survey of every registered query",
         "",
-        f"Generated by `python tools/plan_audit.py {sf_dir} --write`. "
-        "`cached` = the wrapper serves a localCheckpointed per-session "
-        "relation (the raw builder's shape is asserted in "
-        "tests/test_plans.py). `scalar-attach bnlj` = the plan contains a "
+        "Generated by `python tools/plan_audit.py <sf_dir> --write` over "
+        f"`{os.path.basename(os.path.normpath(sf_dir))}`. "
+        "`cached` = the physical plan reads a localCheckpointed relation "
+        "(an `ExistingRDD` scan), so the visible plan is truncated there "
+        "(the raw builder's shape is asserted in tests/test_plans.py). "
+        "`scalar-attach bnlj` = the plan contains a "
         "BroadcastNestedLoopJoin, which in this surface is always a "
         "broadcast 1-row scalar attach or a documented bounded probe. "
         "Flags CARTESIAN / ROW_PYTHON must never appear.",
