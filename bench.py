@@ -81,8 +81,9 @@ def _pipeline_bench_inproc(cores: int, out_root: str, n_docs: int, reps: int = 2
     for rep in range(reps):
         out_dir = os.path.join(out_root, f"out_{cores}_{time.time_ns()}")
         t0 = time.monotonic()
-        # 8 tasks/core: the long-tail page-size skew needs fine tasks for the
-        # tail to interleave (measured: 8x beats 2x by ~10% and 32x by ~25%)
+        # n_parts is a cap: spark_session pins the task slots, so the image
+        # stage runs one task per core (build_page_results); 8 per core only
+        # binds on a session that does not declare its slots
         s = run_pipeline(spark, corpus, out_dir, n_parts=cores * 8, resume=False)
         wall = time.monotonic() - t0
         shutil.rmtree(out_dir, ignore_errors=True)

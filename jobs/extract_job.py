@@ -25,7 +25,11 @@ def main() -> None:
     p = argparse.ArgumentParser()
     p.add_argument("--input", required=True)
     p.add_argument("--output", required=True)
-    p.add_argument("--n-parts", type=int, default=256)
+    p.add_argument(
+        "--n-parts", type=int, default=256,
+        help="upper bound on the image stage's task count; a session that "
+             "sets spark.default.parallelism runs min(n-parts, that) tasks",
+    )
     p.add_argument("--no-resume", action="store_true")
     p.add_argument(
         "--skew-strategy", choices=("salt", "scan"), default="salt",

@@ -26,9 +26,16 @@ def spark_session(cores: int | str = "*", app: str = "ocrd_anybaseocr_spark",
     pages decode one at a time inside the UDF, so the decoded footprint
     stays one page. Raising 32→256 measured +30-40%% stage throughput at 32
     cores. For corpora with much larger scans, size by byte budget
-    (SURVEY.md §4.3), not row count."""
+    (SURVEY.md §4.3), not row count.
+
+    An integer ``cores`` also pins ``spark.default.parallelism`` to it —
+    the value local mode uses implicitly, so no plan changes — making the
+    task slots readable through ``task_slots``."""
+    builder = SparkSession.builder
+    if str(cores).isdigit():
+        builder = builder.config("spark.default.parallelism", str(cores))
     return (
-        SparkSession.builder.master(f"local[{cores}]")
+        builder.master(f"local[{cores}]")
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
@@ -43,6 +50,17 @@ def spark_session(cores: int | str = "*", app: str = "ocrd_anybaseocr_spark",
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+
+
+def task_slots(spark: SparkSession, cap: int) -> int:
+    """Task count for a stage whose tasks each carry a fixed cost: ``cap``,
+    lowered to the session's task slots (``spark.default.parallelism``)
+    when the session declares them. A Python task pays a worker setup
+    before its UDF runs (CLAUDE.md, host facts), so a stage sized to the
+    slots pays it once per slot, not several times. A session without the
+    conf (a cluster submit) keeps ``cap``."""
+    slots = spark.conf.get("spark.default.parallelism", None)
+    return min(cap, int(slots)) if slots else cap
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -113,6 +113,62 @@ def test_bucket_count_invariance(spark, corpus_dir, pipeline_out, tmp_path_facto
         assert rows(pipeline_out) == rows(out4), table
 
 
+def _repartition_sizes(df) -> list[int]:
+    """Partition counts of the plan's repartition-by-number exchanges."""
+    import re
+
+    from ocrd_anybaseocr_spark.plans import explain_str
+
+    return [int(n) for n in re.findall(
+        r"hashpartitioning\([^)]*, (\d+)\), REPARTITION_BY_NUM", explain_str(df))]
+
+
+def test_image_stage_sized_to_task_slots(spark, corpus_dir, monkeypatch):
+    """The Exchange feeding the image stage's MapInArrow has one partition
+    per task slot (4 on the fixture session), not n_parts; a smaller
+    n_parts still caps it. The scan strategy sizes its splits by the same
+    target."""
+    from ocrd_anybaseocr_spark.operators import pipeline
+    from ocrd_anybaseocr_spark.operators.pipeline import build_page_results
+
+    docs, blobs = load_corpus(spark, corpus_dir)
+    assert _repartition_sizes(build_page_results(docs, blobs, n_parts=32)) == [4]
+    assert _repartition_sizes(build_page_results(docs, blobs, n_parts=2)) == [2]
+    targets = []
+    monkeypatch.setattr(pipeline, "_tune_scan_split", lambda _, n: targets.append(n))
+    build_page_results(docs, blobs, n_parts=32, skew_strategy="scan")
+    assert targets == [4]
+
+
+def test_one_file_per_bucket(pipeline_out):
+    """More buckets than write tasks (16 derived buckets for the fixture
+    corpus, 4 task slots), yet each bucket directory of every bucketed
+    output holds exactly one data file: the write repartition keeps each
+    bucket in one task."""
+    for table in ("page_results", "doc_structure", "extracted_spans"):
+        root = os.path.join(pipeline_out, table)
+        buckets = [d for d in os.listdir(root) if d.startswith("part_bucket=")]
+        assert len(buckets) > 4, (table, buckets)
+        for b in buckets:
+            files = [f for f in os.listdir(os.path.join(root, b))
+                     if not f.startswith((".", "_"))]
+            assert len(files) == 1, (table, b, files)
+
+
+def test_task_slots_read_from_session_conf(spark):
+    """spark_session pins spark.default.parallelism to its cores; a session
+    without the conf (a cluster submit) keeps the caller's cap."""
+    from types import SimpleNamespace
+
+    from ocrd_anybaseocr_spark.sources.tables import task_slots
+
+    assert spark.conf.get("spark.default.parallelism") == "4"
+    assert task_slots(spark, 32) == 4
+    assert task_slots(spark, 2) == 2
+    unset = SimpleNamespace(conf=SimpleNamespace(get=lambda key, default=None: default))
+    assert task_slots(unset, 32) == 32
+
+
 def test_round_like_spark_matches_f_round(spark):
     """oracle.round_like_spark must be bit-identical to F.round(double, 6):
     the materialized expected-parquet oracle stores pre-rounded skew, so any
