@@ -4,19 +4,17 @@ dataset directory into ~target-sized files and swap it into place.
     spark-submit --py-files engine.zip jobs/compact_job.py \
         --input <parquet dataset dir> [--target-mb 128] [--sort-by col]
 
-Why it exists at 100 TB: streaming sinks (availableNow micro-batches),
-per-bucket dynamic-partition overwrites, and incremental ingest appends
-all accrete files far below the scan-efficient size; every downstream
-job then pays file-open + footer + tiny-row-group cost per fragment,
-and the namenode/listing cost grows unbounded. Compaction is the
-amortizing counterpart of the bucketed/streamed write paths.
+Why it exists at 100 TB: per-bucket dynamic-partition overwrites and
+incremental ingest appends accrete files far below the scan-efficient
+size; every downstream job then pays file-open + footer + tiny-row-group
+cost per fragment, and the namenode/listing cost grows unbounded.
+Compaction is the amortizing counterpart of the bucketed write paths.
 
 Shape: output file count = ceil(actual data bytes / target) measured
-through the Hadoop FileSystem API (hdfs://s3a:// size correctly, same
-as pipeline._tune_scan_split); `--sort-by` uses repartitionByRange so
-compaction doubles as CLUSTERING (range-partitioned files give min/max
-footer pruning on the sort column); otherwise a plain repartition
-avoids any sort cost.
+through the Hadoop FileSystem API (hdfs://s3a:// size correctly);
+`--sort-by` uses repartitionByRange so compaction doubles as CLUSTERING
+(range-partitioned files give min/max footer pruning on the sort
+column); otherwise a plain repartition avoids any sort cost.
 
 Swap protocol (crash-safe, rows first): write to `<dir>.compact_tmp`,
 VERIFY tmp row count == source row count (refuse to swap otherwise),

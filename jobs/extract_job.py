@@ -32,12 +32,6 @@ def main() -> None:
     )
     p.add_argument("--no-resume", action="store_true")
     p.add_argument(
-        "--skew-strategy", choices=("salt", "scan"), default="salt",
-        help="salt = salted byte-shuffle repartition (fastest when shuffle "
-             "storage is cheap); scan = no byte shuffle, skew bounded by "
-             "parquet row-group splits (the 100 TB shape)",
-    )
-    p.add_argument(
         "--catalog", default=None,
         help="catalog namespace (e.g. iceberg_cat.graft) — outputs become "
              "catalog tables written via the v2 writeTo API (atomic "
@@ -61,8 +55,7 @@ def main() -> None:
 
     summary = run_pipeline(
         spark, args.input, args.output, n_parts=args.n_parts,
-        resume=not args.no_resume, skew_strategy=args.skew_strategy,
-        catalog=args.catalog,
+        resume=not args.no_resume, catalog=args.catalog,
     )
     print(json.dumps(summary))
     spark.stop()

@@ -1133,22 +1133,16 @@ PARA_WORDS = 8  # passage unit: non-overlapping 8-word chunks (+ partial tail)
 _PARA_PK = 1 << 20
 
 
-def chunk_relation(docs: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFrame:
-    """(doc_id, [extra...], chunk_no, chunk, h): the ONE passage-chunk
-    definition — non-overlapping PARA_WORDS-word windows (+ partial tail)
-    with md5 chunk hashes — shared by the batch paragraph_dedup and the
-    streaming passage pass so both always see identical chunk boundaries
-    and keys. Narrow: split -> posexplode, no shuffle. ``extra_cols``
-    pass through untouched (the stream threads its event-time column for
-    the watermark; doc_id may be string there, so the packed int64 pk is
-    added by the batch caller, not here)."""
+def chunk_relation(docs: DataFrame) -> DataFrame:
+    """(doc_id, chunk_no, chunk, h): the passage-chunk definition —
+    non-overlapping PARA_WORDS-word windows (+ partial tail) with md5
+    chunk hashes. Narrow: split -> posexplode, no shuffle."""
     w = docs.where(F.length("text") > 0).select(
-        "doc_id", *extra_cols, F.split("text", " ").alias("words")
+        "doc_id", F.split("text", " ").alias("words")
     )
     # ceil(n/8) via int arithmetic; n >= 1 here so sequence() is ascending
     ch = w.select(
         "doc_id",
-        *extra_cols,
         F.posexplode(
             F.expr(
                 f"transform(sequence(0, (size(words) + {PARA_WORDS - 1})"
@@ -1160,7 +1154,6 @@ def chunk_relation(docs: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFra
     )
     return ch.select(
         "doc_id",
-        *extra_cols,
         "chunk_no",
         "chunk",
         F.md5("chunk").alias("h"),
@@ -1298,19 +1291,14 @@ def simhash_pairs(
     )
 
 
-def _signature_bands(
-    sig: DataFrame, id_col: str, sig_col: str, extra_cols: tuple[str, ...] = ()
-) -> DataFrame:
-    """Explode a 64-bit signature relation into (id, sig, [extra...],
-    band_no, band_val) — the ONE banding definition shared by the pair
-    join, the over-cap audit (band_overcap_groups) and the streaming
-    visual-dedup pass (dhash_bands_stream), so all of them always see
-    identical band values. ``extra_cols`` pass through untouched (the
-    stream threads its event-time column for the watermark)."""
+def _signature_bands(sig: DataFrame, id_col: str, sig_col: str) -> DataFrame:
+    """Explode a 64-bit signature relation into (id, sig, band_no,
+    band_val) — the ONE banding definition shared by the pair join and the
+    over-cap audit (band_overcap_groups), so both always see identical
+    band values."""
     return sig.select(
         id_col,
         sig_col,
-        *extra_cols,
         # arithmetic-vs-logical shift fill bits are masked off by the band
         # mask, so the value is engine-independent even for negative
         # signatures (bit 63 = sign bit)
@@ -1506,8 +1494,7 @@ def dedup_incremental(
     """(doc_new, doc_corpus, inter, jaccard): verified near-dup matches of
     an INGEST BATCH against an EXISTING corpus — the production
     incremental shape (the batch self-join pass dedups a corpus once; this
-    keeps it deduped as new data lands, and the streaming band pass is its
-    bounded-state ingest-time twin). Candidate generation joins the NEW
+    keeps it deduped as new data lands). Candidate generation joins the NEW
     side's band keys against the CORPUS side's only — no new x new or
     corpus x corpus pairs are ever generated, so per ingest the cost is
     O(batch bands ⋈ corpus bands), not another full-corpus pass. Each

@@ -49,7 +49,7 @@ def fold_structure(page_results: DataFrame, n_fold_buckets: int | None = None) -
     # non-null rows have NULL labels — they contribute nothing to structure
     # and would crash the per-doc fold (list(None)); filtering HERE is the
     # single definition for every consumer (run_pipeline, the gated query,
-    # ad-hoc callers). Streaming/test frames without the column pass through.
+    # ad-hoc callers). Frames without the column pass through.
     if "error" in page_results.columns:
         page_results = page_results.filter(F.col("error").isNull())
 

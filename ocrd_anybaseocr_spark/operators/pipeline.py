@@ -130,61 +130,11 @@ def salted_repartition(df: DataFrame, cost_col: str, n_parts: int) -> DataFrame:
     return bucketed.repartition(n_parts, "_size_bucket", "_salt").drop("_size_bucket", "_salt")
 
 
-_SCAN_SPLIT_MIN = 64 * 1024  # floor; real granularity is the row group
-_SCAN_SPLIT_DEFAULT = 128 * 1024 * 1024  # Spark default, also the cap
-
-
-def _tune_scan_split(blobs: DataFrame, n_parts: int) -> None:
-    """Size the parquet split for the shuffle-free 'scan' strategy: with
-    the default 128 MB maxPartitionBytes a small blob table yields a
-    handful of input splits and the whole image stage runs ~3-wide on a
-    32-core box (measured 14.3 s vs 3.5 s for the salted path on the
-    1200-doc probe — a silent 4x parallelism collapse). Derive the split
-    from the table's actual byte size so the scan opens ~n_parts splits.
-    ENCODED bytes under-represent decode work ~20x (PNG runs compress
-    again inside parquet: the 1200-doc blob table is 12 MB encoded, 2.6 GB
-    decoded), so the floor is small and the effective granularity becomes
-    the ROW GROUP — which is why synth writes ~2 MB groups (64 rows).
-    At real scale the table dwarfs n_parts*128 MB and this leaves the
-    default in effect (the target is capped AT the default). Uses the
-    Hadoop FileSystem API via the JVM gateway, so HDFS/S3 paths size
-    correctly, not just local ones; sizing failures leave the session
-    untouched.
-
-    Session hygiene: the conf is session-global and split planning happens
-    at ACTION time, so it cannot be set-and-restored here. Instead every
-    call re-derives the value for ITS table, capped at the 128 MB default
-    — no downward ratchet survives into a later large-table scan (review
-    r5: the first cut only ever shrank it, so one small probe corpus
-    permanently fragmented every later scan in the session). Returns the
-    previous setting; run_pipeline restores it after its actions complete
-    so unrelated queries in the same session keep their split size."""
-    spark = blobs.sparkSession
-    prev = str(spark.conf.get("spark.sql.files.maxPartitionBytes", str(_SCAN_SPLIT_DEFAULT)))
-    try:
-        total = 0
-        for f in blobs.inputFiles():
-            jvm = spark._jvm
-            p = jvm.org.apache.hadoop.fs.Path(f)
-            fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-            total += fs.getFileStatus(p).getLen()
-        if not total:
-            return prev
-        target = max(_SCAN_SPLIT_MIN, -(-total // max(n_parts, 1)))
-        spark.conf.set(
-            "spark.sql.files.maxPartitionBytes", str(min(_SCAN_SPLIT_DEFAULT, target))
-        )
-        return prev
-    except Exception:
-        return prev  # sizing is best-effort; the strategy still works untuned
-
-
 def build_page_results(
     documents: DataFrame,
     blobs: DataFrame,
     n_parts: int = 32,
     params=DEFAULT_PARAMS,
-    skew_strategy: str = "salt",
 ) -> DataFrame:
     """documents ⋈ page_blobs → fused image stage. The join key media_ref is
     unique on both sides (no key skew).
@@ -195,36 +145,12 @@ def build_page_results(
     (CLAUDE.md, host facts); at 8 tasks per core that setup costs more
     than the finer interleave of long-tail pages saves.
 
-    Byte-size skew handling, both strategies sized by that one rule:
-
-    - "salt" (default): size-bucketed salted repartition on decoded-pixel
-      cost after the join — one shuffle of the image bytes, even tasks.
-      Fastest when the shuffle fits local disk comfortably.
-    - "scan": NO byte shuffle at all — the page index broadcasts onto the
-      blob scan, and per-task byte skew is bounded at the storage layer by
-      small parquet row groups (synth writes ~2 MB groups; set
-      spark.sql.files.maxPartitionBytes accordingly). At 100 TB, where
-      shuffling the media bytes means re-writing the corpus to shuffle
-      storage, this is the right shape; results are identical
-      (parallelism-invariance holds for any partitioning).
-
-      Caveat (VERDICT r3): the broadcast page index holds ~3 small columns
-      per page — fine through ~10^8 pages, but at 10^9+ the index itself
-      outgrows a broadcast. The 100 TB form of the same no-byte-shuffle
-      plan is STORAGE-BUCKETED joins: documents and page_blobs both
-      bucketed by media_ref (Iceberg bucket(media_ref, N) partition
-      transform), which turns the join into a zero-exchange bucket-local
-      merge on a real catalog; this sandbox has no Iceberg jar (see
-      COVERAGE.md S4), so that layout is documented rather than exercised.
+    Byte-size skew handling: a size-bucketed salted repartition on
+    decoded-pixel cost after the join, so one shuffle of the image bytes
+    gives even tasks (salted_repartition).
     """
     pages = page_index(documents)
     n_tasks = task_slots(documents.sparkSession, n_parts)
-    if skew_strategy == "scan":
-        _tune_scan_split(blobs, n_tasks)  # see docstring for session hygiene
-        joined = blobs.select("media_ref", "image").join(F.broadcast(pages), "media_ref")
-        return process_pages(
-            joined.select("doc_id", "media_ref", "page_no", "image"), params
-        )
     joined = pages.join(blobs.select("media_ref", "image", "width", "height"), "media_ref")
     joined = joined.withColumn("_cost", F.col("width").cast("long") * F.col("height"))
     joined = salted_repartition(joined, "_cost", n_tasks)
@@ -394,7 +320,6 @@ def run_pipeline(
     n_parts: int = 32,
     resume: bool = True,
     n_buckets: int | None = None,
-    skew_strategy: str = "salt",
     catalog: str | None = None,
 ) -> dict:
     """End-to-end run with checkpointed, idempotent resume.
@@ -461,173 +386,160 @@ def run_pipeline(
 
     t0 = time.monotonic()
 
-    # capture the split conf before the scan strategy may retune it; the
-    # finally below restores it once every action has planned and run
-    prev_split = (
-        str(spark.conf.get("spark.sql.files.maxPartitionBytes", str(_SCAN_SPLIT_DEFAULT)))
-        if skew_strategy == "scan"
-        else None
-    )
-    # any failure mid-action (extract/fold/metrics) must not leave the
-    # shrunken scan-split conf in the shared session (r5 ADVICE)
-    try:
-        extracted = extract_spans(documents.select("doc_id", "spans"))
-        page_results = build_page_results(documents, blobs, n_parts, skew_strategy=skew_strategy)
+    extracted = extract_spans(documents.select("doc_id", "spans"))
+    page_results = build_page_results(documents, blobs, n_parts)
 
-        bucket = F.pmod(F.hash("doc_id"), F.lit(n_buckets)).cast("int")
+    bucket = F.pmod(F.hash("doc_id"), F.lit(n_buckets)).cast("int")
 
-        # repartition on the bucket before a partitionBy write: each task owns
-        # whole buckets → one file per bucket instead of tasks×buckets small
-        # files (and a cheap commit). n_buckets scales with corpus size
-        # (derive_buckets above). The task count is capped at the slots: a
-        # task's fixed cost (scheduling, a writer and its commit) dwarfs the
-        # few KB a bucket holds, and hash placement keeps each bucket whole.
-        n_write = task_slots(spark, n_buckets)
+    # repartition on the bucket before a partitionBy write: each task owns
+    # whole buckets → one file per bucket instead of tasks×buckets small
+    # files (and a cheap commit). n_buckets scales with corpus size
+    # (derive_buckets above). The task count is capped at the slots: a
+    # task's fixed cost (scheduling, a writer and its commit) dwarfs the
+    # few KB a bucket holds, and hash placement keeps each bucket whole.
+    n_write = task_slots(spark, n_buckets)
 
-        def _write_extracted():
-            io.overwrite_partitioned(
-                extracted.withColumn("part_bucket", bucket)
-                .repartition(n_write, "part_bucket"),
-                "extracted_spans",
-            )
-
-        # the span write is independent of the image stage — submit it
-        # concurrently so its scan/shuffle fills scheduler gaps (Spark's
-        # scheduler interleaves jobs from separate threads)
-        import threading
-
-        ext_err: list[BaseException] = []
-
-        def _ext_target():
-            try:
-                t = time.monotonic()
-                _write_extracted()
-                _t("extracted_write", t)
-            except BaseException as e:  # noqa: BLE001 — re-raised on the caller
-                ext_err.append(e)
-
-        ext_thread = threading.Thread(target=_ext_target, daemon=True)
-        ext_thread.start()
-        t_pr = time.monotonic()
-        # Observation rides the write job (zero extra Spark job): its row count
-        # feeds derive_fold_buckets, replacing the separate count job the r4
-        # probe attribution flagged (VERDICT r4 item 1 — every driver action
-        # must earn its wall share)
-        from pyspark.sql import Observation
-
-        pr_obs = Observation("pr_rows")
-        pr_out = (
-            page_results.withColumn("part_bucket", bucket)
-            .observe(
-                pr_obs,
-                F.count(F.lit(1)).alias("rows"),
-                F.sum(F.expr("int(error is not null)")).alias("bad"),
-            )
-            .repartition(n_write, "part_bucket")
-        )
-        io.overwrite_partitioned(pr_out, "page_results")
-        try:
-            n_new_rows = int(pr_obs.get["rows"])
-            n_bad = int(pr_obs.get["bad"] or 0)
-        except Exception:
-            # the optimizer collapses an all-remaining-buckets-empty resume plan
-            # to an empty relation, so the CollectMetrics row never materializes
-            # and Observation.get raises; fall back to counting the commit (that
-            # count is trivially cheap exactly in this near-empty case)
-            n_new_rows = None
-            n_bad = None
-        _t("page_results_write", t_pr)
-        ext_thread.join()
-        if ext_err:
-            raise ext_err[0]
-        # fold from the COMMITTED page_results — the image stage runs exactly once
-        # (recomputing the lineage through the mapInArrow stage would double decode work)
-        written_pr = io.read("page_results")
-        if done:
-            written_pr = written_pr.filter(~F.col("part_bucket").isin(*done))
-        # fold fan-out scales with data: the observed row count of the commit
-        # bounds rows-per-group (no extra count job — r4 probe attribution)
-        from .fold import derive_fold_buckets
-
-        if n_new_rows is None:
-            n_new_rows = written_pr.count()
-        if n_bad is None:
-            n_bad = written_pr.filter(F.col("error").isNotNull()).count()
-        if n_bad or io.exists("quarantine"):
-            # auditable quarantine relation derived from the FULL committed
-            # parquet (a scan of small rows, no re-decode) and rewritten as
-            # a WHOLE table: dynamic partition overwrite cannot clear a
-            # bucket whose re-run came back clean, so a stale row would
-            # outlive the fixed blob (round-6 review — the index-manifest
-            # staleness class). A run with no bad rows and no existing
-            # table still pays zero extra jobs.
-            io.overwrite_full(
-                io.read("page_results")
-                .filter(F.col("error").isNotNull())
-                .select("doc_id", "media_ref", "page_no", "error", "part_bucket"),
-                "quarantine",
-            )
-        n_fold = derive_fold_buckets(
-            n_new_rows, int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        )
-
-        # checkpoint rows from the committed output (counts reconcile by
-        # construction); collected CONCURRENTLY with the fold job — both read
-        # the committed parquet, neither depends on the other, and the fold's
-        # stage tails leave cores for the metrics scan
-        lineage = json.dumps(
-            {"input": corpus_dir, "engine": "ocrd_anybaseocr_spark-0.1.0", "n_parts": n_parts}
-        )
-        metrics = (
-            io.read("page_results")
-            .groupBy("part_bucket")
-            .agg(
-                F.countDistinct("doc_id").alias("doc_count"),
-                F.count(F.lit(1)).alias("row_count"),
-                F.sum("proc_ms").alias("latency_ms"),
-            )
-            .select(
-                F.col("part_bucket").cast("int").alias("partition_id"),
-                "doc_count",
-                "row_count",
-                "latency_ms",
-                F.lit(lineage).alias("lineage"),
-            )
-        )
-        new_rows: list = []
-        m_err: list[BaseException] = []
-
-        def _metrics_target():
-            try:
-                t = time.monotonic()
-                new_rows.extend(r for r in metrics.collect() if r.partition_id not in done)
-                _t("metrics_collect", t)
-            except BaseException as e:  # noqa: BLE001 — re-raised on the caller
-                m_err.append(e)
-
-        m_thread = threading.Thread(target=_metrics_target, daemon=True)
-        m_thread.start()
-        t_fold = time.monotonic()
-        # fold_structure itself drops quarantined rows (single definition
-        # of the boundary — the gated doc-structure query shares it)
-        structure = fold_structure(written_pr, n_fold_buckets=n_fold)
+    def _write_extracted():
         io.overwrite_partitioned(
-            structure.withColumn("part_bucket", bucket)
+            extracted.withColumn("part_bucket", bucket)
             .repartition(n_write, "part_bucket"),
-            "doc_structure",
+            "extracted_spans",
         )
-        _t("fold_write", t_fold)
-        m_thread.join()
-        if m_err:
-            raise m_err[0]
-        elapsed_ms = int((time.monotonic() - t0) * 1000)
-        t_ck = time.monotonic()
-        if new_rows:
-            io.append(spark.createDataFrame(new_rows, S.CHECKPOINT), "checkpoints")
-        _t("checkpoint_append", t_ck)
-    finally:
-        if prev_split is not None:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", prev_split)
+
+    # the span write is independent of the image stage — submit it
+    # concurrently so its scan/shuffle fills scheduler gaps (Spark's
+    # scheduler interleaves jobs from separate threads)
+    import threading
+
+    ext_err: list[BaseException] = []
+
+    def _ext_target():
+        try:
+            t = time.monotonic()
+            _write_extracted()
+            _t("extracted_write", t)
+        except BaseException as e:  # noqa: BLE001 — re-raised on the caller
+            ext_err.append(e)
+
+    ext_thread = threading.Thread(target=_ext_target, daemon=True)
+    ext_thread.start()
+    t_pr = time.monotonic()
+    # Observation rides the write job (zero extra Spark job): its row count
+    # feeds derive_fold_buckets, replacing the separate count job the r4
+    # probe attribution flagged (VERDICT r4 item 1 — every driver action
+    # must earn its wall share)
+    from pyspark.sql import Observation
+
+    pr_obs = Observation("pr_rows")
+    pr_out = (
+        page_results.withColumn("part_bucket", bucket)
+        .observe(
+            pr_obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.sum(F.expr("int(error is not null)")).alias("bad"),
+        )
+        .repartition(n_write, "part_bucket")
+    )
+    io.overwrite_partitioned(pr_out, "page_results")
+    try:
+        n_new_rows = int(pr_obs.get["rows"])
+        n_bad = int(pr_obs.get["bad"] or 0)
+    except Exception:
+        # the optimizer collapses an all-remaining-buckets-empty resume plan
+        # to an empty relation, so the CollectMetrics row never materializes
+        # and Observation.get raises; fall back to counting the commit (that
+        # count is trivially cheap exactly in this near-empty case)
+        n_new_rows = None
+        n_bad = None
+    _t("page_results_write", t_pr)
+    ext_thread.join()
+    if ext_err:
+        raise ext_err[0]
+    # fold from the COMMITTED page_results — the image stage runs exactly once
+    # (recomputing the lineage through the mapInArrow stage would double decode work)
+    written_pr = io.read("page_results")
+    if done:
+        written_pr = written_pr.filter(~F.col("part_bucket").isin(*done))
+    # fold fan-out scales with data: the observed row count of the commit
+    # bounds rows-per-group (no extra count job — r4 probe attribution)
+    from .fold import derive_fold_buckets
+
+    if n_new_rows is None:
+        n_new_rows = written_pr.count()
+    if n_bad is None:
+        n_bad = written_pr.filter(F.col("error").isNotNull()).count()
+    if n_bad or io.exists("quarantine"):
+        # auditable quarantine relation derived from the FULL committed
+        # parquet (a scan of small rows, no re-decode) and rewritten as
+        # a WHOLE table: dynamic partition overwrite cannot clear a
+        # bucket whose re-run came back clean, so a stale row would
+        # outlive the fixed blob (round-6 review — the index-manifest
+        # staleness class). A run with no bad rows and no existing
+        # table still pays zero extra jobs.
+        io.overwrite_full(
+            io.read("page_results")
+            .filter(F.col("error").isNotNull())
+            .select("doc_id", "media_ref", "page_no", "error", "part_bucket"),
+            "quarantine",
+        )
+    n_fold = derive_fold_buckets(
+        n_new_rows, int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    )
+
+    # checkpoint rows from the committed output (counts reconcile by
+    # construction); collected CONCURRENTLY with the fold job — both read
+    # the committed parquet, neither depends on the other, and the fold's
+    # stage tails leave cores for the metrics scan
+    lineage = json.dumps(
+        {"input": corpus_dir, "engine": "ocrd_anybaseocr_spark-0.1.0", "n_parts": n_parts}
+    )
+    metrics = (
+        io.read("page_results")
+        .groupBy("part_bucket")
+        .agg(
+            F.countDistinct("doc_id").alias("doc_count"),
+            F.count(F.lit(1)).alias("row_count"),
+            F.sum("proc_ms").alias("latency_ms"),
+        )
+        .select(
+            F.col("part_bucket").cast("int").alias("partition_id"),
+            "doc_count",
+            "row_count",
+            "latency_ms",
+            F.lit(lineage).alias("lineage"),
+        )
+    )
+    new_rows: list = []
+    m_err: list[BaseException] = []
+
+    def _metrics_target():
+        try:
+            t = time.monotonic()
+            new_rows.extend(r for r in metrics.collect() if r.partition_id not in done)
+            _t("metrics_collect", t)
+        except BaseException as e:  # noqa: BLE001 — re-raised on the caller
+            m_err.append(e)
+
+    m_thread = threading.Thread(target=_metrics_target, daemon=True)
+    m_thread.start()
+    t_fold = time.monotonic()
+    # fold_structure itself drops quarantined rows (single definition
+    # of the boundary — the gated doc-structure query shares it)
+    structure = fold_structure(written_pr, n_fold_buckets=n_fold)
+    io.overwrite_partitioned(
+        structure.withColumn("part_bucket", bucket)
+        .repartition(n_write, "part_bucket"),
+        "doc_structure",
+    )
+    _t("fold_write", t_fold)
+    m_thread.join()
+    if m_err:
+        raise m_err[0]
+    elapsed_ms = int((time.monotonic() - t0) * 1000)
+    t_ck = time.monotonic()
+    if new_rows:
+        io.append(spark.createDataFrame(new_rows, S.CHECKPOINT), "checkpoints")
+    _t("checkpoint_append", t_ck)
     pages = sum(r.row_count for r in new_rows)
     return {
         "docs": sum(r.doc_count for r in new_rows),

@@ -45,24 +45,6 @@ PAGE_BLOBS = T.StructType(
     ]
 )
 
-# Output span schema (FIXTURES.md §3.1): strict span-sequence equality key
-# is (kind, text, media_ref, order).
-OUT_SPAN = T.StructType(
-    [
-        T.StructField("kind", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("order", T.IntegerType()),
-    ]
-)
-
-EXTRACTED_SPANS = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("spans", T.ArrayType(OUT_SPAN), False),
-    ]
-)
-
 # Per page-image results (FIXTURES.md §3.2). Emitted by the fused image stage.
 PAGE_RESULTS = T.StructType(
     [

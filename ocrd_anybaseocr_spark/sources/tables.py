@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from .. import schema as S
 
@@ -106,45 +106,3 @@ def load_corpus(spark: SparkSession, corpus_dir: str) -> tuple[DataFrame, DataFr
     docs = spark.read.schema(S.DOCUMENTS).parquet(os.path.join(corpus_dir, "documents.parquet"))
     blobs = spark.read.schema(S.PAGE_BLOBS).parquet(os.path.join(corpus_dir, "page_blobs.parquet"))
     return docs, blobs
-
-
-def write_bucketed(
-    df: DataFrame, table: str, key: str, n_buckets: int = 32
-) -> None:
-    """Persist ``df`` as a catalog table BUCKETED (and sorted) on ``key``
-    — the co-located-join layout: two relations bucketed the same way
-    join with ZERO exchange on either side (plan-asserted in
-    test_plans.py), because each task pairs bucket i with bucket i.
-
-    When it pays at 100 TB: a fact relation joined on the same key by
-    MANY downstream jobs (dedup decisions x corpus, claims x docs,
-    index x serving) amortizes ONE bucketed write against every later
-    shuffle it removes; n_buckets should be sized so a bucket of the
-    BIGGER relation fits an executor core's working set (buckets are the
-    join parallelism — they are not AQE-coalescible). Skewed keys stay
-    skewed inside their bucket: salt the key column BEFORE bucketing
-    when one key dominates."""
-    (
-        df.write.mode("overwrite")
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
-def load_documents_jsonl(spark: SparkSession, path: str) -> DataFrame:
-    """documents from newline-delimited JSON with the EXPLICIT table
-    schema (never inferSchema on a 100 TB drop: inference is a full
-    extra pass and a schema-drift hazard; a malformed line lands in
-    _corrupt_record instead of poisoning types). Column order and types
-    match load_table(..., 'documents') so every downstream operator is
-    source-agnostic."""
-    jschema = (
-        "doc_id long, text string, lang string, source string,"
-        " n_chars long, _corrupt_record string"
-    )
-    df = spark.read.schema(jschema).option("mode", "PERMISSIVE").json(path)
-    return df.where(F.col("_corrupt_record").isNull()).select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    )

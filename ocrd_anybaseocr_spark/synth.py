@@ -41,8 +41,6 @@ WORDS = (
     "folio recto verso quire colophon rubric incipit gloss lemma serif"
 ).split()
 
-ROLES = ("title_page", "chapter", "section", "illustration", "page")
-
 
 def _rng_for(seed: int, doc_index: int) -> np.random.Generator:
     return np.random.Generator(np.random.PCG64(np.uint64(seed) ^ np.uint64(0x9E3779B97F4A7C15 * (doc_index + 1) % (1 << 64))))

@@ -50,9 +50,6 @@ REGISTRIES = {"register"}
 TEST_ONLY_ALLOWED = {
     "kernels/crop.py:detect_border_profile": "reference that tests check detect_border against",
     "kernels/crop.py:_side_candidates": "helper of that reference",
-    "sources/tables.py:write_bucketed": "storage-bucketed layout, its own COVERAGE row",
-    "sources/tables.py:load_documents_jsonl": "JSONL source, its own COVERAGE row",
-    "streaming/stream.py": "the streaming subsystem, its own COVERAGE rows",
 }
 
 
@@ -77,28 +74,50 @@ def _names(*nodes) -> set[str]:
     return out
 
 
+def _defined(stmt) -> list[str]:
+    """Names a top-level statement defines: a function or class, or the
+    plain-name targets of a constant assignment (dunders excluded)."""
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [stmt.name]
+    targets = (stmt.targets if isinstance(stmt, ast.Assign)
+               else [stmt.target] if isinstance(stmt, ast.AnnAssign) else [])
+    names = [t.id for t in targets if isinstance(t, ast.Name)]
+    if len(names) != len(targets) or any(n.startswith("__") for n in names):
+        return []
+    return names
+
+
 def test_no_test_only_definitions():
-    """Every top-level function and class of the package must be reachable
-    from production code. Reachability is by name, transitively: the roots
-    are everything a production file outside the package loads, the
-    package's own module-level statements and decorators, and every
-    registry-decorated definition; a reached definition's body reaches
-    further. Matching by bare name over-approximates what is live, so a
+    """Every top-level function, class and constant of the package must be
+    reachable from production code. Reachability is by name, transitively:
+    the roots are everything a production file outside the package loads,
+    the package's own module-level statements and decorators, and every
+    registry-decorated definition; a reached definition's body (a
+    constant's value) reaches further. Matching by bare name over-approximates what is live, so a
     definition this flags is referenced only from tests/ or nowhere."""
     roots, bodies, by_name = set(), {}, {}
     for path in _py_files(PKG):
         rel = os.path.relpath(path, PKG)
         for stmt in ast.parse(open(path).read()).body:
-            if not isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names = _defined(stmt)
+            if not names:
                 roots |= _names(stmt)
                 continue
-            key = f"{rel}:{stmt.name}"
-            by_name.setdefault(stmt.name, []).append(key)
-            bodies[key] = _names(*stmt.body, *getattr(stmt, "bases", []))
-            roots |= _names(*stmt.decorator_list)
-            if any(isinstance(d, ast.Call) and getattr(d.func, "id", None) in REGISTRIES
-                   for d in stmt.decorator_list):
-                roots.add(stmt.name)
+            if isinstance(stmt, (ast.Assign, ast.AnnAssign)):
+                body = _names(stmt.value) if stmt.value else set()
+            else:
+                body = _names(*stmt.body, *getattr(stmt, "bases", []))
+                roots |= _names(*stmt.decorator_list)
+                if any(isinstance(d, ast.Call) and getattr(d.func, "id", None) in REGISTRIES
+                       for d in stmt.decorator_list):
+                    roots.add(stmt.name)
+            for name in names:
+                key = f"{rel}:{name}"
+                if key not in bodies:
+                    by_name.setdefault(name, []).append(key)
+                # a reassigned constant (X = X.replace(...)) reaches what
+                # every one of its values loads
+                bodies[key] = bodies.get(key, set()) | body
     for entry in PRODUCTION:
         for path in _py_files(os.path.join(ROOT, entry)):
             roots |= _names(ast.parse(open(path).read()))
@@ -109,11 +128,9 @@ def test_no_test_only_definitions():
                 live.add(key)
                 frontier |= bodies[key]
     unreached = sorted(set(bodies) - live)
-    dead = [k for k in unreached
-            if k not in TEST_ONLY_ALLOWED and k.split(":")[0] not in TEST_ONLY_ALLOWED]
+    dead = [k for k in unreached if k not in TEST_ONLY_ALLOWED]
     assert not dead, "reached only from tests/ (or nowhere):\n" + "\n".join(dead)
-    stale = [a for a in TEST_ONLY_ALLOWED
-             if not any(k == a or k.startswith(a + ":") for k in unreached)]
+    stale = [a for a in TEST_ONLY_ALLOWED if a not in unreached]
     assert not stale, f"allowlisted but reached from production (or gone): {stale}"
 
 

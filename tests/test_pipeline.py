@@ -123,21 +123,15 @@ def _repartition_sizes(df) -> list[int]:
         r"hashpartitioning\([^)]*, (\d+)\), REPARTITION_BY_NUM", explain_str(df))]
 
 
-def test_image_stage_sized_to_task_slots(spark, corpus_dir, monkeypatch):
+def test_image_stage_sized_to_task_slots(spark, corpus_dir):
     """The Exchange feeding the image stage's MapInArrow has one partition
     per task slot (4 on the fixture session), not n_parts; a smaller
-    n_parts still caps it. The scan strategy sizes its splits by the same
-    target."""
-    from ocrd_anybaseocr_spark.operators import pipeline
+    n_parts still caps it."""
     from ocrd_anybaseocr_spark.operators.pipeline import build_page_results
 
     docs, blobs = load_corpus(spark, corpus_dir)
     assert _repartition_sizes(build_page_results(docs, blobs, n_parts=32)) == [4]
     assert _repartition_sizes(build_page_results(docs, blobs, n_parts=2)) == [2]
-    targets = []
-    monkeypatch.setattr(pipeline, "_tune_scan_split", lambda _, n: targets.append(n))
-    build_page_results(docs, blobs, n_parts=32, skew_strategy="scan")
-    assert targets == [4]
 
 
 def test_one_file_per_bucket(pipeline_out):
@@ -466,38 +460,6 @@ def test_round_like_spark_adversarial_corpus(spark):
     want = [round_like_spark(v, 6) for v in vals]
     bad = [(v, g, w) for v, g, w in zip(vals, got, want) if repr(g) != repr(w)]
     assert not bad, bad[:5]
-
-
-def test_scan_strategy_split_tuning(spark, corpus_dir):
-    """The shuffle-free 'scan' strategy must derive maxPartitionBytes from
-    the blob table's real size (encoded PNG bytes under-represent decode
-    work ~20x; the default 128 MB split ran the whole image stage 3-wide).
-    After tuning, the split target is ceil(total/n_parts) floored at 64 KB,
-    and a fresh scan opens at least min(n_parts, row_groups) partitions."""
-    import math
-
-    import pyarrow.parquet as pq_
-
-    from ocrd_anybaseocr_spark.operators.pipeline import (
-        _SCAN_SPLIT_MIN,
-        _tune_scan_split,
-    )
-
-    saved = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    try:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "134217728")
-        docs, blobs = load_corpus(spark, corpus_dir)
-        n_parts = 64
-        _tune_scan_split(blobs, n_parts)
-        path = os.path.join(corpus_dir, "page_blobs.parquet")
-        total = os.path.getsize(path)
-        want = max(_SCAN_SPLIT_MIN, math.ceil(total / n_parts))
-        assert int(spark.conf.get("spark.sql.files.maxPartitionBytes")) == want
-        groups = pq_.ParquetFile(path).metadata.num_row_groups
-        _, fresh = load_corpus(spark, corpus_dir)
-        assert fresh.rdd.getNumPartitions() >= min(n_parts, groups)
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", saved)
 
 
 def test_clean_job_pii_scrub_flag(spark, tmp_path_factory):

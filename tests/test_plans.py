@@ -455,43 +455,6 @@ def test_range_join_window_plan(spark, sf_dir):
     assert "In(event_type" in plan, plan[:3000]
 
 
-def test_bucketed_join_is_shuffle_free(spark, sf_dir, tmp_path_factory):
-    """Two relations bucketed on the same key must join with ZERO
-    exchanges — the co-located layout write_bucketed exists for. Guarded
-    against broadcast (which would trivially pass) by disabling the
-    threshold for the assert."""
-    from pyspark.sql import functions as F
-
-    from ocrd_anybaseocr_spark.sources.tables import write_bucketed
-
-    db = "graft_bucket_test"
-    loc = str(tmp_path_factory.mktemp("bucket_wh"))
-    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-    spark.sql(f"CREATE DATABASE {db} LOCATION '{loc}'")
-    thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        docs = load_table(spark, sf_dir, "documents")
-        write_bucketed(docs, f"{db}.docs_b", "doc_id", 8)
-        write_bucketed(
-            docs.select("doc_id", F.length("text").alias("n")),
-            f"{db}.stats_b",
-            "doc_id",
-            8,
-        )
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table(f"{db}.docs_b").join(
-            spark.table(f"{db}.stats_b"), "doc_id"
-        )
-        assert count_exchanges(joined) == 0, explain_str(joined, "simple")
-        assert joined.count() == docs.count()
-        # the same join on unbucketed parquet shuffles BOTH sides
-        plain = docs.join(docs.select("doc_id", F.length("text").alias("n")), "doc_id")
-        assert count_exchanges(plain) >= 2
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
-        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-
-
 def test_pca_gram_and_containment_plan_shapes(spark, sf_dir):
     """PCA: the gram build must keep its aggregate partial (map-side
     collapse to <= dim^2 cells is the whole scale story) and the

@@ -167,28 +167,6 @@ def test_pagerank_neardup_python_parity(spark, sf_dir):
     assert sr[0] > sr[1] and len({sr[i] for i in range(1, 6)}) == 1
 
 
-def test_load_documents_jsonl_roundtrip(spark, sf_dir, tmp_path_factory):
-    """JSONL ingestion: explicit schema (no inference pass), row-for-row
-    equal to the parquet table, malformed lines dropped not poisoning."""
-    import os
-
-    from ocrd_anybaseocr_spark.sources.tables import (
-        load_documents_jsonl,
-        load_table,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    d = str(tmp_path_factory.mktemp("jsonl"))
-    docs.write.mode("overwrite").json(os.path.join(d, "docs"))
-    with open(os.path.join(d, "docs", "bad.json"), "w") as f:
-        f.write('{"doc_id": "not-a-number", "text": 12 broken\n')
-    got = load_documents_jsonl(spark, os.path.join(d, "docs"))
-    assert got.schema == docs.schema
-    a = sorted(got.collect())
-    b = sorted(docs.collect())
-    assert a == b
-
-
 def test_revenue_momentum_planted(spark, monkeypatch):
     """Daily rollup + lag semantics: exact cent sums per day, first day's
     delta NULL, deltas exact differences, missing calendar days simply

@@ -32,24 +32,6 @@ def test_salted_repartition_balances_cost(spark, corpus_dir):
     assert max(costs) / (sum(costs) / len(costs)) < 2.0, costs
 
 
-def test_scan_strategy_identical_and_shuffle_free(spark, corpus_dir):
-    """skew_strategy='scan' must produce identical page results with ZERO
-    exchanges before the image stage (blobs never shuffle — the 100 TB
-    shape where shuffling media bytes means rewriting the corpus)."""
-    from ocrd_anybaseocr_spark.operators.pipeline import build_page_results
-    from ocrd_anybaseocr_spark.plans import count_exchanges
-
-    docs, blobs = load_corpus(spark, corpus_dir)
-    scan = build_page_results(docs, blobs, skew_strategy="scan")
-    assert count_exchanges(scan) == 0
-
-    def key(df):
-        rows = df.drop("proc_ms", "scores").orderBy("doc_id", "media_ref").collect()
-        return [tuple(r) for r in rows]
-
-    assert key(scan) == key(build_page_results(docs, blobs, n_parts=8))
-
-
 def test_long_tail_generator_produces_oversized_docs():
     """The generator's long tail (FIXTURES.md §1: ~2% of docs get many
     pages and 2x-scale images) must actually exist — find the first
