@@ -69,7 +69,7 @@ def _pipeline_bench_inproc(cores: int, out_root: str, n_docs: int, reps: int = 2
     from ocrd_anybaseocr_spark.sources.tables import spark_session
 
     corpus = ensure_corpus(n_docs)
-    spark = spark_session(cores=cores, shuffle_partitions=max(cores, 16), arrow_batch=256)
+    spark = spark_session(cores=cores, shuffle_partitions=max(cores, 16))
     _warmup(spark, corpus, cores)
     # best-of-reps (same policy at every core count): the host shows ±30%
     # run-to-run noise; the faster run is the better estimate of capacity.

@@ -42,13 +42,11 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from ocrd_anybaseocr_spark.sources.tables import SESSION_SQL_CONF
+
     spark = (
         SparkSession.builder.appName("ocrd_anybaseocr_spark.extract")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "32")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=SESSION_SQL_CONF)
         .getOrCreate()
     )
     from ocrd_anybaseocr_spark.operators.pipeline import run_pipeline

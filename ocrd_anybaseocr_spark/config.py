@@ -107,10 +107,6 @@ class PipelineParams:
     binarize: BinarizeParams = field(default_factory=BinarizeParams)
     deskew: DeskewParams = field(default_factory=DeskewParams)
     classify: ClassifyParams = field(default_factory=ClassifyParams)
-    # Arrow batch sizing: a batch holds ENCODED page bytes; decode is
-    # one-page-at-a-time inside the UDF, so the budget is encoded-bytes per
-    # batch (~9 MB at 256 rows for ~35 KB PNGs). See sources/tables.py.
-    arrow_max_records_per_batch: int = 256
 
 
 DEFAULT_PARAMS = PipelineParams()

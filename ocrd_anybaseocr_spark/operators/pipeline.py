@@ -24,14 +24,16 @@ import functools
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .. import schema as S
 from ..config import DEFAULT_PARAMS
 from ..sources.tables import load_corpus, task_slots
 from .extract import extract_spans, page_index
-from .fold import fold_structure
+from .fold import derive_fold_buckets, fold_structure
 
 # PAGE_RESULTS plus the in-flight metrics column (dropped from final output)
 from pyspark.sql import types as T  # noqa: E402
@@ -334,14 +336,27 @@ def run_pipeline(
     the same bucket ids. ``n_parts`` caps the image stage's task count (see
     build_page_results); the three bucketed writes run ``task_slots(spark,
     n_buckets)`` tasks.
+
+    Commit path: each table is written by one job, and every count the
+    driver needs rides a write as an Observation — page_results carries the
+    row and quarantine counts, the checkpoint append carries the summary's
+    docs/pages/kernel_ms, so those reconcile with the checkpoint table by
+    construction. The checkpoint rows are aggregated from the committed
+    page_results and appended LAST, so a bucket is only ever considered
+    done after its data committed. The only driver collect is the resume
+    probe; a checkpoint table that exists but cannot be read fails the run
+    instead of silently re-running the corpus.
     """
     # per-phase wall breakdown (VERDICT r4 item 1): every driver-side action
     # gets a named timing so a probe regression is attributable to a job,
     # not a mystery. Returned as summary["timings"].
     timings: dict[str, float] = {}
 
-    def _t(name: str, t_start: float) -> None:
-        timings[name] = round(time.monotonic() - t_start, 3)
+    def _timed(name: str, fn, *args):
+        t = time.monotonic()
+        out = fn(*args)
+        timings[name] = round(time.monotonic() - t, 3)
+        return out
 
     io = _CatalogIO(spark, catalog) if catalog else _PathIO(spark, out_dir)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -349,28 +364,19 @@ def run_pipeline(
     if n_buckets is None:
         # one narrow-column count job; at scale this is footer metadata work,
         # negligible next to the image stage
-        t = time.monotonic()
-        n_buckets = derive_buckets(documents.count())
-        _t("count_docs", t)
-    documents = documents.withColumn(
-        "part_bucket", F.pmod(F.hash("doc_id"), F.lit(n_buckets)).cast("int")
-    )
+        n_buckets = derive_buckets(_timed("count_docs", documents.count))
+    bucket = F.pmod(F.hash("doc_id"), F.lit(n_buckets)).cast("int")
+    documents = documents.withColumn("part_bucket", bucket)
 
+    # probe through the IO layer, NOT os.path — out_dir may be HDFS/S3/a
+    # catalog table (jobs/extract_job.py advertises cluster use). A table
+    # that exists but cannot be read raises: treating it as "nothing done"
+    # would re-run the corpus and append to the broken table on every run.
     done: set[int] = set()
-    t_probe = time.monotonic()
-    if resume:
-        # probe through the IO layer, NOT os.path — out_dir may be HDFS/S3/
-        # a catalog table (jobs/extract_job.py advertises cluster use); a
-        # driver-local isdir() would silently defeat resume there. Missing
-        # path/table → AnalysisException → fresh run.
-        try:
-            done = {
-                r.partition_id
-                for r in io.read("checkpoints", S.CHECKPOINT).collect()
-            }
-        except Exception:
-            done = set()
-    _t("ckpt_probe", t_probe)
+    if resume and io.exists("checkpoints"):
+        done = _timed("ckpt_probe", lambda: {
+            r.partition_id for r in io.read("checkpoints", S.CHECKPOINT).collect()
+        })
     if len(done) >= n_buckets:
         return {
             "docs": 0,
@@ -389,8 +395,6 @@ def run_pipeline(
     extracted = extract_spans(documents.select("doc_id", "spans"))
     page_results = build_page_results(documents, blobs, n_parts)
 
-    bucket = F.pmod(F.hash("doc_id"), F.lit(n_buckets)).cast("int")
-
     # repartition on the bucket before a partitionBy write: each task owns
     # whole buckets → one file per bucket instead of tasks×buckets small
     # files (and a cheap commit). n_buckets scales with corpus size
@@ -399,75 +403,40 @@ def run_pipeline(
     # few KB a bucket holds, and hash placement keeps each bucket whole.
     n_write = task_slots(spark, n_buckets)
 
-    def _write_extracted():
-        io.overwrite_partitioned(
-            extracted.withColumn("part_bucket", bucket)
-            .repartition(n_write, "part_bucket"),
-            "extracted_spans",
-        )
+    def _bucketed(df: DataFrame) -> DataFrame:
+        return df.withColumn("part_bucket", bucket).repartition(n_write, "part_bucket")
 
+    pr_counts = (
+        F.count(F.lit(1)).alias("rows"),
+        F.sum(F.expr("int(error is not null)")).alias("bad"),
+    )
+    pr_obs = Observation("pr_rows")
     # the span write is independent of the image stage — submit it
     # concurrently so its scan/shuffle fills scheduler gaps (Spark's
-    # scheduler interleaves jobs from separate threads)
-    import threading
-
-    ext_err: list[BaseException] = []
-
-    def _ext_target():
-        try:
-            t = time.monotonic()
-            _write_extracted()
-            _t("extracted_write", t)
-        except BaseException as e:  # noqa: BLE001 — re-raised on the caller
-            ext_err.append(e)
-
-    ext_thread = threading.Thread(target=_ext_target, daemon=True)
-    ext_thread.start()
-    t_pr = time.monotonic()
-    # Observation rides the write job (zero extra Spark job): its row count
-    # feeds derive_fold_buckets, replacing the separate count job the r4
-    # probe attribution flagged (VERDICT r4 item 1 — every driver action
-    # must earn its wall share)
-    from pyspark.sql import Observation
-
-    pr_obs = Observation("pr_rows")
-    pr_out = (
-        page_results.withColumn("part_bucket", bucket)
-        .observe(
-            pr_obs,
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(F.expr("int(error is not null)")).alias("bad"),
+    # scheduler interleaves jobs from separate threads); result() re-raises
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        spans_job = pool.submit(
+            _timed, "extracted_write", io.overwrite_partitioned,
+            _bucketed(extracted), "extracted_spans",
         )
-        .repartition(n_write, "part_bucket")
-    )
-    io.overwrite_partitioned(pr_out, "page_results")
-    try:
-        n_new_rows = int(pr_obs.get["rows"])
-        n_bad = int(pr_obs.get["bad"] or 0)
-    except Exception:
-        # the optimizer collapses an all-remaining-buckets-empty resume plan
-        # to an empty relation, so the CollectMetrics row never materializes
-        # and Observation.get raises; fall back to counting the commit (that
-        # count is trivially cheap exactly in this near-empty case)
-        n_new_rows = None
-        n_bad = None
-    _t("page_results_write", t_pr)
-    ext_thread.join()
-    if ext_err:
-        raise ext_err[0]
+        _timed(
+            "page_results_write", io.overwrite_partitioned,
+            _bucketed(page_results.observe(pr_obs, *pr_counts)), "page_results",
+        )
+        spans_job.result()
     # fold from the COMMITTED page_results — the image stage runs exactly once
     # (recomputing the lineage through the mapInArrow stage would double decode work)
     written_pr = io.read("page_results")
     if done:
         written_pr = written_pr.filter(~F.col("part_bucket").isin(*done))
-    # fold fan-out scales with data: the observed row count of the commit
-    # bounds rows-per-group (no extra count job — r4 probe attribution)
-    from .fold import derive_fold_buckets
-
-    if n_new_rows is None:
-        n_new_rows = written_pr.count()
-    if n_bad is None:
-        n_bad = written_pr.filter(F.col("error").isNotNull()).count()
+    try:
+        pr = pr_obs.get
+    except Py4JJavaError:
+        # AQE collapses an all-remaining-buckets-empty resume plan to an
+        # empty relation, so the observed row never materializes and get
+        # fails; count the (near-empty) commit instead
+        pr = written_pr.agg(*pr_counts).first().asDict()
+    n_new_rows, n_bad = int(pr["rows"]), int(pr["bad"] or 0)
     if n_bad or io.exists("quarantine"):
         # auditable quarantine relation derived from the FULL committed
         # parquet (a scan of small rows, no re-decode) and rewritten as
@@ -482,78 +451,62 @@ def run_pipeline(
             .select("doc_id", "media_ref", "page_no", "error", "part_bucket"),
             "quarantine",
         )
+    # fold fan-out scales with data: the observed row count of the commit
+    # bounds rows-per-group; fold_structure itself drops quarantined rows
+    # (single definition of the boundary — the gated doc-structure query
+    # shares it)
     n_fold = derive_fold_buckets(
         n_new_rows, int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     )
+    structure = fold_structure(written_pr, n_fold_buckets=n_fold)
+    _timed("fold_write", io.overwrite_partitioned, _bucketed(structure), "doc_structure")
+    elapsed_ms = int((time.monotonic() - t0) * 1000)
 
-    # checkpoint rows from the committed output (counts reconcile by
-    # construction); collected CONCURRENTLY with the fold job — both read
-    # the committed parquet, neither depends on the other, and the fold's
-    # stage tails leave cores for the metrics scan
+    # checkpoint rows aggregated from the committed output of this run's
+    # buckets and appended LAST; the summary's docs/pages/kernel_ms ride the
+    # append, so they equal the checkpoint sums by construction
     lineage = json.dumps(
         {"input": corpus_dir, "engine": "ocrd_anybaseocr_spark-0.1.0", "n_parts": n_parts}
     )
-    metrics = (
-        io.read("page_results")
-        .groupBy("part_bucket")
-        .agg(
-            F.countDistinct("doc_id").alias("doc_count"),
-            F.count(F.lit(1)).alias("row_count"),
-            F.sum("proc_ms").alias("latency_ms"),
+    ck = {"docs": 0, "pages": 0, "kernel_ms": 0}
+    if n_new_rows:
+        ck_obs = Observation("ckpt_rows")
+        checkpoints = (
+            written_pr.groupBy("part_bucket")
+            .agg(
+                F.countDistinct("doc_id").alias("doc_count"),
+                F.count(F.lit(1)).alias("row_count"),
+                F.sum("proc_ms").alias("latency_ms"),
+            )
+            .select(
+                F.col("part_bucket").cast("int").alias("partition_id"),
+                "doc_count",
+                "row_count",
+                "latency_ms",
+                F.lit(lineage).alias("lineage"),
+            )
+            .observe(
+                ck_obs,
+                F.sum("doc_count").alias("docs"),
+                F.sum("row_count").alias("pages"),
+                F.sum("latency_ms").alias("kernel_ms"),
+            )
         )
-        .select(
-            F.col("part_bucket").cast("int").alias("partition_id"),
-            "doc_count",
-            "row_count",
-            "latency_ms",
-            F.lit(lineage).alias("lineage"),
-        )
-    )
-    new_rows: list = []
-    m_err: list[BaseException] = []
-
-    def _metrics_target():
-        try:
-            t = time.monotonic()
-            new_rows.extend(r for r in metrics.collect() if r.partition_id not in done)
-            _t("metrics_collect", t)
-        except BaseException as e:  # noqa: BLE001 — re-raised on the caller
-            m_err.append(e)
-
-    m_thread = threading.Thread(target=_metrics_target, daemon=True)
-    m_thread.start()
-    t_fold = time.monotonic()
-    # fold_structure itself drops quarantined rows (single definition
-    # of the boundary — the gated doc-structure query shares it)
-    structure = fold_structure(written_pr, n_fold_buckets=n_fold)
-    io.overwrite_partitioned(
-        structure.withColumn("part_bucket", bucket)
-        .repartition(n_write, "part_bucket"),
-        "doc_structure",
-    )
-    _t("fold_write", t_fold)
-    m_thread.join()
-    if m_err:
-        raise m_err[0]
-    elapsed_ms = int((time.monotonic() - t0) * 1000)
-    t_ck = time.monotonic()
-    if new_rows:
-        io.append(spark.createDataFrame(new_rows, S.CHECKPOINT), "checkpoints")
-    _t("checkpoint_append", t_ck)
-    pages = sum(r.row_count for r in new_rows)
+        _timed("checkpoint_append", io.append, checkpoints, "checkpoints")
+        ck = ck_obs.get
     return {
-        "docs": sum(r.doc_count for r in new_rows),
+        "docs": int(ck["docs"]),
         # pages is GROSS of quarantine: every committed row, including the
         # error stubs (checkpoint row_counts reconcile against it); healthy
         # pages = pages - quarantined_pages
-        "pages": pages,
-        "quarantined_pages": int(n_bad),
+        "pages": int(ck["pages"]),
+        "quarantined_pages": n_bad,
         "resumed_buckets": sorted(done),
         "elapsed_s": elapsed_ms / 1000.0,
         # pure in-UDF kernel CPU time (decode→classify), summed from the
         # checkpoint metrics — wall*cores minus this is the Spark-side
         # share (Arrow hop, scheduling, non-image jobs): the 8→32 scaling
         # attribution input (BENCH/BASELINE.md)
-        "kernel_ms": int(sum(r.latency_ms for r in new_rows)),
+        "kernel_ms": int(ck["kernel_ms"]),
         "timings": timings,
     }

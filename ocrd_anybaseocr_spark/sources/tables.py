@@ -17,16 +17,32 @@ from pyspark.sql import DataFrame, SparkSession
 from .. import schema as S
 
 
-def spark_session(cores: int | str = "*", app: str = "ocrd_anybaseocr_spark",
-                  shuffle_partitions: int = 32, arrow_batch: int = 256) -> SparkSession:
-    """Session tuned for heavy image rows: AQE on (skew-join + coalesce).
+# SQL confs shared by every session this package builds: spark_session
+# below and the spark-submit entry point jobs/extract_job.py (which leaves
+# master, memory and shuffle partitions to the cluster's submit conf).
+#
+# Arrow batch size trades Python/JVM round-trips against executor memory:
+# a batch holds ENCODED page bytes (~35 KB each here → ~9 MB at 256) and
+# pages decode one at a time inside the UDF, so the decoded footprint stays
+# one page. Raising 32→256 measured +30-40% stage throughput at 32 cores.
+# For corpora with much larger scans, size by byte budget (SURVEY.md §4.3),
+# not row count. Parquet aggregate pushdown resolves count(*) from
+# row-group metadata, so the pipeline's bucket-derivation count is a
+# footer read.
+SESSION_SQL_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "256",
+    "spark.sql.parquet.aggregatePushdown": "true",
+}
 
-    Arrow batch size trades Python/JVM round-trips against executor memory:
-    a batch holds ENCODED page bytes (~35 KB each here → ~9 MB at 256) and
-    pages decode one at a time inside the UDF, so the decoded footprint
-    stays one page. Raising 32→256 measured +30-40%% stage throughput at 32
-    cores. For corpora with much larger scans, size by byte budget
-    (SURVEY.md §4.3), not row count.
+
+def spark_session(cores: int | str = "*", app: str = "ocrd_anybaseocr_spark",
+                  shuffle_partitions: int = 32) -> SparkSession:
+    """Local session tuned for heavy image rows: AQE on (skew-join +
+    coalesce) and the SESSION_SQL_CONF above.
 
     An integer ``cores`` also pins ``spark.default.parallelism`` to it —
     the value local mode uses implicitly, so no plan changes — making the
@@ -38,14 +54,7 @@ def spark_session(cores: int | str = "*", app: str = "ocrd_anybaseocr_spark",
         builder.master(f"local[{cores}]")
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
-        # count(*) over parquet resolves from row-group metadata — the
-        # pipeline's bucket-derivation counts become footer reads
-        .config("spark.sql.parquet.aggregatePushdown", "true")
+        .config(map=SESSION_SQL_CONF)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .getOrCreate()

@@ -408,8 +408,9 @@ def generate_corpus(
                 consume(result)
     pq.write_table(pa.concat_tables(doc_batches), os.path.join(out_dir, "documents.parquet"))
     # small row groups (~2 MB of encoded pages) let Spark split the blob
-    # scan finely: per-task byte skew is bounded at the storage layer and
-    # the image stage needs NO repartition shuffle of the bytes
+    # scan finely, so no scan task reads a disproportionate byte load; the
+    # image stage still balances its tasks with one salted repartition of
+    # the bytes after the join (pipeline.salted_repartition)
     pq.write_table(
         pa.concat_tables(blob_batches),
         os.path.join(out_dir, "page_blobs.parquet"),

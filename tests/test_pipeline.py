@@ -12,7 +12,7 @@ import pytest
 from ocrd_anybaseocr_spark.operators.extract import extract_spans
 from ocrd_anybaseocr_spark.operators.pipeline import run_pipeline
 from ocrd_anybaseocr_spark.oracle import process_document
-from ocrd_anybaseocr_spark.sources.tables import load_corpus, load_table
+from ocrd_anybaseocr_spark.sources.tables import SESSION_SQL_CONF, load_corpus, load_table
 
 
 @pytest.fixture(scope="module")
@@ -28,11 +28,16 @@ def oracle_results(corpus_dir):
 
 
 @pytest.fixture(scope="module")
-def pipeline_out(spark, corpus_dir, tmp_path_factory):
+def pipeline_run(spark, corpus_dir, tmp_path_factory):
     out_dir = str(tmp_path_factory.mktemp("out"))
     summary = run_pipeline(spark, corpus_dir, out_dir, n_parts=8)
     assert summary["docs"] > 0
-    return out_dir
+    return out_dir, summary
+
+
+@pytest.fixture(scope="module")
+def pipeline_out(pipeline_run):
+    return pipeline_run[0]
 
 
 def _spans_tuples(spans):
@@ -78,20 +83,58 @@ def test_doc_structure_matches_oracle(spark, pipeline_out, oracle_results):
         assert got_links == want_links, row["doc_id"]
 
 
-def test_checkpoints_reconcile(spark, pipeline_out):
+def test_checkpoints_reconcile(spark, pipeline_run):
+    pipeline_out, summary = pipeline_run
     ck = spark.read.parquet(os.path.join(pipeline_out, "checkpoints")).toPandas()
     pr = spark.read.parquet(os.path.join(pipeline_out, "page_results"))
     assert ck["row_count"].sum() == pr.count()
     assert (ck["latency_ms"] >= 0).all()
     assert ck["partition_id"].is_unique
+    # the summary rides the checkpoint append, so it equals the table's sums
+    assert summary["docs"] == ck["doc_count"].sum()
+    assert summary["pages"] == ck["row_count"].sum()
+    assert summary["kernel_ms"] == ck["latency_ms"].sum()
 
 
 def test_resume_skips_completed_and_no_duplicates(spark, corpus_dir, pipeline_out):
-    # second run over the same output dir: everything checkpointed → no work
+    # second run over the same output dir: everything checkpointed → no work.
+    # 24 docs in 16 buckets leave some buckets empty, so this runs the
+    # all-empty resume plan (the page_results Observation's fallback)
+    ck_dir = os.path.join(pipeline_out, "checkpoints")
+    n_ck = spark.read.parquet(ck_dir).count()
     summary = run_pipeline(spark, corpus_dir, pipeline_out, n_parts=8)
     assert summary["docs"] == 0
+    assert summary["pages"] == 0
+    assert spark.read.parquet(ck_dir).count() == n_ck
     ext = spark.read.parquet(os.path.join(pipeline_out, "extracted_spans"))
     assert ext.count() == ext.select("doc_id").distinct().count()
+
+
+def test_unreadable_checkpoints_fail_the_run(spark, corpus_dir, pipeline_out, tmp_path):
+    """A checkpoint table that exists but cannot be read must fail the
+    resume, not be read as "nothing done": that would re-run the whole
+    corpus and append to the broken table on every later run."""
+    import glob
+    import shutil
+
+    out_dir = str(tmp_path / "out")
+    shutil.copytree(pipeline_out, out_dir)
+    for f in glob.glob(os.path.join(out_dir, "checkpoints", "*.parquet")):
+        with open(f, "wb") as fh:
+            fh.write(b"not a parquet file")
+    for f in glob.glob(os.path.join(out_dir, "checkpoints", ".*.crc")):
+        os.remove(f)
+
+    def listing():
+        return sorted(
+            (os.path.relpath(p, out_dir), os.path.getsize(p))
+            for p in glob.glob(os.path.join(out_dir, "**"), recursive=True)
+        )
+
+    before = listing()
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        run_pipeline(spark, corpus_dir, out_dir, n_parts=8)
+    assert listing() == before
 
 
 def test_bucket_count_invariance(spark, corpus_dir, pipeline_out, tmp_path_factory):
@@ -161,6 +204,43 @@ def test_task_slots_read_from_session_conf(spark):
     assert task_slots(spark, 2) == 2
     unset = SimpleNamespace(conf=SimpleNamespace(get=lambda key, default=None: default))
     assert task_slots(unset, 32) == 32
+
+
+_JOB_SESSION = r"""
+import json, runpy, sys
+repo = sys.argv[1]
+sys.path.insert(0, repo)
+import ocrd_anybaseocr_spark.operators.pipeline as pipeline
+
+# the job prints run_pipeline's return value: report its session's conf
+pipeline.run_pipeline = lambda spark, *a, **k: dict(spark.sparkContext.getConf().getAll())
+sys.argv = ["extract_job.py", "--input", "unused", "--output", "unused"]
+runpy.run_path(repo + "/jobs/extract_job.py", run_name="__main__")
+"""
+
+
+def test_extract_job_session_shares_sql_conf(spark):
+    """jobs/extract_job.py builds its own session (spark-submit supplies
+    master, memory and shuffle partitions). Its SQL confs are the ones
+    spark_session sets, not a drifted copy. Runs in its own process: a
+    second getOrCreate here would return the fixture session."""
+    import json
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _JOB_SESSION, repo],
+        capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    job = json.loads(proc.stdout.strip().splitlines()[-1])
+    local = dict(spark.sparkContext.getConf().getAll())
+    assert {k: local.get(k) for k in SESSION_SQL_CONF} == SESSION_SQL_CONF
+    assert {k: job.get(k) for k in SESSION_SQL_CONF} == SESSION_SQL_CONF
+    for cluster_owned in ("spark.sql.shuffle.partitions", "spark.default.parallelism",
+                          "spark.driver.memory"):
+        assert cluster_owned not in job
 
 
 def test_round_like_spark_matches_f_round(spark):

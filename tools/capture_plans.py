@@ -13,6 +13,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main():
     tag, suffix, sf_dir = sys.argv[1], sys.argv[2], sys.argv[3]
     names = sys.argv[4:]
+    from ocrd_anybaseocr_spark.plans import explain_str
     from ocrd_anybaseocr_spark.queries import QUERIES
     from ocrd_anybaseocr_spark.sources.tables import spark_session
 
@@ -23,9 +24,7 @@ def main():
     for name in names:
         try:
             df = QUERIES[name](spark, sf_dir)
-            plan = df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-            )
+            plan = explain_str(df)
         except Exception as e:  # noqa: BLE001
             plan = f"<explain failed: {type(e).__name__}: {e}>"
         with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
