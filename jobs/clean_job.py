@@ -163,10 +163,11 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from ocrd_anybaseocr_spark.sources.tables import SESSION_SQL_CONF
+
     spark = (
         SparkSession.builder.appName("ocrd_anybaseocr_spark.clean")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=SESSION_SQL_CONF)
         .getOrCreate()
     )
     print(json.dumps(run(spark, args.input, args.output, near_dedup=args.near_dedup,

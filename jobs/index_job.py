@@ -103,11 +103,12 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from ocrd_anybaseocr_spark.sources.tables import SESSION_SQL_CONF
+
     # no .master(): the submit command controls placement (job convention)
     spark = (
         SparkSession.builder.appName("ocrd_anybaseocr_spark.index")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=SESSION_SQL_CONF)
         .getOrCreate()
     )
     print(json.dumps(run(spark, args.input, args.output)))

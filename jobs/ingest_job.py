@@ -177,13 +177,14 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from ocrd_anybaseocr_spark.sources.tables import SESSION_SQL_CONF
+
     # no .master() here — the submit command controls where this runs
     # (clean_job/curate_job convention; a builder-set master would pin a
     # cluster submission to local mode on the driver)
     spark = (
         SparkSession.builder.appName("ocrd_anybaseocr_spark.ingest")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=SESSION_SQL_CONF)
         .getOrCreate()
     )
     print(json.dumps(run(spark, args.corpus, args.batch, args.output)))

@@ -18,8 +18,8 @@ from .. import schema as S
 
 
 # SQL confs shared by every session this package builds: spark_session
-# below and the spark-submit entry point jobs/extract_job.py (which leaves
-# master, memory and shuffle partitions to the cluster's submit conf).
+# below and the spark-submit entry points in jobs/ (which leave master,
+# memory and shuffle partitions to the cluster's submit conf).
 #
 # Arrow batch size trades Python/JVM round-trips against executor memory:
 # a batch holds ENCODED page bytes (~35 KB each here → ~9 MB at 256) and
@@ -86,14 +86,19 @@ def scan_fanout(
     testdata writes each table as a single-row-group single file — so
     without this, every md5/shingle pass ran in ONE task regardless of
     cores (measured: the whole text-dedup family scan-stage-bound on one
-    core at sf1.0). The repartition fires only when the scan's splittable
-    unit count is below the session's shuffle parallelism; at production
-    scale (many files / many row groups per file) — or when the layout
-    cannot be probed (non-local paths, monkeypatched loaders in tests) —
-    it is a no-op, so no corpus-sized shuffle is ever added (guide §2:
-    derive partitioning from the input, don't hard-code either
-    deployment)."""
-    n = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    core at sf1.0).
+
+    The fanout width is ``task_slots(spark, shuffle.partitions)``: one
+    round-robin task per task slot, since every downstream task (a Python
+    hash kernel above all) pays a fixed worker setup (see task_slots). A
+    session that does not declare its slots (a cluster submit) keeps the
+    shuffle-partition count. The repartition fires only when the scan's
+    row groups are fewer than half that width; at production scale (many
+    files / many row groups per file) — or when the layout cannot be
+    probed (non-local paths, monkeypatched loaders in tests) — it is a
+    no-op, so no corpus-sized shuffle is ever added (guide §2: derive
+    partitioning from the input, don't hard-code either deployment)."""
+    t = task_slots(spark, int(spark.conf.get("spark.sql.shuffle.partitions", "200")))
     try:
         import glob as _glob
 
@@ -105,9 +110,9 @@ def scan_fanout(
     except Exception:
         # non-local or unreadable layout: assume the scan splits fine
         return df
-    if row_groups >= max(2, n // 2):
+    if row_groups >= max(2, t // 2):
         return df
-    return df.repartition(n)
+    return df.repartition(t)
 
 
 def load_corpus(spark: SparkSession, corpus_dir: str) -> tuple[DataFrame, DataFrame]:

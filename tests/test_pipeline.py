@@ -243,6 +243,44 @@ def test_extract_job_session_shares_sql_conf(spark):
         assert cluster_owned not in job
 
 
+def _builder_chains(path: str) -> list[list]:
+    """Each ``SparkSession.builder....getOrCreate()`` chain in a source
+    file, as its list of method Call nodes (outermost first)."""
+    import ast
+
+    chains = []
+    for node in ast.walk(ast.parse(open(path).read())):
+        if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "getOrCreate"):
+            chain, call = [], node
+            while isinstance(call, ast.Call) and isinstance(call.func, ast.Attribute):
+                chain.append(call)
+                call = call.func.value
+            chains.append(chain)
+    return chains
+
+
+@pytest.mark.parametrize("job", ["clean", "curate", "extract", "index", "ingest"])
+def test_job_sessions_apply_session_sql_conf(job):
+    """Every spark-submit job that runs the package's queries or pipeline
+    builds its session with ``.config(map=SESSION_SQL_CONF)`` and hand-sets
+    none of those keys (nor a master), so no job drifts from the confs
+    spark_session sets. Read from the source: no JVM per job."""
+    import ast
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    chains = _builder_chains(os.path.join(repo, "jobs", f"{job}_job.py"))
+    assert len(chains) == 1, chains
+    assert "master" not in {c.func.attr for c in chains[0]}
+    config = [c for c in chains[0] if c.func.attr == "config"]
+    mapped = [c for c in config
+              if [k.arg for k in c.keywords] == ["map"]
+              and ast.unparse(c.keywords[0].value) == "SESSION_SQL_CONF"]
+    assert len(mapped) == 1, [ast.unparse(c) for c in config]
+    hand_set = [ast.literal_eval(c.args[0]) for c in config if c.args]
+    assert not set(hand_set) & set(SESSION_SQL_CONF), hand_set
+
+
 def test_round_like_spark_matches_f_round(spark):
     """oracle.round_like_spark must be bit-identical to F.round(double, 6):
     the materialized expected-parquet oracle stores pre-rounded skew, so any

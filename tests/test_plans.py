@@ -10,7 +10,7 @@ from ocrd_anybaseocr_spark.operators.interleave import interleaved_documents
 from ocrd_anybaseocr_spark.plans import count_exchanges, explain_str
 from ocrd_anybaseocr_spark.queries import QUERIES
 from ocrd_anybaseocr_spark.sources import session_cache
-from ocrd_anybaseocr_spark.sources.tables import load_corpus, load_table
+from ocrd_anybaseocr_spark.sources.tables import load_corpus, load_table, scan_fanout
 
 
 def pushed_filters(df) -> str:
@@ -478,3 +478,56 @@ def test_funnel_single_user_shuffle(spark, sf_dir):
     plan = explain_str(df)
     for bad in ("SortMergeJoin", "BroadcastHashJoin", "CartesianProduct"):
         assert bad not in plan
+
+
+def _round_robin_sizes(df) -> list[int]:
+    import re
+
+    return [int(n) for n in re.findall(r"RoundRobinPartitioning\((\d+)\)", explain_str(df))]
+
+
+def test_scan_fanout_one_task_per_slot(spark, sf_dir):
+    """The documents scan (one row group) fans out to one round-robin
+    partition per task slot — 4 on the fixture session, not its 8 shuffle
+    partitions — in a consumer from each module that scans through
+    scan_fanout: queries.py, operators/dedup.py, operators/textstats.py."""
+    for name in ("extract_reading_order", "dedup_exact_substring", "boilerplate_ratio"):
+        sizes = _round_robin_sizes(QUERIES[name](spark, sf_dir))
+        assert sizes and set(sizes) == {4}, (name, sizes)
+
+
+def _row_group_table(path, name: str, row_groups: int) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = 4 * row_groups
+    t = pa.table({"doc_id": [f"d{i}" for i in range(n)], "text": ["x"] * n})
+    pq.write_table(t, str(path / f"{name}.parquet"), row_group_size=4)
+
+
+def test_scan_fanout_width_without_declared_slots(tmp_path):
+    """A session that declares no task slots (a cluster submit sets no
+    spark.default.parallelism) fans out to the shuffle-partition count and
+    passes through from half that many row groups."""
+    from types import SimpleNamespace
+
+    conf = {"spark.sql.shuffle.partitions": "8"}
+    cluster = SimpleNamespace(conf=SimpleNamespace(get=lambda k, d=None: conf.get(k, d)))
+    df = SimpleNamespace(repartition=lambda n: ("round-robin", n))
+    for name, groups in (("one", 1), ("two", 2), ("four", 4)):
+        _row_group_table(tmp_path, name, groups)
+    assert scan_fanout(df, cluster, str(tmp_path), "one") == ("round-robin", 8)
+    assert scan_fanout(df, cluster, str(tmp_path), "two") == ("round-robin", 8)
+    assert scan_fanout(df, cluster, str(tmp_path), "four") is df
+
+
+def test_scan_fanout_passes_through_split_tables(spark, tmp_path):
+    """On the fixture session (4 slots) a table with 2 row groups already
+    splits into enough scan tasks: no Exchange is added. One row group
+    fans out to 4."""
+    _row_group_table(tmp_path, "split", 2)
+    _row_group_table(tmp_path, "whole", 1)
+    for name, sizes in (("split", []), ("whole", [4])):
+        df = scan_fanout(load_table(spark, str(tmp_path), name), spark, str(tmp_path), name)
+        assert _round_robin_sizes(df) == sizes, name
+        assert count_exchanges(df) == len(sizes), name
