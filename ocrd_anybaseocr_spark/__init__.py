@@ -5,8 +5,8 @@ A from-scratch reimplementation of the capabilities of OCR-D/ocrd_anybaseocr
 (reference at /root/reference, v2.0.0) as an idiomatic Spark DataFrame
 pipeline: Otsu/Sauvola binarization, projection-profile deskew, page-frame
 cropping, text/non-text segmentation, page classification and the
-document-structure fold — all as vectorized pandas/Arrow UDFs over batched
-decoded page images, never per-row Python.
+document-structure fold — all as vectorized Arrow UDFs (mapInArrow,
+applyInArrow) over batched decoded page images, never per-row Python.
 
 Design blueprint: /root/repo/SURVEY.md. This is NOT a port — the reference's
 page-at-a-time imperative execution (reference:

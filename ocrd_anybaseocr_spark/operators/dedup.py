@@ -733,7 +733,7 @@ def connected_components_labels(
     labels (ADVICE round 2, item 4)."""
     import math
 
-    import pandas as pd
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     id_type = dict(edges.dtypes)["doc_a"]
     # materialize the edge set ONCE — its lineage (LSH + banding + verify)
@@ -741,6 +741,7 @@ def connected_components_labels(
     # repartition(1) must read a materialized relation, not collapse the
     # upstream banding join onto one task
     e = edges.select("doc_a", "doc_b").localCheckpoint(eager=True)
+    id_arrow = to_arrow_schema(e.schema).field("doc_a").type
 
     def _find(parent: dict, x):
         r = x
@@ -751,8 +752,8 @@ def connected_components_labels(
         return r
 
     def _union_all(parent: dict, batches) -> None:
-        for pdf in batches:
-            for a, b in zip(pdf["doc_a"].tolist(), pdf["doc_b"].tolist()):
+        for batch in batches:
+            for a, b in zip(batch.column("doc_a").to_pylist(), batch.column("doc_b").to_pylist()):
                 if a not in parent:
                     parent[a] = a
                 if b not in parent:
@@ -766,22 +767,28 @@ def connected_components_labels(
                     parent[rb] = ra
 
     def _forest(batches):
+        import pyarrow as pa
+
         parent: dict = {}
         _union_all(parent, batches)
         roots = [(_find(parent, x), x) for x in parent]
         rows = [(r, x) for r, x in roots if r != x]
         if rows:
-            yield pd.DataFrame(
-                {"doc_a": [r for r, _ in rows], "doc_b": [x for _, x in rows]}
+            ra, xs = zip(*rows)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(ra, id_arrow), pa.array(xs, id_arrow)], names=["doc_a", "doc_b"]
             )
 
     def _labels(batches):
+        import pyarrow as pa
+
         parent: dict = {}
         _union_all(parent, batches)
         if parent:
             ks = list(parent)
-            yield pd.DataFrame(
-                {"doc_id": ks, "cluster_id": [_find(parent, x) for x in ks]}
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(ks, id_arrow), pa.array([_find(parent, x) for x in ks], id_arrow)],
+                names=["doc_id", "cluster_id"],
             )
 
     n_e = e.count()
@@ -797,7 +804,7 @@ def connected_components_labels(
         parts = int(math.ceil(n_e / CC_FOLD_EDGES))
         e = (
             e.repartition(parts, "doc_a")
-            .mapInPandas(_forest, e.schema)
+            .mapInArrow(_forest, e.schema)
             .localCheckpoint(eager=True)
         )
         n_new = e.count()
@@ -806,7 +813,7 @@ def connected_components_labels(
             # the single-task fold below is exact regardless
             break
         n_e = n_new
-    labels = e.repartition(1).mapInPandas(
+    labels = e.repartition(1).mapInArrow(
         _labels, f"doc_id {id_type}, cluster_id {id_type}"
     )
     return nodes.select("doc_id").join(labels, "doc_id", "left").select(

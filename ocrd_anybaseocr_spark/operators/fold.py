@@ -4,21 +4,23 @@ The reference's two-phase split — parallel per-page inference, then a
 sequential per-document fold (reference:
 cli/ocrd_anybaseocr_layout_analysis.py:72-86,140-220) — maps exactly onto
 Spark's shuffle boundary: page_results shuffle once on doc_id, then
-``applyInPandas`` folds each document's pages in reading order. The fold is
+``applyInArrow`` folds each document's pages in reading order. The fold is
 bounded per document (max ~40 pages), so no stateful-streaming operator is
 needed (SURVEY.md §2.9).
 """
 
 from __future__ import annotations
 
-import pandas as pd
+from itertools import groupby
+from operator import itemgetter
+
 from pyspark.sql import DataFrame
 
 from .. import schema as S
 
 
 N_FOLD_BUCKETS_MIN = 64
-# Bounds the pandas frame a single applyInPandas group materializes: with
+# Bounds the Arrow table a single applyInArrow group materializes: with
 # n_fold_buckets >= ceil(rows / TARGET), one group holds <= TARGET page rows
 # (~a few MB at this schema) regardless of corpus size.
 TARGET_ROWS_PER_FOLD_BUCKET = 20_000
@@ -36,14 +38,16 @@ def derive_fold_buckets(n_rows: int | None, parallelism: int) -> int:
 def fold_structure(page_results: DataFrame, n_fold_buckets: int | None = None) -> DataFrame:
     """page_results(doc_id, media_ref, page_no, labels, ...) → DOC_STRUCTURE.
 
-    Grouped by a doc_id HASH BUCKET, not by doc_id: one applyInPandas call
-    folds ~hundreds of documents (pandas groupby inside), so the per-group
-    Python/Arrow overhead is amortized — at 10^12 docs a per-document UDF
-    call would dominate the stage. Results are identical for ANY bucket
-    count: each document is still folded alone, in explicit (doc_id,
-    page_no) order (parallelism-invariance is pytest-asserted).
+    Grouped by a doc_id HASH BUCKET, not by doc_id: one applyInArrow call
+    folds ~hundreds of documents (one Arrow sort, then one document at a
+    time), so the per-group Python/Arrow overhead is amortized — at 10^12
+    docs a per-document UDF call would dominate the stage. Results are
+    identical for ANY bucket count: each document is still folded alone,
+    in explicit (doc_id, page_no) order (parallelism-invariance is
+    pytest-asserted).
     """
     from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     # quarantine boundary: a pipeline frame carries an `error` column whose
     # non-null rows have NULL labels — they contribute nothing to structure
@@ -59,14 +63,18 @@ def fold_structure(page_results: DataFrame, n_fold_buckets: int | None = None) -
             int(page_results.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")),
         )
 
-    def fold_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
+    aschema = to_arrow_schema(S.DOC_STRUCTURE)
+
+    def fold_bucket(table):
+        import pyarrow as pa
+
         from ..kernels.fold import fold_document
 
-        pdf = pdf.sort_values(["doc_id", "page_no"])  # W5: explicit order keys
+        # W5: explicit order keys
+        c = table.sort_by([("doc_id", "ascending"), ("page_no", "ascending")]).to_pydict()
         out = []
-        for doc_id, g in pdf.groupby("doc_id", sort=False):
-            pages = [(m, list(l)) for m, l in zip(g["media_ref"], g["labels"])]
-            divs, links = fold_document(pages)
+        for doc_id, g in groupby(zip(c["doc_id"], c["media_ref"], c["labels"]), itemgetter(0)):
+            divs, links = fold_document([(m, l) for _, m, l in g])
             out.append(
                 {
                     "doc_id": doc_id,
@@ -76,11 +84,11 @@ def fold_structure(page_results: DataFrame, n_fold_buckets: int | None = None) -
                     "links": [{"log_id": l[0], "media_ref": l[1]} for l in links],
                 }
             )
-        return pd.DataFrame(out, columns=["doc_id", "divs", "links"])
+        return pa.Table.from_pylist(out, schema=aschema)
 
     return (
         page_results.select("doc_id", "media_ref", "page_no", "labels")
         .withColumn("_fold_bucket", F.pmod(F.hash("doc_id"), F.lit(n_fold_buckets)))
         .groupBy("_fold_bucket")
-        .applyInPandas(fold_bucket, schema=S.DOC_STRUCTURE)
+        .applyInArrow(fold_bucket, schema=S.DOC_STRUCTURE)
     )

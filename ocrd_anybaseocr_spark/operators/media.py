@@ -6,12 +6,15 @@ multimodal-columns contract). Two tiers:
 - metadata extraction that never leaves the JVM: PNG IHDR width/height/bit
   depth live at fixed byte offsets, so they are pure column expressions
   (hex/conv/substring) — at 100 TB this runs at scan speed with no Python;
-- decode / feature-extraction in Arrow-batched pandas UDFs
-  (operators/pipeline.py process_pages — the real decode path via the
-  in-repo PNG codec, since PIL/OpenCV are absent here).
+- decode / feature-extraction in ``mapInArrow`` stages: the blob
+  operators below share one batch loop (_map_blobs), and
+  operators/pipeline.py process_pages is the real decode path via the
+  in-repo PNG codec, since PIL/OpenCV are absent here.
 """
 
 from __future__ import annotations
+
+from itertools import islice
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -61,6 +64,38 @@ FRAME_STRIDE = 4  # sample every stride-th frame
 FRAME_MAX = 4  # sampled frames per media row (bounded output)
 
 
+def _map_blobs(blobs: DataFrame, rows, ddl: str) -> DataFrame:
+    """The batch loop of every blob operator below: one ``mapInArrow`` hop
+    over (media_ref, image). ``rows(blob)`` gives the output rows of one
+    blob and ``ddl`` their columns; the loop prepends media_ref to both.
+    Columns are built at their declared Arrow types: Spark fails on an
+    int64 vector behind an int column."""
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = T.StructType.fromDDL(f"media_ref string not null, {ddl}")
+    aschema = to_arrow_schema(schema)
+
+    def stage(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            out = [
+                (ref, *row)
+                for ref, blob in zip(
+                    batch.column("media_ref").to_pylist(), batch.column("image").to_pylist()
+                )
+                for row in rows(blob)
+            ]
+            if out:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(c, type=f.type) for c, f in zip(zip(*out), aschema)],
+                    schema=aschema,
+                )
+
+    return blobs.select("media_ref", "image").mapInArrow(stage, schema)
+
+
 def audio_energy_windows(
     blobs: DataFrame,
     window: int = AUDIO_WINDOW,
@@ -68,60 +103,35 @@ def audio_energy_windows(
 ) -> DataFrame:
     """(media_ref, win_no, n_samples, energy): windowed sum-of-squares over
     the binary column interpreted as 16-bit little-endian PCM — the audio
-    feature-extraction tier, as an Arrow-batched ``mapInPandas``
-    (np.frombuffer + vectorized square/sum; bytes cross to Python once,
-    no per-row Python). Energies are exact int64 (|x| < 2^15, window
+    feature-extraction tier, as one ``mapInArrow`` hop (np.frombuffer +
+    vectorized square/sum; bytes cross to Python once, no per-row
+    Python). Energies are exact int64 (|x| < 2^15, window
     <= 2^16 → sum x^2 < 2^47), so a DuckDB hex-arithmetic oracle matches
     hash-exactly. This corpus carries no true audio; the page blobs stand
     in as deterministic PCM — the decode/window/reduce PLUMBING is the
     real deliverable, and a genuine PCM column drops in unchanged. A
     trailing partial window is analyzed as-is (n_samples < window)."""
-    import pandas as pd
-    from pyspark.sql import types as T
 
-    schema = T.StructType(
-        [
-            T.StructField("media_ref", T.StringType(), False),
-            T.StructField("win_no", T.IntegerType(), False),
-            T.StructField("n_samples", T.IntegerType(), False),
-            T.StructField("energy", T.LongType(), False),
-        ]
-    )
-
-    def stage(batches):
+    def rows(blob):
         import numpy as np
 
-        for pdf in batches:
-            refs, wins, ns, es = [], [], [], []
-            for ref, blob in zip(pdf["media_ref"], pdf["image"]):
-                b = bytes(blob)
-                x = np.frombuffer(b[: len(b) // 2 * 2], dtype="<i2").astype(np.int64)
-                n_win = min(max_windows, -(-len(x) // window))
-                for w in range(n_win):
-                    seg = x[w * window : (w + 1) * window]
-                    refs.append(ref)
-                    wins.append(w)
-                    ns.append(len(seg))
-                    es.append(int((seg * seg).sum()))
-            yield pd.DataFrame(
-                {"media_ref": refs, "win_no": wins, "n_samples": ns, "energy": es}
-            )
+        x = np.frombuffer(blob[: len(blob) // 2 * 2], dtype="<i2").astype(np.int64)
+        for w in range(min(max_windows, -(-len(x) // window))):
+            seg = x[w * window : (w + 1) * window]
+            yield w, len(seg), int((seg * seg).sum())
 
-    return blobs.select("media_ref", "image").mapInPandas(stage, schema=schema)
+    return _map_blobs(
+        blobs, rows, "win_no int not null, n_samples int not null, energy bigint not null"
+    )
 
 
-def decode_video_frames(blob: bytes, frame_bytes: int = FRAME_BYTES, codec: str = "raw"):
-    """Frame iterator for the video tier. ``raw`` = fixed-size frame
-    concatenation (the deterministic stand-in format; a trailing partial
-    frame is dropped, matching real fixed-rate raw video). Container
-    codecs need an external decoder this environment does not ship —
-    the gate is explicit, not a silent wrong answer."""
-    if codec != "raw":
-        raise NotImplementedError(
-            f"codec {codec!r}: container decode needs av/ffmpeg, absent in "
-            "this environment — only the 'raw' fixed-size-frame format is "
-            "implemented; the sampling/feature plumbing is codec-agnostic"
-        )
+def decode_video_frames(blob: bytes, frame_bytes: int = FRAME_BYTES):
+    """Frame iterator for the video tier. Only the raw format is read: a
+    fixed-size frame concatenation (the deterministic stand-in format; a
+    trailing partial frame is dropped, matching real fixed-rate raw
+    video). Container codecs would need an external decoder (av/ffmpeg)
+    the package does not depend on; the sampling/feature plumbing is
+    codec-agnostic."""
     for f in range(len(blob) // frame_bytes):
         yield blob[f * frame_bytes : (f + 1) * frame_bytes]
 
@@ -131,52 +141,31 @@ def frame_sample(
     frame_bytes: int = FRAME_BYTES,
     stride: int = FRAME_STRIDE,
     max_frames: int = FRAME_MAX,
-    codec: str = "raw",
 ) -> DataFrame:
     """(media_ref, frame_no, n_bytes, byte_sum): every ``stride``-th frame
-    of the binary column as raw fixed-size frames — the video
-    frame-sampling tier as an Arrow-batched ``mapInPandas``. byte_sum is
-    the exact uint8 sum (DuckDB-oracle-able); real per-frame features
-    (resize, embed) slot into the same loop. Page blobs stand in for raw
-    video exactly as in audio_energy_windows."""
-    import pandas as pd
-    from pyspark.sql import types as T
+    of the binary column read as raw fixed-size frames (the only format
+    decode_video_frames reads) — the video frame-sampling tier as one
+    ``mapInArrow`` hop. byte_sum is the exact uint8 sum
+    (DuckDB-oracle-able); real per-frame features (resize, embed) slot
+    into the same loop. Page blobs stand in for raw video exactly as in
+    audio_energy_windows."""
 
-    schema = T.StructType(
-        [
-            T.StructField("media_ref", T.StringType(), False),
-            T.StructField("frame_no", T.IntegerType(), False),
-            T.StructField("n_bytes", T.IntegerType(), False),
-            T.StructField("byte_sum", T.LongType(), False),
-        ]
-    )
-
-    def stage(batches):
-        from itertools import islice
-
+    def rows(blob):
         import numpy as np
 
-        for pdf in batches:
-            refs, fnos, nbs, sums = [], [], [], []
-            for ref, blob in zip(pdf["media_ref"], pdf["image"]):
-                # islice stops the frame iterator after the LAST sampled
-                # index ((max_frames-1)*stride + 1 frames advanced, the
-                # skipped ones still sliced) instead of materializing the
-                # whole blob's frame list before sampling
-                sampled = islice(
-                    decode_video_frames(bytes(blob), frame_bytes, codec),
-                    0, (max_frames - 1) * stride + 1, stride,
-                )
-                for i, f in enumerate(sampled):
-                    refs.append(ref)
-                    fnos.append(i * stride)
-                    nbs.append(len(f))
-                    sums.append(int(np.frombuffer(f, dtype=np.uint8).astype(np.int64).sum()))
-            yield pd.DataFrame(
-                {"media_ref": refs, "frame_no": fnos, "n_bytes": nbs, "byte_sum": sums}
-            )
+        # islice stops the frame iterator after the LAST sampled index
+        # ((max_frames-1)*stride + 1 frames advanced, the skipped ones
+        # still sliced) instead of materializing the whole blob's frame
+        # list before sampling
+        sampled = islice(
+            decode_video_frames(blob, frame_bytes), 0, (max_frames - 1) * stride + 1, stride
+        )
+        for i, f in enumerate(sampled):
+            yield i * stride, len(f), int(np.frombuffer(f, dtype=np.uint8).astype(np.int64).sum())
 
-    return blobs.select("media_ref", "image").mapInPandas(stage, schema=schema)
+    return _map_blobs(
+        blobs, rows, "frame_no int not null, n_bytes int not null, byte_sum bigint not null"
+    )
 
 
 def resize_image_bytes(
@@ -225,41 +214,22 @@ def resize_image_bytes(
 
 def resize_images(blobs: DataFrame, zoom: float, method: str = "nearest") -> DataFrame:
     """(media_ref, width, height, image): the resize tier of the
-    multimodal contract as one Arrow-batched ``mapInPandas`` hop over
+    multimodal contract as one ``mapInArrow`` hop over
     resize_image_bytes (see its docstring for the full composition).
     Deterministic end-to-end: the in-repo encoder is canonical, so output
     bytes are reproducible across runs and parallelism levels."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
     if method not in ("nearest", "cubic"):
         raise ValueError(f"unknown resize method {method!r}")
     if not zoom > 0:
         raise ValueError(f"zoom must be > 0, got {zoom!r}")
 
-    schema = T.StructType(
-        [
-            T.StructField("media_ref", T.StringType(), False),
-            T.StructField("width", T.IntegerType(), False),
-            T.StructField("height", T.IntegerType(), False),
-            T.StructField("image", T.BinaryType(), False),
-        ]
+    def rows(blob):
+        png, h, w = resize_image_bytes(blob, zoom, method)
+        return [(w, h, png)]
+
+    return _map_blobs(
+        blobs, rows, "width int not null, height int not null, image binary not null"
     )
-
-    def stage(batches):
-        for pdf in batches:
-            refs, ws, hs, outs = [], [], [], []
-            for ref, blob in zip(pdf["media_ref"], pdf["image"]):
-                png, h, w = resize_image_bytes(bytes(blob), zoom, method)
-                refs.append(ref)
-                hs.append(h)
-                ws.append(w)
-                outs.append(png)
-            yield pd.DataFrame(
-                {"media_ref": refs, "width": ws, "height": hs, "image": outs}
-            )
-
-    return blobs.select("media_ref", "image").mapInPandas(stage, schema=schema)
 
 
 # (media_ref, dhash) shared per (session, corpus_dir) through
@@ -320,30 +290,11 @@ def dhash_bytes(png_bytes: bytes) -> int:
 
 
 def media_dhash(blobs: DataFrame) -> DataFrame:
-    """(media_ref, dhash): perceptual hashes via one Arrow-batched
-    ``mapInPandas`` hop — the image twin of the text fingerprints: 8 bytes
-    per page regardless of image size, so a 10^12-page corpus's visual
-    near-dup pass runs over a narrow long column."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("media_ref", T.StringType(), False),
-            T.StructField("dhash", T.LongType(), False),
-        ]
-    )
-
-    def stage(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_ref": pdf["media_ref"],
-                    "dhash": [dhash_bytes(b) for b in pdf["image"]],
-                }
-            )
-
-    return blobs.select("media_ref", "image").mapInPandas(stage, schema=schema)
+    """(media_ref, dhash): perceptual hashes via one ``mapInArrow`` hop —
+    the image twin of the text fingerprints: 8 bytes per page regardless
+    of image size, so a 10^12-page corpus's visual near-dup pass runs over
+    a narrow long column."""
+    return _map_blobs(blobs, lambda blob: [(dhash_bytes(blob),)], "dhash bigint not null")
 
 
 # ---------------------------------------------------------------------------
@@ -381,33 +332,16 @@ def audio_fp_bytes(blob: bytes, window: int = AFP_WINDOW, nwin: int = AFP_NWIN):
 
 
 def audio_fingerprint(blobs: DataFrame) -> DataFrame:
-    """(media_ref, n_windows, afp): Arrow-batched mapInPandas over the
+    """(media_ref, n_windows, afp): one ``mapInArrow`` hop over the
     binary column (the audio_energy_windows decode, folded straight into
     the 64 gradient bits — energies never leave the Python worker). Exact
     integer end-to-end, so the DuckDB hex-arithmetic oracle re-derives the
     identical signed fingerprint; pairs ride dedup.hamming_pairs, the one
-    banding shared by all three modalities."""
-    import pandas as pd
-    from pyspark.sql import types as T
+    banding shared by all three modalities. A blob under one sample has
+    no envelope and yields no row."""
 
-    schema = T.StructType(
-        [
-            T.StructField("media_ref", T.StringType(), False),
-            T.StructField("n_windows", T.IntegerType(), False),
-            T.StructField("afp", T.LongType(), False),
-        ]
-    )
+    def rows(blob):
+        r = audio_fp_bytes(blob)
+        return [] if r is None else [r]
 
-    def stage(batches):
-        for pdf in batches:
-            refs, nws, fps = [], [], []
-            for ref, blob in zip(pdf["media_ref"], pdf["image"]):
-                r = audio_fp_bytes(bytes(blob))
-                if r is None:
-                    continue
-                refs.append(ref)
-                nws.append(r[0])
-                fps.append(r[1])
-            yield pd.DataFrame({"media_ref": refs, "n_windows": nws, "afp": fps})
-
-    return blobs.select("media_ref", "image").mapInPandas(stage, schema=schema)
+    return _map_blobs(blobs, rows, "n_windows int not null, afp bigint not null")

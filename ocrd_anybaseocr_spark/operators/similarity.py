@@ -379,7 +379,7 @@ ORACLE_ANN_RECALL = f"""
 # ---------------------------------------------------------------------------
 
 IVF_K = 16  # centroid-count FLOOR (small corpora and the static sf0.01 step)
-IVF_MAX_K = 4096  # literal-argmin practicality cap (see ivf_assignments)
+IVF_MAX_K = 4096  # centroid-count cap (see derive_ivf_k)
 IVF_NPROBE = 4  # cells probed per query
 IVF_STEP_N = 1000  # corpora <= this keep the IVF_K floor (mirrors derive_bits)
 
@@ -424,10 +424,8 @@ def derive_ivf_k(n_rows: int) -> int:
     sf=0.01 gate runs (200 vectors) — and the DuckDB oracle mirrors this
     derivation in SQL (nk CTE below) so Spark and oracle agree at EVERY
     corpus size, not just inside the step (the dynamic-bits lesson,
-    ADVICE r3 item 1). Capped at IVF_MAX_K: the centroid matrix ships as
-    a plan literal (~2 MB at the cap); beyond it, swap the argmin literal
-    for a groupBy(vec_id).agg(min_by(cell, struct(d2, cell))) partial-agg
-    shuffle — same results, one N-row exchange."""
+    ADVICE r3 item 1). Capped at IVF_MAX_K, which the DuckDB oracle's nk
+    CTE mirrors: the k centroid rows are one bounded driver fetch."""
     import math
 
     if n_rows <= IVF_STEP_N:
@@ -534,11 +532,10 @@ def ivf_assignments(emb: DataFrame, k: int = IVF_K) -> DataFrame:
     Scale shape: the k centroid rows are fetched once to the driver (a
     bounded <=IVF_MAX_K-row fetch, the literal-broadcast analogue) and the
     assignment is a NARROW map — scan → project, no join, no exchange
-    (plan-asserted in test_plans). ``k`` should come from derive_ivf_k;
-    a caller forcing k beyond IVF_MAX_K gets the min_by shape instead
-    (one partial-agg exchange of N rows — never the old N x k window)."""
-    if k > IVF_MAX_K:
-        return _ivf_assignments_minby(emb, k)
+    (plan-asserted in test_plans). ``k`` comes from derive_ivf_k, which
+    caps it at IVF_MAX_K; the centroid matrix ships in the stage closure,
+    not as a plan literal, and the argmin runs in _ASSIGN_CHUNK-row
+    blocks, so memory per batch stays bounded at any k."""
     cent_rows = (
         emb.filter(F.col("vec_id") < k)
         .select(F.col("vec_id").alias("cell"), F.expr(_SE_SPARK).alias("c_se"))
@@ -546,29 +543,6 @@ def ivf_assignments(emb: DataFrame, k: int = IVF_K) -> DataFrame:
     )
     cents = sorted((int(r["cell"]), list(r["c_se"])) for r in cent_rows)
     return assignments_arrow(emb, cents)
-
-
-def _ivf_assignments_minby(emb: DataFrame, k: int) -> DataFrame:
-    """min_by twin of the argmin literal, for k past literal practicality:
-    the corpus still expands k-fold against the broadcast centroid
-    relation, but the argmin is a partial aggregate — map-side combine
-    collapses each vector's k candidates before the exchange, so exactly
-    N rows shuffle (vs the N x k row_number window this operator shipped
-    with in round 3). Same (d2, cell) tie-break via the struct ordering."""
-    cent = emb.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("cell"), F.expr(_SE_SPARK).alias("c_se")
-    )
-    v = emb.select("vec_id", F.expr(_SE_SPARK).alias("v_se"))
-    d2 = (
-        "aggregate(zip_with(v_se, c_se, (x, y) -> (x - y) * (x - y)),"
-        " 0L, (acc, t) -> acc + t)"
-    )
-    return (
-        v.join(F.broadcast(cent))
-        .withColumn("d2", F.expr(d2))
-        .groupBy("vec_id")
-        .agg(F.min_by("cell", F.struct("d2", "cell")).alias("cell"))
-    )
 
 
 # int-array dot (inputs already 1e4-scaled): exact int64 on both engines
@@ -1293,9 +1267,8 @@ def derive_semantic_k(n_rows: int) -> int:
     """Bucket count for k-means/SemDeDup from corpus size — the
     derive_ivf_k shape (VERDICT r6 item 2): floor below KMEANS_STEP_N
     (where the sf=0.01 driver gate lives), ~n/SEMDEDUP_TARGET_CLUSTER
-    above, capped at IVF_MAX_K (the centroid literals ship in the plan;
-    past the cap swap the argmin literal for the min_by shuffle, see
-    derive_ivf_k). With k growing linearly in N, the SemDeDup
+    above, capped at IVF_MAX_K like derive_ivf_k (the k centroids are one
+    bounded driver fetch). With k growing linearly in N, the SemDeDup
     within-cluster O(c^2) gram stays O(TARGET^2) per cluster — the paper
     runs ~0.1%*N clusters for exactly this reason. Mirrored in SQL by
     _SEMK_CTE_DUCK; parity above the step pinned by
@@ -1545,15 +1518,15 @@ def semantic_dedup_decisions(asg: DataFrame) -> DataFrame:
     exactly because k grows with the corpus (SemDeDup runs ~0.1%*N
     clusters; q_dedup_semantic derives k via derive_semantic_k —
     ~n/SEMDEDUP_TARGET_CLUSTER above the step, so per-cluster work stays
-    O(TARGET^2), with the min_by fallback documented past IVF_MAX_K).
+    O(TARGET^2) until k reaches its IVF_MAX_K cap).
     Work never crosses clusters; everything compared is exact int64, so
     kept/dropped is partition-order-free.
 
     ``asg`` must carry (vec_id, v_se, cluster, d2) — what
     semantic_assignments emits.
 
-    Physical form: grouped ``applyInPandas`` (one cluster = one Arrow
-    batch) with a vectorized int64 matmul — the within-cluster all-pairs
+    Physical form: grouped ``applyInArrow`` (one cluster = one Arrow
+    table) with a vectorized int64 matmul — the within-cluster all-pairs
     work runs as ONE numpy gram block per cluster instead of c^2
     interpreted zip_with folds, and the shuffle moves c x dim rows, not
     the c^2 x dim pair blow-up of the equi-join form (measured 5.7 s ->
@@ -1563,16 +1536,16 @@ def semantic_dedup_decisions(asg: DataFrame) -> DataFrame:
     stays O(c * chunk), never a full c^2 matrix on giant clusters."""
     thr = SEMDEDUP_DOT_E8
 
-    def _decide(pdf):
-        import numpy as np
-        import pandas as pd
+    def _decide(table):
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-        d2 = pdf["d2"].to_numpy(dtype=np.int64)
-        vid = pdf["vec_id"].to_numpy(dtype=np.int64)
+        d2 = table.column("d2").to_numpy()
+        vid = table.column("vec_id").to_numpy()
         # farthest-from-centroid first; vec_id ASC breaks d2 ties
         order = np.lexsort((vid, -d2))
-        X = np.stack(pdf["v_se"].to_numpy()[order]).astype(np.int64)
         c = len(order)
+        X = pc.list_flatten(table.column("v_se")).to_numpy().reshape(c, -1)[order]
         shadowed = np.zeros(c, dtype=bool)
         # peak per column block ~ c * chunk * 8B * 3 arrays (int64 sims +
         # bool masks): 1024 keeps a 4k-point cluster under ~100 MB/task
@@ -1584,16 +1557,16 @@ def semantic_dedup_decisions(asg: DataFrame) -> DataFrame:
             rows = np.arange(b)[:, None]
             cols = np.arange(a, b)[None, :]
             shadowed[a:b] = ((sims >= thr) & (rows < cols)).any(axis=0)
-        return pd.DataFrame(
+        return pa.table(
             {
                 "vec_id": vid[order],
-                "cluster": pdf["cluster"].to_numpy()[order],
+                "cluster": table.column("cluster").to_numpy()[order],
                 "d2": d2[order],
                 "kept": ~shadowed,
             }
         )
 
-    return asg.groupBy("cluster").applyInPandas(
+    return asg.groupBy("cluster").applyInArrow(
         _decide, "vec_id long, cluster int, d2 long, kept boolean"
     )
 

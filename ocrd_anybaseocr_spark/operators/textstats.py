@@ -787,14 +787,16 @@ def q_dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 of the normalized text; canonical = min doc_id (the convention of
     the whole dedup family). Regexes live in the Java∩RE2 subset.
 
-    The normalize+md5 runs as one mapInArrow pass: Python re's ASCII
-    char class deletes exactly the code points Java's does (surrogate
-    halves both match the negated class, so astral chars delete whole
-    either way), str.lower() is the same Unicode Default Case Conversion
-    as Spark's locale-independent lower(), strip(' ') == trim() on the
-    post-strip alphabet, and .encode() == the binary cast — measured
-    ~4x: the JVM charclass regexp_replace alone cost 2.7 s of the 4.0 s
-    query at the 10x scale (0.2 MB/s/core) vs 34 MB/s/core here."""
+    The normalize+md5 runs as one mapInArrow pass. After the
+    [^a-z0-9 ] strip, str.lower() gives what the oracle's DuckDB lower()
+    gives on every non-surrogate code point U+0080-U+2FFFF: only U+0130
+    and U+212A lowercase into [a-z0-9], to i and k in both engines
+    (test_dedup_exact_normalized_non_ascii_parity plants them, sharp s,
+    final sigma, an astral emoji and non-ASCII spaces); strip(' ') ==
+    trim() on the post-strip alphabet, and .encode() == the binary cast.
+    Measured ~4x over the JVM charclass regexp_replace, which alone cost
+    2.7 s of the 4.0 s query at the 10x scale (0.2 MB/s/core) vs
+    34 MB/s/core here."""
     docs = _docs_fanout(spark, sf_dir)
     id_type = dict(docs.dtypes)["doc_id"]
 

@@ -9,8 +9,8 @@ Scale shape (100 TB):
   vocabulary — the standard BPE formulation trains on the word-frequency
   dict, never the corpus itself, so corpus size only affects the one
   partial-agg pass.
-- ENCODE: merges broadcast in the task closure (64 pairs), applied by an
-  Arrow-batched ``mapInPandas`` — ZERO exchanges (plan-asserted): at any
+- ENCODE: merges broadcast in the task closure (64 pairs), applied by a
+  ``mapInArrow`` stage — ZERO exchanges (plan-asserted): at any
   scale tokenization runs scan-speed, embarrassingly parallel.
 
 Algorithm lives in kernels/bpe.py, shared verbatim with the materialized
@@ -111,33 +111,32 @@ def bpe_tokenize_df(spark: SparkSession, corpus_dir: str) -> DataFrame:
     """(doc_id, n_words, n_tokens, tokens_md5) per document under the
     corpus-learned vocabulary. The token sequence itself is pinned by the
     md5 digest (exact bytes, not just counts); the encode is one
-    Arrow-batched mapInPandas over the narrow (doc_id, text) projection —
-    zero exchanges."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
+    mapInArrow pass over the narrow (doc_id, text) projection — zero
+    exchanges."""
     merges = bpe_fit(spark, corpus_dir)
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.StringType(), False),
-            T.StructField("n_words", T.LongType(), False),
-            T.StructField("n_tokens", T.LongType(), False),
-            T.StructField("tokens_md5", T.StringType(), False),
-        ]
-    )
 
     def stage(batches):
-        for pdf in batches:
-            ids, nw, nt, dig = [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = bpe_encode_text(text, merges)
-                ids.append(doc_id)
-                nw.append(len(text.split(" ")))
-                nt.append(len(toks))
-                dig.append(hashlib.md5(" ".join(toks).encode()).hexdigest())
-            yield pd.DataFrame(
-                {"doc_id": ids, "n_words": nw, "n_tokens": nt, "tokens_md5": dig}
+        import pyarrow as pa
+
+        for batch in batches:
+            texts = batch.column("text").to_pylist()
+            toks = [bpe_encode_text(t, merges) for t in texts]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("doc_id"),
+                    pa.array([len(t.split(" ")) for t in texts], type=pa.int64()),
+                    pa.array([len(ts) for ts in toks], type=pa.int64()),
+                    pa.array(
+                        [hashlib.md5(" ".join(ts).encode()).hexdigest() for ts in toks],
+                        type=pa.string(),
+                    ),
+                ],
+                names=["doc_id", "n_words", "n_tokens", "tokens_md5"],
             )
 
     docs, _ = load_corpus(spark, corpus_dir)
-    return flat_text(docs).mapInPandas(stage, schema=schema)
+    return flat_text(docs).mapInArrow(
+        stage,
+        "doc_id string not null, n_words bigint not null,"
+        " n_tokens bigint not null, tokens_md5 string not null",
+    )

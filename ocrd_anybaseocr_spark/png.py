@@ -14,7 +14,7 @@ Color → grayscale uses PIL's exact fixed-point ITU-R 601-2 luma transform
 matches one decoded through the reference's PIL path bit-for-bit.
 
 Images travel through Spark as BinaryType columns and are decoded only
-inside Arrow-batched pandas UDFs (SURVEY.md §1.3).
+inside mapInArrow stages (SURVEY.md §1.3).
 """
 
 from __future__ import annotations

@@ -1415,7 +1415,7 @@ def q_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_media_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio tier of the multimodal contract: windowed int16-PCM
-    sum-of-squares energies via Arrow-batched mapInPandas (np.frombuffer
+    sum-of-squares energies via one mapInArrow pass (np.frombuffer
     decode — the blobs stand in as deterministic PCM; see
     operators/media.py audio_energy_windows). DuckDB oracle re-derives
     every sample from the blob hex (little-endian pairs, two's
@@ -1451,9 +1451,9 @@ def q_media_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video tier: every stride-th fixed-size raw frame with its exact
-    byte sum, via mapInPandas over the binary column (container codecs
-    raise NotImplementedError — operators/media.py decode_video_frames;
-    the blobs stand in as raw fixed-size-frame video). DuckDB oracle
+    byte sum, via mapInArrow over the binary column (only the raw
+    fixed-size-frame format is read — operators/media.py
+    decode_video_frames; the blobs stand in as raw video). DuckDB oracle
     re-sums each sampled frame's bytes from the blob hex."""
     from .operators.media import frame_sample
     from .sources.tables import load_corpus
@@ -1704,7 +1704,7 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document tokenization under the corpus-learned BPE vocabulary:
     reading-order flat text → GPT-2-style lowest-rank-first encode
-    (Arrow-batched mapInPandas, zero exchanges — plan-asserted). The md5
+    (one mapInArrow pass, zero exchanges — plan-asserted). The md5
     digest pins the exact token SEQUENCE, not just counts."""
     from .operators.tokenize import bpe_tokenize_df
 

@@ -504,22 +504,6 @@ def test_exact_substring_planted_run(spark):
     assert got == {(1, 2): 35}
 
 
-def test_ivf_minby_fallback_matches_literal(spark):
-    """For k past the literal cap, ivf_assignments switches to the min_by
-    partial-agg shape; both shapes must produce identical assignments
-    (same exact-int d2, same (d2, cell) tie-break)."""
-    from ocrd_anybaseocr_spark.operators.similarity import (
-        _ivf_assignments_minby,
-        ivf_assignments,
-    )
-
-    vecs = _clustered_vectors(n_clusters=10, per_cluster=4, n_noise=60)
-    df = _emb_df(spark, vecs)
-    lit = sorted((r.vec_id, r.cell) for r in ivf_assignments(df, 20).collect())
-    mb = sorted((r.vec_id, r.cell) for r in _ivf_assignments_minby(df, 20).collect())
-    assert lit == mb and len(lit) == len(vecs)
-
-
 def test_repetition_ratio_planted(spark, monkeypatch):
     """A doc that is one 4-word phrase looped has almost-all-duplicate
     3-grams; a doc of all-unique words has zero. Exact integer per-million
@@ -810,6 +794,43 @@ def test_pii_scrub_planted_parity(spark, monkeypatch):
     assert got[1]["n_email"] == 2 and got[2]["n_ipv4"] == 2
     assert got[3]["n_phone"] == 2 and got[5]["n_email"] == 0
     assert got[6]["n_email"] == 0  # single-letter TLD not matched
+
+
+def test_dedup_exact_normalized_non_ascii_parity(spark, monkeypatch):
+    """The normalize kernel (Python str.lower, then the [^a-z0-9 ] strip)
+    must group exactly as the oracle's DuckDB lower() + regexp_replace on
+    non-ASCII input: U+0130 and U+212A (the only non-ASCII code points
+    whose lowercase survives the strip, as i and k), sharp s, a
+    word-final capital sigma, an astral emoji and non-ASCII spaces, each
+    planted next to its ASCII twin, plus one row holding all of them."""
+    import duckdb
+
+    from ocrd_anybaseocr_spark.operators import textstats as ts
+
+    odd = "\u0130\u212a\u00df\u039f\u0394\u039f\u03a3\U0001f600\u00a0\u3000\t"
+    rows = [
+        (1, "\u0130stanbul \u212aelvin"),
+        (2, "istanbul kelvin"),
+        (3, "Stra\u00dfe"),
+        (4, "strae"),
+        (5, "abc \u039f\u0394\u039f\u03a3 def"),
+        (6, "ABC def"),
+        (7, "smile \U0001f600 now"),
+        (8, "smile now"),
+        (9, "a\u00a0b\u3000c\td  e "),
+        (10, f"x {odd} y{odd}z"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    monkeypatch.setattr(ts, "load_table", lambda s, d, n: docs)
+    got = {tuple(r) for r in ts.q_dedup_exact_normalized(spark, "unused").collect()}
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    want = {tuple(r) for r in con.execute(ts.ORACLE_DEDUP_NORM).fetchall()}
+    assert got == want
+    # the ASCII twins collide: 4 two-doc groups, canonical = the lower id
+    assert sorted((n, c) for _, n, c in got if n > 1) == [(2, 1), (2, 3), (2, 5), (2, 7)]
 
 
 def test_kmeans_matches_numpy_lloyd(spark):

@@ -54,19 +54,12 @@ def test_audio_energy_windows_exact(spark):
     assert got == want and len(want) <= AUDIO_MAX_WINDOWS
 
 
-def test_frame_sample_stride_and_codec_gate(spark):
+def test_frame_sample_stride(spark):
     """Raw frame sampling picks frames 0, stride, 2*stride with exact byte
-    sums and drops the trailing partial frame; container codecs raise
-    NotImplementedError (explicit stub, not a wrong answer)."""
+    sums and drops the trailing partial frame."""
     import numpy as np
-    import pytest as _pytest
 
-    from ocrd_anybaseocr_spark.operators.media import (
-        FRAME_BYTES,
-        FRAME_STRIDE,
-        decode_video_frames,
-        frame_sample,
-    )
+    from ocrd_anybaseocr_spark.operators.media import FRAME_BYTES, FRAME_STRIDE, frame_sample
 
     rng = np.random.RandomState(5)
     n_frames = 2 * FRAME_STRIDE + 1  # frames 0..8 -> sampled 0, 4, 8
@@ -84,8 +77,6 @@ def test_frame_sample_stride_and_codec_gate(spark):
         for f in range(3)
     }
     assert got == want
-    with _pytest.raises(NotImplementedError):
-        list(decode_video_frames(b"\x00" * FRAME_BYTES, codec="h264"))
 
 
 def test_resize_images_matches_kernel_and_is_deterministic(spark, corpus_dir):

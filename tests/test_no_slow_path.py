@@ -1,12 +1,15 @@
-"""Static contracts of the package: vectorized pandas/Arrow UDFs only —
-no row-at-a-time Python UDFs, no RDD API anywhere (SURVEY.md §2.10) — and
-no definition that only tests reach."""
+"""Static contracts of the package: Arrow UDFs only (mapInArrow and
+applyInArrow; no pandas transport, no pandas import), no row-at-a-time
+Python UDFs, no RDD API anywhere (SURVEY.md §2.10), and no definition
+that only tests reach."""
 
 from __future__ import annotations
 
 import ast
 import os
 import re
+import subprocess
+import sys
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                    "ocrd_anybaseocr_spark")
@@ -17,6 +20,9 @@ FORBIDDEN = [
     (re.compile(r"@udf\b"), "row-at-a-time @udf"),
     (re.compile(r"\.rdd\b"), "RDD API"),
     (re.compile(r"\bsparkContext\b"), "SparkContext usage"),
+    (re.compile(r"\bmapInPandas\b"), "pandas UDF transport mapInPandas"),
+    (re.compile(r"\bapplyInPandas\b"), "pandas UDF transport applyInPandas"),
+    (re.compile(r"^\s*(?:import|from) pandas\b", re.M), "pandas import"),
     (re.compile(r"\.collect\(\)\s*\)?\s*(?:for|\[|$)", re.M), None),  # informational only
 ]
 
@@ -152,3 +158,14 @@ def test_one_session_relation_registry():
                 violations += [f"{rel}: module-level {t.id}" for t in targets
                                if isinstance(t, ast.Name) and t.id.endswith("_CACHE")]
     assert not violations, "\n".join(violations)
+
+
+def test_page_stage_module_imports_no_pandas():
+    """A worker running the page stage unpickles functions of
+    operators.pipeline; importing that module (no JVM) must not load
+    pandas, which costs ~0.4-0.5 s cold per Python worker."""
+    code = "import sys, ocrd_anybaseocr_spark.operators.pipeline; print('pandas' in sys.modules)"
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=ROOT, capture_output=True, text=True, check=True
+    )
+    assert out.stdout.strip() == "False"

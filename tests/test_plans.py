@@ -307,7 +307,7 @@ def test_semantic_assignment_is_narrow_decisions_one_exchange(spark, sf_dir):
     df = semantic_dedup_decisions(asg)
     plan = explain_str(df, "simple")
     assert "CartesianProduct" not in plan, plan
-    assert "FlatMapGroupsInPandas" in plan, plan
+    assert "FlatMapGroupsInArrow" in plan, plan
     assert count_exchanges(df) == 1, plan
 
 
