@@ -18,47 +18,41 @@ from __future__ import annotations
 import numpy as np
 
 from ..config import ClassifyParams, DEFAULT_PARAMS, LABELS
-from .components import component_stats
 
 _LIDX = {name: i for i, name in enumerate(LABELS)}
 
+FRAME_T = 4  # frame line thickness (px) excluded from the border interior
 
-def segment_regions(ink, border: list[int], frame_t: int = 4,
-                    stats=None):
+
+def segment_regions(border: list[int], stats):
     """tiseg: classify components inside the border interior.
 
     Returns dict with counts and the header-width fraction.
     Region classes by component height (co-designed with synth.py):
       <=14 text row | 15..19 header bar | 20..31 title block | >=40 image.
 
-    With ``stats`` (full-page CC results) the interior pass filters
-    components whose bbox lies inside the interior instead of re-labeling,
-    and ink_ratio comes from run-interval clipping — no interior mask pass.
+    ``stats`` is the full-page labeled_runs analysis: the interior pass
+    filters components whose bbox lies inside the interior instead of
+    re-labeling, and ink_ratio comes from run-interval clipping — no
+    interior mask pass.
     """
-    import numpy as np
-
     x1, y1, x2, y2 = border
-    ix1, iy1 = x1 + frame_t + 1, y1 + frame_t + 1
-    ix2, iy2 = x2 - frame_t - 1, y2 - frame_t - 1
+    ix1, iy1 = x1 + FRAME_T + 1, y1 + FRAME_T + 1
+    ix2, iy2 = x2 - FRAME_T - 1, y2 - FRAME_T - 1
     if ix2 <= ix1 or iy2 <= iy1:
         return {"n_text": 0, "n_header": 0, "n_title": 0, "n_image": 0,
                 "header_w_frac": 0.0, "ink_ratio": 0.0, "iw": 1, "ih": 1}
     iw, ih = ix2 - ix1 + 1, iy2 - iy1 + 1
-    if stats is None:
-        interior = ink[iy1 : iy2 + 1, ix1 : ix2 + 1]
-        inner = component_stats(interior)
-        ink_ratio = float(interior.mean())
-    else:
-        cstats, _run_labels, (r_rows, r_starts, r_ends) = stats
-        sel = (
-            (cstats[:, 0] >= ix1) & (cstats[:, 1] >= iy1)
-            & (cstats[:, 2] <= ix2) & (cstats[:, 3] <= iy2)
-        )
-        inner = cstats[sel] - np.array([ix1, iy1, ix1, iy1, 0, 0])
-        rsel = (r_rows >= iy1) & (r_rows <= iy2)
-        clipped = np.minimum(r_ends[rsel], ix2 + 1) - np.maximum(r_starts[rsel], ix1)
-        ink_px = int(clipped[clipped > 0].sum())
-        ink_ratio = ink_px / float(iw * ih)
+    cstats, _run_labels, (r_rows, r_starts, r_ends) = stats
+    sel = (
+        (cstats[:, 0] >= ix1) & (cstats[:, 1] >= iy1)
+        & (cstats[:, 2] <= ix2) & (cstats[:, 3] <= iy2)
+    )
+    inner = cstats[sel] - np.array([ix1, iy1, ix1, iy1, 0, 0])
+    rsel = (r_rows >= iy1) & (r_rows <= iy2)
+    clipped = np.minimum(r_ends[rsel], ix2 + 1) - np.maximum(r_starts[rsel], ix1)
+    ink_px = int(clipped[clipped > 0].sum())
+    ink_ratio = ink_px / float(iw * ih)
     n_text = n_header = n_title = n_image = 0
     header_w_frac = 0.0
     for cx1, cy1, cx2, cy2, npx, _ in inner:
@@ -87,15 +81,18 @@ def segment_regions(ink, border: list[int], frame_t: int = 4,
     }
 
 
-def classify_page(ink, border: list[int],
+def classify_page(shape, border: list[int],
                   params: ClassifyParams = DEFAULT_PARAMS.classify,
-                  stats=None):
-    # ``ink`` may be a bare (h, w) shape when ``stats`` carries the CC runs
+                  *, stats):
     """Score the 21 labels from region features; threshold + argmax fallback.
+
+    ``shape`` is the page's (h, w), kept in the kernel call signature the
+    page stage and its replay share; the features come from ``stats``, the
+    page's labeled_runs analysis.
 
     Returns (scores: list[21 float], labels: list[str], seg: dict).
     """
-    seg = segment_regions(ink, border, stats=stats)
+    seg = segment_regions(border, stats)
     scores = np.full(len(LABELS), 0.05, dtype=np.float64)
     if seg["n_title"] >= 2 and seg["n_text"] == 0:
         scores[_LIDX["title_page"]] = 0.95

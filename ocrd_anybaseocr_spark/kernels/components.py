@@ -13,8 +13,10 @@ from __future__ import annotations
 
 import numpy as np
 
+RUN_STRIP = 128  # rows per strip of runs_from_image: a strip's mask stays L2-resident
 
-def runs_from_image(img: np.ndarray, threshold: int, strip: int = 128):
+
+def runs_from_image(img: np.ndarray, threshold: int):
     """Threshold + run extraction fused per horizontal strip.
 
     Equivalent to ``_find_runs(img <= threshold)`` but never materializes
@@ -24,9 +26,9 @@ def runs_from_image(img: np.ndarray, threshold: int, strip: int = 128):
     """
     h, w = img.shape
     all_r, all_s, all_e = [], [], []
-    pad = np.zeros((min(strip, h), w + 2), dtype=np.int8)
-    for y0 in range(0, h, strip):
-        y1 = min(y0 + strip, h)
+    pad = np.zeros((min(RUN_STRIP, h), w + 2), dtype=np.int8)
+    for y0 in range(0, h, RUN_STRIP):
+        y1 = min(y0 + RUN_STRIP, h)
         rows = y1 - y0
         buf = pad[:rows]
         np.less_equal(img[y0:y1], threshold, out=buf[:, 1:-1], casting="unsafe")
@@ -131,11 +133,6 @@ def _find_runs(mask: np.ndarray):
     return sr, sc, ec
 
 
-def connected_components(mask: np.ndarray):
-    """Label 4-connected components of a boolean mask (see cc_from_runs)."""
-    return cc_from_runs(*_find_runs(mask), mask.shape[0])
-
-
 def cc_from_runs(rows: np.ndarray, starts: np.ndarray, ends: np.ndarray, h: int):
     """Label 4-connected components from pre-extracted runs — fully
     vectorized.
@@ -199,7 +196,7 @@ def cc_from_runs(rows: np.ndarray, starts: np.ndarray, ends: np.ndarray, h: int)
     return dense.astype(np.int64), (rows, starts, ends), int(dense.max()) + 1
 
 
-def labeled_runs(mask: np.ndarray = None, runs=None, h: int | None = None):
+def labeled_runs(runs, h: int):
     """Full CC analysis: (stats, labels, (rows, starts, ends)).
 
     stats is the (n, 6) array of [x1, y1, x2, y2, pixel_count, _pad] per
@@ -208,13 +205,10 @@ def labeled_runs(mask: np.ndarray = None, runs=None, h: int | None = None):
     segmentation) work from the RUNS — sparse interval arithmetic instead of
     full-image mask passes, which keeps parallel workers off the memory bus.
 
-    Pass either a boolean ``mask``, or pre-extracted ``runs`` + image height
-    ``h`` (the runs_from_image fast path — no mask ever materialized).
+    Takes pre-extracted ``runs`` + image height ``h`` (runs_from_image,
+    or _find_runs of a mask); no mask is ever materialized.
     """
-    if runs is not None:
-        labels, (rows, starts, ends), n = cc_from_runs(*runs, h)
-    else:
-        labels, (rows, starts, ends), n = connected_components(mask)
+    labels, (rows, starts, ends), n = cc_from_runs(*runs, h)
     if n == 0:
         return np.zeros((0, 6), dtype=np.int64), labels, (rows, starts, ends)
     out = np.zeros((n, 6), dtype=np.int64)
@@ -226,8 +220,3 @@ def labeled_runs(mask: np.ndarray = None, runs=None, h: int | None = None):
     np.maximum.at(out[:, 3], labels, rows)
     np.add.at(out[:, 4], labels, ends - starts)
     return out, labels, (rows, starts, ends)
-
-
-def component_stats(mask: np.ndarray) -> np.ndarray:
-    """Per-component stats only (see labeled_runs)."""
-    return labeled_runs(mask)[0]

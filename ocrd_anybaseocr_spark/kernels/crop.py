@@ -25,7 +25,6 @@ from __future__ import annotations
 import numpy as np
 
 from ..config import CropParams, DEFAULT_PARAMS
-from .components import component_stats
 
 
 def attenuate_pos(x: np.ndarray | float) -> np.ndarray | float:
@@ -34,23 +33,12 @@ def attenuate_pos(x: np.ndarray | float) -> np.ndarray | float:
     return 3.0 * x * np.exp(-3.0 * x)
 
 
-def _shape_of(ink_or_shape) -> tuple[int, int]:
-    """Accept a boolean ink mask or a bare (h, w) tuple — the runs-based
-    pipeline never materializes a mask."""
-    if isinstance(ink_or_shape, tuple):
-        return ink_or_shape
-    return ink_or_shape.shape
-
-
-def detect_ruler(ink_or_shape, params: CropParams = DEFAULT_PARAMS.crop,
-                 stats: np.ndarray | None = None):
-    """Find the top-1 ruler candidate bbox [x1,y1,x2,y2] or None.
-
-    ``stats`` lets callers reuse one component_stats pass per page (CC is the
-    dominant per-page cost; ruler/border/classify all share it)."""
-    h, w = _shape_of(ink_or_shape)
-    if stats is None:
-        stats = component_stats(ink_or_shape)
+def detect_ruler(shape, params: CropParams = DEFAULT_PARAMS.crop, *, stats: np.ndarray):
+    """Find the top-1 ruler candidate bbox [x1,y1,x2,y2] or None on an
+    (h, w) page. ``stats`` are the component stats of the page's one
+    labeled_runs pass (CC is the dominant per-page cost; ruler/border/
+    classify all share it)."""
+    h, w = shape
     if len(stats) == 0:
         return None
     x1, y1, x2, y2, npx = (stats[:, i] for i in range(5))
@@ -107,12 +95,14 @@ def _side_candidates(profile_rows, band_lo, band_hi, outer_is_min):
 
 
 def detect_border(
-    ink_or_shape,
+    shape,
     ruler_bbox=None,
     params: CropParams = DEFAULT_PARAMS.crop,
-    cc=None,
+    *,
+    cc,
 ):
-    """Detect the page frame. Returns (border [x1,y1,x2,y2], perfect: bool).
+    """Detect the page frame of an (h, w) page from its labeled_runs
+    analysis ``cc``. Returns (border [x1,y1,x2,y2], perfect: bool).
 
     Production path is the faithful K6→A1/A2→W2 chain: line segments
     extracted from the CC runs, agglomerated by endpoint distance and
@@ -123,13 +113,10 @@ def detect_border(
     the two paths agree exactly (property test). Missing sides fall back to
     the merged-textbox bbox with perfect=False (ref :575-607,526).
     """
-    from .components import labeled_runs
     from .segments import detect_border_segments
 
-    h, w = _shape_of(ink_or_shape)
-    if cc is None:
-        cc = labeled_runs(ink_or_shape)
-    stats, run_labels, (r_rows, r_starts, r_ends) = cc
+    h, w = shape
+    stats = cc[0]
 
     (lx, ty, rx, by), perfect = detect_border_segments(cc, (h, w), ruler_bbox, params)
     if not perfect:
@@ -146,21 +133,18 @@ def detect_border(
 
 
 def detect_border_profile(
-    ink_or_shape,
+    shape,
     ruler_bbox=None,
     params: CropParams = DEFAULT_PARAMS.crop,
-    cc=None,
+    *,
+    cc,
 ):
     """Run-profile border detector (the round-1 production path, kept as the
     cross-check for the segment path): frame-like components' row/col ink
     profiles, per-side top-1 with W2 scoring. Property test asserts equality
     with detect_border on clean frames.
     """
-    from .components import labeled_runs
-
-    h, w = _shape_of(ink_or_shape)
-    if cc is None:
-        cc = labeled_runs(ink_or_shape)
+    h, w = shape
     stats, run_labels, (r_rows, r_starts, r_ends) = cc
 
     # frame-like components: large bbox, low fill (rectangle outline)

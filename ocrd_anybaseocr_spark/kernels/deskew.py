@@ -15,6 +15,8 @@ import numpy as np
 
 from ..config import DEFAULT_PARAMS, DeskewParams
 
+UNSHEAR_FILL = 235  # paper gray for pixels shifted in from outside the row
+
 
 def _grid(params: DeskewParams) -> np.ndarray:
     return np.linspace(-params.max_skew, params.max_skew, params.steps)
@@ -52,13 +54,13 @@ def estimate_shear_from_runs(
     return best_shear
 
 
-def unshear(img: np.ndarray, shear: float, fill: int = 235) -> np.ndarray:
+def unshear(img: np.ndarray, shear: float) -> np.ndarray:
     """Remove shear by integer row shifts x -> x - round(shear*y)."""
     if shear == 0.0:
         return img
     h, w = img.shape
     shifts = np.round(shear * np.arange(h)).astype(np.int64)
-    out = np.full_like(img, fill)
+    out = np.full_like(img, UNSHEAR_FILL)
     for s in np.unique(shifts):
         rows = shifts == s
         # |shift| >= width: the entire row scrolls out of frame — leave it

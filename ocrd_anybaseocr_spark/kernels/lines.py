@@ -3,11 +3,11 @@ clustering of detected line segments into border-line candidates
 (reference: cli/ocrd_anybaseocr_cropping.py:343-440), numpy-only.
 
 Semantics preserved:
-- A1: merge the two groups with the nearest endpoints (<= max_dist px) when
-  the merged regression stderr <= stderr_max and the merge degrades neither
-  part by more than degrade_max (reference L343-392);
+- A1: merge the two groups with the nearest endpoints (<= MAX_DIST px) when
+  the merged regression stderr <= STDERR_MAX and the merge degrades neither
+  part by more than DEGRADE_MAX (reference L343-392);
 - A2: second pass merges collinear groups — intercepts within
-  intercept_tol*W at both image edges and axis gap < gap_max*W, same
+  INTERCEPT_TOL*W at both image edges and axis gap < GAP_MAX*W, same
   stderr gates (reference L393-440);
 - A3/A4 (per-group length, extent, position and length-weighted mean
   width, reference L385-389,433-437,465-515) live in
@@ -25,6 +25,12 @@ merges with run segments from kernels/segments.py.
 from __future__ import annotations
 
 import numpy as np
+
+MAX_DIST = 15.0  # A1 endpoint distance (px)
+STDERR_MAX = 0.04  # merged slope stderr gate (A1 and A2)
+DEGRADE_MAX = 0.02  # max stderr increase a merge may cause in either part
+INTERCEPT_TOL = 0.01  # A2 intercept agreement at both edges, fraction of W
+GAP_MAX = 0.10  # A2 axis gap, fraction of W
 
 
 def linregress_slope_stderr(xs: np.ndarray, ys: np.ndarray):
@@ -71,17 +77,9 @@ def _min_endpoint_dist(a: LineGroup, b: LineGroup) -> float:
     return float(np.sqrt((d * d).sum(axis=2)).min())
 
 
-def aggregate_lines(
-    segments: np.ndarray,
-    widths: np.ndarray | None = None,
-    max_dist: float = 15.0,
-    stderr_max: float = 0.04,
-    degrade_max: float = 0.02,
-) -> list[LineGroup]:
-    """A1: agglomerate (n,4) segments [x1,y1,x2,y2] into line groups."""
-    n = len(segments)
-    if widths is None:
-        widths = np.ones(n)
+def aggregate_lines(segments: np.ndarray, widths: np.ndarray) -> list[LineGroup]:
+    """A1: agglomerate (n,4) segments [x1,y1,x2,y2] with per-segment
+    ``widths`` into line groups."""
     groups = [
         LineGroup(
             [i],
@@ -98,7 +96,7 @@ def aggregate_lines(
         for i in range(len(groups)):
             for j in range(i + 1, len(groups)):
                 d = _min_endpoint_dist(groups[i], groups[j])
-                if d <= max_dist:
+                if d <= MAX_DIST:
                     pairs.append((d, i, j))
         for d, i, j in sorted(pairs):  # stable total order (d, i, j)
             gi, gj = groups[i], groups[j]
@@ -108,7 +106,7 @@ def aggregate_lines(
             _, _, se_m = merged.fit()
             _, _, se_i = gi.fit()
             _, _, se_j = gj.fit()
-            if se_m <= stderr_max and se_m - se_i <= degrade_max and se_m - se_j <= degrade_max:
+            if se_m <= STDERR_MAX and se_m - se_i <= DEGRADE_MAX and se_m - se_j <= DEGRADE_MAX:
                 groups[i] = merged
                 groups[j] = None
                 changed = True
@@ -116,16 +114,10 @@ def aggregate_lines(
     return groups
 
 
-def merge_collinear(
-    groups: list[LineGroup],
-    w: int,
-    intercept_tol: float = 0.01,
-    gap_max: float = 0.10,
-    stderr_max: float = 0.04,
-    degrade_max: float = 0.02,
-) -> list[LineGroup]:
+def merge_collinear(groups: list[LineGroup], w: int) -> list[LineGroup]:
     """A2: merge groups whose fitted lines agree at both image edges
-    (|Δintercept| <= tol*W at x=0 and x=W) with x-extent gap < gap_max*W."""
+    (|Δintercept| <= INTERCEPT_TOL*W at x=0 and x=W) with x-extent gap
+    < GAP_MAX*W."""
     groups = list(groups)
     changed = True
     while changed:
@@ -137,19 +129,19 @@ def merge_collinear(
                     continue
                 si, bi, sei = gi.fit()
                 sj, bj, sej = gj.fit()
-                if abs(bi - bj) > intercept_tol * w:
+                if abs(bi - bj) > INTERCEPT_TOL * w:
                     continue
-                if abs((si * w + bi) - (sj * w + bj)) > intercept_tol * w:
+                if abs((si * w + bi) - (sj * w + bj)) > INTERCEPT_TOL * w:
                     continue
                 gap = max(
                     gj.pts[:, 0].min() - gi.pts[:, 0].max(),
                     gi.pts[:, 0].min() - gj.pts[:, 0].max(),
                 )
-                if gap >= gap_max * w:
+                if gap >= GAP_MAX * w:
                     continue
                 merged = gi.merged(gj)
                 _, _, se_m = merged.fit()
-                if se_m <= stderr_max and se_m - sei <= degrade_max and se_m - sej <= degrade_max:
+                if se_m <= STDERR_MAX and se_m - sei <= DEGRADE_MAX and se_m - sej <= DEGRADE_MAX:
                     groups[i] = merged
                     groups[j] = None
                     changed = True

@@ -205,9 +205,9 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     )
 
 
-def lsh_pairs(sig: DataFrame, band_cap: int = BAND_CAP) -> DataFrame:
+def lsh_pairs(sig: DataFrame) -> DataFrame:
     """Band the signature (ROWS_PER_BAND rows/band), drop band groups over
-    ``band_cap``, bucket-join on band key, emit candidate pairs
+    BAND_CAP, bucket-join on band key, emit candidate pairs
     (doc_a < doc_b) with the number of colliding bands.
 
     The cap is a windowed count over the SAME key the join shuffles on (no
@@ -216,7 +216,7 @@ def lsh_pairs(sig: DataFrame, band_cap: int = BAND_CAP) -> DataFrame:
     from the SHARED minhash_bands/_capped_bands helpers (also the
     incremental pass's input — one Spark-side band-key definition, so a
     persisted corpus band index stays joinable across both passes)."""
-    banded = _capped_bands(minhash_bands(sig), band_cap)
+    banded = _capped_bands(minhash_bands(sig))
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(
@@ -649,19 +649,17 @@ ORACLE_SIMHASH = f"""
 # n-gram Jaccard verification (document-frequency-capped pair join)
 # ---------------------------------------------------------------------------
 
-def jaccard_pairs(
-    docs: DataFrame, max_shingle_df: int = MAX_SHINGLE_DF
-) -> DataFrame:
+def jaccard_pairs(docs: DataFrame) -> DataFrame:
     """3-gram Jaccard for doc pairs sharing at least one NON-HOT shingle
     within the same source partition. Shingles with per-source document
-    frequency above ``max_shingle_df`` are removed before the pair join
+    frequency above MAX_SHINGLE_DF are removed before the pair join
     (the windowed count shares the join's shuffle key); set sizes use the
     same filtered universe, so jaccard compares distinctive content."""
     sh = shingle_explode_distinct(docs, "source")
     w = Window.partitionBy("source", "shingle")
     sh = (
         sh.withColumn("_df", F.count(F.lit(1)).over(w))
-        .filter(F.col("_df") <= max_shingle_df)
+        .filter(F.col("_df") <= MAX_SHINGLE_DF)
         .drop("_df")
     )
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
@@ -697,11 +695,11 @@ def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the edge relation is first contracted per partition to spanning-forest
 # edges (connectivity-preserving, row count never grows, cycles collapse)
 CC_FOLD_EDGES = 5_000_000
+# contraction rounds allowed before a still-over-budget edge relation fails
+CC_MAX_ROUNDS = 50
 
 
-def connected_components_labels(
-    nodes: DataFrame, edges: DataFrame, max_iter: int = 50
-) -> DataFrame:
+def connected_components_labels(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Exact connected components: nodes(doc_id) × edges(doc_a, doc_b)
     → (doc_id, cluster_id) with cluster_id = MIN doc_id of the connected
     component (isolated nodes label themselves).
@@ -728,7 +726,7 @@ def connected_components_labels(
     ~1 s. Scale note: the fold's input is bounded by the number of
     edge-touched nodes — the near-dup graph is a vanishing fraction of
     the corpus (the same assumption the checkpointed pair relations make);
-    max_iter bounds the contraction rounds and a non-contracting
+    CC_MAX_ROUNDS bounds the contraction rounds and a non-contracting
     over-budget relation fails loudly rather than returning partial
     labels (ADVICE round 2, item 4)."""
     import math
@@ -794,11 +792,11 @@ def connected_components_labels(
     n_e = e.count()
     rounds = 0
     while n_e > CC_FOLD_EDGES:
-        if rounds >= max_iter:
+        if rounds >= CC_MAX_ROUNDS:
             raise RuntimeError(
-                f"connected components did not converge in {max_iter} rounds"
+                f"connected components did not converge in {CC_MAX_ROUNDS} rounds"
                 f" ({n_e} forest edges still above the {CC_FOLD_EDGES}-edge"
-                f" fold budget) — raise max_iter or CC_FOLD_EDGES"
+                f" fold budget) — raise CC_MAX_ROUNDS or CC_FOLD_EDGES"
             )
         rounds += 1
         parts = int(math.ceil(n_e / CC_FOLD_EDGES))
@@ -865,19 +863,14 @@ DECON_EVAL_MOD = 25  # deterministic eval split: doc_id % MOD == 0
 DECON_MIN_SHARED = 3  # contaminated iff >= this many shared distinct 3-grams
 
 
-def decontamination_overlap(
-    corpus: DataFrame,
-    eval_docs: DataFrame,
-    max_shingle_df: int = MAX_SHINGLE_DF,
-    min_shared: int = DECON_MIN_SHARED,
-) -> DataFrame:
-    """(doc_id, eval_id, shared): training docs sharing >= ``min_shared``
+def decontamination_overlap(corpus: DataFrame, eval_docs: DataFrame) -> DataFrame:
+    """(doc_id, eval_id, shared): training docs sharing >= DECON_MIN_SHARED
     distinct word-3-grams with a held-out eval document — the standard
     LLM-training eval-decontamination pass (flag and drop training examples
     that leak eval content).
 
     Scale shape (100 TB): corpus shingles are DF-capped first — a
-    stop-shingle present in >max_shingle_df training docs carries no
+    stop-shingle present in >MAX_SHINGLE_DF training docs carries no
     contamination evidence but would fan the join out by that DF — with
     the windowed count sharing the join's shuffle key (one corpus shuffle
     total, same trick as jaccard_pairs). The eval side is tiny by
@@ -888,7 +881,7 @@ def decontamination_overlap(
     w = Window.partitionBy("shingle")
     sh = (
         sh.withColumn("_df", F.count(F.lit(1)).over(w))
-        .filter(F.col("_df") <= max_shingle_df)
+        .filter(F.col("_df") <= MAX_SHINGLE_DF)
         .drop("_df")
     )
     ev = shingle_explode_distinct(eval_docs).select(
@@ -898,7 +891,7 @@ def decontamination_overlap(
         sh.join(F.broadcast(ev), "shingle")
         .groupBy("doc_id", "eval_id")
         .agg(F.count(F.lit(1)).alias("shared"))
-        .filter(F.col("shared") >= min_shared)
+        .filter(F.col("shared") >= DECON_MIN_SHARED)
     )
 
 
@@ -954,18 +947,13 @@ def _kgram_expr(k: int) -> str:
     )
 
 
-def exact_substring_pairs(
-    docs: DataFrame,
-    k: int = SUBSTR_K,
-    min_run: int = SUBSTR_MIN_RUN,
-    max_kgram_df: int = MAX_KGRAM_DF,
-) -> DataFrame:
+def exact_substring_pairs(docs: DataFrame) -> DataFrame:
     """(doc_a, doc_b, run_words): document pairs sharing a VERBATIM word
-    run of >= ``min_run`` words, with run_words the longest such run —
+    run of >= SUBSTR_MIN_RUN words, with run_words the longest such run —
     the 'deduplicating training data' exact-substring pass (the suffix
     -array ~50-token rule), re-expressed relationally:
 
-    two docs share an L-word verbatim run iff they share L-k+1
+    two docs share an L-word verbatim run iff they share L-k+1 (k = SUBSTR_K)
     CONSECUTIVE positional k-grams on one alignment diagonal
     (pos_a - pos_b constant). So: positional k-gram hashes (narrow
     explode, one md5 each) → occurrence-cap hot k-grams (windowed count
@@ -976,6 +964,7 @@ def exact_substring_pairs(
 
     All arithmetic is exact integers on md5-equality matches — DuckDB
     oracle is the same algebra (ORACLE_SUBSTR)."""
+    k = SUBSTR_K
     kg = (
         docs.withColumn("_words", F.split("text", " "))
         .select("doc_id", F.posexplode(F.expr(_kgram_expr(k))).alias("pos", "kh"))
@@ -983,7 +972,7 @@ def exact_substring_pairs(
     w = Window.partitionBy("kh")
     kg = (
         kg.withColumn("_n", F.count(F.lit(1)).over(w))
-        .filter(F.col("_n") <= max_kgram_df)
+        .filter(F.col("_n") <= MAX_KGRAM_DF)
         .drop("_n")
     )
     a, b = kg.alias("a"), kg.alias("b")
@@ -1004,7 +993,7 @@ def exact_substring_pairs(
     return (
         runs.groupBy("doc_a", "doc_b")
         .agg(F.max("run_words").cast("bigint").alias("run_words"))
-        .filter(F.col("run_words") >= min_run)
+        .filter(F.col("run_words") >= SUBSTR_MIN_RUN)
     )
 
 
@@ -1264,13 +1253,9 @@ SIMHASH_MAX_HAMMING = 1  # near-dup operating point on this corpus's vocab
 SIMHASH_BAND_CAP = 100  # band groups above this are degenerate hot values
 
 
-def simhash_pairs(
-    docs: DataFrame,
-    max_hamming: int = SIMHASH_MAX_HAMMING,
-    band_cap: int = SIMHASH_BAND_CAP,
-) -> DataFrame:
+def simhash_pairs(docs: DataFrame) -> DataFrame:
     """(doc_a, doc_b, hamming): document pairs whose 64-bit SimHash
-    signatures differ in <= ``max_hamming`` bits — the signature family's
+    signatures differ in <= SIMHASH_MAX_HAMMING bits — the signature family's
     own pair generator, completing it to the candidates→verify shape the
     MinHash and embedding families already have.
 
@@ -1285,12 +1270,12 @@ def simhash_pairs(
     vocabulary skew, not duplication evidence). RECALL CAVEAT (ADVICE r4):
     the cap also drops a true near-dup pair whose ONLY shared band value
     is over-cap — both engines agree so the oracle gate cannot see it;
-    callers needing a recall floor should raise ``band_cap`` or run
+    callers needing a recall floor should raise SIMHASH_BAND_CAP or run
     exact dedup first (which removes the degenerate cliques that make
     band values hot). Verification is exact: bit_count(xor) on the
     carried signatures, no second scan."""
     sig = simhash_signatures_df(docs)
-    out = hamming_pairs(sig, "doc_id", "simhash", max_hamming, band_cap)
+    out = hamming_pairs(sig, "doc_id", "simhash")
     return out.select(
         F.col("doc_id_a").alias("doc_a"),
         F.col("doc_id_b").alias("doc_b"),
@@ -1322,12 +1307,7 @@ def _signature_bands(sig: DataFrame, id_col: str, sig_col: str) -> DataFrame:
     )
 
 
-def band_overcap_groups(
-    sig: DataFrame,
-    id_col: str,
-    sig_col: str,
-    band_cap: int = SIMHASH_BAND_CAP,
-) -> DataFrame:
+def band_overcap_groups(sig: DataFrame, id_col: str, sig_col: str) -> DataFrame:
     """(band_no, band_val, n): the band groups the cap DROPS from
     hamming_pairs' candidate join — the no-silent-caps audit relation
     (VERDICT r5 item 3b). A pair whose only shared band value lands in one
@@ -1340,7 +1320,7 @@ def band_overcap_groups(
         _signature_bands(sig, id_col, sig_col)
         .groupBy("band_no", "band_val")
         .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > band_cap)
+        .filter(F.col("n") > SIMHASH_BAND_CAP)
     )
 
 
@@ -1349,7 +1329,6 @@ def hamming_pairs(
     id_col: str,
     sig_col: str,
     max_hamming: int = SIMHASH_MAX_HAMMING,
-    band_cap: int = SIMHASH_BAND_CAP,
 ) -> DataFrame:
     """Generic pigeonhole hamming-pair generator over ANY 64-bit signature
     relation — shared by text SimHash (simhash_pairs) and the image
@@ -1370,7 +1349,7 @@ def hamming_pairs(
     w = Window.partitionBy("band_no", "band_val")
     bands = (
         bands.withColumn("_n", F.count(F.lit(1)).over(w))
-        .filter(F.col("_n") <= band_cap)
+        .filter(F.col("_n") <= SIMHASH_BAND_CAP)
         .drop("_n")
     )
     a, b = bands.alias("a"), bands.alias("b")
@@ -1482,11 +1461,11 @@ def minhash_bands(sig: DataFrame) -> DataFrame:
     return sig.select("doc_id", F.posexplode(bands).alias("band_no", "band_key"))
 
 
-def _capped_bands(bands: DataFrame, band_cap: int) -> DataFrame:
+def _capped_bands(bands: DataFrame) -> DataFrame:
     w = Window.partitionBy("band_no", "band_key")
     return (
         bands.withColumn("_n", F.count(F.lit(1)).over(w))
-        .filter(F.col("_n") <= band_cap)
+        .filter(F.col("_n") <= BAND_CAP)
         .drop("_n")
     )
 
@@ -1494,7 +1473,6 @@ def _capped_bands(bands: DataFrame, band_cap: int) -> DataFrame:
 def dedup_incremental(
     new_docs: DataFrame,
     corpus_docs: DataFrame,
-    band_cap: int = BAND_CAP,
     sig_new: DataFrame | None = None,
     sig_corpus: DataFrame | None = None,
 ) -> DataFrame:
@@ -1519,8 +1497,8 @@ def dedup_incremental(
         sig_new = minhash_signatures(new_docs)
     if sig_corpus is None:
         sig_corpus = minhash_signatures(corpus_docs)
-    bn = _capped_bands(minhash_bands(sig_new), band_cap)
-    bc = _capped_bands(minhash_bands(sig_corpus), band_cap)
+    bn = _capped_bands(minhash_bands(sig_new))
+    bc = _capped_bands(minhash_bands(sig_corpus))
     cand = (
         bn.select(F.col("doc_id").alias("doc_new"), "band_no", "band_key")
         .join(

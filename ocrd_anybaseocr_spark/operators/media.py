@@ -96,28 +96,24 @@ def _map_blobs(blobs: DataFrame, rows, ddl: str) -> DataFrame:
     return blobs.select("media_ref", "image").mapInArrow(stage, schema)
 
 
-def audio_energy_windows(
-    blobs: DataFrame,
-    window: int = AUDIO_WINDOW,
-    max_windows: int = AUDIO_MAX_WINDOWS,
-) -> DataFrame:
+def audio_energy_windows(blobs: DataFrame) -> DataFrame:
     """(media_ref, win_no, n_samples, energy): windowed sum-of-squares over
     the binary column interpreted as 16-bit little-endian PCM — the audio
     feature-extraction tier, as one ``mapInArrow`` hop (np.frombuffer +
     vectorized square/sum; bytes cross to Python once, no per-row
-    Python). Energies are exact int64 (|x| < 2^15, window
+    Python). Energies are exact int64 (|x| < 2^15, AUDIO_WINDOW
     <= 2^16 → sum x^2 < 2^47), so a DuckDB hex-arithmetic oracle matches
     hash-exactly. This corpus carries no true audio; the page blobs stand
     in as deterministic PCM — the decode/window/reduce PLUMBING is the
     real deliverable, and a genuine PCM column drops in unchanged. A
-    trailing partial window is analyzed as-is (n_samples < window)."""
+    trailing partial window is analyzed as-is (n_samples < AUDIO_WINDOW)."""
 
     def rows(blob):
         import numpy as np
 
         x = np.frombuffer(blob[: len(blob) // 2 * 2], dtype="<i2").astype(np.int64)
-        for w in range(min(max_windows, -(-len(x) // window))):
-            seg = x[w * window : (w + 1) * window]
+        for w in range(min(AUDIO_MAX_WINDOWS, -(-len(x) // AUDIO_WINDOW))):
+            seg = x[w * AUDIO_WINDOW : (w + 1) * AUDIO_WINDOW]
             yield w, len(seg), int((seg * seg).sum())
 
     return _map_blobs(
@@ -125,24 +121,19 @@ def audio_energy_windows(
     )
 
 
-def decode_video_frames(blob: bytes, frame_bytes: int = FRAME_BYTES):
+def decode_video_frames(blob: bytes):
     """Frame iterator for the video tier. Only the raw format is read: a
     fixed-size frame concatenation (the deterministic stand-in format; a
     trailing partial frame is dropped, matching real fixed-rate raw
     video). Container codecs would need an external decoder (av/ffmpeg)
     the package does not depend on; the sampling/feature plumbing is
     codec-agnostic."""
-    for f in range(len(blob) // frame_bytes):
-        yield blob[f * frame_bytes : (f + 1) * frame_bytes]
+    for f in range(len(blob) // FRAME_BYTES):
+        yield blob[f * FRAME_BYTES : (f + 1) * FRAME_BYTES]
 
 
-def frame_sample(
-    blobs: DataFrame,
-    frame_bytes: int = FRAME_BYTES,
-    stride: int = FRAME_STRIDE,
-    max_frames: int = FRAME_MAX,
-) -> DataFrame:
-    """(media_ref, frame_no, n_bytes, byte_sum): every ``stride``-th frame
+def frame_sample(blobs: DataFrame) -> DataFrame:
+    """(media_ref, frame_no, n_bytes, byte_sum): every FRAME_STRIDE-th frame
     of the binary column read as raw fixed-size frames (the only format
     decode_video_frames reads) — the video frame-sampling tier as one
     ``mapInArrow`` hop. byte_sum is the exact uint8 sum
@@ -154,54 +145,45 @@ def frame_sample(
         import numpy as np
 
         # islice stops the frame iterator after the LAST sampled index
-        # ((max_frames-1)*stride + 1 frames advanced, the skipped ones
+        # ((FRAME_MAX-1)*FRAME_STRIDE + 1 frames advanced, the skipped ones
         # still sliced) instead of materializing the whole blob's frame
         # list before sampling
         sampled = islice(
-            decode_video_frames(blob, frame_bytes), 0, (max_frames - 1) * stride + 1, stride
+            decode_video_frames(blob), 0, (FRAME_MAX - 1) * FRAME_STRIDE + 1, FRAME_STRIDE
         )
         for i, f in enumerate(sampled):
-            yield i * stride, len(f), int(np.frombuffer(f, dtype=np.uint8).astype(np.int64).sum())
+            byte_sum = int(np.frombuffer(f, dtype=np.uint8).astype(np.int64).sum())
+            yield i * FRAME_STRIDE, len(f), byte_sum
 
     return _map_blobs(
         blobs, rows, "frame_no int not null, n_bytes int not null, byte_sum bigint not null"
     )
 
 
-def resize_image_bytes(
-    png_bytes: bytes, zoom: float, method: str = "nearest"
-) -> tuple[bytes, int, int]:
+def resize_image_bytes(png_bytes: bytes, zoom: float) -> tuple[bytes, int, int]:
     """(out_png, height, width): ONE image through the resize composition —
     decode (gray AND RGB; alpha rejected explicitly) → per-channel
-    resample (``nearest`` = the pipeline's exactly-invertible mapping,
-    ``cubic`` = the anti-aliased inference path; dims from the shared
-    kernels.transform.zoom_dims rule) → canonical re-encode in the SOURCE
+    nearest-neighbour resample (kernels.transform.resize_nearest, the
+    pipeline's exactly-invertible mapping) → canonical re-encode in the SOURCE
     mode with the pHYs resolution scaled by ``zoom``. This is THE single
     definition: the distributed operator (resize_images) and the oracle
     expectation (oracle._expected_resize_row) both call it, so the two
     can never drift (round-4 review)."""
     import numpy as np
 
-    from ..kernels.transform import resize_cubic, resize_nearest, zoom_dims
+    from ..kernels.transform import resize_nearest
     from ..png import decode_image, encode_gray, encode_rgb
 
-    if method not in ("nearest", "cubic"):
-        raise ValueError(f"unknown resize method {method!r}")
     if not zoom > 0:
         raise ValueError(f"zoom must be > 0, got {zoom!r}")
-
-    def resample(ch):
-        if method == "nearest":
-            return resize_nearest(ch, zoom)
-        return resize_cubic(ch, *zoom_dims(ch.shape[0], ch.shape[1], zoom))
 
     img, mode, dpi = decode_image(png_bytes)
     out_dpi = None if dpi is None else max(1, int(round(dpi * zoom)))
     if mode == "L":
-        out = resample(img)
+        out = resize_nearest(img, zoom)
         png = encode_gray(out, dpi=out_dpi)
     elif mode == "RGB":
-        out = np.stack([resample(img[:, :, c]) for c in range(3)], axis=-1)
+        out = np.stack([resize_nearest(img[:, :, c], zoom) for c in range(3)], axis=-1)
         png = encode_rgb(out, dpi=out_dpi)
     else:
         raise ValueError(
@@ -212,19 +194,17 @@ def resize_image_bytes(
     return png, int(out.shape[0]), int(out.shape[1])
 
 
-def resize_images(blobs: DataFrame, zoom: float, method: str = "nearest") -> DataFrame:
+def resize_images(blobs: DataFrame, zoom: float) -> DataFrame:
     """(media_ref, width, height, image): the resize tier of the
     multimodal contract as one ``mapInArrow`` hop over
     resize_image_bytes (see its docstring for the full composition).
     Deterministic end-to-end: the in-repo encoder is canonical, so output
     bytes are reproducible across runs and parallelism levels."""
-    if method not in ("nearest", "cubic"):
-        raise ValueError(f"unknown resize method {method!r}")
     if not zoom > 0:
         raise ValueError(f"zoom must be > 0, got {zoom!r}")
 
     def rows(blob):
-        png, h, w = resize_image_bytes(blob, zoom, method)
+        png, h, w = resize_image_bytes(blob, zoom)
         return [(w, h, png)]
 
     return _map_blobs(
@@ -307,10 +287,10 @@ AFP_WINDOW = 64  # int16 samples per envelope window
 AFP_NWIN = 65  # 65 window energies -> 64 gradient bits
 
 
-def audio_fp_bytes(blob: bytes, window: int = AFP_WINDOW, nwin: int = AFP_NWIN):
+def audio_fp_bytes(blob: bytes):
     """(n_windows, afp) for one PCM blob: bit j of the signed-int64
     fingerprint is set iff energy[j+1] > energy[j] over the leading
-    ``nwin`` windows — the perceptual property is the SHAPE of the energy
+    AFP_NWIN windows — the perceptual property is the SHAPE of the energy
     envelope (robust to uniform gain changes in the >-comparison sense),
     exactly the dhash_bytes gradient idea transposed to PCM. Pure
     function shared by the Spark stage and the pytest twin. Returns None
@@ -320,8 +300,8 @@ def audio_fp_bytes(blob: bytes, window: int = AFP_WINDOW, nwin: int = AFP_NWIN):
     x = np.frombuffer(blob[: len(blob) // 2 * 2], dtype="<i2").astype(np.int64)
     if len(x) == 0:
         return None
-    n_win = min(nwin, -(-len(x) // window))
-    e = [int((x[w * window : (w + 1) * window] ** 2).sum()) for w in range(n_win)]
+    n_win = min(AFP_NWIN, -(-len(x) // AFP_WINDOW))
+    e = [int((x[w * AFP_WINDOW : (w + 1) * AFP_WINDOW] ** 2).sum()) for w in range(n_win)]
     fp = 0
     for j in range(min(n_win - 1, 64)):
         if e[j + 1] > e[j]:

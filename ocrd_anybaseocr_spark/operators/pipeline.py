@@ -226,8 +226,8 @@ class _CatalogIO:
     r3 item 2: a reordered select in a caller would otherwise silently
     scramble columns on this path only)."""
 
-    def __init__(self, spark: SparkSession, namespace: str, provider: str = "parquet"):
-        self.spark, self.ns, self.provider = spark, namespace, provider
+    def __init__(self, spark: SparkSession, namespace: str):
+        self.spark, self.ns = spark, namespace
         spark.sql(f"CREATE DATABASE IF NOT EXISTS {namespace}")
 
     def _tbl(self, name: str) -> str:
@@ -261,7 +261,7 @@ class _CatalogIO:
 
         tbl = self._tbl(name)
         if not self.spark.catalog.tableExists(tbl):
-            (df.writeTo(tbl).using(self.provider)
+            (df.writeTo(tbl).using("parquet")
                 .partitionedBy(F.col("part_bucket")).create())
             return
         try:
@@ -276,7 +276,7 @@ class _CatalogIO:
 
         tbl = self._tbl(name)
         if not self.spark.catalog.tableExists(tbl):
-            df.writeTo(tbl).using(self.provider).create()
+            df.writeTo(tbl).using("parquet").create()
             return
         try:
             df.writeTo(tbl).append()
@@ -300,7 +300,7 @@ class _CatalogIO:
 
         tbl = self._tbl(name)
         try:
-            df.writeTo(tbl).using(self.provider).createOrReplace()
+            df.writeTo(tbl).using("parquet").createOrReplace()
         except AnalysisException as e:
             if not (
                 self._is_replace_capability_error(e) or self._is_v1_capability_error(e)
@@ -321,7 +321,6 @@ def run_pipeline(
     out_dir: str,
     n_parts: int = 32,
     resume: bool = True,
-    n_buckets: int | None = None,
     catalog: str | None = None,
 ) -> dict:
     """End-to-end run with checkpointed, idempotent resume.
@@ -331,9 +330,9 @@ def run_pipeline(
     directories under ``out_dir``, or, when ``catalog`` names a catalog
     namespace (e.g. ``iceberg_cat.graft``), as catalog tables written via
     the v2 ``writeTo`` API (see _CatalogIO for the atomicity contract).
-    Returns summary metrics. ``n_buckets`` defaults to derive_buckets(corpus
-    doc count) — deterministic for a given corpus, so resume runs recompute
-    the same bucket ids. ``n_parts`` caps the image stage's task count (see
+    Returns summary metrics. The bucket count is derive_buckets(corpus doc
+    count) — deterministic for a given corpus, so resume runs recompute the
+    same bucket ids. ``n_parts`` caps the image stage's task count (see
     build_page_results); the three bucketed writes run ``task_slots(spark,
     n_buckets)`` tasks.
 
@@ -361,10 +360,9 @@ def run_pipeline(
     io = _CatalogIO(spark, catalog) if catalog else _PathIO(spark, out_dir)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     documents, blobs = load_corpus(spark, corpus_dir)
-    if n_buckets is None:
-        # one narrow-column count job; at scale this is footer metadata work,
-        # negligible next to the image stage
-        n_buckets = derive_buckets(_timed("count_docs", documents.count))
+    # one narrow-column count job; at scale this is footer metadata work,
+    # negligible next to the image stage
+    n_buckets = derive_buckets(_timed("count_docs", documents.count))
     bucket = F.pmod(F.hash("doc_id"), F.lit(n_buckets)).cast("int")
     documents = documents.withColumn("part_bucket", bucket)
 

@@ -152,7 +152,7 @@ def lsh_assignments(
     )
 
 
-def _bk_cte_duck(n_tables: int = LSH_TABLES) -> str:
+def _bk_cte_duck() -> str:
     """DuckDB CTE mirroring lsh_assignments exactly — INCLUDING the
     corpus-size bits derivation, so Spark and oracle agree at EVERY scale
     factor, not just inside the <=1000-row step (round-3 review finding:
@@ -177,7 +177,7 @@ def _bk_cte_duck(n_tables: int = LSH_TABLES) -> str:
              CAST(SUM(CASE WHEN list_dot_product(e.se, p.w) >= 0
                            THEN (CAST(1 AS BIGINT) << jj.j) ELSE 0 END) AS INTEGER) AS bucket
       FROM se0 e
-      CROSS JOIN generate_series(0, {n_tables - 1}) AS tt(tbl)
+      CROSS JOIN generate_series(0, {LSH_TABLES - 1}) AS tt(tbl)
       CROSS JOIN nb
       JOIN generate_series(0, {LSH_MAX_BITS - 1}) AS jj(j) ON jj.j < nb.b
       JOIN planes p ON p.k = tt.tbl * nb.b + jj.j
@@ -238,16 +238,15 @@ ORACLE_ANN_BRUTE = f"""
 """
 
 
-def candidates_from_assignments(
-    bk: DataFrame, query_ids_below: int = N_QUERIES
-) -> DataFrame:
+def candidates_from_assignments(bk: DataFrame) -> DataFrame:
     """Distinct (query_id, neighbor_id) pairs colliding in >= 1 LSH table,
-    from an assignment relation (vec_id, tbl, bucket). Query side is tiny
+    from an assignment relation (vec_id, tbl, bucket), for the query ids
+    below N_QUERIES. Query side is tiny
     (broadcast); the big side's shuffle key is (tbl, bucket) whose
     cardinality scales with 2^LSH_BITS. This SELF-JOINS ``bk`` — pass a
     checkpointed relation (_lsh_assign_cached) or the bucket expression
     evaluates once per side."""
-    qb = bk.filter(F.col("vec_id") < query_ids_below).select(
+    qb = bk.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "tbl", "bucket"
     )
     cb = bk.select(F.col("vec_id").alias("neighbor_id"), "tbl", "bucket")
@@ -399,20 +398,16 @@ def _emb_count_cached(spark: SparkSession, sf_dir: str) -> int:
     )
 
 
-# the LSH INDEX (vec, tbl) -> bucket, shared per (session, sf_dir, tables,
+# the LSH INDEX (vec, tbl) -> bucket, shared per (session, sf_dir, derived
 # bits): every consumer SELF-JOINS the assignment relation (query side vs
 # corpus side, pair side A vs side B), and an un-truncated lineage
 # evaluates the interpreted-HOF bucket expression once PER SIDE (~0.9 s/pass
 # at sf0.1) — same rationale as _ivf_assign_cached
-def _lsh_assign_cached(
-    spark: SparkSession, sf_dir: str, n_tables: int = LSH_TABLES,
-    n_bits: int | None = None,
-) -> DataFrame:
-    if n_bits is None:
-        n_bits = derive_bits(_emb_count_cached(spark, sf_dir))
+def _lsh_assign_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
+    n_bits = derive_bits(_emb_count_cached(spark, sf_dir))
     return shared(
-        "lsh_assign", spark, (sf_dir, n_tables, n_bits),
-        lambda: lsh_assignments(_emb_vecs(spark, sf_dir), n_tables, n_bits),
+        "lsh_assign", spark, (sf_dir, n_bits),
+        lambda: lsh_assignments(_emb_vecs(spark, sf_dir), n_bits=n_bits),
     )
 
 
@@ -453,11 +448,12 @@ def derive_ivf_k(n_rows: int) -> int:
 _ASSIGN_CHUNK = 2048  # rows per argmin block: chunk x k x 8B <= ~67 MB at k=4096
 
 
-def _emb_f64(batch, col: str = "embedding"):
-    """(n, EMB_DIM) float64 from an Arrow list column (offset-safe). The
-    float64 cast mirrors the expression's cast(x as double) — float32
-    inputs must widen BEFORE the 1e4 scale or numpy keeps float32 math."""
-    a = batch.column(col)
+def _emb_f64(batch):
+    """(n, EMB_DIM) float64 from the batch's Arrow list column
+    ``embedding`` (offset-safe). The float64 cast mirrors the expression's
+    cast(x as double) — float32 inputs must widen BEFORE the 1e4 scale or
+    numpy keeps float32 math."""
+    a = batch.column("embedding")
     flat = a.flatten().to_numpy(zero_copy_only=False)
     return flat.astype(np.float64, copy=False).reshape(-1, EMB_DIM)
 
@@ -492,30 +488,24 @@ def _cents_np(cents: list[tuple[int, list[int]]]):
     return cells, C, (C * C).sum(axis=1)
 
 
-def assignments_arrow(emb: DataFrame, cents, with_d2: bool = False) -> DataFrame:
-    """(vec_id, cell[, d2]): nearest-centroid assignment as a narrow
+def assignments_arrow(emb: DataFrame, cents) -> DataFrame:
+    """(vec_id, cell): nearest-centroid assignment as a narrow
     mapInArrow pass (exact integers, see the section comment)."""
     import pyarrow as pa
 
     cells, C, c2 = _cents_np(cents)
-    fields = [pa.field("vec_id", pa.int64()), pa.field("cell", pa.int32())]
-    if with_d2:
-        fields.append(pa.field("d2", pa.int64()))
-    schema = pa.schema(fields)
+    schema = pa.schema([pa.field("vec_id", pa.int64()), pa.field("cell", pa.int32())])
 
     def _assign(batches):
         for batch in batches:
             if batch.num_rows == 0:
                 continue
             se = _se_f64(_emb_f64(batch))
-            ix, d2 = _argmin_cells_np(se, C, c2)
+            ix, _d2 = _argmin_cells_np(se, C, c2)
             cols = [batch.column("vec_id"), pa.array(cells[ix].astype(np.int32))]
-            if with_d2:
-                cols.append(pa.array(d2))
             yield pa.RecordBatch.from_arrays(cols, schema=schema)
 
-    out_schema = "vec_id bigint, cell int" + (", d2 bigint" if with_d2 else "")
-    return emb.select("vec_id", "embedding").mapInArrow(_assign, out_schema)
+    return emb.select("vec_id", "embedding").mapInArrow(_assign, "vec_id bigint, cell int")
 
 
 def ivf_assignments(emb: DataFrame, k: int = IVF_K) -> DataFrame:
@@ -1091,8 +1081,8 @@ _DOT_E8 = (
 )
 
 
-def capped_assignments(bk: DataFrame, bucket_cap: int = LSH_BUCKET_CAP) -> DataFrame:
-    """The assignment relation with over-cap buckets dropped BEFORE any
+def capped_assignments(bk: DataFrame) -> DataFrame:
+    """The assignment relation with buckets over LSH_BUCKET_CAP dropped BEFORE any
     self-join — the single definition of the cap policy (the bucket-size
     relation is tiny, <= tables * 2^bits rows → broadcast). Shared by
     pairs_from_assignments and hard_negatives so the cap/broadcast
@@ -1100,20 +1090,18 @@ def capped_assignments(bk: DataFrame, bucket_cap: int = LSH_BUCKET_CAP) -> DataF
     ok = (
         bk.groupBy("tbl", "bucket")
         .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") <= bucket_cap)
+        .filter(F.col("c") <= LSH_BUCKET_CAP)
         .select("tbl", "bucket")
     )
     return bk.join(F.broadcast(ok), ["tbl", "bucket"])
 
 
-def pairs_from_assignments(
-    bk: DataFrame, bucket_cap: int = LSH_BUCKET_CAP
-) -> DataFrame:
+def pairs_from_assignments(bk: DataFrame) -> DataFrame:
     """Distinct candidate pairs (vec_a < vec_b) colliding in >= 1 LSH table,
     from an assignment relation, with over-cap buckets dropped before the
     self-join (see module doc). Pass a checkpointed ``bk`` (see
     candidates_from_assignments)."""
-    bkc = capped_assignments(bk, bucket_cap)
+    bkc = capped_assignments(bk)
     a = bkc.select(F.col("vec_id").alias("vec_a"), "tbl", "bucket")
     b = bkc.select(F.col("vec_id").alias("vec_b"), "tbl", "bucket")
     return (
@@ -1124,20 +1112,13 @@ def pairs_from_assignments(
     )
 
 
-def embedding_lsh_pairs(
-    emb: DataFrame,
-    n_tables: int = LSH_TABLES,
-    n_bits: int | None = None,
-    bucket_cap: int = LSH_BUCKET_CAP,
-) -> DataFrame:
+def embedding_lsh_pairs(emb: DataFrame) -> DataFrame:
     """Raw-lineage form of pairs_from_assignments (plan tests assert on
     this; cached callers use the checkpointed relation directly)."""
-    return pairs_from_assignments(lsh_assignments(emb, n_tables, n_bits), bucket_cap)
+    return pairs_from_assignments(lsh_assignments(emb))
 
 
-def cosine_verified_pairs(
-    emb: DataFrame, n_bits: int | None = None, pairs: DataFrame | None = None
-) -> DataFrame:
+def cosine_verified_pairs(emb: DataFrame, pairs: DataFrame | None = None) -> DataFrame:
     """Embedding near-dup detection: hyperplane-LSH candidate pairs, then an
     EXACT 1e4-scaled integer dot product threshold — order-independent and
     bit-identical across engines (float dot products differ in the last
@@ -1145,7 +1126,7 @@ def cosine_verified_pairs(
     (from pairs_from_assignments over the cached index); otherwise the
     raw lineage is built from ``emb``."""
     if pairs is None:
-        pairs = embedding_lsh_pairs(emb.select("vec_id", "embedding"), n_bits=n_bits)
+        pairs = embedding_lsh_pairs(emb.select("vec_id", "embedding"))
     ea = emb.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("e_a"))
     eb = emb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("e_b"))
     # the dot stays an in-JVM fold ON PURPOSE: an arrow twin was tried in
@@ -1294,7 +1275,7 @@ _SEMK_CTE_DUCK = f"""semk AS (
     )"""
 
 
-def kmeans_centroids(emb: DataFrame, k: int = KMEANS_K, iters: int = KMEANS_ITERS):
+def kmeans_centroids(emb: DataFrame, k: int = KMEANS_K):
     """Full-dimension Lloyd k-means with the engine-portable determinism
     recipe of pq_codebooks: seeds = the first ``k`` corpus rows' scaled-int
     embeddings; each iteration assigns by exact int argmin (ties to lower
@@ -1313,7 +1294,7 @@ def kmeans_centroids(emb: DataFrame, k: int = KMEANS_K, iters: int = KMEANS_ITER
     )
     cents = sorted((int(r["vec_id"]), list(map(int, r["se"]))) for r in cent_rows)
     dim = len(cents[0][1])
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         sums = (
             _kmeans_partials_arrow(emb, cents)
             .groupBy("cluster", "j")
@@ -1377,16 +1358,14 @@ def _kmeans_partials_arrow(emb: DataFrame, cents) -> DataFrame:
     )
 
 
-# refined Lloyd centroids per (session, sf_dir, k, iters): q_kmeans_clusters
+# refined Lloyd centroids per (session, sf_dir, k): q_kmeans_clusters
 # and q_dedup_semantic run the SAME derivation on the same corpus — one
 # driver pass pays the iteration cost once (sources.session_cache; centroids
 # are a bounded k x dim int list, so the entry is not checkpointed)
-def _kmeans_cents_cached(
-    spark: SparkSession, sf_dir: str, k: int, iters: int = KMEANS_ITERS
-) -> list:
+def _kmeans_cents_cached(spark: SparkSession, sf_dir: str, k: int) -> list:
     return shared(
-        "kmeans_cents", spark, (sf_dir, k, iters),
-        lambda: kmeans_centroids(load_table(spark, sf_dir, "embeddings"), k, iters),
+        "kmeans_cents", spark, (sf_dir, k),
+        lambda: kmeans_centroids(load_table(spark, sf_dir, "embeddings"), k),
     )
 
 
@@ -1690,9 +1669,7 @@ ORACLE_QUANT_INT8 = f"""
 # ---------------------------------------------------------------------------
 
 
-def hard_negatives(
-    emb: DataFrame, bk: DataFrame | None = None, bucket_cap: int = LSH_BUCKET_CAP
-) -> DataFrame:
+def hard_negatives(emb: DataFrame, bk: DataFrame | None = None) -> DataFrame:
     """(vec_id, hard_neg_id, anchor_label, neg_label): for every vector,
     its most similar DIFFERENTLY-LABELED neighbor among LSH bucket-mates —
     the hard-negative mining pass of contrastive/metric-learning data
@@ -1710,7 +1687,7 @@ def hard_negatives(
     assert plans on the raw lineage."""
     if bk is None:
         bk = lsh_assignments(emb.select("vec_id", "embedding"))
-    bkc = capped_assignments(bk, bucket_cap)
+    bkc = capped_assignments(bk)
     cand = (
         bkc.join(
             bkc.select(F.col("vec_id").alias("neighbor_id"), "tbl", "bucket"),

@@ -227,10 +227,9 @@ MEDIA_RESIZE_ZOOM = 0.5  # the fixed zoom the media_resize query is gated at
 # same corpus bytes — kernel behavior feeding process_page/fold, the
 # flat-row shaping in materialize_expected, round_like_spark,
 # MEDIA_RESIZE_ZOOM or the resize composition. The query-corpus cache dir
-# is keyed by SYNTH_VERSION (corpus BYTES); this version keys the derived
-# expectations INSIDE it — without it, a stale cached expectation would
-# fail the driver gate on correct code with no pointer to the cache
-# (round-4 review).
+# is keyed by SYNTH_VERSION (corpus BYTES) and by this version (the derived
+# expectations INSIDE it) — without it, a stale cached expectation would
+# fail the driver gate on correct code with no pointer to the cache.
 EXPECTED_VERSION = 6  # v6: bpe_merges + fit_coverage_ppm (no-silent-caps)
                       # (BPE tokenizer expectations join the materialized set)
 # (v4: Otsu-confidence gate + illumination flattening — no-op on clean
@@ -242,8 +241,8 @@ EXPECTED_VERSION = 6  # v6: bpe_merges + fit_coverage_ppm (no-silent-caps)
 
 
 def expected_marker_name() -> str:
-    """Completion marker written LAST by materialize_expected; its absence
-    (missing or version-bumped) triggers re-materialization."""
+    """Completion marker written LAST by materialize_expected, stamped with
+    EXPECTED_VERSION."""
     return f".expected_complete_v{EXPECTED_VERSION}"
 
 
@@ -276,8 +275,9 @@ def materialize_expected(out_dir: str, n_docs: int, seed: int = 42,
 
     Regenerates each document from (seed, index) — byte-identical to the
     corpus by synth's determinism contract — and runs the single-process
-    kernels; the caller keys ``out_dir`` on SYNTH_VERSION so a generator
-    change can never serve stale expectations.
+    kernels; the caller keys ``out_dir`` on SYNTH_VERSION and
+    EXPECTED_VERSION so neither a generator nor a kernel change can serve
+    stale expectations.
     """
     import os
 
@@ -433,10 +433,8 @@ def materialize_expected(out_dir: str, n_docs: int, seed: int = 42,
         ]
     )
     # write-to-temp + atomic rename per file; the version-stamped marker
-    # below is written AFTER all of them, and callers gate on the marker:
-    # a crash mid-set leaves it absent and the next run re-materializes
-    # everything (round-4 review: gating on an earlier artifact could
-    # strand a half-written set forever)
+    # below is written AFTER all of them, so a crash mid-set leaves it
+    # absent
     for rows, schema, name in (
         (pr_rows, pr_schema, "expected_page_results.parquet"),
         (ds_rows, ds_schema, "expected_doc_structure.parquet"),

@@ -29,11 +29,10 @@ def _set_utc(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-def register(name: str, oracle: str | None = None):
+def register(name: str, oracle: str):
     def deco(fn):
         QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
+        ORACLE[name] = oracle
         return fn
 
     return deco
@@ -1175,90 +1174,37 @@ _PIPE_DOCS = 16
 def _pipeline_corpus() -> str:
     """Deterministic tiny corpus for pipeline-backed queries, cached per
     process user (seed 42 — same corpus every run, any machine). The path
-    keys on SYNTH_VERSION so a generator change can never serve stale
-    bytes, and is knowable at import time so DuckDB oracles can embed
-    read_parquet() literals over it."""
+    keys on SYNTH_VERSION and oracle.EXPECTED_VERSION, so neither a
+    generator change nor a kernel change can serve stale bytes or stale
+    expectations, and is knowable at import time so DuckDB oracles can
+    embed read_parquet() literals over it."""
+    import shutil as _shutil
+
+    from .oracle import EXPECTED_VERSION, materialize_expected
     from .synth import SYNTH_VERSION, generate_corpus
 
     d = _os.path.join(
-        _tempfile.gettempdir(), f"oas_qcorpus_{_PIPE_DOCS}_42_v{SYNTH_VERSION}"
+        _tempfile.gettempdir(),
+        f"oas_qcorpus_{_PIPE_DOCS}_42_v{SYNTH_VERSION}_e{EXPECTED_VERSION}",
     )
     marker = _os.path.join(d, ".complete")
     if not _os.path.exists(marker):
-        # generate into a private tmp dir and PUBLISH with one rename:
         # every process importing this module (driver gate, bench, pytest)
-        # runs this path, and two concurrent imports writing the same final
-        # files could tear them. Publish protocol (round-4 review closed a
-        # TOCTOU here — never check-then-delete d, which can destroy a
-        # corpus a racing process just completed):
-        #   1. try rename(tmp, d); success = published;
-        #   2. on failure, if the marker exists a complete corpus won the
-        #      race — discard our byte-identical copy;
-        #   3. else a stale markerless dir blocks the target: atomically
-        #      CLAIM it aside by rename (worst case we move a corpus that
-        #      completed inside the race window — then step 1 publishes our
-        #      identical one, still complete) and retry.
-        import shutil as _shutil
-
-        from .oracle import materialize_expected
-
+        # runs this path: build the corpus AND its expectations in a private
+        # temp dir and publish it with one rename, so only complete
+        # directories ever appear under the final name
         tmp = f"{d}.tmp.{_os.getpid()}"
         generate_corpus(tmp, _PIPE_DOCS, seed=42, workers=1)
-        # expectations are part of the published unit: any dir reachable
-        # under the final name is COMPLETE (corpus + oracle parquet), so
-        # no reader can ever observe a corpus whose expected files are
-        # still being written (round-4 review)
         materialize_expected(tmp, _PIPE_DOCS, seed=42)
         open(_os.path.join(tmp, ".complete"), "w").write("ok")
-        for attempt in range(4):
-            try:
-                _os.rename(tmp, d)
-                break
-            except OSError:
-                if _os.path.exists(marker):
-                    _shutil.rmtree(tmp, ignore_errors=True)
-                    break
-                aside = f"{d}.stale.{_os.getpid()}.{attempt}"
-                # re-check the marker at the last instant (ADVICE r4: the
-                # window between the check above and the claim is where a
-                # racing publisher can complete) ...
-                if _os.path.exists(marker):
-                    _shutil.rmtree(tmp, ignore_errors=True)
-                    break
-                try:
-                    _os.rename(d, aside)
-                except OSError:
-                    pass  # another process claimed/moved it; just retry
-                else:
-                    # ... and again AFTER the claim: if the dir we moved
-                    # aside turns out complete, we displaced a published
-                    # corpus inside the race window — put it straight back
-                    # so no reader ever observes it absent
-                    if _os.path.exists(_os.path.join(aside, ".complete")):
-                        try:
-                            _os.rename(aside, d)
-                        except OSError:
-                            # another publisher took d meanwhile; the aside
-                            # copy is a redundant byte-identical duplicate
-                            _shutil.rmtree(aside, ignore_errors=True)
-                        _shutil.rmtree(tmp, ignore_errors=True)
-                        break
-                    _shutil.rmtree(aside, ignore_errors=True)
-        else:
+        try:
+            _os.rename(tmp, d)
+        except OSError:
+            # the target exists: a racing process published its identical
+            # copy first — keep that one, discard ours
             _shutil.rmtree(tmp, ignore_errors=True)
-            raise RuntimeError(
-                f"could not publish query corpus at {d}: target neither "
-                "accepts the rename nor carries a completion marker"
-            )
-    # upgrade path for corpora published before the current
-    # EXPECTED_VERSION (or before expectations were part of the publish
-    # unit): the marker is version-stamped and written after every data
-    # file, so a kernel/shaping/zoom change that bumps EXPECTED_VERSION
-    # re-materializes stale expectations instead of serving them
-    from .oracle import expected_marker_name, materialize_expected
-
-    if not _os.path.exists(_os.path.join(d, expected_marker_name())):
-        materialize_expected(d, _PIPE_DOCS, seed=42)
+            if not _os.path.exists(marker):
+                raise
     return d
 
 

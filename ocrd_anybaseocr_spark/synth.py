@@ -28,7 +28,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from .config import DEFAULT_PARAMS, DeskewParams
+from .config import DEFAULT_PARAMS
 from .png import encode_gray, encode_rgb
 
 # bump when generated bytes change for the same (seed, index) — cached
@@ -46,8 +46,10 @@ def _rng_for(seed: int, doc_index: int) -> np.random.Generator:
     return np.random.Generator(np.random.PCG64(np.uint64(seed) ^ np.uint64(0x9E3779B97F4A7C15 * (doc_index + 1) % (1 << 64))))
 
 
-def skew_grid(params: DeskewParams = DEFAULT_PARAMS.deskew) -> np.ndarray:
-    """The discrete shear-candidate grid shared by generator and deskew kernel."""
+def skew_grid() -> np.ndarray:
+    """The discrete shear-candidate grid shared by generator and deskew kernel
+    (DEFAULT_PARAMS.deskew)."""
+    params = DEFAULT_PARAMS.deskew
     return np.linspace(-params.max_skew, params.max_skew, params.steps)
 
 
@@ -94,11 +96,11 @@ def _draw_page(rng: np.random.Generator, role: str, oversized: bool):
 
     labels = [role] if role != "title_page" else ["title_page"]
 
-    def text_rows(rx1, ry1, rx2, ry2, row_h=None, gap=None):
+    def text_rows(rx1, ry1, rx2, ry2):
         # text rows 8-13 px at working res (tiseg text gate <= 14 even
         # after the +-1 px zoom round-trip at non-integer s)
-        row_h = row_h or px(int(rng.integers(8, 14)))
-        gap = gap or px(int(rng.integers(6, 12)))
+        row_h = px(int(rng.integers(8, 14)))
+        gap = px(int(rng.integers(6, 12)))
         y = ry1
         while y + row_h <= ry2:
             wfrac = rng.uniform(0.75, 1.0)

@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 
 from ocrd_anybaseocr_spark.kernels.binarize import binarize_sauvola, otsu_threshold
-from ocrd_anybaseocr_spark.kernels.components import component_stats, runs_from_image
+from ocrd_anybaseocr_spark.kernels.components import _find_runs, labeled_runs, runs_from_image
 from ocrd_anybaseocr_spark.kernels.crop import (
     coalesce_columns,
     detect_border,
@@ -47,11 +47,16 @@ def test_sauvola_detects_local_ink():
     assert not ink[5, 5]
 
 
+def _cc(mask):
+    """The page kernels' CC analysis of a boolean ink mask."""
+    return labeled_runs(runs=_find_runs(mask), h=mask.shape[0])
+
+
 def test_component_stats_boxes():
     m = np.zeros((40, 40), dtype=bool)
     m[2:6, 3:10] = True
     m[20:25, 15:30] = True
-    stats = component_stats(m)
+    stats = _cc(m)[0]
     assert len(stats) == 2
     boxes = {tuple(r[:4]) for r in stats}
     assert (3, 2, 9, 5) in boxes and (15, 20, 29, 24) in boxes
@@ -64,7 +69,7 @@ def test_component_u_shape_single():
     m[5:15, 4:6] = True
     m[5:15, 14:16] = True
     m[13:15, 4:16] = True
-    stats = component_stats(m)
+    stats = _cc(m)[0]
     assert len(stats) == 1
 
 
@@ -96,9 +101,10 @@ def test_ruler_gates():
     ink[60:903, 647:650] = True
     # ruler bar in bottom margin
     ink[940:946, 100:400] = True
-    ruler = detect_ruler(ink)
+    cc = _cc(ink)
+    ruler = detect_ruler(ink.shape, stats=cc[0])
     assert ruler == [100, 940, 399, 945]
-    border, perfect = detect_border(ink, ruler)
+    border, perfect = detect_border(ink.shape, ruler, cc=cc)
     assert perfect and border == [50, 60, 649, 902]
 
 
@@ -106,7 +112,7 @@ def test_border_fallback_textboxes():
     ink = np.zeros((500, 400), dtype=bool)
     for y in range(100, 380, 24):  # text rows only, no frame
         ink[y : y + 10, 60:340] = True
-    border, perfect = detect_border(ink, None)
+    border, perfect = detect_border(ink.shape, None, cc=_cc(ink))
     assert not perfect
     assert border == [60, 100, 339, 373]
 

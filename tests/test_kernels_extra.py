@@ -31,7 +31,7 @@ def test_aggregate_lines_merges_collinear_nearby():
         [[0, 10, 40, 10], [45, 10, 90, 10],  # same line, endpoints 5px apart
          [0, 100, 90, 100]]                  # far-away parallel line
     )
-    groups = aggregate_lines(segs)
+    groups = aggregate_lines(segs, np.ones(len(segs)))
     assert len(groups) == 2
     big = max(groups, key=lambda g: len(g.ind))
     assert big.ind == {0, 1}
@@ -41,13 +41,13 @@ def test_aggregate_lines_stderr_gate_blocks():
     # perpendicular segments meeting at a point: tiny distance but the merged
     # fit is terrible → gate must block
     segs = np.array([[0, 0, 40, 0], [41, 1, 41, 40]])
-    groups = aggregate_lines(segs)
+    groups = aggregate_lines(segs, np.ones(len(segs)))
     assert len(groups) == 2
 
 
 def test_merge_collinear_bridges_gap():
-    segs = np.array([[0, 10, 30, 10], [60, 10, 90, 10]])  # 30px gap > max_dist
-    first = aggregate_lines(segs)
+    segs = np.array([[0, 10, 30, 10], [60, 10, 90, 10]])  # 30px gap > MAX_DIST
+    first = aggregate_lines(segs, np.ones(len(segs)))
     assert len(first) == 2
     second = merge_collinear(first, w=1000)  # gap 30 < 0.10*1000
     assert len(second) == 1

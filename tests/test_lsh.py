@@ -98,6 +98,7 @@ def test_lsh_bits_derive_and_candidate_boundedness(spark):
         LSH_MAX_BITS,
         derive_bits,
         embedding_lsh_pairs,
+        pairs_from_assignments,
     )
 
     assert derive_bits(200) == LSH_BITS == derive_bits(1000)
@@ -108,7 +109,7 @@ def test_lsh_bits_derive_and_candidate_boundedness(spark):
     assert len(vecs) == 1200  # above the step → derived bits > floor
     df = _emb_df(spark, vecs)
     derived = embedding_lsh_pairs(df).count()
-    fixed = embedding_lsh_pairs(df, n_bits=LSH_BITS).count()
+    fixed = pairs_from_assignments(lsh_assignments(df, n_bits=LSH_BITS)).count()
     assert derived < fixed / 2, (derived, fixed)
 
     cos = vecs @ vecs.T
@@ -119,7 +120,7 @@ def test_lsh_bits_derive_and_candidate_boundedness(spark):
     assert recall >= 0.8, f"recall {recall:.3f} at derived bits"
 
 
-def test_lsh_hot_bucket_cap(spark):
+def test_lsh_hot_bucket_cap(spark, monkeypatch):
     """A mass-duplication cluster (300 identical vectors) lands in one
     bucket per table; with the cap those buckets are dropped — the pair
     join never goes quadratic — while normal-sized clusters still pair."""
@@ -138,7 +139,10 @@ def test_lsh_hot_bucket_cap(spark):
     assert not clone_pairs, "over-cap bucket must be dropped from pair generation"
     assert len(small_pairs) == 3  # C(3,2) from the healthy cluster
     # sanity: without the cap the clone cluster would contribute C(300,2)
-    uncapped = embedding_lsh_pairs(df, bucket_cap=10**9).count()
+    from ocrd_anybaseocr_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "LSH_BUCKET_CAP", 10**9)
+    uncapped = embedding_lsh_pairs(df).count()
     assert uncapped >= 300 * 299 // 2
     assert LSH_BUCKET_CAP < 300
 
@@ -166,7 +170,7 @@ def test_ivf_flat_recall_vs_brute_force(spark, monkeypatch):
     assert hits / total >= 0.8, f"IVF recall {hits}/{total}"
 
 
-def test_minhash_band_cap(spark):
+def test_minhash_band_cap(spark, monkeypatch):
     """200 byte-identical docs share every band key; the band cap excludes
     that degenerate clique (exact dedup's job) while a genuine near-dup
     pair with unique-ish shingles still collides."""
@@ -187,7 +191,10 @@ def test_minhash_band_cap(spark):
     assert [r for r in pairs if r.doc_a == "n1" and r.doc_b == "n2"]
     assert BAND_CAP < 200
     # without the cap the clique explodes quadratically
-    uncapped = lsh_pairs(minhash_signatures(docs), band_cap=10**9).count()
+    from ocrd_anybaseocr_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "BAND_CAP", 10**9)
+    uncapped = lsh_pairs(minhash_signatures(docs)).count()
     assert uncapped >= 200 * 199 // 2
 
 
@@ -233,7 +240,7 @@ def test_connected_components_chain(spark):
 
 
 def test_connected_components_nonconvergence_raises(spark, monkeypatch):
-    """An edge relation still above the fold budget after max_iter
+    """An edge relation still above the fold budget after CC_MAX_ROUNDS
     contraction rounds must FAIL, not silently fold an over-budget
     relation in one task (ADVICE round 2, item 4: no partial/unsafe
     results on non-convergence)."""
@@ -250,13 +257,15 @@ def test_connected_components_nonconvergence_raises(spark, monkeypatch):
     # force the hierarchical path: a 2-edge fold budget with zero allowed
     # contraction rounds must fail loudly
     monkeypatch.setattr(dedup, "CC_FOLD_EDGES", 2)
+    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components_labels(nodes, edges, max_iter=0).collect()
+        dedup.connected_components_labels(nodes, edges).collect()
     # the contraction path itself (budget forces forest rounds) converges
     # to the exact single-component labels
+    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 20)
     got = {
         r.doc_id: r.cluster_id
-        for r in dedup.connected_components_labels(nodes, edges, max_iter=20).collect()
+        for r in dedup.connected_components_labels(nodes, edges).collect()
     }
     assert set(got.values()) == {"a"}
     monkeypatch.setattr(dedup, "CC_FOLD_EDGES", 5_000_000)
@@ -267,7 +276,7 @@ def test_connected_components_nonconvergence_raises(spark, monkeypatch):
     assert set(got.values()) == {"a"}
 
 
-def test_jaccard_stop_shingle_cap(spark):
+def test_jaccard_stop_shingle_cap(spark, monkeypatch):
     """150 docs sharing only a stop-shingle must NOT pair (the hot shingle
     is dropped before the join); a true near-dup pair with distinctive
     shingles survives with its Jaccard over the filtered universe."""
@@ -287,7 +296,10 @@ def test_jaccard_stop_shingle_cap(spark):
     assert nd and nd[0].inter == 5  # 6 shingles each, 5 shared
     assert MAX_SHINGLE_DF < 150
     # without the cap the stop-shingle clique pairs quadratically
-    uncapped = jaccard_pairs(docs, max_shingle_df=10**9).count()
+    from ocrd_anybaseocr_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "MAX_SHINGLE_DF", 10**9)
+    uncapped = jaccard_pairs(docs).count()
     assert uncapped >= 150 * 149 // 2
 
 

@@ -140,11 +140,103 @@ def test_no_test_only_definitions():
     assert not stale, f"allowlisted but reached from production (or gone): {stale}"
 
 
+# defaulted parameters kept although no production call site sets them
+OPTION_ALLOWED = {
+    "oracle.py:materialize_expected.params":
+        "the page path's PipelineParams (process_document -> materialize_expected): the"
+        " reference's ocrd-tool.json parameter surface, incl. the Otsu/Sauvola choice",
+    "operators/pipeline.py:build_page_results.params":
+        "the page path's PipelineParams (process_page -> process_pages ->"
+        " build_page_results), the same parameter surface",
+    "sources/tables.py:spark_session.app": "deployment setting: the Spark application name",
+}
+
+
+def _options():
+    """{key: (callee name, param, positional index or None)} for every
+    defaulted parameter of every function and method of the package (nested
+    functions included), keyed ``rel:qualname.param``. The index counts
+    call-site positions, so a method's ``self``/``cls`` is skipped; a
+    class's ``__init__`` is called by the class name."""
+    out = {}
+
+    def visit(body, rel, prefix, cls):
+        for st in body:
+            if isinstance(st, ast.ClassDef):
+                visit(st.body, rel, f"{prefix}{st.name}.", st.name)
+            elif isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = st.args
+                static = any(getattr(d, "id", None) == "staticmethod" for d in st.decorator_list)
+                skip = 1 if cls and not static else 0
+                callee = cls if st.name == "__init__" else st.name
+                qual = f"{rel}:{prefix}{st.name}"
+                pos = a.posonlyargs + a.args
+                first = len(pos) - len(a.defaults)
+                for i, arg in enumerate(pos[first:], first):
+                    out[f"{qual}.{arg.arg}"] = (callee, arg.arg, i - skip)
+                for arg, d in zip(a.kwonlyargs, a.kw_defaults):
+                    if d is not None:
+                        out[f"{qual}.{arg.arg}"] = (callee, arg.arg, None)
+                visit(st.body, rel, f"{prefix}{st.name}.", None)
+
+    for path in _py_files(PKG):
+        visit(ast.parse(open(path).read()).body, os.path.relpath(path, PKG), "", None)
+    return out
+
+
+def _production_calls():
+    """(callee name, keywords passed, positions passed or None for all) of
+    every call in production code: the package and the PRODUCTION roots.
+    ``functools.partial(f, ...)`` counts as a call of ``f``."""
+
+    def name(func):
+        return func.id if isinstance(func, ast.Name) else getattr(func, "attr", None)
+
+    for path in [*_py_files(PKG), *(p for e in PRODUCTION for p in _py_files(os.path.join(ROOT, e)))]:
+        for node in ast.walk(ast.parse(open(path).read())):
+            if not isinstance(node, ast.Call):
+                continue
+            callee, args = name(node.func), node.args
+            if callee == "partial" and args:
+                callee, args = name(args[0]), args[1:]
+            kws = {k.arg for k in node.keywords}  # None: a **mapping passes any keyword
+            n_pos = None if any(isinstance(x, ast.Starred) for x in args) else len(args)
+            yield callee, kws, n_pos
+
+
+def test_every_option_has_a_production_caller():
+    """An option exists only where a production caller sets it: every
+    defaulted parameter of the package must be passed (by keyword, by
+    position or through functools.partial) at some production call site,
+    or be in OPTION_ALLOWED. A value only tests set is a module constant
+    that tests patch. Calls match by bare name, as for the definitions
+    above, so an option this flags is set nowhere in production. The
+    border reference kept in TEST_ONLY_ALLOWED is exempt."""
+    options = _options()
+    calls = list(_production_calls())
+
+    def is_set(callee, param, idx):
+        for name, kws, n_pos in calls:
+            if name != callee:
+                continue
+            if param in kws or None in kws:
+                return True
+            if idx is not None and (n_pos is None or n_pos > idx):
+                return True
+        return False
+
+    exempt = tuple(f"{k}." for k in TEST_ONLY_ALLOWED)
+    unset = {k for k, v in options.items() if not k.startswith(exempt) and not is_set(*v)}
+    unused = sorted(unset - set(OPTION_ALLOWED))
+    assert not unused, "defaulted parameters no production call site sets:\n" + "\n".join(unused)
+    stale = sorted(set(OPTION_ALLOWED) - unset)
+    assert not stale, f"allowlisted but set in production (or gone): {stale}"
+
+
 def test_one_session_relation_registry():
     """Per-session relations go through sources.session_cache.shared: it
     alone reads spark.app.id, and no operator module keeps a module-level
-    *_CACHE of its own (kernels/transform._W_CACHE, a bounded numpy weight
-    memo that is not per session, lives outside operators/)."""
+    *_CACHE of its own."""
     violations = []
     for path in _py_files(PKG):
         rel = os.path.relpath(path, PKG)

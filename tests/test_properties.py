@@ -7,7 +7,7 @@ from __future__ import annotations
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
-from ocrd_anybaseocr_spark.kernels.components import component_stats
+from ocrd_anybaseocr_spark.kernels.components import _find_runs, labeled_runs
 from ocrd_anybaseocr_spark.kernels.crop import merge_x_overlaps
 from ocrd_anybaseocr_spark.kernels.fold import fold_document
 from ocrd_anybaseocr_spark.png import decode_gray, encode_gray
@@ -56,12 +56,18 @@ def test_merge_x_overlaps_confluent_with_union_find(boxes):
     assert {tuple(int(v) for v in b) for b in got} == want
 
 
+def _stats(mask):
+    """Component stats of a boolean mask through the page kernels' CC
+    analysis."""
+    return labeled_runs(runs=_find_runs(mask), h=mask.shape[0])[0]
+
+
 @given(st.integers(0, 2**32 - 1))
 @settings(max_examples=50, deadline=None)
 def test_cc_matches_bruteforce_flood(seed):
     rng = np.random.default_rng(seed)
     mask = rng.random((20, 24)) < 0.35
-    stats = component_stats(mask)
+    stats = _stats(mask)
     # brute-force 4-connected flood fill
     seen = np.zeros_like(mask, dtype=bool)
     comps = []
@@ -140,7 +146,7 @@ def test_cc_spiral_long_chain():
         x1 += 4; y1 += 4; x2 -= 4; y2 -= 4
         if y1 <= y2:
             m[y1 - 4:y1 + 1, x1] = True  # connect rings into one spiral arm
-    stats = component_stats(m)
+    stats = _stats(m)
     assert len(stats) == 1
     assert stats[0][4] == int(m.sum())
 
@@ -151,13 +157,16 @@ def test_cc_spiral_long_chain():
 def test_runs_from_image_equals_mask_path(seed, h, w, strip):
     """Strip-fused threshold+runs must be identical to the mask-based path
     for every strip size, including strips that split components."""
-    from ocrd_anybaseocr_spark.kernels.components import _find_runs, runs_from_image
+    from unittest import mock
+
+    from ocrd_anybaseocr_spark.kernels import components
 
     rng = np.random.default_rng(seed)
     img = rng.integers(0, 256, size=(h, w), dtype=np.uint8)
     t = 128
     want = _find_runs(img <= t)
-    got = runs_from_image(img, t, strip=strip)
+    with mock.patch.object(components, "RUN_STRIP", strip):
+        got = components.runs_from_image(img, t)
     for a, b in zip(got, want):
         assert np.array_equal(a, b)
 
