@@ -16,23 +16,19 @@ class CropParams:
     """Page-frame detection parameters.
 
     Defaults follow reference ocrd-tool.json:17-96 (cropping section):
-    ruler aspect/area gates, column separator width, margin bands, padding.
+    ruler aspect gates, column separator width, margin bands.
     """
 
     dpi: int = 300                   # working resolution (ref cropping.py:129-151)
     dpi_override: int = -1           # >0 asserts the scan DPI, beating embedded
                                      # metadata (ref ocrd-tool.json 'dpi', cropping.py:129-130)
-    padding: int = 4                 # inward border padding px (ref ocrd-tool.json)
     margin_top: float = 0.25         # border line search band (ref cropping.py:300-310)
     margin_bottom: float = 0.75
     margin_left: float = 0.3
     margin_right: float = 0.7
     ruler_ratio_min: float = 3.0     # ruler bbox aspect gates (ref cropping.py:237-250)
     ruler_ratio_max: float = 50.0
-    ruler_area_min: float = 0.01     # fraction of page area (ref cropping.py:214-221)
-    ruler_area_max: float = 0.3
     ruler_width_max: float = 0.95    # fraction of page width
-    column_area_min: float = 0.05    # min column area fraction (ref cropping.py:797-799)
     column_sep_width_max: float = 0.04  # column coalescing gap (ref cropping.py:729-740)
     min_line_length: float = 0.5     # border line must span >= this fraction of the page
     textbox_fill_min: float = 0.25   # contour fill-ratio gate (ref cropping.py:706-708)

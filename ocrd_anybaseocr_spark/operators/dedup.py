@@ -26,6 +26,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..hexint import hex_int_duck, hex_int_spark, md5_int_spark
 from ..sources.session_cache import shared
 from ..sources.tables import load_table, scan_fanout
 
@@ -128,21 +129,11 @@ def shingle_explode_distinct(docs: DataFrame, *extra_cols: str) -> DataFrame:
 # on both engines (BIGINT modulo is exact; no float path anywhere).
 _MH_P = 4_294_967_311  # smallest prime > 2^32
 _MH_HEX = 6  # md5 prefix width in hex chars → h < 2^24
+_H24_DUCK = hex_int_duck("md5(shingle)", _MH_HEX)
 _rs = __import__("numpy").random.RandomState(2718)
 _MH_A = [int(a) for a in _rs.randint(1, _MH_P, size=N_MINHASH, dtype="int64")]
 _MH_B = [int(b) for b in _rs.randint(0, _MH_P, size=N_MINHASH, dtype="int64")]
 del _rs
-
-
-def _md5_prefix_int_spark(inner: str, n_hex: int) -> str:
-    """First ``n_hex`` hex chars of md5(inner) → bigint via conv() — ONE md5
-    evaluation per row. The previous strpos-arithmetic form spliced the md5
-    expression into one term per hex char and Catalyst does NOT
-    common-subexpression-eliminate it: the md5 ran 8x per token (measured
-    6.7x slowdown on winnowing, 4.6x on SimHash — VERDICT round 2, item 1).
-    The DuckDB oracles keep the strpos arithmetic (no conv there); values
-    are identical."""
-    return f"cast(conv(substring(md5({inner}), 1, {n_hex}), 16, 10) as bigint)"
 
 
 def minhash_signatures(docs: DataFrame) -> DataFrame:
@@ -247,10 +238,10 @@ def _minhash_sig_banded0_cte() -> str:
     MinHash signature and band keys, spliced into the self-join pair
     oracles AND the incremental oracle (review r5: a second verbatim copy
     of this chain is a drift hazard — the dhash oracles learned the same
-    lesson). ``{H32}`` is spliced in below once _hexn_to_int_duck exists."""
+    lesson)."""
     return f"""sh AS ({_SHINGLES_DUCK}),
     hh AS (
-      SELECT doc_id, {{H32}} AS h FROM sh
+      SELECT doc_id, {_H24_DUCK} AS h FROM sh
     ),
     sig AS (
       SELECT doc_id,
@@ -351,7 +342,6 @@ ORACLE_DEDUP_CLUSTERS = f"""
 # ---------------------------------------------------------------------------
 
 SIMHASH_BITS = 64
-_HEX = "0123456789abcdef"
 
 
 def _simhash_bit_weight(j: int) -> int:
@@ -360,28 +350,6 @@ def _simhash_bit_weight(j: int) -> int:
     pattern is identical in Spark and DuckDB, and partial sums of distinct
     bit weights never overflow: positives total at most 2^63-1)."""
     return -(2**63) if j == 63 else 2**j
-
-
-def _hexn_to_int_duck(col_expr: str, n_hex: int, start: int = 1) -> str:
-    """``n_hex`` hex chars of an md5 from 1-based position ``start`` →
-    bigint, via strpos arithmetic (DuckDB has no conv(); explicit bigint
-    cast so 16^7 factors can't overflow 32-bit ints). The Spark side uses
-    _md5_prefix_int_spark — values are identical (md5 hex is lowercase in
-    both engines)."""
-    parts = [
-        f"(CAST(strpos('{_HEX}', substring({col_expr}, {start + k}, 1)) AS BIGINT) - 1)"
-        f" * {16 ** (n_hex - 1 - k)}"
-        for k in range(n_hex)
-    ]
-    return "(" + " + ".join(parts) + ")"
-
-
-# splice the shared hex→int arithmetic into the MinHash oracles (defined
-# above, before _hexn_to_int_duck existed)
-_H24_DUCK = _hexn_to_int_duck("md5(shingle)", _MH_HEX)
-ORACLE_MINHASH = ORACLE_MINHASH.replace("{H32}", _H24_DUCK)
-ORACLE_MINHASH_VERIFIED = ORACLE_MINHASH_VERIFIED.replace("{H32}", _H24_DUCK)
-ORACLE_DEDUP_CLUSTERS = ORACLE_DEDUP_CLUSTERS.replace("{H32}", _H24_DUCK)
 
 
 def _jaccard_verify(
@@ -528,7 +496,7 @@ ORACLE_JACCARD_HISTOGRAM = f"""
     SELECT CAST(floor(jaccard * 10) AS INTEGER) AS bucket,
            COUNT(*) AS n_pairs, MIN(jaccard) AS j_min, MAX(jaccard) AS j_max
     FROM ve GROUP BY bucket
-""".replace("{H32}", _H24_DUCK)
+"""
 
 
 def simhash_signatures_df(docs: DataFrame) -> DataFrame:
@@ -619,8 +587,8 @@ _SIMHASH_SIG_CTE = f"""w AS (
       SELECT doc_id, md5(word) AS m FROM w
     ), h AS (
       SELECT doc_id,
-             {_hexn_to_int_duck("m", 8, start=1)} AS h1,
-             {_hexn_to_int_duck("m", 8, start=9)} AS h2
+             {hex_int_duck("m", 8, start=1)} AS h1,
+             {hex_int_duck("m", 8, start=9)} AS h2
       FROM hm
     ), s AS (
       SELECT doc_id, COUNT(*) AS n,
@@ -649,6 +617,19 @@ ORACLE_SIMHASH = f"""
 # n-gram Jaccard verification (document-frequency-capped pair join)
 # ---------------------------------------------------------------------------
 
+def _drop_hot_keys(df: DataFrame, keys: tuple[str, ...], cap: int) -> DataFrame:
+    """``df`` without the rows of any key group larger than ``cap`` — the
+    one hot-key cap in front of every self-join: the windowed count shares
+    the join's shuffle key, so capping adds no shuffle, and a hot key
+    (boilerplate shingle, crowded band) carries no pair evidence but would
+    fan the join out quadratically."""
+    return (
+        df.withColumn("_n", F.count(F.lit(1)).over(Window.partitionBy(*keys)))
+        .filter(F.col("_n") <= cap)
+        .drop("_n")
+    )
+
+
 def jaccard_pairs(docs: DataFrame) -> DataFrame:
     """3-gram Jaccard for doc pairs sharing at least one NON-HOT shingle
     within the same source partition. Shingles with per-source document
@@ -656,12 +637,7 @@ def jaccard_pairs(docs: DataFrame) -> DataFrame:
     (the windowed count shares the join's shuffle key); set sizes use the
     same filtered universe, so jaccard compares distinctive content."""
     sh = shingle_explode_distinct(docs, "source")
-    w = Window.partitionBy("source", "shingle")
-    sh = (
-        sh.withColumn("_df", F.count(F.lit(1)).over(w))
-        .filter(F.col("_df") <= MAX_SHINGLE_DF)
-        .drop("_df")
-    )
+    sh = _drop_hot_keys(sh, ("source", "shingle"), MAX_SHINGLE_DF)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -878,12 +854,7 @@ def decontamination_overlap(corpus: DataFrame, eval_docs: DataFrame) -> DataFram
     broadcast; the final (doc_id, eval_id) count is a partial-agg
     shuffle of matched rows only."""
     sh = shingle_explode_distinct(corpus)
-    w = Window.partitionBy("shingle")
-    sh = (
-        sh.withColumn("_df", F.count(F.lit(1)).over(w))
-        .filter(F.col("_df") <= MAX_SHINGLE_DF)
-        .drop("_df")
-    )
+    sh = _drop_hot_keys(sh, ("shingle",), MAX_SHINGLE_DF)
     ev = shingle_explode_distinct(eval_docs).select(
         F.col("doc_id").alias("eval_id"), "shingle"
     )
@@ -969,12 +940,7 @@ def exact_substring_pairs(docs: DataFrame) -> DataFrame:
         docs.withColumn("_words", F.split("text", " "))
         .select("doc_id", F.posexplode(F.expr(_kgram_expr(k))).alias("pos", "kh"))
     )
-    w = Window.partitionBy("kh")
-    kg = (
-        kg.withColumn("_n", F.count(F.lit(1)).over(w))
-        .filter(F.col("_n") <= MAX_KGRAM_DF)
-        .drop("_n")
-    )
+    kg = _drop_hot_keys(kg, ("kh",), MAX_KGRAM_DF)
     a, b = kg.alias("a"), kg.alias("b")
     m = a.join(
         b, (F.col("a.kh") == F.col("b.kh")) & (F.col("a.doc_id") < F.col("b.doc_id"))
@@ -1346,12 +1312,7 @@ def hamming_pairs(
             "widen the signature/bands instead"
         )
     bands = _signature_bands(sig, id_col, sig_col)
-    w = Window.partitionBy("band_no", "band_val")
-    bands = (
-        bands.withColumn("_n", F.count(F.lit(1)).over(w))
-        .filter(F.col("_n") <= SIMHASH_BAND_CAP)
-        .drop("_n")
-    )
+    bands = _drop_hot_keys(bands, ("band_no", "band_val"), SIMHASH_BAND_CAP)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(
@@ -1462,12 +1423,7 @@ def minhash_bands(sig: DataFrame) -> DataFrame:
 
 
 def _capped_bands(bands: DataFrame) -> DataFrame:
-    w = Window.partitionBy("band_no", "band_key")
-    return (
-        bands.withColumn("_n", F.count(F.lit(1)).over(w))
-        .filter(F.col("_n") <= BAND_CAP)
-        .drop("_n")
-    )
+    return _drop_hot_keys(bands, ("band_no", "band_key"), BAND_CAP)
 
 
 def dedup_incremental(
@@ -1575,9 +1531,6 @@ ORACLE_DEDUP_INCREMENTAL = f"""
     WHERE round(i.inter / CAST(na.n + nb.n - i.inter AS DOUBLE), 6)
           >= {VERIFY_JACCARD_MIN}
 """
-# {SHD} is not a placeholder here: _minhash_sig_banded0_cte() splices
-# _SHINGLES_DUCK via its f-string already, so only {H32} needs resolving.
-ORACLE_DEDUP_INCREMENTAL = ORACLE_DEDUP_INCREMENTAL.replace("{H32}", _H24_DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -1613,8 +1566,7 @@ def _bloom_positions(keyed: DataFrame) -> DataFrame:
     8j+1..8j+8 — disjoint md5 substrings are independent 32-bit draws, so
     no affine remixing (and no wrapping-family pitfall) is needed."""
     slices = ", ".join(
-        f"cast(conv(substring(h, {8 * j + 1}, 8), 16, 10) as bigint)"
-        f" % ({BLOOM_WORD_BITS} * words)"
+        f"{hex_int_spark('h', 8, start=8 * j + 1)} % ({BLOOM_WORD_BITS} * words)"
         for j in range(BLOOM_K)
     )
     return keyed.select("doc_id", F.expr(f"explode(array({slices}))").alias("p"))
@@ -1711,7 +1663,7 @@ def q_dedup_bloom_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _BLOOM_H8 = [
-    _hexn_to_int_duck("h", 8, start=8 * j + 1) for j in range(BLOOM_K)
+    hex_int_duck("h", 8, start=8 * j + 1) for j in range(BLOOM_K)
 ]
 
 ORACLE_DEDUP_BLOOM = f"""
@@ -1784,7 +1736,7 @@ def cdc_chunk_rows(docs: DataFrame) -> DataFrame:
     aggregation). The reference has no text pipeline; this extends the
     dedup family per SURVEY §2's training-data-pipeline scope."""
     n = "size(_words)"
-    h = _md5_prefix_int_spark(
+    h = md5_int_spark(
         f"cast(concat_ws(' ', slice(_words, s + 1, {CDC_W})) as binary)", 8
     )
     # candidate ends: s in [0, n-W-1] (the window ending at the last word
@@ -1869,7 +1821,7 @@ _CDC_KEYED_CTE = f"""w AS (
              list_append(
                CASE WHEN n >= {CDC_W + 1} THEN
                  list_transform(list_filter(generate_series(0, n - {CDC_W + 1}),
-                   s -> ({_hexn_to_int_duck(f"md5(array_to_string(words[s + 1:s + {CDC_W}], ' '))", 8)}) % {CDC_D} = 0),
+                   s -> ({hex_int_duck(f"md5(array_to_string(words[s + 1:s + {CDC_W}], ' '))", 8)}) % {CDC_D} = 0),
                    s -> s + {CDC_W - 1})
                ELSE [] END,
                n - 1) AS bounds
@@ -1908,7 +1860,7 @@ CDC_MIN_SHARED = 2  # pairs must share >= 2 chunks (one shared chunk of a
 #                     few words is noise at the 1/CDC_D boundary density)
 
 
-def cdc_shared_pairs(docs: DataFrame, ch: DataFrame | None = None) -> DataFrame:
+def cdc_shared_pairs(ch: DataFrame) -> DataFrame:
     """(doc_a, doc_b, n_shared_chunks, shared_words): document pairs
     ranked by shared CONTENT-DEFINED chunk mass — the pairwise view of
     cdc_chunk_rows, catching partial overlap (a copied chapter, a shared
@@ -1919,8 +1871,6 @@ def cdc_shared_pairs(docs: DataFrame, ch: DataFrame | None = None) -> DataFrame:
     CDC_PAIR_DF_CAP docs is dropped BEFORE the self-join — boilerplate
     carries no pair evidence but would fan out quadratically), so no key
     ever exceeds C(cap, 2) pairs; everything else is partial-agg."""
-    if ch is None:
-        ch = cdc_chunk_rows(docs)
     ch = ch.select("doc_id", "chunk_key", "n_words").distinct()
     ok = (
         ch.groupBy("chunk_key")
@@ -1944,7 +1894,7 @@ def cdc_shared_pairs(docs: DataFrame, ch: DataFrame | None = None) -> DataFrame:
 
 
 def q_dedup_cdc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return cdc_shared_pairs(None, ch=_cdc_rows_cached(spark, sf_dir))
+    return cdc_shared_pairs(_cdc_rows_cached(spark, sf_dir))
 
 
 q_dedup_cdc_pairs.__doc__ = cdc_shared_pairs.__doc__
@@ -2078,7 +2028,6 @@ ORACLE_LSH_RECALL_CURVE = f"""
     FROM truth t LEFT JOIN cands c ON c.doc_a = t.doc_a AND c.doc_b = t.doc_b
     GROUP BY bucket
 """
-ORACLE_LSH_RECALL_CURVE = ORACLE_LSH_RECALL_CURVE.replace("{H32}", _H24_DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -2165,7 +2114,6 @@ ORACLE_PAGERANK = f"""
     {_pagerank_rounds_sql()}
     SELECT doc_id, deg, r AS rank_e6 FROM r{PAGERANK_ITERS}
 """
-ORACLE_PAGERANK = ORACLE_PAGERANK.replace("{H32}", _H24_DUCK)
 
 
 def q_dedup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2205,7 +2153,6 @@ ORACLE_DEDUP_SOURCE_MATRIX = f"""
     SELECT source_lo, source_hi, COUNT(*) AS n_pairs
     FROM lab GROUP BY source_lo, source_hi
 """
-ORACLE_DEDUP_SOURCE_MATRIX = ORACLE_DEDUP_SOURCE_MATRIX.replace("{H32}", _H24_DUCK)
 
 
 def q_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2330,7 +2277,6 @@ ORACLE_CLUSTERING_COEFF = f"""
     FROM deg d LEFT JOIN tri t ON t.v = d.v
     WHERE d.degree >= 2
 """
-ORACLE_CLUSTERING_COEFF = ORACLE_CLUSTERING_COEFF.replace("{H32}", _H24_DUCK)
 
 
 def q_source_dup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2414,4 +2360,3 @@ ORACLE_SOURCE_DUP_REPORT = f"""
            CAST(n_near_dup * 1000000 // n_docs AS BIGINT) AS near_dup_ppm
     FROM lab
 """
-ORACLE_SOURCE_DUP_REPORT = ORACLE_SOURCE_DUP_REPORT.replace("{H32}", _H24_DUCK)

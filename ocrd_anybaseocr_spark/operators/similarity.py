@@ -34,6 +34,7 @@ import functools
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..hexint import hex_int_duck, md5_int_spark
 from ..sources.session_cache import shared
 from ..sources.tables import load_table
 
@@ -829,7 +830,7 @@ def _pq_fit_partials_arrow(emb: DataFrame, seeds) -> DataFrame:
     )
 
 
-def pq_codes(emb: DataFrame, books: list | None = None) -> DataFrame:
+def pq_codes(emb: DataFrame, books: list) -> DataFrame:
     """(vec_id, m, code): product-quantization codes — the memory-bound
     trillion-vector serving path the IVF-Flat operator's exact re-rank
     cannot take (Flat keeps every vector; PQ keeps PQ_M small codes per
@@ -842,8 +843,6 @@ def pq_codes(emb: DataFrame, books: list | None = None) -> DataFrame:
     exchanges, plan-asserted in test_plans)."""
     import pyarrow as pa
 
-    if books is None:
-        books = pq_codebooks(emb)
     per_m = _pq_books_np(books)
 
     def _enc(batches):
@@ -1112,21 +1111,12 @@ def pairs_from_assignments(bk: DataFrame) -> DataFrame:
     )
 
 
-def embedding_lsh_pairs(emb: DataFrame) -> DataFrame:
-    """Raw-lineage form of pairs_from_assignments (plan tests assert on
-    this; cached callers use the checkpointed relation directly)."""
-    return pairs_from_assignments(lsh_assignments(emb))
-
-
-def cosine_verified_pairs(emb: DataFrame, pairs: DataFrame | None = None) -> DataFrame:
+def cosine_verified_pairs(emb: DataFrame, pairs: DataFrame) -> DataFrame:
     """Embedding near-dup detection: hyperplane-LSH candidate pairs, then an
     EXACT 1e4-scaled integer dot product threshold — order-independent and
     bit-identical across engines (float dot products differ in the last
-    ulps between engines). ``pairs`` injects prebuilt candidate pairs
-    (from pairs_from_assignments over the cached index); otherwise the
-    raw lineage is built from ``emb``."""
-    if pairs is None:
-        pairs = embedding_lsh_pairs(emb.select("vec_id", "embedding"))
+    ulps between engines). ``pairs`` are the candidate pairs
+    (pairs_from_assignments over the LSH assignments)."""
     ea = emb.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("e_a"))
     eb = emb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("e_b"))
     # the dot stays an in-JVM fold ON PURPOSE: an arrow twin was tried in
@@ -1669,7 +1659,7 @@ ORACLE_QUANT_INT8 = f"""
 # ---------------------------------------------------------------------------
 
 
-def hard_negatives(emb: DataFrame, bk: DataFrame | None = None) -> DataFrame:
+def hard_negatives(emb: DataFrame, bk: DataFrame) -> DataFrame:
     """(vec_id, hard_neg_id, anchor_label, neg_label): for every vector,
     its most similar DIFFERENTLY-LABELED neighbor among LSH bucket-mates —
     the hard-negative mining pass of contrastive/metric-learning data
@@ -1683,10 +1673,7 @@ def hard_negatives(emb: DataFrame, bk: DataFrame | None = None) -> DataFrame:
     top-1 decision is bit-identical across engines. Anchors with no
     differently-labeled bucket-mate produce no row (the miss is the
     correct answer — emitting a random fallback would poison training).
-    ``bk`` injects the cached checkpointed assignment relation; tests
-    assert plans on the raw lineage."""
-    if bk is None:
-        bk = lsh_assignments(emb.select("vec_id", "embedding"))
+    ``bk`` is the LSH assignment relation (lsh_assignments)."""
     bkc = capped_assignments(bk)
     cand = (
         bkc.join(
@@ -2026,11 +2013,8 @@ EMB_EVAL_BP = 2000  # eval fraction of the vec_id-hash split, basis points
 def _emb_split_case(col: str) -> str:
     """'eval'/'train' by a salted md5 draw on the VECTOR id ('esplit:'
     stream — its own salt like 'split:'/'mix:'/'dsir:')."""
-    return (
-        "CASE WHEN cast(conv(substring(md5(cast(concat('esplit:',"
-        f" cast({col} as string)) as binary)), 1, 8), 16, 10) as bigint)"
-        f" % 10000 < {EMB_EVAL_BP} THEN 'eval' ELSE 'train' END"
-    )
+    draw = md5_int_spark(f"cast(concat('esplit:', cast({col} as string)) as binary)", 8)
+    return f"CASE WHEN {draw} % 10000 < {EMB_EVAL_BP} THEN 'eval' ELSE 'train' END"
 
 
 def q_decontaminate_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2063,9 +2047,7 @@ def q_decontaminate_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _emb_split_case_duck(col: str) -> str:
-    from .dedup import _hexn_to_int_duck
-
-    draw = _hexn_to_int_duck(f"md5('esplit:' || CAST({col} AS VARCHAR))", 8)
+    draw = hex_int_duck(f"md5('esplit:' || CAST({col} AS VARCHAR))", 8)
     return (
         f"CASE WHEN {draw} % 10000 < {EMB_EVAL_BP} THEN 'eval' ELSE 'train' END"
     )

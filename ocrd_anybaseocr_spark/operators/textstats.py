@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..hexint import hex_int_duck, md5_int_spark
 from ..sources.session_cache import shared
 from ..sources.tables import load_table, scan_fanout
 
@@ -172,23 +173,6 @@ ORACLE_FINGERPRINT = """
 WINNOW_K = 4
 WINNOW_W = 5
 
-_HEX = "0123456789abcdef"
-
-
-def _hex8_int(col: str, strpos_fn: str) -> str:
-    """First 8 hex chars of an md5 → bigint via strpos arithmetic — DuckDB
-    oracle side only. The Spark side uses conv() (one md5 per k-gram): the
-    strpos form splices the md5 into 8 terms and Catalyst does not CSE the
-    repeats, so the md5 ran 8x per k-gram (measured 6.7x slower — VERDICT
-    round 2, item 1). Values are identical across the two forms."""
-    parts = [
-        f"(CAST({strpos_fn}('{_HEX}', substring({col}, {i + 1}, 1)) AS BIGINT) - 1)"
-        f" * {16 ** (7 - i)}"
-        for i in range(8)
-    ]
-    return "(" + " + ".join(parts) + ")"
-
-
 def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """Rolling-hash document fingerprinting by WINNOWING (the MOSS
     algorithm): hash every WINNOW_K-word k-gram (md5 prefix → int), take
@@ -348,14 +332,15 @@ ORACLE_BOILERPLATE = f"""
 """
 
 
-ORACLE_FINGERPRINT_WINNOW = f"""
-    WITH w AS (
+# DuckDB CTE chain ending in wn(doc_id, wins): the per-window minimum
+# k-gram hashes, shared by the fingerprint and containment oracles
+_WINNOW_WINS_CTE = f"""w AS (
       SELECT doc_id, string_split(text, ' ') AS words FROM documents
     ), kgs AS (
       SELECT doc_id,
              CASE WHEN len(words) >= {WINNOW_K} THEN
                list_transform(generate_series(0, len(words) - {WINNOW_K}),
-                 i -> {_hex8_int(f"md5(array_to_string(words[i + 1:i + {WINNOW_K}], ' '))", "strpos")})
+                 i -> {hex_int_duck(f"md5(array_to_string(words[i + 1:i + {WINNOW_K}], ' '))", 8)})
              ELSE [] END AS kg
       FROM w
     ), wn AS (
@@ -365,7 +350,10 @@ ORACLE_FINGERPRINT_WINNOW = f"""
                  j -> list_min(kg[j + 1:j + {WINNOW_W}]))
              ELSE (CASE WHEN len(kg) > 0 THEN [list_min(kg)] ELSE [] END) END AS wins
       FROM kgs
-    )
+    )"""
+
+ORACLE_FINGERPRINT_WINNOW = f"""
+    WITH {_WINNOW_WINS_CTE}
     SELECT doc_id,
            CAST(len(list_distinct(wins)) AS BIGINT) AS n_fp,
            md5(array_to_string(list_sort(list_distinct(wins)), ',')) AS fp_digest
@@ -1113,8 +1101,8 @@ MIX_WEIGHT_TEMPERATURE_EXPR = (
     "cast((1000000 * s * n_total) div (s_total * n_docs) as bigint)"
 )
 MIX_DRAW_EXPR = (
-    "cast(conv(substring(md5(cast(concat('mix:', cast(doc_id as string))"
-    " as binary)), 1, 8), 16, 10) as bigint) % 1000000"
+    md5_int_spark("cast(concat('mix:', cast(doc_id as string)) as binary)", 8)
+    + " % 1000000"
 )
 MIX_COPIES_EXPR = (
     f"cast(weight_ppm div 1000000"
@@ -1237,7 +1225,7 @@ ORACLE_SOURCE_MIX_SAMPLE = f"""
     )
     SELECT d.doc_id, d.source, w.weight_ppm,
            CAST(weight_ppm // 1000000 + CASE WHEN
-               {_hex8_int("md5('mix:' || CAST(d.doc_id AS VARCHAR))", "strpos")}
+               {hex_int_duck("md5('mix:' || CAST(d.doc_id AS VARCHAR))", 8)}
                % 1000000 < weight_ppm % 1000000 THEN 1 ELSE 0 END
              AS BIGINT) AS n_copies
     FROM documents d JOIN w USING (source)
@@ -1284,12 +1272,10 @@ def dsir_log_ratios(docs: DataFrame) -> list[int]:
     order in the float expression mirrors ORACLE_DSIR exactly."""
     import math
 
-    from .dedup import _md5_prefix_int_spark
-
     rows = (
         docs.select("lang", F.explode(F.expr(_DSIR_FEATS)).alias("feat"))
         .select(
-            F.expr(_md5_prefix_int_spark("feat", 2)).alias("b"),
+            F.expr(md5_int_spark("feat", 2)).alias("b"),
             F.expr(
                 f"CASE WHEN lang = '{DSIR_TARGET_LANG}' THEN 1 ELSE 0 END"
             ).alias("is_t"),
@@ -1370,9 +1356,7 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_dsir() -> str:
-    from .dedup import _hexn_to_int_duck
-
-    buk = _hexn_to_int_duck("md5(feat)", 2)
+    buk = hex_int_duck("md5(feat)", 2)
     return f"""
     WITH w AS (
       SELECT doc_id, lang, string_split(text, ' ') AS ws FROM documents
@@ -1442,11 +1426,8 @@ def q_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("lw_e6").alias("s"), F.count(F.lit(1)).alias("n")
     ).collect()[0]
     tau = (int(row.s) // int(row.n)) if row.n else 0
-    g = (
-        "cast(floor(log2((2 * cast(conv(substring(md5(cast(concat('dsir:',"
-        " cast(doc_id as string)) as binary)), 1, 8), 16, 10) as bigint) + 1)"
-        " / 8589934592.0) * 1000000 + 0.5) as bigint)"
-    )
+    draw = md5_int_spark("cast(concat('dsir:', cast(doc_id as string)) as binary)", 8)
+    g = f"cast(floor(log2((2 * {draw} + 1) / 8589934592.0) * 1000000 + 0.5) as bigint)"
     # the explicit lw_e6 >= tau disjunct makes the p = 1 branch EXACT:
     # ~1489 of the 2^32 draws have u so close to 1 that g_e6 rounds to 0,
     # and (0 < 0) would wrongly drop a doc sitting exactly at the mean
@@ -1460,9 +1441,7 @@ def q_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_dsir_resample() -> str:
-    from .dedup import _hexn_to_int_duck
-
-    draw = _hexn_to_int_duck("md5('dsir:' || CAST(doc_id AS VARCHAR))", 8)
+    draw = hex_int_duck("md5('dsir:' || CAST(doc_id AS VARCHAR))", 8)
     g = (
         f"CAST(floor(log2((2 * {draw} + 1)"
         f" / 8589934592.0) * 1000000 + 0.5) AS BIGINT)"
@@ -1723,10 +1702,7 @@ def q_train_eval_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction is exact in expectation per CONTENT, and near-dup leakage
     remains decontaminate_overlap's job."""
     docs = load_table(spark, sf_dir, "documents")
-    draw = (
-        "cast(conv(substring(md5(cast(concat('split:', content_h) as binary)),"
-        " 1, 8), 16, 10) as bigint) % 10000"
-    )
+    draw = md5_int_spark("cast(concat('split:', content_h) as binary)", 8) + " % 10000"
     return docs.select(
         "doc_id", F.expr("md5(cast(text as binary))").alias("content_h")
     ).select(
@@ -1739,9 +1715,7 @@ def q_train_eval_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_train_eval_split() -> str:
-    from .dedup import _hexn_to_int_duck
-
-    draw = _hexn_to_int_duck("md5('split:' || content_h)", 8)
+    draw = hex_int_duck("md5('split:' || content_h)", 8)
     return f"""
     WITH h AS (
       SELECT doc_id, md5(text) AS content_h FROM documents
@@ -1760,8 +1734,8 @@ ORACLE_TRAIN_EVAL_SPLIT = _oracle_train_eval_split()
 # consumed by q_train_eval_split's sibling below and the leakage audit;
 # identical value to the content_h-column form in q_train_eval_split
 SPLIT_DRAW_TEXT_EXPR = (
-    "cast(conv(substring(md5(cast(concat('split:', md5(cast(text as binary)))"
-    " as binary)), 1, 8), 16, 10) as bigint) % 10000"
+    md5_int_spark("cast(concat('split:', md5(cast(text as binary))) as binary)", 8)
+    + " % 10000"
 )
 
 
@@ -1798,11 +1772,10 @@ def _oracle_decontaminate_splits() -> str:
     from .dedup import (
         DECON_MIN_SHARED,
         MAX_SHINGLE_DF,
-        _hexn_to_int_duck,
         shingles_cte_duck,
     )
 
-    draw = _hexn_to_int_duck("md5('split:' || md5(text))", 8)
+    draw = hex_int_duck("md5('split:' || md5(text))", 8)
     ev_w = f"({draw}) % 10000 < {EVAL_SPLIT_BP}"
     tr_w = f"({draw}) % 10000 >= {EVAL_SPLIT_BP}"
     return f"""
@@ -1973,8 +1946,7 @@ def _cms_cell_spark(j: int) -> "F.Column":
     form (never strpos splicing; Catalyst does not CSE the md5 repeats,
     CLAUDE.md)."""
     return F.expr(
-        f"cast(conv(substring(md5(cast(concat('cms{j}:', word) as binary)),"
-        f" 1, 8), 16, 10) as bigint) % {CMS_W}"
+        md5_int_spark(f"cast(concat('cms{j}:', word) as binary)", 8) + f" % {CMS_W}"
     )
 
 
@@ -2039,7 +2011,7 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cms_cell_duck() -> str:
     """DuckDB twin of _cms_cell_spark with the row salt as a column ``j``
     (strpos arithmetic — DuckDB has no conv; values identical)."""
-    h = _hex8_int("md5('cms' || CAST(j AS VARCHAR) || ':' || word)", "strpos")
+    h = hex_int_duck("md5('cms' || CAST(j AS VARCHAR) || ':' || word)", 8)
     return f"({h} % {CMS_W})"
 
 
@@ -2094,10 +2066,7 @@ def q_distinct_kmv_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     that makes the estimator composable across 100 TB partitions."""
     docs = _docs_fanout(spark, sf_dir)
     words = docs.select(F.explode(F.split("text", " ")).alias("word"))
-    h = F.expr(
-        "cast(conv(substring(md5(cast(concat('kmv:', word) as binary)),"
-        " 1, 8), 16, 10) as bigint)"
-    )
+    h = F.expr(md5_int_spark("cast(concat('kmv:', word) as binary)", 8))
     dh = words.select(h.alias("h")).distinct()
     km = (
         dh.orderBy("h")
@@ -2131,7 +2100,7 @@ ORACLE_DISTINCT_KMV = f"""
     WITH words AS (
       SELECT unnest(string_split(text, ' ')) AS word FROM documents
     ), dh AS (
-      SELECT DISTINCT {_hex8_int("md5('kmv:' || word)", "strpos")} AS h
+      SELECT DISTINCT {hex_int_duck("md5('kmv:' || word)", 8)} AS h
       FROM words
     ), km AS (
       SELECT MAX(h) AS kth_hash, COUNT(*) AS kn
@@ -2485,33 +2454,10 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lab.where(F.col("containment_ppm") >= CONTAIN_MIN_PPM)
 
 
-def _winnow_fp_cte() -> str:
-    """Shared DuckDB CTE chain ending in fp(doc_id, fp) — the exploded
-    DISTINCT winnowing fingerprints, spliced from the same arithmetic as
-    ORACLE_FINGERPRINT_WINNOW (one definition would drift otherwise)."""
-    return f"""w AS (
-      SELECT doc_id, string_split(text, ' ') AS words FROM documents
-    ), kgs AS (
-      SELECT doc_id,
-             CASE WHEN len(words) >= {WINNOW_K} THEN
-               list_transform(generate_series(0, len(words) - {WINNOW_K}),
-                 i -> {_hex8_int(f"md5(array_to_string(words[i + 1:i + {WINNOW_K}], ' '))", "strpos")})
-             ELSE [] END AS kg
-      FROM w
-    ), wn AS (
-      SELECT doc_id,
-             CASE WHEN len(kg) >= {WINNOW_W} THEN
-               list_transform(generate_series(0, len(kg) - {WINNOW_W}),
-                 j -> list_min(kg[j + 1:j + {WINNOW_W}]))
-             ELSE (CASE WHEN len(kg) > 0 THEN [list_min(kg)] ELSE [] END) END AS wins
-      FROM kgs
-    ), fp AS (
-      SELECT doc_id, unnest(list_distinct(wins)) AS fp FROM wn
-    )"""
-
-
 ORACLE_DEDUP_CONTAINMENT = f"""
-    WITH {_winnow_fp_cte()},
+    WITH {_WINNOW_WINS_CTE}, fp AS (
+      SELECT doc_id, unnest(list_distinct(wins)) AS fp FROM wn
+    ),
     sizes AS (SELECT doc_id, COUNT(*) AS n FROM fp GROUP BY doc_id),
     fpf AS (
       SELECT doc_id, fp FROM (

@@ -240,12 +240,6 @@ EXPECTED_VERSION = 6  # v6: bpe_merges + fit_coverage_ppm (no-silent-caps)
 # kernels feeding process_page changed, so re-materialize by contract)
 
 
-def expected_marker_name() -> str:
-    """Completion marker written LAST by materialize_expected, stamped with
-    EXPECTED_VERSION."""
-    return f".expected_complete_v{EXPECTED_VERSION}"
-
-
 def _expected_resize_row(media_ref: str, png_bytes: bytes) -> dict:
     """Oracle expectation for one blob: the SAME resize composition the
     distributed operator runs (operators/media.resize_image_bytes — single
@@ -277,7 +271,8 @@ def materialize_expected(out_dir: str, n_docs: int, seed: int = 42,
     corpus by synth's determinism contract — and runs the single-process
     kernels; the caller keys ``out_dir`` on SYNTH_VERSION and
     EXPECTED_VERSION so neither a generator nor a kernel change can serve
-    stale expectations.
+    stale expectations, and publishes it whole by one rename, so the files
+    are written in place.
     """
     import os
 
@@ -432,9 +427,6 @@ def materialize_expected(out_dir: str, n_docs: int, seed: int = 42,
             pa.field("tokens_md5", pa.string(), False),
         ]
     )
-    # write-to-temp + atomic rename per file; the version-stamped marker
-    # below is written AFTER all of them, so a crash mid-set leaves it
-    # absent
     for rows, schema, name in (
         (pr_rows, pr_schema, "expected_page_results.parquet"),
         (ds_rows, ds_schema, "expected_doc_structure.parquet"),
@@ -443,8 +435,4 @@ def materialize_expected(out_dir: str, n_docs: int, seed: int = 42,
         (bm_rows, bm_schema, "expected_bpe_merges.parquet"),
         (bt_rows, bt_schema, "expected_bpe_tokens.parquet"),
     ):
-        tmp = os.path.join(out_dir, f".{name}.tmp.{os.getpid()}")
-        pq.write_table(pa.Table.from_pylist(rows, schema=schema), tmp)
-        os.replace(tmp, os.path.join(out_dir, name))
-    # version-stamped completion marker, written after every data file
-    open(os.path.join(out_dir, expected_marker_name()), "w").write("ok")
+        pq.write_table(pa.Table.from_pylist(rows, schema=schema), os.path.join(out_dir, name))

@@ -14,6 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from .hexint import hex_int_duck
+from .operators import media as _media
 from .operators.extract import extract_spans
 from .operators.interleave import interleaved_documents
 from .sources.tables import load_table, scan_fanout
@@ -1208,12 +1210,16 @@ def _pipeline_corpus() -> str:
     return d
 
 
+_QCORPUS_DIR = _pipeline_corpus()  # generated at import so the DuckDB
+# oracles below can read the same parquet the Spark queries scan
+
+
 @register(
     "pipeline_page_results",
     oracle=f"""
     SELECT doc_id, media_ref, page_no, bx1, by1, bx2, by2, perfect, skew,
            features, labels, n_text_regions, n_image_regions
-    FROM read_parquet('{_os.path.join("%QC%", "expected_page_results.parquet")}')
+    FROM read_parquet('{_os.path.join(_QCORPUS_DIR, "expected_page_results.parquet")}')
     """,
 )
 def q_pipeline_page_results(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1246,7 +1252,7 @@ def q_pipeline_page_results(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pipeline_doc_structure",
     oracle=f"""
     SELECT doc_id, log_id, log_ref, label, parent_id
-    FROM read_parquet('{_os.path.join("%QC%", "expected_doc_structure.parquet")}')
+    FROM read_parquet('{_os.path.join(_QCORPUS_DIR, "expected_doc_structure.parquet")}')
     """,
 )
 def q_pipeline_doc_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1271,16 +1277,6 @@ def q_pipeline_doc_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id", "log_id")
 
 
-_QCORPUS_DIR = _pipeline_corpus()  # generated at import so the DuckDB
-# oracles below can read the same parquet the Spark queries scan
-
-
-def _hexn_to_int_duck_local(col_expr: str, n_hex: int) -> str:
-    from .operators.dedup import _hexn_to_int_duck
-
-    return _hexn_to_int_duck(col_expr, n_hex)
-
-
 @register(
     "pipeline_extracted_spans",
     oracle=f"""
@@ -1290,7 +1286,7 @@ def _hexn_to_int_duck_local(col_expr: str, n_hex: int) -> str:
            s.kind AS kind, s.text AS text, s.media_ref AS media_ref
     FROM (
       SELECT doc_id, unnest(spans) AS s
-      FROM read_parquet('{_os.path.join("%QC%", "documents.parquet")}')
+      FROM read_parquet('{_os.path.join(_QCORPUS_DIR, "documents.parquet")}')
     )
     """,
 )
@@ -1307,20 +1303,26 @@ def q_pipeline_extracted_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# PNG IHDR byte k (1-based) sits at hex chars [2k-1, 2k]: width @17-20,
+# height @21-24, bit depth @25
+_PNG_W = hex_int_duck("substring(hx, 33, 8)", 8)
+_PNG_H = hex_int_duck("substring(hx, 41, 8)", 8)
+
+
 @register(
     "media_metadata",
     oracle=f"""
     WITH hx AS (
       SELECT media_ref, lower(hex(image)) AS hx, octet_length(image) AS byte_size
-      FROM read_parquet('{_os.path.join("%QC%", "page_blobs.parquet")}')
+      FROM read_parquet('{_os.path.join(_QCORPUS_DIR, "page_blobs.parquet")}')
     )
     SELECT media_ref,
            substring(hx, 1, 16) = '89504e470d0a1a0a' AS is_png,
-           CAST(%W% AS INTEGER) AS png_width,
-           CAST(%H% AS INTEGER) AS png_height,
-           CAST(%D% AS INTEGER) AS png_bit_depth,
+           CAST({_PNG_W} AS INTEGER) AS png_width,
+           CAST({_PNG_H} AS INTEGER) AS png_height,
+           CAST({hex_int_duck("substring(hx, 49, 2)", 2)} AS INTEGER) AS png_bit_depth,
            CAST(byte_size AS BIGINT) AS byte_size,
-           CAST(%W% AS BIGINT) * CAST(%H% AS BIGINT) AS pixels
+           CAST({_PNG_W} AS BIGINT) * CAST({_PNG_H} AS BIGINT) AS pixels
     FROM hx
     """,
 )
@@ -1336,21 +1338,27 @@ def q_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     return media_metadata(blobs).orderBy("media_ref")
 
 
+# audio: little-endian int16 at sample k = byte(2k) + 256*byte(2k+1);
+# 0-based byte j sits at hex chars [2j+1, 2j+2]
+_PCM_B0 = hex_int_duck("substring(hx, 4 * t.k + 1, 2)", 2)
+_PCM_B1 = hex_int_duck("substring(hx, 4 * t.k + 3, 2)", 2)
+
+
 @register(
     "media_audio_energy",
     oracle=f"""
     WITH hx AS (
       SELECT media_ref, lower(hex(image)) AS hx, octet_length(image) AS nb
-      FROM read_parquet('{_os.path.join("%QC%", "page_blobs.parquet")}')
+      FROM read_parquet('{_os.path.join(_QCORPUS_DIR, "page_blobs.parquet")}')
     ), lim AS (
       SELECT media_ref, hx, nb // 2 AS n_samp,
-             least(%MAXW%, ((nb // 2) + %W% - 1) // %W%) AS n_win
+             least({_media.AUDIO_MAX_WINDOWS}, ((nb // 2) + {_media.AUDIO_WINDOW} - 1) // {_media.AUDIO_WINDOW}) AS n_win
       FROM hx
     ), samp AS (
-      SELECT media_ref, t.k // %W% AS win_no,
-             CASE WHEN %B1% >= 128 THEN (%B0% + 256 * %B1%) - 65536
-                  ELSE %B0% + 256 * %B1% END AS s
-      FROM lim, LATERAL unnest(generate_series(0, n_win * %W% - 1)) AS t(k)
+      SELECT media_ref, t.k // {_media.AUDIO_WINDOW} AS win_no,
+             CASE WHEN {_PCM_B1} >= 128 THEN ({_PCM_B0} + 256 * {_PCM_B1}) - 65536
+                  ELSE {_PCM_B0} + 256 * {_PCM_B1} END AS s
+      FROM lim, LATERAL unnest(generate_series(0, n_win * {_media.AUDIO_WINDOW} - 1)) AS t(k)
       WHERE t.k < n_samp
     )
     SELECT media_ref, CAST(win_no AS INTEGER) AS win_no,
@@ -1373,21 +1381,27 @@ def q_media_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return audio_energy_windows(blobs)
 
 
+# video: byte j of sampled frame f sits at global byte f*FB + j
+_FRAME_BYTE = hex_int_duck(
+    f"substring(hx, 2 * (frame_no * {_media.FRAME_BYTES} + u.j) + 1, 2)", 2
+)
+
+
 @register(
     "media_frame_sample",
     oracle=f"""
     WITH hx AS (
       SELECT media_ref, lower(hex(image)) AS hx, octet_length(image) AS nb
-      FROM read_parquet('{_os.path.join("%QC%", "page_blobs.parquet")}')
+      FROM read_parquet('{_os.path.join(_QCORPUS_DIR, "page_blobs.parquet")}')
     ), fr AS (
-      SELECT media_ref, hx, nb // %FB% AS n_frames FROM hx
+      SELECT media_ref, hx, nb // {_media.FRAME_BYTES} AS n_frames FROM hx
     ), sel AS (
-      SELECT media_ref, hx, t.i * %STRIDE% AS frame_no
-      FROM fr, LATERAL unnest(generate_series(0, %FMAX% - 1)) AS t(i)
-      WHERE t.i * %STRIDE% < n_frames
+      SELECT media_ref, hx, t.i * {_media.FRAME_STRIDE} AS frame_no
+      FROM fr, LATERAL unnest(generate_series(0, {_media.FRAME_MAX} - 1)) AS t(i)
+      WHERE t.i * {_media.FRAME_STRIDE} < n_frames
     ), byv AS (
-      SELECT media_ref, frame_no, %BYTE% AS bv
-      FROM sel, LATERAL unnest(generate_series(0, %FB% - 1)) AS u(j)
+      SELECT media_ref, frame_no, {_FRAME_BYTE} AS bv
+      FROM sel, LATERAL unnest(generate_series(0, {_media.FRAME_BYTES} - 1)) AS u(j)
     )
     SELECT media_ref, CAST(frame_no AS INTEGER) AS frame_no,
            CAST(COUNT(*) AS INTEGER) AS n_bytes,
@@ -1412,7 +1426,7 @@ def q_media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "media_resize",
     oracle=f"""
     SELECT media_ref, width, height, img_md5
-    FROM read_parquet('{_os.path.join("%QC%", "expected_resize.parquet")}')
+    FROM read_parquet('{_os.path.join(_QCORPUS_DIR, "expected_resize.parquet")}')
     """,
 )
 def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1434,10 +1448,10 @@ def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-# shared pigeonhole-banding SQL over the materialized dhash parquet — the
-# SAME constants the Spark side reads from dedup.py (spliced, not
-# hard-coded: a band-geometry or cap change must move BOTH engines
-# together or the driver gate fails on correct code). Ends in
+# shared pigeonhole-banding SQL over the materialized hashes — the SAME
+# constants the Spark side reads from dedup.py (spliced, not hard-coded:
+# a band-geometry or cap change must move BOTH engines together or the
+# oracle check fails on correct code). _DHASH_PAIRS_CTE ends in
 # pairs(media_ref_a, media_ref_b, hamming).
 from .operators.dedup import (  # noqa: E402
     SIMHASH_BAND_BITS as _DH_BAND_BITS,
@@ -1448,14 +1462,16 @@ from .operators.dedup import (  # noqa: E402
 
 _DHASH_MAX_HAMMING = _DH_BANDS - 1  # the pigeonhole bound
 
-_DHASH_PAIRS_CTE = f"""sig AS (
-      SELECT media_ref, dhash
-      FROM read_parquet('{_os.path.join("%QC%", "expected_dhash.parquet")}')
-    ), bands AS (
-      SELECT media_ref, dhash, t.b AS band_no,
-             CAST((dhash >> ({_DH_BAND_BITS} * t.b)) & {_DH_BAND_MASK}
+
+def _band_pairs_cte(src: str, sig: str) -> str:
+    """DuckDB CTE chain from ``src``(media_ref, ``sig``) to the capped
+    band-collision candidates cand(media_ref_a, media_ref_b, sig_a, sig_b)
+    — the 16-bit banding of dedup.hamming_pairs, for every modality."""
+    return f"""bands AS (
+      SELECT media_ref, {sig}, t.b AS band_no,
+             CAST(({sig} >> ({_DH_BAND_BITS} * t.b)) & {_DH_BAND_MASK}
                   AS INTEGER) AS band_val
-      FROM sig CROSS JOIN generate_series(0, {_DH_BANDS - 1}) AS t(b)
+      FROM {src} CROSS JOIN generate_series(0, {_DH_BANDS - 1}) AS t(b)
     ), ok AS (
       SELECT band_no, band_val FROM bands
       GROUP BY band_no, band_val HAVING COUNT(*) <= {_DH_BAND_CAP}
@@ -1463,11 +1479,17 @@ _DHASH_PAIRS_CTE = f"""sig AS (
       SELECT bands.* FROM bands JOIN ok USING (band_no, band_val)
     ), cand AS (
       SELECT DISTINCT a.media_ref AS media_ref_a, b.media_ref AS media_ref_b,
-             a.dhash AS sig_a, b.dhash AS sig_b
+             a.{sig} AS sig_a, b.{sig} AS sig_b
       FROM bc a JOIN bc b
         ON a.band_no = b.band_no AND a.band_val = b.band_val
        AND a.media_ref < b.media_ref
-    ), pairs AS (
+    )"""
+
+
+_DHASH_PAIRS_CTE = f"""sig AS (
+      SELECT media_ref, dhash
+      FROM read_parquet('{_os.path.join(_QCORPUS_DIR, "expected_dhash.parquet")}')
+    ), {_band_pairs_cte("sig", "dhash")}, pairs AS (
       SELECT media_ref_a, media_ref_b,
              CAST(bit_count(xor(sig_a, sig_b)) AS BIGINT) AS hamming
       FROM cand WHERE bit_count(xor(sig_a, sig_b)) <= {_DHASH_MAX_HAMMING}
@@ -1479,7 +1501,7 @@ _DHASH_PAIRS_CTE = f"""sig AS (
     "media_dhash",
     oracle=f"""
     SELECT media_ref, dhash
-    FROM read_parquet('{_os.path.join("%QC%", "expected_dhash.parquet")}')
+    FROM read_parquet('{_os.path.join(_QCORPUS_DIR, "expected_dhash.parquet")}')
     """,
 )
 def q_media_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1623,7 +1645,7 @@ def q_visual_doc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT CAST(merge_rank AS BIGINT) AS merge_rank, pair_left, pair_right, merged,
            CAST(fit_coverage_ppm AS BIGINT) AS fit_coverage_ppm
-    FROM read_parquet('{_os.path.join("%QC%", "expected_bpe_merges.parquet")}')
+    FROM read_parquet('{_os.path.join(_QCORPUS_DIR, "expected_bpe_merges.parquet")}')
     """,
 )
 def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1644,7 +1666,7 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT doc_id, CAST(n_words AS BIGINT) AS n_words,
            CAST(n_tokens AS BIGINT) AS n_tokens, tokens_md5
-    FROM read_parquet('{_os.path.join("%QC%", "expected_bpe_tokens.parquet")}')
+    FROM read_parquet('{_os.path.join(_QCORPUS_DIR, "expected_bpe_tokens.parquet")}')
     """,
 )
 def q_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1655,56 +1677,6 @@ def q_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.tokenize import bpe_tokenize_df
 
     return bpe_tokenize_df(spark, _pipeline_corpus())
-
-
-# splice the corpus path and the hex→int arithmetic into the two oracles
-# (IHDR byte k (1-based) sits at hex chars [2k-1, 2k]: width @17-20,
-# height @21-24, bit depth @25)
-for _qname in (
-    "pipeline_extracted_spans",
-    "media_metadata",
-    "pipeline_page_results",
-    "pipeline_doc_structure",
-    "media_audio_energy",
-    "media_frame_sample",
-    "media_resize",
-    "media_dhash",
-    "media_dhash_pairs",
-    "media_dhash_clusters",
-    "visual_doc_pairs",
-    "bpe_train",
-    "bpe_tokenize",
-):
-    ORACLE[_qname] = ORACLE[_qname].replace("%QC%", _QCORPUS_DIR)
-
-from .operators import media as _media  # noqa: E402
-
-# audio: little-endian int16 at sample k = byte(2k) + 256*byte(2k+1);
-# 0-based byte j sits at hex chars [2j+1, 2j+2]
-ORACLE["media_audio_energy"] = (
-    ORACLE["media_audio_energy"]
-    .replace("%B0%", _hexn_to_int_duck_local("substring(hx, 4 * t.k + 1, 2)", 2))
-    .replace("%B1%", _hexn_to_int_duck_local("substring(hx, 4 * t.k + 3, 2)", 2))
-    .replace("%W%", str(_media.AUDIO_WINDOW))
-    .replace("%MAXW%", str(_media.AUDIO_MAX_WINDOWS))
-)
-# video: byte j of sampled frame f sits at global byte f*FB + j
-ORACLE["media_frame_sample"] = (
-    ORACLE["media_frame_sample"]
-    .replace(
-        "%BYTE%",
-        _hexn_to_int_duck_local("substring(hx, 2 * (frame_no * %FB% + u.j) + 1, 2)", 2),
-    )
-    .replace("%FB%", str(_media.FRAME_BYTES))
-    .replace("%STRIDE%", str(_media.FRAME_STRIDE))
-    .replace("%FMAX%", str(_media.FRAME_MAX))
-)
-ORACLE["media_metadata"] = (
-    ORACLE["media_metadata"]
-    .replace("%W%", _hexn_to_int_duck_local("substring(hx, 33, 8)", 8))
-    .replace("%H%", _hexn_to_int_duck_local("substring(hx, 41, 8)", 8))
-    .replace("%D%", _hexn_to_int_duck_local("substring(hx, 49, 2)", 2))
-)
 
 
 # ---------------------------------------------------------------------------
@@ -2062,11 +2034,11 @@ _AFP_CTE = f"""hx AS (
       FROM hx WHERE nb >= 2
     ), samp AS (
       SELECT media_ref, t.k // {_media.AFP_WINDOW} AS win_no,
-             CASE WHEN {_hexn_to_int_duck_local("substring(hx, 4 * t.k + 3, 2)", 2)} >= 128
-                  THEN ({_hexn_to_int_duck_local("substring(hx, 4 * t.k + 1, 2)", 2)}
-                        + 256 * {_hexn_to_int_duck_local("substring(hx, 4 * t.k + 3, 2)", 2)}) - 65536
-                  ELSE {_hexn_to_int_duck_local("substring(hx, 4 * t.k + 1, 2)", 2)}
-                        + 256 * {_hexn_to_int_duck_local("substring(hx, 4 * t.k + 3, 2)", 2)} END AS s
+             CASE WHEN {_PCM_B1} >= 128
+                  THEN ({_PCM_B0}
+                        + 256 * {_PCM_B1}) - 65536
+                  ELSE {_PCM_B0}
+                        + 256 * {_PCM_B1} END AS s
       FROM lim, LATERAL unnest(generate_series(0, n_win * {_media.AFP_WINDOW} - 1)) AS t(k)
       WHERE t.k < n_samp
     ), env AS (
@@ -2107,23 +2079,7 @@ def q_media_audio_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "media_audio_fp_pairs",
     oracle=f"""
-    WITH {_AFP_CTE}, bands AS (
-      SELECT media_ref, afp, t.b AS band_no,
-             CAST((afp >> ({_DH_BAND_BITS} * t.b)) & {_DH_BAND_MASK}
-                  AS INTEGER) AS band_val
-      FROM afp CROSS JOIN generate_series(0, {_DH_BANDS - 1}) AS t(b)
-    ), ok AS (
-      SELECT band_no, band_val FROM bands
-      GROUP BY band_no, band_val HAVING COUNT(*) <= {_DH_BAND_CAP}
-    ), bc AS (
-      SELECT bands.* FROM bands JOIN ok USING (band_no, band_val)
-    ), cand AS (
-      SELECT DISTINCT a.media_ref AS media_ref_a, b.media_ref AS media_ref_b,
-             a.afp AS sig_a, b.afp AS sig_b
-      FROM bc a JOIN bc b
-        ON a.band_no = b.band_no AND a.band_val = b.band_val
-       AND a.media_ref < b.media_ref
-    )
+    WITH {_AFP_CTE}, {_band_pairs_cte("afp", "afp")}
     SELECT media_ref_a, media_ref_b,
            CAST(bit_count(xor(sig_a, sig_b)) AS BIGINT) AS hamming
     FROM cand WHERE bit_count(xor(sig_a, sig_b)) <= {_DHASH_MAX_HAMMING}
@@ -2134,8 +2090,8 @@ def q_media_audio_fp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     through dedup.hamming_pairs — the ONE banding/cap/verify machinery
     shared by text SimHash and image dHash now covers all three
     modalities. Oracle reruns the banding algebra in SQL over the
-    hex-rederived fingerprints (band geometry spliced from dedup.py, the
-    _DHASH_PAIRS_CTE convention)."""
+    hex-rederived fingerprints (the _band_pairs_cte chain of the dHash
+    oracles, band geometry spliced from dedup.py)."""
     from .operators.dedup import hamming_pairs
     from .operators.media import audio_fingerprint
     from .sources.tables import load_corpus

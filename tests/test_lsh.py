@@ -18,8 +18,8 @@ from ocrd_anybaseocr_spark.operators.dedup import (
 from ocrd_anybaseocr_spark.operators.similarity import (
     EMB_DIM,
     LSH_BUCKET_CAP,
-    embedding_lsh_pairs,
     lsh_assignments,
+    pairs_from_assignments,
 )
 from ocrd_anybaseocr_spark.sources import session_cache
 
@@ -66,7 +66,7 @@ def test_lsh_recall_vs_brute_force(spark):
 
     got = {
         (r.vec_a, r.vec_b)
-        for r in embedding_lsh_pairs(_emb_df(spark, vecs)).collect()
+        for r in pairs_from_assignments(lsh_assignments(_emb_df(spark, vecs))).collect()
     }
     recall = len(true_pairs & got) / len(true_pairs)
     assert recall >= 0.8, f"LSH recall {recall:.3f} over {len(true_pairs)} true pairs"
@@ -97,8 +97,6 @@ def test_lsh_bits_derive_and_candidate_boundedness(spark):
         LSH_BITS,
         LSH_MAX_BITS,
         derive_bits,
-        embedding_lsh_pairs,
-        pairs_from_assignments,
     )
 
     assert derive_bits(200) == LSH_BITS == derive_bits(1000)
@@ -108,14 +106,14 @@ def test_lsh_bits_derive_and_candidate_boundedness(spark):
     vecs = _clustered_vectors(n_clusters=100, per_cluster=5, n_noise=700, seed=13)
     assert len(vecs) == 1200  # above the step → derived bits > floor
     df = _emb_df(spark, vecs)
-    derived = embedding_lsh_pairs(df).count()
+    derived = pairs_from_assignments(lsh_assignments(df)).count()
     fixed = pairs_from_assignments(lsh_assignments(df, n_bits=LSH_BITS)).count()
     assert derived < fixed / 2, (derived, fixed)
 
     cos = vecs @ vecs.T
     iu = np.triu_indices(len(vecs), 1)
     true_pairs = {(int(a), int(b)) for a, b in zip(*iu) if cos[a, b] >= 0.9}
-    got = {(r.vec_a, r.vec_b) for r in embedding_lsh_pairs(df).collect()}
+    got = {(r.vec_a, r.vec_b) for r in pairs_from_assignments(lsh_assignments(df)).collect()}
     recall = len(true_pairs & got) / len(true_pairs)
     assert recall >= 0.8, f"recall {recall:.3f} at derived bits"
 
@@ -133,7 +131,7 @@ def test_lsh_hot_bucket_cap(spark, monkeypatch):
     vecs = np.array([v / np.linalg.norm(v) for v in vecs])
     df = _emb_df(spark, vecs)
 
-    capped = embedding_lsh_pairs(df).collect()
+    capped = pairs_from_assignments(lsh_assignments(df)).collect()
     clone_pairs = [r for r in capped if r.vec_a < 300 and r.vec_b < 300]
     small_pairs = [r for r in capped if r.vec_a >= 300 and r.vec_b >= 300]
     assert not clone_pairs, "over-cap bucket must be dropped from pair generation"
@@ -142,7 +140,7 @@ def test_lsh_hot_bucket_cap(spark, monkeypatch):
     from ocrd_anybaseocr_spark.operators import similarity
 
     monkeypatch.setattr(similarity, "LSH_BUCKET_CAP", 10**9)
-    uncapped = embedding_lsh_pairs(df).count()
+    uncapped = pairs_from_assignments(lsh_assignments(df)).count()
     assert uncapped >= 300 * 299 // 2
     assert LSH_BUCKET_CAP < 300
 
@@ -1573,7 +1571,8 @@ def test_hard_negatives_planted_mirror(spark):
         ]
     )
     emb = spark.createDataFrame(rows, schema)
-    got = {r.vec_id: r for r in hard_negatives(emb).collect()}
+    bk = lsh_assignments(emb.select("vec_id", "embedding"))
+    got = {r.vec_id: r for r in hard_negatives(emb, bk).collect()}
     for i in range(n):
         assert got[i].hard_neg_id == i + n, got[i]
         assert got[i + n].hard_neg_id == i, got[i + n]
@@ -1616,6 +1615,7 @@ def test_cdc_shared_pairs_planted_passage_and_boilerplate_cap(spark):
     fan-out)."""
     from ocrd_anybaseocr_spark.operators.dedup import (
         CDC_PAIR_DF_CAP,
+        cdc_chunk_rows,
         cdc_shared_pairs,
     )
 
@@ -1631,7 +1631,8 @@ def test_cdc_shared_pairs_planted_passage_and_boilerplate_cap(spark):
         for i in range(20)
     ]
     assert 20 > CDC_PAIR_DF_CAP
-    pairs = cdc_shared_pairs(spark.createDataFrame(rows, ["doc_id", "text"])).collect()
+    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    pairs = cdc_shared_pairs(cdc_chunk_rows(docs)).collect()
     xy = [r for r in pairs if {r.doc_a, r.doc_b} == {"x", "y"}]
     assert xy, pairs
     assert xy[0].shared_words >= 24  # at least half the planted passage

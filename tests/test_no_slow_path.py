@@ -261,3 +261,68 @@ def test_page_stage_module_imports_no_pandas():
         [sys.executable, "-c", code], cwd=ROOT, capture_output=True, text=True, check=True
     )
     assert out.stdout.strip() == "False"
+
+
+def test_one_hex_int_builder():
+    """The hex-prefix→integer formula has one builder per engine, in
+    hexint.py: no other package source spells the Spark ``conv(substring(``
+    form or the DuckDB strpos arithmetic over the hex alphabet."""
+    pat = re.compile(r"conv\(substring\(|strpos\(|0123456789abcdef")
+    violations = []
+    for path in _py_files(PKG):
+        rel = os.path.relpath(path, PKG)
+        if rel == "hexint.py":
+            continue
+        for i, line in enumerate(open(path), 1):
+            if pat.search(line):
+                violations.append(f"{rel}:{i}: {line.strip()}")
+    assert not violations, "\n".join(violations)
+
+
+def test_oracle_texts_final_at_definition():
+    """An oracle text is complete where it is defined: no module reassigns
+    an ORACLE_* constant, nothing but ``register`` assigns into
+    queries.ORACLE, and no registered text carries a placeholder token."""
+    from ocrd_anybaseocr_spark.queries import ORACLE
+
+    violations = []
+    for path in _py_files(PKG):
+        rel = os.path.relpath(path, PKG)
+        seen = set()
+        for stmt in ast.parse(open(path).read()).body:
+            if isinstance(stmt, ast.FunctionDef) and stmt.name == "register":
+                continue
+            for node in ast.walk(stmt):
+                if not isinstance(node, (ast.Assign, ast.AugAssign, ast.AnnAssign)):
+                    continue
+                for t in getattr(node, "targets", None) or [node.target]:
+                    if isinstance(t, ast.Name) and t.id.startswith("ORACLE_"):
+                        if t.id in seen or isinstance(node, ast.AugAssign):
+                            violations.append(f"{rel}:{node.lineno}: reassigns {t.id}")
+                        seen.add(t.id)
+                    if (isinstance(t, ast.Subscript) and isinstance(t.value, ast.Name)
+                            and t.value.id == "ORACLE"):
+                        violations.append(f"{rel}:{node.lineno}: assigns into ORACLE")
+    token = re.compile(r"%[A-Za-z_]\w*%|\{[A-Za-z_]\w*\}")
+    violations += [f"ORACLE[{k!r}]: {token.findall(v)}" for k, v in ORACLE.items()
+                   if token.search(v)]
+    assert not violations, "\n".join(violations)
+
+
+def test_every_config_field_is_read():
+    """Every field of the config.py dataclasses is read as an attribute
+    somewhere in the package or perfbench/ (by bare name, like the
+    reachability ratchets): a parameter nothing reads is not a parameter."""
+    fields = [
+        (cls.name, st.target.id)
+        for cls in ast.parse(open(os.path.join(PKG, "config.py")).read()).body
+        if isinstance(cls, ast.ClassDef)
+        for st in cls.body
+        if isinstance(st, ast.AnnAssign) and isinstance(st.target, ast.Name)
+    ]
+    read = set()
+    for path in [*_py_files(PKG), *_py_files(os.path.join(ROOT, "perfbench"))]:
+        read |= {n.attr for n in ast.walk(ast.parse(open(path).read()))
+                 if isinstance(n, ast.Attribute) and isinstance(n.ctx, ast.Load)}
+    unread = [f"{c}.{f}" for c, f in fields if f not in read]
+    assert fields and not unread, f"config fields nothing reads: {unread}"

@@ -111,20 +111,30 @@ def test_ann_brute_force_no_shuffle(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
+def _raw_cosine_verified_pairs(spark, sf_dir):
+    """The un-checkpointed embedding near-dup lineage: LSH assignments →
+    candidate pairs → exact-int cosine verify."""
+    from ocrd_anybaseocr_spark.operators.similarity import (
+        cosine_verified_pairs,
+        lsh_assignments,
+        pairs_from_assignments,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    bk = lsh_assignments(emb.select("vec_id", "embedding"))
+    return cosine_verified_pairs(emb, pairs_from_assignments(bk))
+
+
 def test_lsh_queries_are_equi_joins(spark, sf_dir):
     """The hyperplane-LSH family must candidate-join on (tbl, bucket) keys —
     hash/broadcast equi-joins only, never a cartesian/nested-loop product
     (the round-1 16-bucket scheme degenerated to one at scale)."""
-    from ocrd_anybaseocr_spark.operators.similarity import cosine_verified_pairs
-    from ocrd_anybaseocr_spark.sources.tables import load_table
-
     # dedup_embedding_cosine's query wrapper localCheckpoints (shared with
     # the clusters query), which truncates the visible plan — assert on
     # the raw builder, which IS the executed lineage
-    emb = load_table(spark, sf_dir, "embeddings")
     plans = {
         "ann_lsh_bucketed": explain_str(QUERIES["ann_lsh_bucketed"](spark, sf_dir), "simple"),
-        "dedup_embedding_cosine": explain_str(cosine_verified_pairs(emb), "simple"),
+        "dedup_embedding_cosine": explain_str(_raw_cosine_verified_pairs(spark, sf_dir), "simple"),
     }
     for q, plan in plans.items():
         assert "CartesianProduct" not in plan, q
@@ -135,11 +145,7 @@ def test_lsh_queries_are_equi_joins(spark, sf_dir):
 def test_dedup_embedding_bucket_cap_is_broadcast(spark, sf_dir):
     """The over-cap bucket filter relation is bounded by tables * 2^bits
     rows → must broadcast, not shuffle the big side for it."""
-    from ocrd_anybaseocr_spark.operators.similarity import cosine_verified_pairs
-    from ocrd_anybaseocr_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    plan = explain_str(cosine_verified_pairs(emb), "simple")
+    plan = explain_str(_raw_cosine_verified_pairs(spark, sf_dir), "simple")
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 
 
@@ -203,10 +209,10 @@ def test_pq_encode_is_narrow(spark, sf_dir):
     PQ_M x PQ_K codebooks ship as plan literals, per-subspace argmins are
     fold expressions — NO Exchange between the embeddings scan and the
     code columns (the posexplode is also narrow)."""
-    from ocrd_anybaseocr_spark.operators.similarity import pq_codes
+    from ocrd_anybaseocr_spark.operators.similarity import pq_codebooks, pq_codes
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    df = pq_codes(emb)
+    df = pq_codes(emb, pq_codebooks(emb))
     assert count_exchanges(df) == 0, explain_str(df, "simple")
 
 
@@ -344,7 +350,7 @@ def test_cdc_chunking_narrow_until_key_agg(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     ch = cdc_chunk_rows(docs)
     assert count_exchanges(ch) == 0, explain_str(ch, "simple")
-    pairs = cdc_shared_pairs(docs)
+    pairs = cdc_shared_pairs(ch)
     plan = explain_str(pairs)
     assert "CartesianProduct" not in plan, plan
     # regression ceiling: distinct + DF-cap agg + cap join + keyed
@@ -363,10 +369,10 @@ def test_bpe_tokenize_zero_exchanges(spark, sf_dir):
 def test_hard_negatives_capped_broadcast_no_cartesian(spark, sf_dir):
     """Raw-lineage hard-negative mining: the over-cap bucket filter is a
     broadcast side of the candidate join, and nothing is cartesian."""
-    from ocrd_anybaseocr_spark.operators.similarity import hard_negatives
+    from ocrd_anybaseocr_spark.operators.similarity import hard_negatives, lsh_assignments
 
     emb = load_table(spark, sf_dir, "embeddings")
-    plan = explain_str(hard_negatives(emb))
+    plan = explain_str(hard_negatives(emb, lsh_assignments(emb.select("vec_id", "embedding"))))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
 
