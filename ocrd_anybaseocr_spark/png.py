@@ -147,39 +147,40 @@ def decode_gray(data: bytes) -> tuple[np.ndarray, int | None]:
 
 def _unfilter(img: np.ndarray, filters: np.ndarray, bpp: int = 1) -> np.ndarray:
     """Reverse PNG row filters 1-4 at ``bpp`` bytes per pixel.
-    Row-sequential by necessity (each row's predictor needs the prior row)."""
+    Row-sequential by necessity (each row's predictor needs the prior row).
+    Up is one uint8 add and Sub a running sum mod 256 down each of the
+    ``bpp`` byte lanes; Average and Paeth feed each byte into the one
+    ``bpp`` to its right, so they loop over plain Python ints."""
     h, w = img.shape
-    out = np.zeros((h, w), dtype=np.int32)
+    out = np.empty((h, w), dtype=np.uint8)
+    up = np.zeros(w, dtype=np.uint8)
     for y in range(h):
-        f = filters[y]
-        row = img[y].astype(np.int32)
-        up = out[y - 1] if y > 0 else np.zeros(w, dtype=np.int32)
+        f, row = filters[y], img[y]
         if f == 0:
             out[y] = row
         elif f == 1:  # Sub
-            r = np.empty(w, dtype=np.int32)
-            for x in range(w):
-                left = r[x - bpp] if x >= bpp else 0
-                r[x] = (row[x] + left) & 0xFF
-            out[y] = r
+            out[y] = np.cumsum(row.reshape(-1, bpp), axis=0, dtype=np.uint8).reshape(w)
         elif f == 2:  # Up
-            out[y] = (row + up) & 0xFF
-        elif f == 3:  # Average
-            r = np.empty(w, dtype=np.int32)
-            for x in range(w):
-                left = r[x - bpp] if x >= bpp else 0
-                r[x] = (row[x] + ((left + up[x]) >> 1)) & 0xFF
-            out[y] = r
-        elif f == 4:  # Paeth
-            r = np.empty(w, dtype=np.int32)
-            for x in range(w):
-                left = r[x - bpp] if x >= bpp else 0
-                ul = up[x - bpp] if x >= bpp else 0
-                p = left + up[x] - ul
-                pa, pb, pc = abs(p - left), abs(p - up[x]), abs(p - ul)
-                pred = left if (pa <= pb and pa <= pc) else (up[x] if pb <= pc else ul)
-                r[x] = (row[x] + pred) & 0xFF
-            out[y] = r
+            out[y] = row + up
+        elif f in (3, 4):  # Average, Paeth
+            out[y] = _unfilter_chained(row.tolist(), up.tolist(), bpp, f)
         else:
             raise ValueError(f"bad PNG filter {f}")
-    return out.astype(np.uint8)
+        up = out[y]
+    return out
+
+
+def _unfilter_chained(row: list[int], up: list[int], bpp: int, f: int) -> list[int]:
+    """One Average (3) or Paeth (4) row; ``r[-bpp]`` is the decoded byte
+    one pixel to the left (0 before the first pixel)."""
+    r = [0] * bpp
+    if f == 3:
+        for v, u in zip(row, up):
+            r.append((v + ((r[-bpp] + u) >> 1)) & 0xFF)
+    else:
+        for v, u, ul in zip(row, up, [0] * bpp + up):
+            left = r[-bpp]
+            p = left + u - ul
+            pa, pb, pc = abs(p - left), abs(p - u), abs(p - ul)
+            r.append((v + (left if pa <= pb and pa <= pc else u if pb <= pc else ul)) & 0xFF)
+    return r[bpp:]

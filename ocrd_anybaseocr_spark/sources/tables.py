@@ -15,6 +15,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import schema as S
+from .. import worker_daemon
 
 
 # SQL confs shared by every session this package builds: spark_session
@@ -46,7 +47,11 @@ def spark_session(cores: int | str = "*", app: str = "ocrd_anybaseocr_spark",
 
     An integer ``cores`` also pins ``spark.default.parallelism`` to it —
     the value local mode uses implicitly, so no plan changes — making the
-    task slots readable through ``task_slots``."""
+    task slots readable through ``task_slots``.
+
+    Its Python workers start from ``worker_daemon``, which drops the
+    archives the installed packages serve (pyspark.zip, the py4j zip, the
+    spark-core jar) from the worker path before pyspark is imported."""
     builder = SparkSession.builder
     if str(cores).isdigit():
         builder = builder.config("spark.default.parallelism", str(cores))
@@ -57,6 +62,7 @@ def spark_session(cores: int | str = "*", app: str = "ocrd_anybaseocr_spark",
         .config(map=SESSION_SQL_CONF)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", worker_daemon.__name__)
         .getOrCreate()
     )
 

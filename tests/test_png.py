@@ -83,20 +83,17 @@ def test_unsupported_ctype_rejected():
         decode_image(data)
 
 
-def test_rgb_filters_unfilter_with_bpp():
-    """Sub/Average/Paeth reference the pixel BPP bytes left — an RGB image
-    filtered externally must still decode exactly. Build the filtered rows
-    the way an encoder would, then assert the decode inverts them."""
-    rng = np.random.default_rng(21)
-    h, w, bpp = 6, 5, 3
-    img = rng.integers(0, 256, size=(h, w * bpp), dtype=np.uint8).astype(np.int32)
-    filters = np.array([0, 1, 2, 3, 4, 1], dtype=np.uint8)
-    enc = np.zeros((h, w * bpp), dtype=np.uint8)
+def _filtered_png(img: np.ndarray, filters: np.ndarray, bpp: int) -> bytes:
+    """Encode ``img`` (H x W*bpp bytes) with the given per-row filters,
+    the way an external encoder would."""
+    h, n = img.shape
+    rows = img.astype(int).tolist()
+    enc = np.zeros((h, n), dtype=np.uint8)
     for y in range(h):
-        for x in range(w * bpp):
-            left = img[y, x - bpp] if x >= bpp else 0
-            up = img[y - 1, x] if y > 0 else 0
-            ul = img[y - 1, x - bpp] if (y > 0 and x >= bpp) else 0
+        for x in range(n):
+            left = rows[y][x - bpp] if x >= bpp else 0
+            up = rows[y - 1][x] if y > 0 else 0
+            ul = rows[y - 1][x - bpp] if (y > 0 and x >= bpp) else 0
             f = filters[y]
             if f == 0:
                 pred = 0
@@ -110,17 +107,28 @@ def test_rgb_filters_unfilter_with_bpp():
                 p = left + up - ul
                 pa, pb, pc = abs(p - left), abs(p - up), abs(p - ul)
                 pred = left if (pa <= pb and pa <= pc) else (up if pb <= pc else ul)
-            enc[y, x] = (img[y, x] - pred) & 0xFF
-    raw = np.zeros((h, w * bpp + 1), dtype=np.uint8)
+            enc[y, x] = (rows[y][x] - pred) & 0xFF
+    raw = np.zeros((h, n + 1), dtype=np.uint8)
     raw[:, 0] = filters
     raw[:, 1:] = enc
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    data = (
+    ihdr = struct.pack(">IIBBBBB", n // bpp, h, 8, {1: 0, 3: 2}[bpp], 0, 0, 0)
+    return (
         _PNG_SIG
         + _chunk(b"IHDR", ihdr)
         + _chunk(b"IDAT", zlib.compress(raw.tobytes()))
         + _chunk(b"IEND", b"")
     )
-    out, mode, _ = decode_image(data)
-    assert mode == "RGB"
-    assert np.array_equal(out, img.astype(np.uint8).reshape(h, w, bpp))
+
+
+def test_rgb_filters_unfilter_with_bpp():
+    """Sub/Average/Paeth reference the pixel BPP bytes left — a gray or RGB
+    image filtered externally (every filter, in shuffled order, after every
+    other) must still decode exactly."""
+    rng = np.random.default_rng(21)
+    h, w = 64, 257
+    for bpp, mode in ((1, "L"), (3, "RGB")):
+        img = rng.integers(0, 256, size=(h, w * bpp), dtype=np.uint8)
+        filters = rng.permutation(np.arange(h) % 5).astype(np.uint8)
+        out, got_mode, _ = decode_image(_filtered_png(img, filters, bpp))
+        assert got_mode == mode
+        assert np.array_equal(out.reshape(h, w * bpp), img), bpp
