@@ -75,7 +75,7 @@ def normalize_gray(
         0,
         255,
     ).astype(np.uint8)
-    return lut[img]
+    return np.take(lut, img)
 
 
 def otsu_threshold(img: np.ndarray) -> int:
@@ -116,11 +116,13 @@ def flatten_background(img: np.ndarray) -> np.ndarray:
     contrast is the wrong model for run-based frame detection under
     salt-pepper; shading correction is the right one.
 
-    Cost is one tile-percentile pass + one float32 division — several
-    times a plain Otsu page, which is why it runs only behind the gate
-    (escalated pages are rare by construction; the clean tier never
-    trips). Deterministic: fixed tiling, np.percentile linear
-    interpolation, float32 arithmetic."""
+    Cost: one tile-percentile pass; the background map, separable, is
+    interpolated along x once per tile row (ty x w) and then blended
+    between two row gathers in place; one in-place float32 division. That
+    is still several times a plain Otsu page, which is why it runs only
+    behind the gate (escalated pages are rare by construction; the clean
+    tier never trips). Deterministic: fixed tiling, np.percentile linear
+    interpolation, float32 arithmetic in a fixed order per element."""
     h, w = img.shape
     tile = FLATTEN_TILE
     ty, tx = (h + tile - 1) // tile, (w + tile - 1) // tile
@@ -140,11 +142,19 @@ def flatten_background(img: np.ndarray) -> np.ndarray:
         x1 = np.minimum(x0 + 1, tx - 1)
         fy = (yy - y0).astype(np.float32)[:, None]
         fx = (xx - x0).astype(np.float32)[None, :]
-        top = bg[y0][:, x0] * (1.0 - fx) + bg[y0][:, x1] * fx
-        bot = bg[y1][:, x0] * (1.0 - fx) + bg[y1][:, x1] * fx
-        bgf = np.maximum(top * (1.0 - fy) + bot * fy, 1.0)
-    out = np.clip(img.astype(np.float32) / bgf * 235.0, 0.0, 255.0)
-    return np.rint(out).astype(np.uint8)
+        # separable: interpolate along x once per tile row, then pick rows;
+        # the in-place steps apply the same float32 operations in order
+        bx = bg[:, x0] * (1.0 - fx) + bg[:, x1] * fx
+        bgf, bot = bx[y0], bx[y1]
+        bgf *= 1.0 - fy
+        bot *= fy
+        bgf += bot
+        np.maximum(bgf, 1.0, out=bgf)
+    out = img.astype(np.float32)
+    out /= bgf
+    out *= 235.0
+    np.clip(out, 0.0, 255.0, out=out)
+    return np.rint(out, out=out).astype(np.uint8)
 
 
 def otsu_stats(img: np.ndarray) -> tuple[int, float, float]:

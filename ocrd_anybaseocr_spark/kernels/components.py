@@ -20,27 +20,21 @@ def runs_from_image(img: np.ndarray, threshold: int):
     """Threshold + run extraction fused per horizontal strip.
 
     Equivalent to ``_find_runs(img <= threshold)`` but never materializes
-    the full boolean mask: each strip's mask+diff stays L2-resident, so the
-    kernel streams the uint8 image exactly once. Run extraction is row-local,
-    so strip boundaries cannot change the result.
+    the full boolean mask: each strip's padded bool mask and its transition
+    mask stay L2-resident, so the kernel streams the uint8 image exactly
+    once. Run extraction is row-local, so strip boundaries cannot change
+    the result.
     """
     h, w = img.shape
     all_r, all_s, all_e = [], [], []
-    pad = np.zeros((min(RUN_STRIP, h), w + 2), dtype=np.int8)
+    buf = np.zeros((min(RUN_STRIP, h), w + 2), dtype=bool)
     for y0 in range(0, h, RUN_STRIP):
-        y1 = min(y0 + RUN_STRIP, h)
-        rows = y1 - y0
-        buf = pad[:rows]
-        np.less_equal(img[y0:y1], threshold, out=buf[:, 1:-1], casting="unsafe")
-        buf[:, 0] = 0
-        buf[:, -1] = 0
-        diff = np.diff(buf, axis=1)
-        rr, cc = np.nonzero(diff)
-        sign = diff[rr, cc]
-        up = sign == 1
-        all_r.append(rr[up] + y0)
-        all_s.append(cc[up])
-        all_e.append(cc[~up])
+        rows = min(RUN_STRIP, h - y0)
+        np.less_equal(img[y0:y0 + rows], threshold, out=buf[:rows, 1:-1])
+        rr, ss, ee = _padded_runs(buf[:rows])
+        all_r.append(rr + y0)
+        all_s.append(ss)
+        all_e.append(ee)
     return (
         np.concatenate(all_r) if all_r else np.zeros(0, dtype=np.int64),
         np.concatenate(all_s) if all_s else np.zeros(0, dtype=np.int64),
@@ -114,23 +108,34 @@ def unshear_runs(runs, shear: float, w: int):
     return rr[keep], a[keep], b[keep]
 
 
+def _padded_runs(buf: np.ndarray):
+    """Runs of a bool mask whose first and last columns are False padding.
+
+    A transition sits wherever a pixel differs from its left neighbour;
+    one flat index over the ``rows x (w+1)`` transition mask gives row and
+    column by one divmod, and the pixel value at the transition tells a
+    start (ink) from an end (paper). Row-major order, so within a row
+    starts and ends alternate and pair up. Returns int64 (row, x_start,
+    x_end_excl).
+    """
+    inside = buf[:, 1:]
+    idx = np.flatnonzero(inside != buf[:, :-1])
+    rr, cc = np.divmod(idx, buf.shape[1] - 1)
+    # inside[r, c] is buf[r, c + 1]: flat position idx + r + 1 of buf
+    up = buf.ravel()[idx + rr + 1]
+    return rr[up], cc[up], cc[~up]
+
+
 def _find_runs(mask: np.ndarray):
     """Per-row horizontal runs of True. Returns (row, x_start, x_end_excl) arrays.
 
-    Single nonzero pass over the row-wise diff; starts/ends split by sign
-    (they alternate within each row by construction).
+    The whole mask as one strip of runs_from_image's extraction
+    (``_padded_runs``), so the mask and fused forms cannot drift.
     """
     h, w = mask.shape
-    padded = np.zeros((h, w + 2), dtype=np.int8)
+    padded = np.zeros((h, w + 2), dtype=bool)
     padded[:, 1:-1] = mask
-    diff = np.diff(padded, axis=1)
-    rr, cc = np.nonzero(diff)
-    sign = diff[rr, cc]
-    up = sign == 1
-    sr, sc = rr[up], cc[up]
-    ec = cc[~up]
-    # starts and ends align row-wise by construction (same count per row)
-    return sr, sc, ec
+    return _padded_runs(padded)
 
 
 def cc_from_runs(rows: np.ndarray, starts: np.ndarray, ends: np.ndarray, h: int):

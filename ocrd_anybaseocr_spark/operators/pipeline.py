@@ -28,6 +28,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import types as T
 
 from .. import schema as S
 from ..config import DEFAULT_PARAMS
@@ -35,14 +36,21 @@ from ..sources.tables import load_corpus, task_slots
 from .extract import extract_spans, page_index
 from .fold import derive_fold_buckets, fold_structure
 
-# PAGE_RESULTS plus the in-flight metrics column (dropped from final output)
-from pyspark.sql import types as T  # noqa: E402
-
-# + error: the per-row quarantine channel — a corrupt blob yields a row
-# with error set and every kernel field NULL instead of killing the whole
-# Arrow batch task (and with it the job, after Spark's retries) — at
-# corpus scale corrupt bytes are a certainty, not an edge case
-_STAGE_SCHEMA = S.PAGE_RESULTS.add("proc_ms", T.LongType()).add("error", T.StringType())
+# PAGE_RESULTS plus the per-page kernel time and the error column: the
+# per-row quarantine channel — a corrupt blob yields a row with error set
+# and every kernel field NULL instead of killing the whole Arrow batch task
+# (and with it the job, after Spark's retries) — at corpus scale corrupt
+# bytes are a certainty, not an edge case. A new StructType: add() would
+# append to the shared PAGE_RESULTS in place.
+_STAGE_SCHEMA = T.StructType(
+    S.PAGE_RESULTS.fields
+    + [T.StructField("proc_ms", T.LongType()), T.StructField("error", T.StringType())]
+)
+# the committed page_results table: read with it, spark.read plans without
+# the one-task footer job that schema inference runs
+_COMMITTED_PR_SCHEMA = T.StructType(
+    _STAGE_SCHEMA.fields + [T.StructField("part_bucket", T.IntegerType())]
+)
 
 N_BUCKETS_MIN = 16  # floor for output partition buckets
 N_BUCKETS_MAX = 4096  # cap: at 100 TB this is ~25 GB of output per commit unit
@@ -424,7 +432,7 @@ def run_pipeline(
         spans_job.result()
     # fold from the COMMITTED page_results — the image stage runs exactly once
     # (recomputing the lineage through the mapInArrow stage would double decode work)
-    written_pr = io.read("page_results")
+    written_pr = io.read("page_results", _COMMITTED_PR_SCHEMA)
     if done:
         written_pr = written_pr.filter(~F.col("part_bucket").isin(*done))
     try:
@@ -444,7 +452,7 @@ def run_pipeline(
         # staleness class). A run with no bad rows and no existing
         # table still pays zero extra jobs.
         io.overwrite_full(
-            io.read("page_results")
+            io.read("page_results", _COMMITTED_PR_SCHEMA)
             .filter(F.col("error").isNotNull())
             .select("doc_id", "media_ref", "page_no", "error", "part_bucket"),
             "quarantine",

@@ -903,6 +903,8 @@ def q_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     query work is the ADC scan over the 8-byte codes plus a rerank
     bounded by PQ_SHORTLIST — corpus floats are touched only for
     shortlist rows."""
+    import pyarrow as pa
+
     emb = load_table(spark, sf_dir, "embeddings")
     books, codes = _pq_index_cached(spark, sf_dir)
     se = emb.select("vec_id", F.expr(_SE_SPARK).alias("se"))
@@ -917,8 +919,14 @@ def q_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("m", "q_sub"),
     )
+    # from an Arrow table the codebook plans as a LocalTableScan; a Python
+    # list would be parallelized and re-pickled by a Python-worker job
     cb = spark.createDataFrame(
-        [(m, code, cent) for m in range(PQ_M) for code, cent in books[m]],
+        pa.table({
+            "m": [m for m in range(PQ_M) for _ in books[m]],
+            "code": [code for m in range(PQ_M) for code, _ in books[m]],
+            "c_sub": [cent for m in range(PQ_M) for _, cent in books[m]],
+        }),
         "m int, code int, c_sub array<bigint>",
     )
     d2 = (

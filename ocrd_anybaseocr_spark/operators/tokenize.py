@@ -99,9 +99,18 @@ def bpe_train_df(spark: SparkSession, corpus_dir: str) -> DataFrame:
     pair_right, merged, fit_coverage_ppm). The coverage stat rides every
     row (constant) so the top-V cap's observed corpus coverage is
     impossible to miss wherever the merge table goes."""
+    import pyarrow as pa
+
     merges, cov_ppm = bpe_fit_stats(spark, corpus_dir)
+    # an Arrow table plans as a LocalTableScan: no job parallelizes the rows
     return spark.createDataFrame(
-        [(i, l, r, l + r, cov_ppm) for i, (l, r) in enumerate(merges)],
+        pa.table({
+            "merge_rank": list(range(len(merges))),
+            "pair_left": [l for l, _ in merges],
+            "pair_right": [r for _, r in merges],
+            "merged": [l + r for l, r in merges],
+            "fit_coverage_ppm": [cov_ppm] * len(merges),
+        }),
         "merge_rank bigint, pair_left string, pair_right string,"
         " merged string, fit_coverage_ppm bigint",
     )

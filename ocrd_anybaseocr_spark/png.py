@@ -130,10 +130,17 @@ def to_gray(img: np.ndarray, mode: str) -> np.ndarray:
     if mode == "LA":
         return np.ascontiguousarray(img[:, :, 0])
     if mode in ("RGB", "RGBA"):
-        r = img[:, :, 0].astype(np.uint32)
-        g = img[:, :, 1].astype(np.uint32)
-        b = img[:, :, 2].astype(np.uint32)
-        return ((19595 * r + 38470 * g + 7471 * b + 0x8000) >> 16).astype(np.uint8)
+        # one uint32 accumulator updated in place: no full-image temporary
+        # per product and sum
+        acc = img[:, :, 0].astype(np.uint32)
+        acc *= 19595
+        for c, wgt in ((1, 38470), (2, 7471)):
+            ch = img[:, :, c].astype(np.uint32)
+            ch *= wgt
+            acc += ch
+        acc += 0x8000
+        acc >>= 16
+        return acc.astype(np.uint8)
     raise ValueError(f"unknown mode {mode!r}")
 
 

@@ -23,6 +23,9 @@ FORBIDDEN = [
     (re.compile(r"\bmapInPandas\b"), "pandas UDF transport mapInPandas"),
     (re.compile(r"\bapplyInPandas\b"), "pandas UDF transport applyInPandas"),
     (re.compile(r"^\s*(?:import|from) pandas\b", re.M), "pandas import"),
+    # Python rows are parallelized and re-pickled by a Python-worker job (a
+    # Scan ExistingRDD); an Arrow table plans as a LocalTableScan
+    (re.compile(r"\bcreateDataFrame\((?!\s*pa\.)"), "createDataFrame from Python rows (RDD API)"),
     (re.compile(r"\.collect\(\)\s*\)?\s*(?:for|\[|$)", re.M), None),  # informational only
 ]
 

@@ -197,6 +197,35 @@ def test_one_file_per_bucket(pipeline_out):
             assert len(files) == 1, (table, b, files)
 
 
+def test_committed_page_results_schema_matches_inferred(spark, pipeline_out):
+    """run_pipeline reads its committed page_results with a declared schema
+    (no footer-inference job); it must be the schema inference finds."""
+    from ocrd_anybaseocr_spark.operators.pipeline import _COMMITTED_PR_SCHEMA
+
+    inferred = spark.read.parquet(os.path.join(pipeline_out, "page_results")).schema
+    assert [(f.name, f.dataType) for f in inferred] == [
+        (f.name, f.dataType) for f in _COMMITTED_PR_SCHEMA
+    ]
+
+
+def test_pipeline_import_leaves_page_results_schema():
+    """Importing operators.pipeline must not append its stage columns to
+    the shared schema.PAGE_RESULTS (StructType.add mutates in place)."""
+    import subprocess
+    import sys
+
+    code = (
+        "from ocrd_anybaseocr_spark import schema as S; n = len(S.PAGE_RESULTS.fields); "
+        "import ocrd_anybaseocr_spark.operators.pipeline as P; "
+        "print(n, len(S.PAGE_RESULTS.fields), len(P._STAGE_SCHEMA.fields))"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run([sys.executable, "-c", code], cwd=repo, capture_output=True,
+                          text=True, timeout=120)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert proc.stdout.split() == ["12", "12", "14"]
+
+
 def test_task_slots_read_from_session_conf(spark):
     """spark_session pins spark.default.parallelism to its cores; a session
     without the conf (a cluster submit) keeps the caller's cap."""
